@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
-import graft.functions.{ArrayFloatDot, NullSafeDiv, SimHash64}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Cluster-deployment entry point: register graft's custom functions
   * at session build time via
@@ -19,22 +17,14 @@ import graft.functions.{ArrayFloatDot, NullSafeDiv, SimHash64}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("null_safe_div"),
-      new ExpressionInfo(classOf[NullSafeDiv].getCanonicalName, "null_safe_div"),
-      (exprs: Seq[Expression]) =>
-        NullSafeDiv(Cast(exprs.head, DoubleType), Cast(exprs(1), DoubleType))))
-    // Mirror GraftFunctions.register: the similarity/dedup operators
-    // (GraftOps.simhashPairs, cosineTopK, ivfTopK) resolve these by
-    // name, so extension-configured sessions need them too.
-    e.injectFunction((
-      FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayFloatDot].getCanonicalName, "array_dot"),
-      (exprs: Seq[Expression]) => ArrayFloatDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getCanonicalName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
+    // The same function table GraftFunctions.register installs: the
+    // similarity/dedup operators (GraftOps.simhashPairs, cosineTopK,
+    // ivfTopK) resolve these by name, so extension-configured sessions
+    // need every one of them.
+    graft.functions.GraftFunctions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getCanonicalName, name), build))
+    }
     // The HOF dot-product spelling fuses into the codegen'd expression
     // for every session on the cluster — see plans.DotProductFusion.
     e.injectOptimizerRule(_ => graft.plans.DotProductFusion)

@@ -59,7 +59,7 @@ object Tables {
           // loop to full-or-EOF (ADVICE r9): a single read() may return
           // short, and a short head/tail yields a DIFFERENT CRC for the
           // same file — a flapping fingerprint spuriously invalidates
-          // every freshDir cache keyed on it
+          // every graft.Derived entry keyed on it
           def readFully(buf: java.nio.ByteBuffer): Unit = {
             var n = 0
             while (buf.hasRemaining && n >= 0) n = ch.read(buf)

@@ -1926,11 +1926,10 @@ object GraftOps {
     * the last release, returning how many were dropped. Call when the
     * pinned blocks can no longer be trusted or afforded: Verify calls
     * it per dump (the correctness gate stays self-contained); Bench
-    * calls it only when the source-table fingerprints change (round-9
-    * policy — staleness is the actual hazard, and cross-query reuse of
-    * shared subtrees is legitimate between regens); long-lived
-    * application drivers call it on their own cadence to bound
-    * storage.
+    * calls it after every entry, outside the timed region, so each
+    * entry starts from the empty cache an isolated run sees;
+    * long-lived application drivers call it on their own cadence to
+    * bound storage.
     */
   def releaseMaterialized(blocking: Boolean = false): Int = {
     var n = 0

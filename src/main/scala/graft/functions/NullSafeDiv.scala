@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -56,36 +56,46 @@ case class NullSafeDiv(left: Expression, right: Expression)
 
 /** Session registration for graft's custom SQL functions. */
 object GraftFunctions {
+
+  /** Every graft SQL function as (name, implementing class, builder) —
+    * the one table both [[register]] and [[graft.GraftExtensions]] read.
+    * Inputs of null_safe_div are coerced with an explicit double Cast
+    * (ImplicitCast machinery is private[sql]); a no-op for
+    * already-double columns.
+    *
+    * bloom_agg / bloom_might_contain are Spark's OWN bloom-filter pair
+    * (the machinery behind runtime row-level join filtering), shipped
+    * in catalyst but not exposed in the public FunctionRegistry —
+    * registered here so a query can build an explicit membership
+    * sketch as ONE aggregate row and prescreen a scan map-side before
+    * an exact join (the text_decontaminate_bloom pattern). The analyzer
+    * wraps the AggregateFunction and validates the might_contain input
+    * forms (constant or scalar subquery) exactly as for built-ins.
+    */
+  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    Seq(
+      ("null_safe_div", classOf[NullSafeDiv],
+        e => NullSafeDiv(Cast(e(0), DoubleType), Cast(e(1), DoubleType))),
+      ("array_dot", classOf[ArrayFloatDot], e => ArrayFloatDot(e(0), e(1))),
+      ("simhash64", classOf[SimHash64], e => SimHash64(e.head)),
+      ("char_entropy", classOf[CharEntropy], e => CharEntropy(e.head)),
+      ("bloom_agg", classOf[BloomFilterAggregate],
+        e => new BloomFilterAggregate(e(0), e(1), e(2))),
+      ("bloom_might_contain", classOf[BloomFilterMightContain],
+        e => BloomFilterMightContain(e(0), e(1))))
+  }
+
+  /** Register every function on `spark`; a no-op when the session
+    * already has them all, so the per-query calls do not each log six
+    * "replaced a previously registered function" warnings.
+    */
   def register(spark: SparkSession): Unit = {
-    // Inputs are coerced with an explicit double Cast (ImplicitCast
-    // machinery is private[sql]); a no-op for already-double columns.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "null_safe_div",
-      exprs => NullSafeDiv(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot", exprs => ArrayFloatDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy", exprs => CharEntropy(exprs.head), "built-in")
-    // Spark's OWN bloom-filter pair (the machinery behind runtime
-    // row-level join filtering), shipped in catalyst but not exposed
-    // in the public FunctionRegistry — registered here so a query can
-    // build an explicit membership sketch as ONE aggregate row and
-    // prescreen a scan map-side before an exact join (the
-    // text_decontaminate_bloom pattern). The analyzer wraps the
-    // AggregateFunction and validates the might_contain input forms
-    // (constant or scalar subquery) exactly as for built-ins.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
+    val reg = spark.sessionState.functionRegistry
+    if (!functions.forall(f => reg.functionExists(FunctionIdentifier(f._1))))
+      functions.foreach { case (name, _, build) =>
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+      }
   }
 }

@@ -176,8 +176,6 @@ object CboQueries {
   // ANALYZE in the path).
   // ------------------------------------------------------------------
 
-  private val sidecarDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val sidecarState =
     new java.util.concurrent.atomic.AtomicReference[(String, String)]()
 
@@ -187,10 +185,8 @@ object CboQueries {
     * sidecar — the write-time stats a real ingest publishes.
     */
   private[graft] def sidecarTables(s: SparkSession, d: String): String =
-    graft.queries.ScaleQueries.freshDir(sidecarDir, d, "orders") {
+    graft.Derived.dir("cbo_sidecar", d, "orders") { root =>
       import graft.sources.CommitLog
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_cbo_sidecar").toString
       def writeUnit(t: String, df: org.apache.spark.sql.DataFrame,
           rel: String): String = {
         val tmp = s"$t/_build_${rel.replace('/', '_')}"
@@ -202,7 +198,7 @@ object CboQueries {
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(t, rel).getParent)
         java.nio.file.Files.move(part, java.nio.file.Paths.get(t, rel))
-        graft.queries.ScaleQueries.deleteRecursively(tmp)
+        graft.Derived.deleteRecursively(tmp)
         rel
       }
       def build(name: String, df: org.apache.spark.sql.DataFrame,
@@ -237,7 +233,6 @@ object CboQueries {
       CommitLog.writeColStats(oT, 1L,
         CommitLog.footerColStats(s, oT, v1Units,
           Seq("o_orderkey", "o_custkey")))
-      root
     }
 
   /** Register `g_sc_orders` / `g_sc_customer` over the sidecar tables

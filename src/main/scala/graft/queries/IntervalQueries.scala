@@ -26,10 +26,6 @@ import graft.Tables.load
   */
 object IntervalQueries {
 
-  /** One overwritten partitioned copy of `orders` per (JVM, sfDir). */
-  private val povDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val queries: Map[String, Q] = Map(
     // Y1: max concurrent intervals per event_type — each event spans
     // [ts, ts + value·10ms]; sweep-line with exact integer counters.
@@ -109,8 +105,7 @@ object IntervalQueries {
     // (1-URGENT gets +10.00 on every price) and leave the rest
     // untouched; read the final table state back.
     "dml_partition_overwrite" -> ((s, d) => {
-      val dir = ScaleQueries.freshDir(povDir, d, "orders") {
-        val out = java.nio.file.Files.createTempDirectory("graft_pov").toString
+      val dir = graft.Derived.dir("pov", d, "orders") { out =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey"),
             col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("price"),
@@ -127,7 +122,6 @@ object IntervalQueries {
           case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
           case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
-        out
       }
       s.read.parquet(dir)
         .select(col("o_orderkey"), col("price"), col("o_orderpriority"))

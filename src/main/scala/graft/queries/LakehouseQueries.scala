@@ -172,8 +172,7 @@ object LakehouseQueries {
     // O(new data + manifest), never O(table).
     "dml_time_travel" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(timeTravelDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_tt").toString
+      val root = graft.Derived.dir("tt", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
             (col("o_orderkey") % 4).cast("int").as("bucket"))
@@ -203,7 +202,6 @@ object LakehouseQueries {
         CommitLog.commit(dir, 2L,
           (v0Units.filterNot(_.endsWith("bucket=2")) :+ "data/v1b2" :++ insUnits)
             .filterNot(_.endsWith("bucket=1")))
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -233,8 +231,7 @@ object LakehouseQueries {
     // is invisible until the atomic manifest rename).
     "dml_optimize" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(optimizeDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_opt").toString
+      val root = graft.Derived.dir("opt", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
             (col("o_orderkey") % 16).cast("int").as("b"))
@@ -247,7 +244,6 @@ object LakehouseQueries {
         CommitLog.snapshot(s, dir, 0L).coalesce(1)
           .write.parquet(s"$dir/data/compact")
         CommitLog.commit(dir, 1L, Seq("data/compact"))
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -273,8 +269,7 @@ object LakehouseQueries {
     // of additive schema-on-read.
     "dml_schema_evolution" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(schemaEvoDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_se").toString
+      val root = graft.Derived.dir("se", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.write.parquet(s"$dir/data/u0")
@@ -288,7 +283,6 @@ object LakehouseQueries {
         // `flag` column admitted by the explicit additive opt-in
         CommitLog.commitChecked(s, dir, 1L, Seq("data/u0", "data/u1"),
           allowAdditive = true)
-        dir
       }
       CommitLog.versions(root).map { v =>
         val snap = CommitLog.snapshotEvolved(s, root, v)
@@ -321,8 +315,7 @@ object LakehouseQueries {
     // data files — reading 1/8th of the table costs 1/8th.
     "dml_data_skipping" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(skipStatsDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_skip").toString
+      val root = graft.Derived.dir("skip", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         val wd = base.agg(expr("max(k) DIV 8 + 1")).head().getLong(0)
@@ -344,7 +337,6 @@ object LakehouseQueries {
         // as the manifest
         CommitLog.writeColStats(dir, 0L,
           CommitLog.footerColStats(s, dir, units, Seq("k", "ks")))
-        dir
       }
       val maxK = load(s, d, "orders")
         .agg(max(col("o_orderkey"))).head().getLong(0)
@@ -419,9 +411,8 @@ object LakehouseQueries {
     // untouched by the clone's writes). Fully oracled.
     "dml_clone" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(cloneDir, d, "orders") {
+      val root = graft.Derived.dir("clone", d, "orders") { dir =>
         val src = incrTable(s, d)
-        val dir = java.nio.file.Files.createTempDirectory("graft_clone").toString
         // reference the source's CURRENT snapshot units relative to
         // the clone root — the whole clone is this manifest write
         val rel = CommitLog.units(src, CommitLog.latestVersion(src))
@@ -434,7 +425,6 @@ object LakehouseQueries {
           .select((col("k") + 5000000000L).as("k"), col("p"))
           .write.parquet(s"$dir/data/own")
         CommitLog.commit(dir, 1L, rel :+ "data/own")
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -502,8 +492,7 @@ object LakehouseQueries {
     // the routing is exercised, the pruning is LogStress's row).
     "dml_cdc_read_mor" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(cdcMorDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_cdcmor").toString
+      val root = graft.Derived.dir("cdcmor", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(col("k") % 2 === 0).coalesce(1)
@@ -519,7 +508,6 @@ object LakehouseQueries {
             .unionAll(base.filter(col("k") % 2 === 1 && col("k") % 3 === 0)),
           "k")
         CommitLog.applyDeletes(s, dir, "k")
-        dir
       }
       val per = CommitLog.versions(root).map { v =>
         CommitLog.changes(s, root, v)
@@ -561,8 +549,7 @@ object LakehouseQueries {
     // manifest text; the commit is optimistic, lock-free.
     "dml_merge_cow" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(mergeCowDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
+      val root = graft.Derived.dir("merge", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         val wd = base.agg(expr("max(k) DIV 8 + 1")).head().getLong(0)
@@ -586,7 +573,6 @@ object LakehouseQueries {
           .unionAll(base.filter(col("k") % 13 === 0)
             .select((col("k") + 8L * wd).as("k"), col("p")))
         CommitLog.mergeCow(s, dir, updates, "k")
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -628,12 +614,8 @@ object LakehouseQueries {
       // a fresh versions×copies state tree per call; the fold itself
       // is CommitLog.replayInto (shared with stream_cdc_apply and
       // LogStress), replay-safe and O(1) plan depth per version
-      val repDir = graft.queries.ScaleQueries.freshDir(replayStateDir, d,
-          "orders") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_replay").toString
+      val repDir = graft.Derived.dir("replay", d, "orders") { dir =>
         vs.foreach(v => CommitLog.replayInto(s, root, v, dir))
-        dir
       }
       val lastState =
         s"$repDir/v${CommitLog.replayStates(repDir).last}"
@@ -915,8 +897,7 @@ object LakehouseQueries {
     // arithmetic.
     "dml_txn_multi" -> ((s, d) => {
       import graft.sources.{CommitLog, TxnLog}
-      val root = graft.queries.ScaleQueries.freshDir(txnMultiDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_txn").toString
+      val root = graft.Derived.dir("txn", d, "orders") { dir =>
         val fact = s"$dir/fact"
         val agg = s"$dir/agg"
         val base = load(s, d, "orders")
@@ -937,7 +918,6 @@ object LakehouseQueries {
         aggUnit(col("k") % 3 =!= 2, "a1")
         TxnLog.commitAtomic(dir,
           Seq(fact -> Seq("s0", "s1"), agg -> Seq("a1")))
-        dir
       }
       val fact = s"$root/fact"
       val agg = s"$root/agg"
@@ -988,8 +968,7 @@ object LakehouseQueries {
     // unchanged. Fully oracled.
     "dml_compact_incr" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(compactDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_cpt").toString
+      val root = graft.Derived.dir("cpt", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(!(col("k") % 200).between(1, 10))
@@ -1011,7 +990,6 @@ object LakehouseQueries {
         }
         require(CommitLog.compact(s, dir, bigBytes).contains(1L),
           "the crumb backlog must pack into v1")
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -1043,8 +1021,7 @@ object LakehouseQueries {
     // dedup pipeline.
     "dml_bloom_skipping" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(bloomSkipDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+      val root = graft.Derived.dir("bloom", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
             md5(col("o_orderkey").cast("string")).as("uid"))
@@ -1058,7 +1035,6 @@ object LakehouseQueries {
         CommitLog.commit(dir, 0L, units)
         // honest sizing: the real per-unit row count, 1% fpp
         CommitLog.writeBloomStats(s, dir, 0L, "uid", n / units.size + 1, 0.01)
-        dir
       }
       val base = load(s, d, "orders").select(col("o_orderkey").as("k"))
       val maxK = base.agg(max(col("k"))).head().getLong(0)
@@ -1103,8 +1079,7 @@ object LakehouseQueries {
         """aggregate(sequence(0, 15), 0L, (acc, i) ->
           |  acc + shiftleft(shiftright(xc, CAST(i AS INT)) % 2, CAST(2*i AS INT))
           |      + shiftleft(shiftright(yd, CAST(i AS INT)) % 2, CAST(2*i+1 AS INT)))""".stripMargin
-      val root = graft.queries.ScaleQueries.freshDir(zorderDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_zord").toString
+      val root = graft.Derived.dir("zord", d, "orders") { dir =>
         val o = load(s, d, "orders")
           .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp")
             && col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
@@ -1135,7 +1110,6 @@ object LakehouseQueries {
         }
         layout(expr(s"yd DIV ${ydw}L"), "linear", 0L)
         layout(expr(s"zval DIV ${zw}L"), "zorder", 1L)
-        dir
       }
       val o96 = load(s, d, "orders")
         .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp")
@@ -1181,8 +1155,7 @@ object LakehouseQueries {
     // broadcast anti-join until compaction removes it.
     "dml_delete_mor" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(morDeleteDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_mor").toString
+      val root = graft.Derived.dir("mor", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
             (col("o_orderkey") % 4).cast("int").as("bucket"))
@@ -1201,7 +1174,6 @@ object LakehouseQueries {
         CommitLog.snapshotMoR(s, dir, 1L, "k").coalesce(1)
           .write.parquet(s"$dir/data/compact")
         CommitLog.commit(dir, 2L, Seq("data/compact"))
-        dir
       }
       CommitLog.versions(root).map { v =>
         val raw = CommitLog.snapshot(s, root, v).count()
@@ -1232,8 +1204,7 @@ object LakehouseQueries {
     // trades the read-side anti-join away (dml_apply_deletes).
     "dml_upsert_mor" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(morUpsertDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_morup").toString
+      val root = graft.Derived.dir("morup", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
             (col("o_orderkey") % 4).cast("int").as("bucket"))
@@ -1251,7 +1222,6 @@ object LakehouseQueries {
           .unionAll(base.filter(col("k") % 11 === 0)
             .select((col("k") + 1000000000L).as("k"), col("p")))
         CommitLog.upsertMoR(s, dir, updates, "k")
-        dir
       }
       CommitLog.versions(root).map { v =>
         val raw = CommitLog.snapshot(s, root, v).count()
@@ -1283,8 +1253,7 @@ object LakehouseQueries {
     // the table — the GDPR-erasure maintenance shape.
     "dml_apply_deletes" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(applyDelDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_applyd").toString
+      val root = graft.Derived.dir("applyd", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         val wd = base.agg(expr("max(k) DIV 8 + 1")).head().getLong(0)
@@ -1310,7 +1279,6 @@ object LakehouseQueries {
         CommitLog.writeStats(dir, 1L, st.toSeq)
         CommitLog.writeDeletes(dir, 1L, Seq("data/dv1"))
         CommitLog.applyDeletes(s, dir, "k")
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshotMoRSeq(s, root, v, "k")
@@ -1333,8 +1301,7 @@ object LakehouseQueries {
     // both reference the SAME immutable units. Fully oracled.
     "dml_restore" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(restoreDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_restore").toString
+      val root = graft.Derived.dir("restore", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
             (col("o_orderkey") % 2).cast("int").as("bucket"))
@@ -1347,7 +1314,6 @@ object LakehouseQueries {
         CommitLog.commit(dir, 1L, units.filterNot(_.endsWith("bucket=1")))
         // RESTORE TO VERSION 0: republish v0's manifest as v2
         CommitLog.commit(dir, 2L, units)
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -1386,9 +1352,7 @@ object LakehouseQueries {
     // count that the drop forces to NULL from v1 on.
     "dml_drop_col" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(dropColDir, d, "orders") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_dropcol").toString
+      val root = graft.Derived.dir("dropcol", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
             col("o_orderstatus").as("clerk"))
@@ -1398,7 +1362,6 @@ object LakehouseQueries {
         base.filter(col("k") % 2 === 1).select("k", "p")
           .write.parquet(s"$dir/data/s1")
         CommitLog.commit(dir, 2L, Seq("data/s0", "data/s1"))
-        dir
       }
       CommitLog.versions(root).map { v =>
         val snap = CommitLog.snapshotMapped(s, root, v)
@@ -1425,9 +1388,7 @@ object LakehouseQueries {
     // rows + exact cents sum.
     "dml_widen_col" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(widenColDir, d, "orders") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_widencol").toString
+      val root = graft.Derived.dir("widencol", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
           .selectExpr("k", "CAST(CAST(round(p * 100) AS BIGINT) AS INT) AS cents")
@@ -1439,7 +1400,6 @@ object LakehouseQueries {
             (col("cents").cast("bigint") + lit(3000000000L)).as("cents"))
           .write.parquet(s"$dir/data/s1")
         CommitLog.commit(dir, 2L, Seq("data/s0", "data/s1"))
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshotMapped(s, root, v)
@@ -1462,9 +1422,7 @@ object LakehouseQueries {
     // legacy/fresh counts the add makes observable in VALUES.
     "dml_add_col" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(addColDir, d, "orders") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_addcol").toString
+      val root = graft.Derived.dir("addcol", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(col("k") % 2 === 0).write.parquet(s"$dir/data/s0")
@@ -1473,7 +1431,6 @@ object LakehouseQueries {
         base.filter(col("k") % 2 === 1).withColumn("src", lit("fresh"))
           .write.parquet(s"$dir/data/s1")
         CommitLog.commit(dir, 2L, Seq("data/s0", "data/s1"))
-        dir
       }
       CommitLog.versions(root).map { v =>
         val snap = CommitLog.snapshotMapped(s, root, v)
@@ -1492,8 +1449,7 @@ object LakehouseQueries {
 
     "dml_rename_col" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(renameDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_ren").toString
+      val root = graft.Derived.dir("ren", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(col("k") % 3 === 0).write.parquet(s"$dir/data/s0")
@@ -1507,7 +1463,6 @@ object LakehouseQueries {
               .select(col("k"), col("p").as("price")))
           .write.parquet(s"$dir/data/s2")
         CommitLog.commit(dir, 2L, Seq("data/s0", "data/s1", "data/s2"))
-        dir
       }
       CommitLog.snapshotMapped(s, root, 2L)
         .groupBy((col("k") % 4).cast("bigint").as("g"))
@@ -1533,8 +1488,7 @@ object LakehouseQueries {
     // batch appears in NO row, which is what the oracle checks.
     "dml_wap" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(wapDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_wap").toString
+      val root = graft.Derived.dir("wap", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(col("k") % 2 === 0).write.parquet(s"$dir/data/base")
@@ -1553,7 +1507,6 @@ object LakehouseQueries {
         base.filter(col("k") % 2 === 1).write.parquet(s"$dir/data/cand_ok")
         CommitLog.stageBranch(dir, "ingest2", Seq("data/base", "data/cand_ok"))
         if (audit("ingest2")) CommitLog.publishBranch(dir, "ingest2")
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -1578,9 +1531,7 @@ object LakehouseQueries {
     // any rejected batch; fully oracled by membership arithmetic.
     "dml_constraints" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(constraintsDir, d, "orders") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_constraints").toString
+      val root = graft.Derived.dir("constraints", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
             dec(col("o_totalprice")).as("p"))
@@ -1634,7 +1585,6 @@ object LakehouseQueries {
         base.filter(col("k") % 3 === 1).write.parquet(s"$dir/data/delta")
         CommitLog.commitConstrained(s, dir, 1L,
           Seq("data/base", "data/delta"))
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshot(s, root, v)
@@ -1662,9 +1612,7 @@ object LakehouseQueries {
     // arithmetic.
     "dml_fk_constraint" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(fkDir, d, "orders") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_fk").toString
+      val root = graft.Derived.dir("fk", d, "orders") { dir =>
         val dim = s"$dir/dim"
         val fact = s"$dir/fact"
         load(s, d, "customer").select(col("c_custkey").as("ck"))
@@ -1717,7 +1665,6 @@ object LakehouseQueries {
         base.filter(col("k") % 3 =!= 0 && col("c") % 100 =!= 7)
           .write.parquet(s"$fact/data/b1")
         CommitLog.commitConstrained(s, fact, 1L, Seq("data/b0", "data/b1"))
-        dir
       }
       val fact = s"$root/fact"
       CommitLog.versions(fact).map { v =>
@@ -1746,8 +1693,7 @@ object LakehouseQueries {
     // orders arithmetic with the purge predicate applied everywhere.
     "dml_purge" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(purgeDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_purge").toString
+      val root = graft.Derived.dir("purge", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(col("k") % 3 === 0).write.parquet(s"$dir/data/s0")
@@ -1764,7 +1710,6 @@ object LakehouseQueries {
         val victims = base.filter(col("k") % 100 === 7).select("k")
           .collect().map(_.getLong(0)).toSeq // purge-request-sized: the erasure list itself
         CommitLog.purgeKeys(s, dir, "k", victims)
-        dir
       }
       CommitLog.versions(root).map { v =>
         CommitLog.snapshotMoR(s, root, v, "k")
@@ -1798,9 +1743,7 @@ object LakehouseQueries {
       val base = load(s, d, "orders")
         .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
       val w = base.agg(max(col("k"))).head().getLong(0) / 4L + 1L
-      val root = graft.queries.ScaleQueries.freshDir(purgeIdxDir, d, "orders") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_purgeidx").toString
+      val root = graft.Derived.dir("purgeidx", d, "orders") { dir =>
         (0 until 4).foreach { b =>
           base.filter(col("k") % 2 === 0 && expr(s"k DIV $w") === b)
             .coalesce(1).write.parquet(s"$dir/b$b")
@@ -1820,7 +1763,6 @@ object LakehouseQueries {
         // collected to the driver or folded into an isin literal
         CommitLog.purgeKeys(s, dir, "k", base.filter(col("k") % 50 === 2)
           .select(col("k")))
-        dir
       }
       // probe keys picked FROM the data (TPC-H orderkeys are sparse)
       val sk = base.filter(col("k") % 2 === 0 && col("k") % 50 =!= 2)
@@ -1919,8 +1861,7 @@ object LakehouseQueries {
     // row/total answers.
     "dml_partition_evolution" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(partEvoDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_pevo").toString
+      val root = graft.Derived.dir("pevo", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         val mk = base.agg(max(col("k"))).head().getLong(0)
@@ -1948,7 +1889,6 @@ object LakehouseQueries {
         // one footer pass over u0 ++ u1 keeps the example simple
         CommitLog.writeColStats(dir, 1L,
           CommitLog.footerColStats(s, dir, u0 ++ u1, Seq("k")))
-        dir
       }
       val mk = load(s, d, "orders")
         .agg(max(col("o_orderkey"))).head().getLong(0)
@@ -1985,8 +1925,7 @@ object LakehouseQueries {
     // O(versions) metadata removals — never a data scan.
     "dml_vacuum" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(vacuumDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_vac").toString
+      val root = graft.Derived.dir("vac", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(col("k") % 3 === 0).write.parquet(s"$dir/data/s0")
@@ -2003,7 +1942,6 @@ object LakehouseQueries {
             s"failed: ${rep.failedPaths}")
         require(CommitLog.versions(dir) == Seq(2L),
           "expired manifests must be gone after vacuum")
-        dir
       }
       CommitLog.snapshot(s, root, 2L)
         .agg(count(lit(1)).as("n_rows"),
@@ -2025,8 +1963,7 @@ object LakehouseQueries {
     // touched until the resolved snapshot scans.
     "dml_time_travel_ts" -> ((s, d) => {
       import graft.sources.CommitLog
-      val root = graft.queries.ScaleQueries.freshDir(ttTsDir, d, "orders") {
-        val dir = java.nio.file.Files.createTempDirectory("graft_ttts").toString
+      val root = graft.Derived.dir("ttts", d, "orders") { dir =>
         val base = load(s, d, "orders")
           .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         base.filter(col("k") % 3 === 0).write.parquet(s"$dir/data/s0")
@@ -2038,7 +1975,6 @@ object LakehouseQueries {
         base.filter(col("k") % 3 === 2).write.parquet(s"$dir/data/s2")
         CommitLog.commit(dir, 2L, Seq("data/s0", "data/s1", "data/s2"))
         CommitLog.writeCommitTs(dir, 2L, 3000000L)
-        dir
       }
       Seq(1500000L, 2000000L, 9999999L).map { asOf =>
         val v = CommitLog.versionAsOf(root, asOf)
@@ -2052,129 +1988,14 @@ object LakehouseQueries {
     }),
   )
 
-  private val cdcReadDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val cdcMorDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val txnMultiDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val replayStateDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val appendTableDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val appendStaleStateDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val appendViewStateDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val aggViewStateDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val archTableDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val archStateDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val joinViewStateDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val dimTableDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val renameDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val wapDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val constraintsDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val fkDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val purgeDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val purgeIdxDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val dropColDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val addColDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val widenColDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val mergeCowDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val zorderDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val morDeleteDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val morUpsertDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val applyDelDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val compactDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val bloomSkipDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val restoreDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val timeTravelDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val optimizeDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val schemaEvoDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val skipStatsDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val partEvoDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val vacuumDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val ttTsDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val incrReadDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val cloneDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The 4-version lifecycle table S12 (dml_cdc_read) and S17
     * (dml_history) share: v0 base insert in k%4 bucket units, v1 COW
     * reprice of bucket 2, v2 OPTIMIZE to one unit, v3 COW delete of
     * k%4==1. Built once per (sfDir, orders fingerprint).
     */
   private[graft] def cdcTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.queries.ScaleQueries.freshDir(cdcReadDir, d, "orders") {
+    graft.Derived.dir("cdc", d, "orders") { dir =>
       import graft.sources.CommitLog
-      val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
       val base = load(s, d, "orders")
         .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"),
           (col("o_orderkey") % 4).cast("int").as("bucket"))
@@ -2195,7 +2016,6 @@ object LakehouseQueries {
       CommitLog.snapshot(s, dir, 2L).filter(col("k") % 4 =!= 1)
         .coalesce(1).write.parquet(s"$dir/data/v3")
       CommitLog.commit(dir, 3L, Seq("data/v3"))
-      dir
     }
 
   /** Register the maintained orders-by-(k%10) view of the S12 fact
@@ -2229,15 +2049,13 @@ object LakehouseQueries {
     */
   private[graft] def archTable(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    graft.queries.ScaleQueries.freshDir(archTableDir, d, "orders") {
+    graft.Derived.dir("archtab", d, "orders") { dir =>
       import graft.sources.CommitLog
-      val dir = java.nio.file.Files.createTempDirectory("graft_archtab").toString
       load(s, d, "orders")
         .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
         .filter(col("k") % 4 === 1)
         .coalesce(1).write.parquet(s"$dir/data/v0")
       CommitLog.commit(dir, 0L, Seq("data/v0"))
-      dir
     }
 
   /** Register the archive-by-(k%10) view for the S63 union rewrite.
@@ -2250,10 +2068,7 @@ object LakehouseQueries {
       d: String): (String, Long) = {
     import graft.sources.CommitLog
     val root = archTable(s, d)
-    val stDir = graft.queries.ScaleQueries.freshDir(archStateDir, d,
-        "orders") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_archstate").toString
+    val stDir = graft.Derived.dir("archstate", d, "orders") { dir =>
       val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
       CommitLog.snapshot(s, root, 0L)
         .groupBy((col("k") % 10).as("g"))
@@ -2262,7 +2077,6 @@ object LakehouseQueries {
           coalesce(sum(col("p").cast(DecimalType(38, 2))), zero)
             .cast(DecimalType(38, 2)).as("total"))
         .write.parquet(s"$dir/v0")
-      dir
     }
     graft.plans.MvCatalog.register("orders_arch_by_g",
       graft.plans.MvCatalog.MvDef(
@@ -2299,10 +2113,7 @@ object LakehouseQueries {
     import graft.sources.CommitLog
     val fact = cdcTable(s, d)
     val dim = dimTable(s, d)
-    val stDir = graft.queries.ScaleQueries.freshDir(joinViewStateDir, d,
-        "orders") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_joinview").toString
+    val stDir = graft.Derived.dir("joinview", d, "orders") { dir =>
       val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
       // the global step order interleaving both tables' histories;
       // each step names (table-with-changes, its version, the OTHER
@@ -2368,7 +2179,6 @@ object LakehouseQueries {
       }.foreach { last =>
         s.read.parquet(last).write.parquet(s"$dir/final")
       }
-      dir
     }
     stDir
   }
@@ -2402,10 +2212,8 @@ object LakehouseQueries {
     */
   private[graft] def appendTable(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    graft.queries.ScaleQueries.freshDir(appendTableDir, d, "orders") {
+    graft.Derived.dir("appendtab", d, "orders") { dir =>
       import graft.sources.CommitLog
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_appendtab").toString
       val base = load(s, d, "orders")
         .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
       base.filter(col("k") % 2 === 0).coalesce(1)
@@ -2414,7 +2222,6 @@ object LakehouseQueries {
       base.filter(col("k") % 2 === 1).coalesce(1)
         .write.parquet(s"$dir/data/v1")
       CommitLog.commit(dir, 1L, Seq("data/v0", "data/v1"))
-      dir
     }
 
   /** The (g, n, nn, total, mn, mx) state of an append-only table's
@@ -2431,12 +2238,8 @@ object LakehouseQueries {
       d: String): String = {
     import graft.sources.CommitLog
     val root = appendTable(s, d)
-    val stDir = graft.queries.ScaleQueries.freshDir(appendViewStateDir, d,
-        "orders") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_appendview").toString
+    val stDir = graft.Derived.dir("appendview", d, "orders") { dir =>
       foldAppendMinMaxState(s, root, dir)
-      dir
     }
     s"$stDir/v${CommitLog.replayStates(stDir).last}"
   }
@@ -2502,10 +2305,7 @@ object LakehouseQueries {
       d: String): String = {
     import graft.sources.CommitLog
     val root = appendTable(s, d)
-    val stDir = graft.queries.ScaleQueries.freshDir(appendStaleStateDir, d,
-        "orders") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_stalestate").toString
+    val stDir = graft.Derived.dir("stalestate", d, "orders") { dir =>
       val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
       CommitLog.changes(s, root, 0L)
         .groupBy((col("k") % 7).as("g"))
@@ -2514,7 +2314,6 @@ object LakehouseQueries {
           coalesce(sum(col("p").cast(DecimalType(38, 2))), zero)
             .cast(DecimalType(38, 2)).as("total"))
         .write.parquet(s"$dir/v0")
-      dir
     }
     s"$stDir/v0"
   }
@@ -2593,10 +2392,7 @@ object LakehouseQueries {
       d: String): String = {
     import graft.sources.CommitLog
     val root = cdcTable(s, d)
-    val stDir = graft.queries.ScaleQueries.freshDir(aggViewStateDir, d,
-        "orders") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_aggview").toString
+    val stDir = graft.Derived.dir("aggview", d, "orders") { dir =>
       val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
       // State carries nn = the signed count of NON-NULL values
       // alongside (n, total) — ADVICE r13: without it a group whose
@@ -2637,7 +2433,6 @@ object LakehouseQueries {
             Some(out)
         }
       }
-      dir
     }
     s"$stDir/v${CommitLog.replayStates(stDir).last}"
   }
@@ -2650,9 +2445,8 @@ object LakehouseQueries {
     * (sfDir, orders fingerprint).
     */
   private def dimTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.queries.ScaleQueries.freshDir(dimTableDir, d, "orders") {
+    graft.Derived.dir("dim", d, "orders") { dir =>
       import graft.sources.CommitLog
-      val dir = java.nio.file.Files.createTempDirectory("graft_dim").toString
       val base = load(s, d, "orders")
         .select(col("o_orderkey").as("k"),
           (col("o_orderkey") % 10).cast("bigint").as("g"),
@@ -2668,7 +2462,6 @@ object LakehouseQueries {
         .write.parquet(s"$dir/data/v1b3")
       CommitLog.commit(dir, 1L,
         v0Units.filterNot(_.endsWith("bucket=3")) :+ "data/v1b3")
-      dir
     }
 
   /** The append-only 3-version log S10/S11 share: v0/v1/v2 each add
@@ -2676,8 +2469,7 @@ object LakehouseQueries {
     * fingerprint).
     */
   private def incrTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.queries.ScaleQueries.freshDir(incrReadDir, d, "orders") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    graft.Derived.dir("incr", d, "orders") { dir =>
       val base = load(s, d, "orders")
         .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
       (0 to 2).foreach { i =>
@@ -2685,7 +2477,6 @@ object LakehouseQueries {
         graft.sources.CommitLog.commit(dir, i.toLong,
           (0 to i).map(j => s"data/a$j"))
       }
-      dir
     }
 
   val oracle: Map[String, String] = Map(

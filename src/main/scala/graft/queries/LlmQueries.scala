@@ -26,30 +26,19 @@ import graft.api.GraftOps
   */
 object LlmQueries {
 
-  // One persisted IVF index per sf-dir per JVM: first use builds the
-  // bucket-partitioned parquet, every later use (and every later
-  // session pointing at the same tmp) reuses the files.
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // The delta-grown commit-log IVF table (sim_ivf_delta): built once
-  // per (sfDir, embeddings fingerprint).
-  private[graft] val ivfLogDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (or reuse) the 3-version commit-log IVF table: v0 = the
     * standing corpus (vec_id%10≠0) bucket-assigned against the frozen
     * quantizer, v1 = the arriving batch appended O(delta), v2 = the
     * vec_id%9 slice (probe ids excluded) DELETED via one tombstone
     * unit on the dv channel — no bucket unit touched after its
     * ingest. sim_ivf_delta probes v1, sim_ivf_delete probes v2.
+    * Built once per (sfDir, embeddings fingerprint).
     */
   private def ivfLogTable(s: org.apache.spark.sql.SparkSession, d: String,
       emb: org.apache.spark.sql.DataFrame,
       cent: org.apache.spark.sql.DataFrame): String = {
     import graft.sources.CommitLog
-    graft.queries.ScaleQueries.freshDir(ivfLogDir, d, "embeddings") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivflog").toString
+    graft.Derived.dir("ivflog", d, "embeddings") { dir =>
       def appendUnits(part: org.apache.spark.sql.DataFrame,
           sub: String): Seq[(String, Long, Long, Long)] = {
         GraftOps.ivfAssign(part, "vec_id", "embedding", cent)
@@ -135,38 +124,22 @@ object LlmQueries {
       }
       CommitLog.commit(dir, 3L, cpctSt.map(_._1))
       CommitLog.writeStats(dir, 3L, cpctSt)
-      dir
     }
   }
 
-  // Fingerprint (size + mtime) of a source table file. Computed BEFORE
-  // the cache lookup and baked into the cache KEY, not just the path:
-  // if the driver regenerates testdata while this JVM is alive (the
-  // round-6 failure mode), the changed fingerprint misses the cache and
-  // forces a rebuild instead of serving the stale pre-regen index.
-  private def srcFingerprint(sfDir: String, table: String): String =
-    graft.Tables.fingerprint(sfDir, table)
-
+  /** The persisted IVF index for `sfDir`'s embeddings: built on first
+    * use per (sfDir, embeddings fingerprint) in this JVM, every later
+    * probe reads the bucket-partitioned parquet. It carries `label` as
+    * a scalar PAYLOAD column so metadata predicates evaluate at the
+    * index scan itself (filtered ANN).
+    */
   private def ivfIndexFor(s: org.apache.spark.sql.SparkSession, sfDir: String,
       emb: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame): String = {
-    val fp = srcFingerprint(sfDir, "embeddings")
-    ivfIndexCache.computeIfAbsent(s"$sfDir|$fp", _ => {
-      val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        // v2 layout (round 13): the index carries `label` as a scalar
-        // PAYLOAD column so metadata predicates evaluate at the index
-        // scan itself (filtered ANN) — new dir name so a v1 index left
-        // by an earlier JVM can never serve the payload-less schema
-        s"graft_ivf2_${Integer.toHexString((sfDir + fp).hashCode)}").toString
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
-        GraftOps.ivfIndexBuild(emb, "vec_id", "embedding", cent, path,
-          payload = Seq("label"))
-      path
-    })
-  }
-
-  private val centCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      cent: org.apache.spark.sql.DataFrame): String =
+    graft.Derived.dir("ivf", sfDir, "embeddings") { path =>
+      GraftOps.ivfIndexBuild(emb, "vec_id", "embedding", cent, path,
+        payload = Seq("label"))
+    }
 
   /** The persisted coarse-quantizer table (cl, centroid) for `d`'s
     * embeddings corpus — quantizer centroids are INDEX state (a
@@ -185,18 +158,11 @@ object LlmQueries {
     * are unchanged).
     */
   private[graft] def centFor(s: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame = {
-    val fp = srcFingerprint(sfDir, "embeddings")
-    val path = centCache.computeIfAbsent(s"$sfDir|$fp", _ => {
-      val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_cent_${Integer.toHexString((sfDir + fp).hashCode)}").toString
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS")))
-        GraftOps.centroids(load(s, sfDir, "embeddings"), "label", "embedding")
-          .coalesce(1).write.mode("overwrite").parquet(p)
-      p
+      sfDir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.Derived.dir("cent", sfDir, "embeddings") { p =>
+      GraftOps.centroids(load(s, sfDir, "embeddings"), "label", "embedding")
+        .coalesce(1).write.mode("overwrite").parquet(p)
     })
-    s.read.parquet(path)
-  }
 
   /** Pre-build (idempotently) the persisted IVF index for `d` so later
     * sim_ivf calls time only the probe path — the amortized steady
@@ -213,9 +179,6 @@ object LlmQueries {
     ivfIndexFor(s, d, emb, centFor(s, d))
   }
 
-  private val pqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (or reuse) the persisted PQ index for `d`: the codebook
     * (trained once, m=8 × dsub=8 × ksub=16, 2 Lloyd rounds) written as
     * (sub, code, cent) parquet next to the encoded corpus (c_id,
@@ -224,26 +187,18 @@ object LlmQueries {
     * which is the entire point of a PQ index.
     */
   private[graft] def pqIndexFor(s: org.apache.spark.sql.SparkSession,
-      sfDir: String, emb: org.apache.spark.sql.DataFrame): String = {
-    val fp = srcFingerprint(sfDir, "embeddings")
-    pqIndexCache.computeIfAbsent(s"$sfDir|$fp", _ => {
-      val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_pq_${Integer.toHexString((sfDir + fp).hashCode)}").toString
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(path, "index", "_SUCCESS"))) {
-        import s.implicits._
-        val cb = GraftOps.pqTrain(emb, "vec_id", "embedding",
-          m = 8, dsub = 8, ksub = 16, iters = 2)
-        cb.zipWithIndex.flatMap { case (codes, sub) =>
-          codes.zipWithIndex.map { case (cent, j) => (sub, j, cent.toSeq) }
-        }.toSeq.toDF("sub", "code", "cent")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/cb")
-        GraftOps.pqEncode(emb, "vec_id", "embedding", cb)
-          .write.mode("overwrite").parquet(s"$path/index")
-      }
-      path
-    })
-  }
+      sfDir: String, emb: org.apache.spark.sql.DataFrame): String =
+    graft.Derived.dir("pq", sfDir, "embeddings") { path =>
+      import s.implicits._
+      val cb = GraftOps.pqTrain(emb, "vec_id", "embedding",
+        m = 8, dsub = 8, ksub = 16, iters = 2)
+      cb.zipWithIndex.flatMap { case (codes, sub) =>
+        codes.zipWithIndex.map { case (cent, j) => (sub, j, cent.toSeq) }
+      }.toSeq.toDF("sub", "code", "cent")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/cb")
+      GraftOps.pqEncode(emb, "vec_id", "embedding", cb)
+        .write.mode("overwrite").parquet(s"$path/index")
+    }
 
   /** The persisted codebook back as driver model state (m×ksub×dsub —
     * KiB-sized by construction).
@@ -261,27 +216,16 @@ object LlmQueries {
   }
 
   // One persisted MinHash signature index of the "existing corpus"
-  // (doc_id % 5 != 0) per sf-dir per JVM — same amortization contract
-  // as the IVF index: built once, every later probe (and bench run)
-  // times only the delta path.
-  private val mhIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // (doc_id % 5 != 0) per (sfDir, documents fingerprint) per JVM — same
+  // amortization contract as the IVF index: built once, every later
+  // probe times only the delta path.
   private def mhIndexFor(s: org.apache.spark.sql.SparkSession,
-      sfDir: String): String = {
-    // fingerprint in the cache KEY (see srcFingerprint): a testdata
-    // regen mid-JVM forces a rebuild rather than a stale-index probe
-    val fp = srcFingerprint(sfDir, "documents")
-    mhIndexCache.computeIfAbsent(s"$sfDir|$fp", _ => {
-      val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_mhidx_${Integer.toHexString((sfDir + fp).hashCode)}").toString
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
-        GraftOps.minhashIndexBuild(
-          load(s, sfDir, "documents").filter(col("doc_id") % 5 =!= 0),
-          "doc_id", "text", path)
-      path
-    })
-  }
+      sfDir: String): String =
+    graft.Derived.dir("mhidx", sfDir, "documents") { path =>
+      GraftOps.minhashIndexBuild(
+        load(s, sfDir, "documents").filter(col("doc_id") % 5 =!= 0),
+        "doc_id", "text", path)
+    }
 
   /** Pre-build (idempotently) the persisted MinHash index for `d` so
     * later dedup_incremental calls time only the delta probe path.

@@ -89,49 +89,38 @@ object RetrievalQueries {
         "CAST(w_hash + w_join + w_merge + w_scan + w_window AS DECIMAL(18,6)) AS bm25")
       .orderBy("doc_id")
 
-  // The delta-grown commit-log postings table (text_bm25_postings):
-  // built once per sf-dir, re-probed across Verify/Bench runs — the
-  // sim_ivf_delta precedent applied to the lexical index.
-  private[graft] val postingsLogDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (or reuse) the 3-version postings index table: v0 = the
     * standing corpus (doc_id%10≠0), v1 = the arriving batch appended
     * O(delta), v2 = the doc_id%7 slice DELETED via a tombstone unit +
     * a signed meta unit (no bucket unit touched at any version
-    * boundary after its ingest).
+    * boundary after its ingest). Built once per sf-dir per JVM — the
+    * sim_ivf_delta precedent applied to the lexical index.
     */
   private def postingsIndex(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    graft.queries.ScaleQueries.freshDir(postingsLogDir, d, "documents")(
-      buildPostingsAt(s, d))
+    graft.Derived.dir("bm25log", d, "documents")(buildPostingsAt(s, d, _))
 
   // The PURGED twin of the index (text_bm25_postings_purge): its own
   // build (the shared one must stay unpurged for the other three
   // probes), then a doc_id%10==3 GDPR erasure THROUGH purgeKeys.
-  private[graft] val postingsPurgeLogDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def postingsPurgedIndex(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    graft.queries.ScaleQueries.freshDir(postingsPurgeLogDir, d, "documents") {
-      val dir = buildPostingsAt(s, d)
+    graft.Derived.dir("bm25log_purged", d, "documents") { dir =>
+      buildPostingsAt(s, d, dir)
       graft.sources.CommitLog.purgeKeys(s, dir, "doc_id",
         load(s, d, "documents")
           .filter(col("text").isNotNull && col("doc_id") % 10 === 3)
           .select(col("doc_id")))
-      dir
     }
 
-  /** The 4-version postings-index build shared by the probe family
-    * and the purge variant — see [[postingsIndex]] for the lifecycle.
+  /** The 4-version postings-index build into `dir`, shared by the probe
+    * family and the purge variant — see [[postingsIndex]] for the
+    * lifecycle.
     */
   private def buildPostingsAt(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
+      d: String, dir: String): Unit = {
     import graft.sources.CommitLog
     locally {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_bm25log").toString
       val docsAll = load(s, d, "documents").filter(col("text").isNotNull)
       def ingest(part: org.apache.spark.sql.DataFrame,
           sub: String): Seq[(String, Long, Long, Long)] = {
@@ -240,7 +229,6 @@ object RetrievalQueries {
       } ++ cleanSt :+ (("data/cmeta", -1L, -1L, 1L))
       CommitLog.commit(dir, 3L, cpctSt.map(_._1))
       CommitLog.writeStats(dir, 3L, cpctSt)
-      dir
     }
   }
 

@@ -26,24 +26,18 @@ import graft.Tables.{dec, load}
   */
 object RuntimeQueries {
 
-  /** One partitioned copy of `orders` per (JVM, sfDir) — the layout
-    * cost a lakehouse pays once at ingest, amortized over every
-    * pruned query after (same attribution rule as join_bucketed).
-    */
-  private val dppDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val queries: Map[String, Q] = Map(
     // V1: dim-side filter prunes fact partitions at runtime. The dim
     // carries a DERIVED filter column (leading digit of the priority)
     // so static partition pruning can't see it — only the DPP
     // subquery, fed by the dim broadcast, can.
     "join_dpp" -> ((s, d) => {
-      val dir = ScaleQueries.freshDir(dppDir, d, "orders") {
-        val out = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+      // one partitioned copy of `orders` per (JVM, sfDir) — the layout
+      // cost a lakehouse pays once at ingest, amortized over every
+      // pruned query after (same attribution rule as join_bucketed)
+      val dir = graft.Derived.dir("dpp", d, "orders") { out =>
         load(s, d, "orders")
           .write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
-        out
       }
       val fact = s.read.parquet(dir)
       val dim = load(s, d, "orders").select("o_orderpriority").distinct()

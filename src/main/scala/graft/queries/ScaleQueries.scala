@@ -63,12 +63,10 @@ object ScaleQueries {
     // directory's files are touched. Exempt (sink); PlanShapeSpec
     // asserts the PartitionFilters pruning.
     "sink_partitioned" -> ((s, d) => {
-      val dir = freshDir(sinkPartDir, d, "orders") {
-        val out = java.nio.file.Files.createTempDirectory("graft_part_sink").toString
+      val dir = graft.Derived.dir("part_sink", d, "orders") { out =>
         load(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
           .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-        out
       }
       s.read.parquet(dir)
         .filter(col("o_orderstatus") === "F")
@@ -83,14 +81,12 @@ object ScaleQueries {
     // counts sane; the test asserts the file counts, the oracle checks
     // the data survived byte-exact.
     "sink_compacted" -> ((s, d) => {
-      val dir = freshDir(compactDir, d, "orders") {
-        val root = java.nio.file.Files.createTempDirectory("graft_compact").toString
+      val dir = graft.Derived.dir("compact", d, "orders") { root =>
         val o = load(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
         o.repartition(64).write.mode("overwrite").parquet(s"$root/small")
         s.read.parquet(s"$root/small").repartition(4)
           .write.mode("overwrite").parquet(s"$root/compact")
-        root
       }
       s.read.parquet(s"$dir/compact").orderBy("o_orderkey")
     }),
@@ -106,15 +102,13 @@ object ScaleQueries {
     // matches the oracle's arithmetic. At 100 TB: one narrow-keyed
     // exchange (repartition on shard) and 8 parallel streams out.
     "sink_shards" -> ((s, d) => {
-      val dir = freshDir(shardSinkDir, d, "documents") {
-        val out = java.nio.file.Files.createTempDirectory("graft_shard_sink").toString
+      val dir = graft.Derived.dir("shard_sink", d, "documents") { out =>
         load(s, d, "documents")
           .withColumn("shard",
             (conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10)
               .cast("bigint") % 8).cast("int"))
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard").parquet(out)
-        out
       }
       s.read.parquet(dir)
         .groupBy(col("shard").cast("bigint").as("shard"))
@@ -136,15 +130,13 @@ object ScaleQueries {
     // parallel line-writer streams; the read-back is schema-pinned so
     // a loader never pays an inference pass.
     "sink_jsonl" -> ((s, d) => {
-      val dir = freshDir(jsonlSinkDir, d, "documents") {
-        val out = java.nio.file.Files.createTempDirectory("graft_jsonl_sink").toString
+      val dir = graft.Derived.dir("jsonl_sink", d, "documents") { out =>
         load(s, d, "documents")
           .withColumn("shard",
             (conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10)
               .cast("bigint") % 4).cast("int"))
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard").json(out)
-        out
       }
       s.read
         .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT, shard INT")
@@ -173,71 +165,10 @@ object ScaleQueries {
     }),
   )
 
-  /** Regen-safe derived-dir cache: the cached value carries the source
-    * table's fingerprint, so a driver testdata rewrite mid-JVM misses
-    * and rebuilds instead of serving a stale export (the round-6
-    * failure class, same fix as the minhash/IVF index caches).
-    */
-  private[graft] def freshDir(
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
-      sfDir: String, table: String)(build: => String): String = {
-    val fp = graft.Tables.fingerprint(sfDir, table)
-    // Build-new, swap, THEN reclaim the invalidated export (ADVICE r8):
-    // deleting before the build meant a failed Spark write left the map
-    // still pointing at the just-deleted directory — a dangling path
-    // for every cachedPath caller until the next regen. With this
-    // ordering a failed build propagates its exception and the old
-    // entry (and its directory) stay intact and servable.
-    val v = cache.compute(sfDir, (_, old) =>
-      if (old != null && old.startsWith(fp + "|")) old
-      else {
-        val fresh = fp + "|" + build
-        // the regen invalidated the old export — reclaim it AFTER the
-        // new one exists, or a long-lived JVM leaks a table copy per
-        // sink per regen
-        if (old != null) deleteRecursively(old.substring(old.indexOf('|') + 1))
-        fresh
-      })
-    v.substring(v.indexOf('|') + 1)
-  }
-
-  /** Best-effort recursive delete of a stale derived directory — a
-    * leaked cache dir is waste, not corruption, so failures are
-    * intentionally dropped here. The counting, failure-surfacing
-    * variant lives in [[graft.sources.Fs.deleteRecursively]] (VACUUM
-    * needs the accounting; cache cleanup does not).
-    */
-  private[graft] def deleteRecursively(path: String): Unit =
-    try graft.sources.Fs.deleteRecursively(path)
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  private def cachedPath(
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
-      sfDir: String): String = {
-    val v = cache.get(sfDir)
-    require(v != null,
-      s"no cached export for $sfDir in this JVM — run the producing " +
-        "sink query (sink_shards / sink_jsonl / sink_compacted) before " +
-        "asking for its path")
-    v.substring(v.indexOf('|') + 1)
-  }
-
-  /** Export locations for the layout tests (fingerprint prefix stripped). */
-  private[graft] def shardSinkPath(sfDir: String): String = cachedPath(shardSinkDir, sfDir)
-  private[graft] def jsonlSinkPath(sfDir: String): String = cachedPath(jsonlSinkDir, sfDir)
-  private[graft] def compactPath(sfDir: String): String = cachedPath(compactDir, sfDir)
-
-  private val sinkPartDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val shardSinkDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val jsonlSinkDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val compactDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Export locations for the layout tests. */
+  private[graft] def shardSinkPath(sfDir: String): String = graft.Derived.path("shard_sink", sfDir)
+  private[graft] def jsonlSinkPath(sfDir: String): String = graft.Derived.path("jsonl_sink", sfDir)
+  private[graft] def compactPath(sfDir: String): String = graft.Derived.path("compact", sfDir)
 
   private val bucketSetupLock = new Object
 

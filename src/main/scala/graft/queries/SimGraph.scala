@@ -37,7 +37,7 @@ import graft.api.GraftOps
   *    full-corpus build (the `graph_edge_index` oracle checks this
   *    against DuckDB's all-pairs join), while the standing units carry
   *    over untouched (spec-pinned).
-  *  - Regen safety: fingerprint-keyed via [[ScaleQueries.freshDir]]
+  *  - Regen safety: fingerprint-keyed via [[graft.Derived]]
   *    (build-new, swap, then reclaim) — a driver testdata regen
   *    mid-JVM rebuilds instead of serving stale edges.
   *  - Bench reads amortized cost: [[warm]] runs from
@@ -53,17 +53,13 @@ object SimGraph {
     */
   val buildCos = 0.3
 
-  private val dirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The commit-log table root for `d`'s similarity graph, building it
     * on first touch (per embeddings fingerprint per JVM).
     */
   private[graft] def tableFor(s: SparkSession, d: String): String = {
     graft.functions.GraftFunctions.register(s) // array_dot for the builds
-    ScaleQueries.freshDir(dirCache, d, "embeddings") {
+    graft.Derived.dir("simgraph", d, "embeddings") { dir =>
       import graft.sources.CommitLog
-      val dir = java.nio.file.Files.createTempDirectory("graft_simgraph").toString
       val emb = graft.Tables.load(s, d, "embeddings")
       val standing = emb.filter(col("vec_id") % 10 =!= 0)
       val batch = emb.filter(col("vec_id") % 10 === 0)
@@ -84,7 +80,6 @@ object SimGraph {
         .sortWithinPartitions("cos_sim")
         .write.parquet(s"$dir/data/delta")
       CommitLog.commit(dir, 1L, Seq("data/base", "data/delta"))
-      dir
     }
   }
 

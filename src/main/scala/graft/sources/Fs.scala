@@ -5,7 +5,7 @@ package graft.sources
   * the load-bearing caller: reclamation must COUNT what it deleted and
   * SURFACE what it could not (a silent best-effort delete under a
   * retention protocol is how formats end up double-billing storage),
-  * unlike the derived-cache cleanup in ScaleQueries where best-effort
+  * unlike the derived-cache cleanup in [[graft.Derived]] where best-effort
   * is the right contract.
   */
 object Fs {

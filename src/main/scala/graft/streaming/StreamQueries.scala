@@ -79,7 +79,7 @@ object StreamQueries {
     // gets the rewrite wired up. Round15OpsSpec's lifecycle pins run
     // against the same build, exercised in full on first touch.
     val fp = graft.Tables.fingerprint(d, "orders")
-    // Build-new, swap, THEN reclaim (ADVICE r16 — the freshDir
+    // Build-new, swap, THEN reclaim (ADVICE r16 — the graft.Derived
     // contract): deleting the old dirs before the build meant a failed
     // buildAggViewFixture left the retained map entry pointing at
     // deleted directories until a later call retried. With this
@@ -90,8 +90,8 @@ object StreamQueries {
       else {
         val (r, sd, v) = buildAggViewFixture(s, d)
         if (old != null) {
-          graft.queries.ScaleQueries.deleteRecursively(old._2)
-          graft.queries.ScaleQueries.deleteRecursively(old._3)
+          graft.Derived.deleteRecursively(old._2)
+          graft.Derived.deleteRecursively(old._3)
         }
         (fp, r, sd, v)
       })
@@ -192,7 +192,7 @@ object StreamQueries {
     // (review r16: the cache tuple only carries root + stateDir, and
     // ckpt lands preferentially on RAM-backed /dev/shm — leaking one
     // per regen contradicts the cache's reclaim contract)
-    graft.queries.ScaleQueries.deleteRecursively(ckpt)
+    graft.Derived.deleteRecursively(ckpt)
     (root, stateDir, CommitLog.versions(root).last)
   }
 
@@ -215,7 +215,7 @@ object StreamQueries {
     val (_, dir, schema) = sourceCache.compute(d, (_, old) =>
       if (old != null && old._1 == fp) old
       else {
-        if (old != null) graft.queries.ScaleQueries.deleteRecursively(old._2)
+        if (old != null) graft.Derived.deleteRecursively(old._2)
         val ev = load(s, d, "events")
           .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
             col("user_id"), col("event_type"), col("value"))

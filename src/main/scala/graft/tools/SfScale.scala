@@ -66,7 +66,7 @@ object SfScale {
       java.nio.file.Files.move(part,
         java.nio.file.Paths.get(out, s"$name.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      graft.queries.ScaleQueries.deleteRecursively(tmp)
+      graft.Derived.deleteRecursively(tmp)
       println(s"built $name")
     }
 

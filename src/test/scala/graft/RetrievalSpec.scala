@@ -35,9 +35,7 @@ class RetrievalSpec extends GraftSpec {
   test("text_bm25_postings: the manifest prunes to the query terms' buckets") {
     import graft.sources.CommitLog
     q("text_bm25_postings") // ensure the cached index exists
-    val cached = graft.queries.RetrievalQueries.postingsLogDir.get(sf)
-    assert(cached != null, "index fixture missing from the cache")
-    val root = cached.substring(cached.indexOf('|') + 1)
+    val root = Derived.path("bm25log", sf)
     val st = CommitLog.stats(root, 1L)
     val wanted = spark.createDataset(
       Seq("hash", "join", "merge", "scan", "window"))(
@@ -86,8 +84,7 @@ class RetrievalSpec extends GraftSpec {
     val del = q("text_bm25_postings_delete").collect()
     assert(cpt.map(_.toSeq).toSeq == del.map(_.toSeq).toSeq,
       "the compacted index must score identically to the tombstone-masked one")
-    val cached = graft.queries.RetrievalQueries.postingsLogDir.get(sf)
-    val root = cached.substring(cached.indexOf('|') + 1)
+    val root = Derived.path("bm25log", sf)
     // the dv channel is gone: steady-state probes pay no anti-join
     assert(CommitLog.deletes(root, 3L).isEmpty,
       "compaction must retire the tombstone sidecar")

@@ -13,14 +13,9 @@ class Round12OpsSpec extends GraftSpec {
   import graft.sources.CommitLog
 
   /** The cached IVF commit-log table root for this spec's sf dir
-    * (built by the first sim_ivf_* query run; cache value is
-    * "fingerprint|path").
+    * (built by the first sim_ivf_* query run).
     */
-  private def ivfRoot: String = {
-    val v = queries.LlmQueries.ivfLogDir.get(sf)
-    assert(v != null, "ivfLogTable cache must be populated")
-    v.substring(v.indexOf('|') + 1)
-  }
+  private def ivfRoot: String = Derived.path("ivflog", sf)
 
   test("sim_ivf_compact ranks identically to the tombstone-masked probe") {
     graft.functions.GraftFunctions.register(spark)

@@ -80,10 +80,7 @@ class Round18OpsSpec extends GraftSpec {
     // the same read sim_ivfpq performs: the persisted v2 index's routing
     val q = SparkEntry.queries("sim_ivfpq")(spark, sf) // forces index build
     q.count()
-    val fp = Tables.fingerprint(sf, "embeddings")
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_ivf2_${Integer.toHexString((sf + fp).hashCode)}").toString
-    val persisted = spark.read.parquet(path).select("c_id", "bucket")
+    val persisted = spark.read.parquet(Derived.path("ivf", sf)).select("c_id", "bucket")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(persisted.nonEmpty && persisted == fresh,
       "persisted index routing diverged from pointwise ivfAssign")

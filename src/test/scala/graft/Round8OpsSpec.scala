@@ -135,33 +135,102 @@ class Round8OpsSpec extends GraftSpec {
       "every vector must be assigned to exactly one cluster")
   }
 
-  test("sink caches rebuild when the source table fingerprint changes") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_regen").toString
+  /** A private sf dir holding only a copy of documents.parquet. */
+  private def docsCopy(prefix: String): String = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sf, "documents.parquet"),
       java.nio.file.Paths.get(tmp, "documents.parquet"))
-    val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    tmp
+  }
+
+  test("sink caches rebuild when the source table fingerprint changes") {
+    val tmp = docsCopy("graft_regen")
+    val other = docsCopy("graft_regen_other")
     var builds = 0
-    def build(): String = {
+    def build(p: String): Unit = {
       builds += 1
-      val p = java.nio.file.Files.createTempDirectory(s"graft_regen_d$builds")
-      java.nio.file.Files.createFile(p.resolve("part-0.parquet"))
-      p.toString
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "part-0.parquet"))
     }
-    val d1 = graft.queries.ScaleQueries.freshDir(cache, tmp, "documents")(build())
+    val d1 = Derived.dir("regen_spec", tmp, "documents")(build)
     assert(builds == 1)
-    assert(graft.queries.ScaleQueries.freshDir(cache, tmp, "documents")(build()) == d1,
+    assert(Derived.dir("regen_spec", tmp, "documents")(build) == d1,
       "unchanged fingerprint must reuse the cached export")
     assert(builds == 1)
+    val o1 = Derived.dir("regen_spec", other, "documents")(build)
+    assert(builds == 2 && o1 != d1, "each sf dir owns its own entry")
     // simulate the driver regenerating testdata mid-JVM
     java.nio.file.Files.setLastModifiedTime(
       java.nio.file.Paths.get(tmp, "documents.parquet"),
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 5000))
-    val d2 = graft.queries.ScaleQueries.freshDir(cache, tmp, "documents")(build())
-    assert(builds == 2 && d2 != d1,
+    val d2 = Derived.dir("regen_spec", tmp, "documents")(build)
+    assert(builds == 3 && d2 != d1,
       "a changed fingerprint must force a rebuild, not serve the stale export")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(d1)),
       "the invalidated export directory must be reclaimed, not leaked")
+    // the regen of `tmp` neither rebuilt nor reclaimed `other`'s entry
+    assert(Derived.dir("regen_spec", other, "documents")(build) == o1)
+    assert(builds == 3)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(o1, "part-0.parquet")))
+    assert(Derived.path("regen_spec", other) == o1)
+  }
+
+  test("a derived build may look up another derived entry inside its own build") {
+    val tmp = docsCopy("graft_nested")
+    val outer = Derived.dir("nested_outer", tmp, "documents") { p =>
+      val inner = Derived.dir("nested_inner", tmp, "documents") { q =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(q, "v"), "inner")
+      }
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "v"), inner)
+    }
+    val inner = Derived.path("nested_inner", tmp)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(outer, "v")) == inner)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(inner, "v")) == "inner")
+  }
+
+  test("a derived build that throws publishes nothing and keeps the previous entry") {
+    val tmp = docsCopy("graft_failbuild")
+    assertThrows[IllegalArgumentException](Derived.path("fail_spec", tmp))
+    var partial: String = null
+    intercept[IllegalStateException] {
+      Derived.dir("fail_spec", tmp, "documents") { p =>
+        partial = p
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(partial)),
+      "a failed build's partial directory must be dropped")
+    assertThrows[IllegalArgumentException](Derived.path("fail_spec", tmp))
+    val good = Derived.dir("fail_spec", tmp, "documents") { p =>
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "ok"))
+    }
+    java.nio.file.Files.setLastModifiedTime(
+      java.nio.file.Paths.get(tmp, "documents.parquet"),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 5000))
+    intercept[IllegalStateException] {
+      Derived.dir("fail_spec", tmp, "documents")(_ => throw new IllegalStateException("boom"))
+    }
+    assert(Derived.path("fail_spec", tmp) == good,
+      "a failed rebuild must leave the previous entry servable")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(good, "ok")))
+  }
+
+  test("the derived store's root is deleted when its JVM exits") {
+    val tmpdir = java.nio.file.Files.createTempDirectory("graft_exit_tmp")
+    val sfCopy = docsCopy("graft_exit_sf")
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val proc = new ProcessBuilder(javaBin, s"-Djava.io.tmpdir=$tmpdir",
+        "-cp", System.getProperty("java.class.path"),
+        "graft.DerivedExitProbe", sfCopy)
+      .redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes())
+    assert(proc.waitFor() == 0, out)
+    assert(out.contains("built " + tmpdir), out)
+    val left = {
+      val st = java.nio.file.Files.list(tmpdir)
+      try st.toArray.toSeq finally st.close()
+    }
+    assert(left.isEmpty, s"the store root outlived its JVM: $left")
   }
 
   test("text_decontaminate_bloom is bit-identical to the un-prescreened operator") {
@@ -206,5 +275,17 @@ class Round8OpsSpec extends GraftSpec {
         assert(math.abs(g.doubleValue() - w.doubleValue()) < 1.5e-6)
       }
     }
+  }
+}
+
+/** Forked by Round8OpsSpec: builds one derived directory under the
+  * JVM's own `java.io.tmpdir`, prints where, and exits.
+  */
+object DerivedExitProbe {
+  def main(args: Array[String]): Unit = {
+    val p = Derived.dir("exit_probe", args(0), "documents") { p =>
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "part-0.parquet"))
+    }
+    println("built " + p)
   }
 }

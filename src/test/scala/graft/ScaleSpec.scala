@@ -279,11 +279,36 @@ class ScaleSpec extends GraftSpec {
     }
   }
 
-  test("GraftExtensions registers null_safe_div via the injection API") {
+  test("GraftExtensions injects every function GraftFunctions.register installs") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
     val e = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(e)
-    // builder ran without throwing; function resolution itself is
-    // covered by GoldenSpec through the registry path
-    succeed
+    // registerFunctions is private[sql]: reach it the way a session
+    // build does, on a fresh copy of the built-in registry
+    val reg = FunctionRegistry.builtin.clone()
+    e.getClass.getMethod("registerFunctions", classOf[FunctionRegistry]).invoke(e, reg)
+    val names = Seq("null_safe_div", "array_dot", "simhash64", "char_entropy",
+      "bloom_agg", "bloom_might_contain")
+    assert(graft.functions.GraftFunctions.functions.map(_._1) == names)
+    names.foreach { n =>
+      assert(reg.functionExists(FunctionIdentifier(n)), s"$n was not injected")
+    }
+  }
+
+  test("GraftFunctions.register leaves a session that has every function untouched") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    val names = graft.functions.GraftFunctions.functions.map(f => FunctionIdentifier(f._1))
+    def infos = names.map(n => reg.lookupFunction(n).get)
+    graft.functions.GraftFunctions.register(spark)
+    val before = infos
+    graft.functions.GraftFunctions.register(spark)
+    assert(before.zip(infos).forall { case (a, b) => a eq b },
+      "a repeated register must not replace the registered functions")
+    // a session missing any one of them gets it back
+    reg.dropFunction(names.last)
+    graft.functions.GraftFunctions.register(spark)
+    assert(names.forall(reg.functionExists))
   }
 }
