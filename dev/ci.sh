@@ -13,7 +13,20 @@ sbt -batch test
 echo "== perfbench: sbt test =="
 (cd perfbench && sbt -batch test)
 echo "== graft.Verify $SF =="
-SPARK_GRAFT_CPUS="$CPUS" dev/run.sh graft.Verify "$SF" "$OUT" 2>/dev/null
+# Verify runs with a private java.io.tmpdir (dev/run.sh takes no JVM
+# flags, so it goes through JAVA_TOOL_OPTIONS); every graft_* dir the
+# run leaves there or in /dev/shm is a leak.
+VTMP="$(mktemp -d)"
+list_shm() { ls -d /dev/shm/graft_* 2>/dev/null | sort || true; }
+SHM_BEFORE="$(list_shm)"
+SPARK_GRAFT_CPUS="$CPUS" JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:-} -Djava.io.tmpdir=$VTMP" \
+  dev/run.sh graft.Verify "$SF" "$OUT" 2>/dev/null
+LEFT="$(ls -d "$VTMP"/graft_* 2>/dev/null || true)
+$(comm -13 <(echo "$SHM_BEFORE") <(list_shm))"
+rm -rf "$VTMP"
+if [ -n "$(echo "$LEFT" | tr -d '[:space:]')" ]; then
+  echo "graft.Verify left scratch dirs behind:"; echo "$LEFT"; exit 1
+fi
 echo "== dev/check.py =="
 python3 dev/check.py "$SF" "$OUT"
 echo "== graft.Bench ($SF) =="

@@ -11,7 +11,9 @@ import java.nio.file.{Files, Paths}
   *    only the slowest-5 per-query timings. Always well under 1 KB, so
   *    no tail capture can cut it mid-number.
   *  - BENCH_LOCAL.json in the cwd: the FULL per-query map (durable
-  *    copy, same schema with every query present).
+  *    copy, same schema with every query present), plus a `host`
+  *    object (nproc, MemTotal, JVM version and input arguments, master,
+  *    shuffle partitions).
   *
   * Timing protocol: each query runs TWICE and the MIN is reported.
   * Round 2's single-run timings showed 4× phantom regressions on
@@ -186,13 +188,38 @@ object Bench {
     val spreadMap = qmap(results.map { case (n, (_, s, _)) => n -> s })
     val firstMap = qmap(results.map { case (n, (_, _, f)) => n -> f })
     val full =
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(times)},"spread":$spreadMap,"first":$firstMap,"warm_sec":${num(warmSec, 3)},"p90_spread":${num(p90Spread, 3)},"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(times)},"spread":$spreadMap,"first":$firstMap,"warm_sec":${num(warmSec, 3)},"p90_spread":${num(p90Spread, 3)},"failed":$failedJson,"sf":"$sfDir","host":${hostJson(spark)}}"""
     val short =
       s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","queries":${qmap(slowest5)},"warm_sec":${num(warmSec, 2)},"p90_spread":${num(p90Spread, 2)},"failed":$failedJson,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("BENCH_LOCAL.json"), full + "\n")
     spark.stop()
     // after stop(): no executor log lines can land between this and exit
     println(short)
+  }
+
+  /** Where an archive was measured: cores, memory, JVM and Spark
+    * layout, so two BENCH_LOCAL files can be told apart by host.
+    */
+  private def hostJson(spark: SparkSession): String = {
+    def str(v: String): String =
+      "\"" + v.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      } + "\""
+    val memTotalKb = scala.util.Try {
+      val src = scala.io.Source.fromFile("/proc/meminfo")
+      try src.getLines().collectFirst {
+        case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong
+      } finally src.close()
+    }.toOption.flatten.map(_.toString).getOrElse("null")
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(a => str(a.toString)).mkString("[", ",", "]")
+    s"""{"nproc":${Runtime.getRuntime.availableProcessors},"mem_total_kb":$memTotalKb,""" +
+      s""""jvm_version":${str(System.getProperty("java.runtime.version"))},""" +
+      s""""jvm_args":$jvmArgs,"master":${str(spark.sparkContext.master)},""" +
+      s""""shuffle_partitions":${str(spark.conf.get("spark.sql.shuffle.partitions"))}}"""
   }
 
   /** One-time JVM warmup of shared infrastructure (MLlib class loading

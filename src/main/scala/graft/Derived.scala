@@ -15,7 +15,9 @@ import java.util.concurrent.atomic.AtomicLong
   * root, so a physical plan that scans it names the entry. The policy,
   * the same for every entry:
   *  - each JVM gets its own root under `java.io.tmpdir`, deleted at JVM
-  *    exit — nothing is reused across JVMs;
+  *    exit — nothing is reused across JVMs. Per-call scratch
+  *    directories ([[scratch]]) live under the same root, or under a
+  *    second per-JVM root in /dev/shm, deleted the same way;
   *  - build new, publish, THEN reclaim the invalidated directory. A
   *    build that throws publishes nothing: its partial directory is
   *    dropped and the previous entry (and its directory) stays
@@ -32,8 +34,19 @@ object Derived {
   private val locks = new ConcurrentHashMap[(String, String), AnyRef]()
   private val seq = new AtomicLong()
 
-  private lazy val root: Path = {
-    val r = Files.createTempDirectory("graft_derived")
+  private lazy val root: Path = deletedAtExit(Files.createTempDirectory("graft_derived"))
+
+  // Streaming checkpoints and outputs go to RAM-backed /dev/shm when it
+  // is writable: streaming time is dominated by checkpoint fsync I/O,
+  // which tmpfs makes free.
+  private lazy val tmpfsRoot: Path = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    if (Files.isDirectory(shm) && Files.isWritable(shm))
+      deletedAtExit(Files.createTempDirectory(shm, "graft_derived"))
+    else root
+  }
+
+  private def deletedAtExit(r: Path): Path = {
     // after SparkContext shutdown (priority 50): no job reads it then
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
       () => deleteRecursively(r.toString), 20)
@@ -63,6 +76,14 @@ object Derived {
       }
     }
   }
+
+  /** A fresh, empty directory for one call's scratch output (a sink
+    * round trip, a streaming checkpoint), under this JVM's root — under
+    * /dev/shm when `tmpfs` and it is writable — so it is deleted at JVM
+    * exit with the rest of the store.
+    */
+  def scratch(prefix: String, tmpfs: Boolean = false): String =
+    Files.createTempDirectory(if (tmpfs) tmpfsRoot else root, prefix).toString
 
   /** The directory last built for (`name`, `sfDir`) in this JVM. */
   def path(name: String, sfDir: String): String = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.sources.Parquet
 
 /** Public, parameterized operator library — the surface an application
   * builds pipelines on. `SparkEntry.queries` entries are thin bindings
@@ -1510,7 +1511,7 @@ object GraftOps {
     val probes = ivfProbes(probesDf, idCol, vecCol, cent, nprobe)
     val wanted = probes.select("bucket").distinct()
       .collect().map(_.get(0)).toSeq // metadata-sized: <= distinct probe buckets (the DPP pattern)
-    val scan = spark.read.parquet(indexPath)
+    val scan = Parquet.read(spark, indexPath)
       .filter(col("bucket").isin(wanted: _*))
     val bucketed = candidatePredicate.map(scan.filter).getOrElse(scan)
     ivfJoin(probes, bucketed, k)
@@ -2468,7 +2469,7 @@ object GraftOps {
     val mat = reuseMaterializer(delta, None)
     val deltaSigs = mat(bandSignatures(delta, idCol, textCol, bands, rowsPerBand)
       .withColumn("__delta", lit(true)))
-    val indexSigs = spark.read.parquet(indexPath)
+    val indexSigs = Parquet.read(spark, indexPath)
       .select(col(idCol), col("__band"), col("__sig"), lit(false).as("__delta"))
     val all = mat(indexSigs.unionByName(deltaSigs))
     val kept = all.join(

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
+import graft.sources.Parquet
 
 /** MATERIALIZED-VIEW AUTOMATIC REWRITE (round 13 — VERDICT r12 #7;
   * rollup subsumption round 14 — VERDICT r13 #4; ref: n/a, SURVEY §0 —
@@ -680,7 +681,7 @@ object MvRewrite extends Rule[LogicalPlan] {
   private def stateSelect(spark: org.apache.spark.sql.SparkSession,
       statePath: String): org.apache.spark.sql.DataFrame = {
     val F = org.apache.spark.sql.functions
-    spark.read.parquet(statePath).select(F.col("g"), F.col("n"),
+    Parquet.read(spark, statePath).select(F.col("g"), F.col("n"),
       F.col("nn"), F.col("total").cast(dec382).as("total"))
   }
 
@@ -834,7 +835,7 @@ object MvRewrite extends Rule[LogicalPlan] {
       keyExpr: Expression, valExpr: Expression,
       aliasMap: Map[Long, Expression],
       preds: Seq[Expression]): Option[LogicalPlan] =
-    buildFromStateDf(spark, agg, spark.read.parquet(statePath), groupExprs,
+    buildFromStateDf(spark, agg, Parquet.read(spark, statePath), groupExprs,
       keyExpr, valExpr, aliasMap, preds)
 
   private def buildFromStateDf(spark: org.apache.spark.sql.SparkSession,

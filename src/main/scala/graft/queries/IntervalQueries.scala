@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.load
+import graft.sources.Parquet
 
 /** Family Y — interval/corpus analytics + partition-overwrite
   * semantics (ref: n/a, SURVEY §0 — the reference repo is empty).
@@ -123,7 +124,7 @@ object IntervalQueries {
           case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
       }
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .select(col("o_orderkey"), col("price"), col("o_orderpriority"))
         .orderBy("o_orderkey")
     }),

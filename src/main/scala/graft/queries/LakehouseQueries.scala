@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables.{dec, load}
+import graft.sources.Parquet
 
 /** Family S — lakehouse / warehouse-maintenance extensions (ref: n/a,
   * SURVEY §0 — the reference repo is empty): calendar-dimension
@@ -498,7 +499,7 @@ object LakehouseQueries {
         base.filter(col("k") % 2 === 0).coalesce(1)
           .write.parquet(s"$dir/u0")
         CommitLog.commit(dir, 0L, Seq("u0"))
-        val r = s.read.parquet(s"$dir/u0")
+        val r = Parquet.read(s, s"$dir/u0")
           .agg(min(col("k")), max(col("k")), count(lit(1))).head()
         CommitLog.writeStats(dir, 0L,
           Seq(("u0", r.getLong(0), r.getLong(1), r.getLong(2))), Some("k"))
@@ -619,7 +620,7 @@ object LakehouseQueries {
       }
       val lastState =
         s"$repDir/v${CommitLog.replayStates(repDir).last}"
-      val rep = s.read.parquet(lastState)
+      val rep = Parquet.read(s, lastState)
         .agg(count(lit(1)).as("replica_rows"),
           sum(col("p")).cast(DecimalType(38, 2)).as("replica_total"))
       val fin = CommitLog.snapshot(s, root, vs.last)
@@ -647,7 +648,7 @@ object LakehouseQueries {
     // costs the feed plus a 10-row join, never a table re-read.
     "dml_cdc_agg_view" -> ((s, d) => {
       val last = aggViewLastState(s, d)
-      s.read.parquet(last).filter(col("n") =!= 0L)
+      Parquet.read(s, last).filter(col("n") =!= 0L)
         .select(col("g").cast("bigint").as("g"),
           col("n").cast("bigint").as("n"),
           col("total").cast(DecimalType(38, 2)).as("total"))
@@ -1808,7 +1809,7 @@ object LakehouseQueries {
     // join+group-by over both tables' FINAL snapshots — the
     // self-maintainable-join-view contract.
     "dml_cdc_join_view" -> ((s, d) =>
-      s.read.parquet(joinViewFinalState(s, d)).filter(col("n") =!= 0L)
+      Parquet.read(s, joinViewFinalState(s, d)).filter(col("n") =!= 0L)
         .select(col("g").cast("bigint").as("g"),
           col("n").cast("bigint").as("n"),
           col("total").cast(DecimalType(38, 2)).as("total"))
@@ -2164,7 +2165,7 @@ object LakehouseQueries {
             case (Some(prev), None) => Some(prev)
             case (Some(prev), Some(dl)) if ch.isEmpty => Some(prev)
             case (Some(prev), Some(dl)) =>
-              s.read.parquet(prev).join(dl, Seq("g"), "full_outer")
+              Parquet.read(s, prev).join(dl, Seq("g"), "full_outer")
                 .select(col("g"),
                   (coalesce(col("n"), lit(0L)) +
                     coalesce(col("dn"), lit(0L))).as("n"),
@@ -2177,7 +2178,7 @@ object LakehouseQueries {
               Some(out)
           }
       }.foreach { last =>
-        s.read.parquet(last).write.parquet(s"$dir/final")
+        Parquet.read(s, last).write.parquet(s"$dir/final")
       }
     }
     stDir
@@ -2279,7 +2280,7 @@ object LakehouseQueries {
           val out = s"$dir/v$v"
           // least/greatest skip nulls, so an absent side (group new
           // this version, or untouched) folds through correctly
-          s.read.parquet(prev).join(delta, Seq("g"), "full_outer")
+          Parquet.read(s, prev).join(delta, Seq("g"), "full_outer")
             .select(col("g"),
               (coalesce(col("n"), lit(0L)) +
                 coalesce(col("dn"), lit(0L))).as("n"),
@@ -2421,7 +2422,7 @@ object LakehouseQueries {
           case Some(prev) if ch.isEmpty => Some(prev) // maintenance: no-op
           case Some(prev) =>
             val out = s"$dir/v$v"
-            s.read.parquet(prev).join(delta, Seq("g"), "full_outer")
+            Parquet.read(s, prev).join(delta, Seq("g"), "full_outer")
               .select(col("g"),
                 (coalesce(col("n"), lit(0L)) +
                   coalesce(col("dn"), lit(0L))).as("n"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables.load
 import graft.api.GraftOps
+import graft.sources.Parquet
 
 /** Family K — LLM-data-pipeline operators (SURVEY.md §2.K).
   *
@@ -90,9 +91,9 @@ object LlmQueries {
       // the compaction contract (Round12OpsSpec).
       val bucketSt = st0 ++ st1
       def abs(rel: String) = java.nio.file.Paths.get(dir, rel).toString
-      val tomb = s.read.parquet(abs("data/dv"))
+      val tomb = Parquet.read(s, abs("data/dv"))
         .select(col("vec_id").as("c_id")).distinct()
-      val dirtyIds = s.read.parquet(bucketSt.map(u => abs(u._1)): _*)
+      val dirtyIds = Parquet.read(s, bucketSt.map(u => abs(u._1)))
         .join(broadcast(tomb), "c_id")
         .select(col("bval").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet // metadata-sized: <= nlist dirty bucket ids
@@ -102,7 +103,7 @@ object LlmQueries {
       // v3 carries v2's units verbatim with the dv retired (ADVICE
       // r12 — the unguarded zero-path read threw here).
       val cpctSt = if (dirtySt.isEmpty) bucketSt else {
-        s.read.parquet(dirtySt.map(u => abs(u._1)): _*)
+        Parquet.read(s, dirtySt.map(u => abs(u._1)))
           .join(broadcast(tomb), Seq("c_id"), "left_anti")
           .withColumn("bucket", col("bval"))
           .write.partitionBy("bucket").parquet(s"$dir/data/cpct")
@@ -159,7 +160,7 @@ object LlmQueries {
     */
   private[graft] def centFor(s: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(graft.Derived.dir("cent", sfDir, "embeddings") { p =>
+    Parquet.read(s, graft.Derived.dir("cent", sfDir, "embeddings") { p =>
       GraftOps.centroids(load(s, sfDir, "embeddings"), "label", "embedding")
         .coalesce(1).write.mode("overwrite").parquet(p)
     })
@@ -205,7 +206,7 @@ object LlmQueries {
     */
   private[graft] def pqCodebook(s: org.apache.spark.sql.SparkSession,
       root: String): Array[Array[Array[Double]]] = {
-    val rows = s.read.parquet(s"$root/cb")
+    val rows = Parquet.read(s, s"$root/cb")
       .collect() // model-state-sized: m×ksub codebook rows
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = rows.map(_._1).max + 1
@@ -585,7 +586,7 @@ object LlmQueries {
       val picked = CommitLog.stats(root, 1L)
         .filter { case (_, mn, mx, _) => wanted.exists(b => mn <= b && mx >= b) }
         .map(u => java.nio.file.Paths.get(root, u._1).toString)
-      val bucketed = s.read.parquet(picked: _*)
+      val bucketed = Parquet.read(s, picked)
         .withColumnRenamed("bval", "bucket")
       GraftOps.ivfRank(probes, bucketed, 5).orderBy("q_id", "rn")
     }),
@@ -615,9 +616,9 @@ object LlmQueries {
       val picked = CommitLog.stats(root, 2L)
         .filter { case (_, mn, mx, _) => wanted.exists(b => mn <= b && mx >= b) }
         .map(u => java.nio.file.Paths.get(root, u._1).toString)
-      val dead = s.read.parquet(CommitLog.deletes(root, 2L): _*)
+      val dead = Parquet.read(s, CommitLog.deletes(root, 2L))
         .select(col("vec_id").as("c_id")).distinct()
-      val bucketed = s.read.parquet(picked: _*)
+      val bucketed = Parquet.read(s, picked)
         .withColumnRenamed("bval", "bucket")
         .join(broadcast(dead), Seq("c_id"), "left_anti")
       GraftOps.ivfRank(probes, bucketed, 5).orderBy("q_id", "rn")
@@ -650,7 +651,7 @@ object LlmQueries {
         .map(u => java.nio.file.Paths.get(root, u._1).toString)
       require(CommitLog.deletes(root, 3L).isEmpty,
         "compacted IVF generation must carry no tombstones")
-      val bucketed = s.read.parquet(picked: _*)
+      val bucketed = Parquet.read(s, picked)
         .withColumnRenamed("bval", "bucket")
       GraftOps.ivfRank(probes, bucketed, 5).orderBy("q_id", "rn")
     }),
@@ -678,7 +679,7 @@ object LlmQueries {
       val root = pqIndexFor(s, d, emb)
       GraftOps.pqTopK(emb.filter(col("vec_id") < 10), emb,
         "vec_id", "embedding", pqCodebook(s, root),
-        s.read.parquet(s"$root/index"), k = 5, shortlist = 50)
+        Parquet.read(s, s"$root/index"), k = 5, shortlist = 50)
         .orderBy("q_id", "rn")
     }),
 
@@ -710,8 +711,8 @@ object LlmQueries {
       // same frozen quantizer; read the two columns back instead
       // (column-pruned scan, assignment is pointwise-deterministic —
       // Round18OpsSpec pins index(c_id, bucket) == ivfAssign output).
-      val index = s.read.parquet(s"$root/index")
-        .join(s.read.parquet(ivfIndexFor(s, d, emb, cent))
+      val index = Parquet.read(s, s"$root/index")
+        .join(Parquet.read(s, ivfIndexFor(s, d, emb, cent))
           .select(col("c_id"), col("bucket")), "c_id")
       GraftOps.ivfpqTopK(emb.filter(col("vec_id") < 10), emb,
         "vec_id", "embedding", cent, pqCodebook(s, root), index,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables.load
+import graft.sources.Parquet
 
 /** Family AB (round 10): retrieval scoring and model-evaluation
   * operators — the query-side half of a training-data pipeline
@@ -197,18 +198,18 @@ object RetrievalQueries {
       // sidecar; probe equality with v2 is the compaction contract.
       val bucketSt = (st0 ++ st1).filter(_._2 >= 0)
       def abs(rel: String) = java.nio.file.Paths.get(dir, rel).toString
-      val tomb = s.read.parquet(abs("data/del1")).select("doc_id").distinct()
-      val dirtyIds = s.read.parquet(bucketSt.map(u => abs(u._1)): _*)
+      val tomb = Parquet.read(s, abs("data/del1")).select("doc_id").distinct()
+      val dirtyIds = Parquet.read(s, bucketSt.map(u => abs(u._1)))
         .join(broadcast(tomb), "doc_id")
         .select("bval").distinct()
         .collect().map(_.getLong(0)).toSet // metadata-sized: <= 8 dirty bucket ids
       val (dirtySt, cleanSt) = bucketSt.partition(u => dirtyIds(u._2))
-      s.read.parquet(dirtySt.map(u => abs(u._1)): _*)
+      Parquet.read(s, dirtySt.map(u => abs(u._1)))
         .join(broadcast(tomb), Seq("doc_id"), "left_anti")
         .withColumn("bucket", col("bval"))
         .write.partitionBy("bucket").parquet(s"$dir/data/cpct")
-      s.read.parquet(abs("data/base_meta"), abs("data/delta_meta"),
-          abs("data/del1_meta"))
+      Parquet.read(s, Seq(abs("data/base_meta"), abs("data/delta_meta"),
+          abs("data/del1_meta")))
         .agg(sum(col("n_docs")).cast("bigint").as("n_docs"),
           sum(col("sum_dl")).cast("bigint").as("sum_dl"))
         .coalesce(1).write.parquet(s"$dir/data/cmeta")
@@ -253,18 +254,18 @@ object RetrievalQueries {
       .map(u => java.nio.file.Paths.get(root, u._1).toString)
     val metas = st.filter(_._2 == -1L)
       .map(u => java.nio.file.Paths.get(root, u._1).toString)
-    val corpus = s.read.parquet(metas: _*)
+    val corpus = Parquet.read(s, metas)
       .agg(sum(col("n_docs")).cast("bigint").as("n"),
         (sum(col("sum_dl")).cast("double") /
           sum(col("n_docs"))).as("avgdl"))
-    val raw = s.read.parquet(picked: _*)
+    val raw = Parquet.read(s, picked)
       .filter(col("term").isin(bm25Terms: _*))
       .select("term", "doc_id", "dl", "tf")
     val dv = CommitLog.deletes(root, version)
     val postings =
       if (dv.isEmpty) raw
       else raw.join(
-        broadcast(s.read.parquet(dv: _*).select("doc_id").distinct()),
+        broadcast(Parquet.read(s, dv).select("doc_id").distinct()),
         Seq("doc_id"), "left_anti")
     val dfreq = postings.groupBy("term")
       .agg(count(lit(1)).cast("bigint").as("df"))
@@ -304,25 +305,25 @@ object RetrievalQueries {
       .map(u => java.nio.file.Paths.get(root, u._1).toString)
     val metas = st.filter(_._2 == -1L)
       .map(u => java.nio.file.Paths.get(root, u._1).toString)
-    // ADVICE r13: spark.read.parquet() on zero paths throws UNABLE_TO_
+    // ADVICE r13: a parquet read of zero paths throws UNABLE_TO_
     // _INFER_SCHEMA — no bucket unit for any query term (or no meta
     // yet) means the phrase answer is simply empty
     if (picked.isEmpty || metas.isEmpty)
       return s.range(0).selectExpr("id AS doc_id",
         s"CAST(NULL AS BIGINT) AS $matchCol",
         "CAST(NULL AS DECIMAL(18,6)) AS bm25")
-    val corpus = s.read.parquet(metas: _*)
+    val corpus = Parquet.read(s, metas)
       .agg(sum(col("n_docs")).cast("bigint").as("n"),
         (sum(col("sum_dl")).cast("double") /
           sum(col("n_docs"))).as("avgdl"))
-    val raw = s.read.parquet(picked: _*)
+    val raw = Parquet.read(s, picked)
       .filter(col("term").isin(words.distinct: _*))
       .select("term", "doc_id", "dl", "tf", "positions")
     val dv = CommitLog.deletes(root, version)
     val postings =
       if (dv.isEmpty) raw
       else raw.join(
-        broadcast(s.read.parquet(dv: _*).select("doc_id").distinct()),
+        broadcast(Parquet.read(s, dv).select("doc_id").distinct()),
         Seq("doc_id"), "left_anti")
     // doc_id, p0..p{n-1}: one tf-bounded position array per term
     val positional = words.zipWithIndex.map { case (w, i) =>

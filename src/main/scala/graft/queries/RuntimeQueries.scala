@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables.{dec, load}
+import graft.sources.Parquet
 
 /** Family V — runtime-optimization surfaces (ref: n/a, SURVEY §0 —
   * the reference repo is empty): dynamic partition pruning over a
@@ -39,7 +40,7 @@ object RuntimeQueries {
         load(s, d, "orders")
           .write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
       }
-      val fact = s.read.parquet(dir)
+      val fact = Parquet.read(s, dir)
       val dim = load(s, d, "orders").select("o_orderpriority").distinct()
         .select(col("o_orderpriority").as("p"),
           expr("CAST(substring(o_orderpriority, 1, 1) AS INT)").as("pr"))

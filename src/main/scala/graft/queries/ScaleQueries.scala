@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables.{dec, load}
+import graft.sources.Parquet
 
 /** Scale-pattern operators: the two shuffle-elimination techniques a
   * 100 TB deployment leans on, expressed as first-class queries so
@@ -68,7 +69,7 @@ object ScaleQueries {
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
           .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
       }
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .filter(col("o_orderstatus") === "F")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .orderBy("o_orderkey")
@@ -85,10 +86,10 @@ object ScaleQueries {
         val o = load(s, d, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
         o.repartition(64).write.mode("overwrite").parquet(s"$root/small")
-        s.read.parquet(s"$root/small").repartition(4)
+        Parquet.read(s, s"$root/small").repartition(4)
           .write.mode("overwrite").parquet(s"$root/compact")
       }
-      s.read.parquet(s"$dir/compact").orderBy("o_orderkey")
+      Parquet.read(s, s"$dir/compact").orderBy("o_orderkey")
     }),
 
     // Deterministic shard EXPORT (round 8) — the webdataset-style
@@ -110,7 +111,7 @@ object ScaleQueries {
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard").parquet(out)
       }
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .groupBy(col("shard").cast("bigint").as("shard"))
         .agg(count(lit(1)).cast("bigint").as("n_docs"),
           min("doc_id").as("min_id"), max("doc_id").as("max_id"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 import graft.Tables.load
+import graft.sources.Parquet
 
 /** Family A — scans, sources, sinks (SURVEY.md §2.A).
   *
@@ -14,9 +15,6 @@ import graft.Tables.load
   * a regression fails loudly (SURVEY §4).
   */
 object ScanQueries {
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   val queries: Map[String, Q] = Map(
     // A1: full-scan row count. At scale this is a metadata-only parquet
@@ -50,7 +48,7 @@ object ScanQueries {
       val df = load(s, d, "lineitem")
         .filter(col("l_orderkey") % 100 === 0)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate")
-      val dir = tmpDir("graft_csv")
+      val dir = graft.Derived.scratch("graft_csv")
       df.write.mode("overwrite").option("header", "true").csv(dir)
       s.read.schema(df.schema).option("header", "true").csv(dir)
         .orderBy("l_orderkey", "l_linenumber")
@@ -74,7 +72,7 @@ object ScanQueries {
         col("o_orderkey").cast("string"), lit(","), col("o_orderstatus"), lit(","),
         when(col("o_orderkey") % 500 === 0, lit("oops"))
           .otherwise(col("o_totalprice").cast("string"))).as("value"))
-      val dir = tmpDir("graft_csv_bad")
+      val dir = graft.Derived.scratch("graft_csv_bad")
       lines.write.mode("overwrite").text(dir)
       val schema = StructType(Seq(
         StructField("o_orderkey", LongType),
@@ -96,7 +94,7 @@ object ScanQueries {
       val df = load(s, d, "orders")
         .filter(col("o_orderkey") % 100 === 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val dir = tmpDir("graft_json")
+      val dir = graft.Derived.scratch("graft_json")
       df.write.mode("overwrite").json(dir)
       s.read.json(dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -111,7 +109,7 @@ object ScanQueries {
       val df = load(s, d, "part")
         .filter(col("p_partkey") % 10 === 0)
         .select("p_partkey", "p_name", "p_brand", "p_size", "p_retailprice")
-      val dir = tmpDir("graft_orc")
+      val dir = graft.Derived.scratch("graft_orc")
       df.write.mode("overwrite").orc(dir)
       s.read.orc(dir).orderBy("p_partkey")
     }),
@@ -123,7 +121,7 @@ object ScanQueries {
     "scan_xml_roundtrip" -> ((s, d) => {
       val df = load(s, d, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
-      val dir = tmpDir("graft_xml")
+      val dir = graft.Derived.scratch("graft_xml")
       df.write.mode("overwrite").option("rowTag", "nation").xml(dir)
       s.read.schema(df.schema).option("rowTag", "nation").xml(dir)
         .orderBy("n_nationkey")
@@ -135,7 +133,7 @@ object ScanQueries {
     "scan_text_roundtrip" -> ((s, d) => {
       val df = load(s, d, "documents")
         .select(concat_ws("|", col("doc_id").cast("string"), col("lang")).as("value"))
-      val dir = tmpDir("graft_text")
+      val dir = graft.Derived.scratch("graft_text")
       df.write.mode("overwrite").text(dir)
       s.read.text(dir).orderBy("value")
     }),
@@ -145,24 +143,24 @@ object ScanQueries {
     // mergeSchema — missing columns null-fill. The lakehouse pattern
     // for additive schema changes without a table rewrite.
     "scan_merge_schema" -> ((s, d) => {
-      val dir = tmpDir("graft_evolve")
+      val dir = graft.Derived.scratch("graft_evolve")
       val v1 = load(s, d, "nation").select("n_nationkey", "n_name")
       val v2 = load(s, d, "nation").select(
         (col("n_nationkey") + 100).as("n_nationkey"),
         col("n_name"), col("n_regionkey"))
       v1.write.mode("overwrite").parquet(dir)
       v2.write.mode("append").parquet(dir)
-      s.read.option("mergeSchema", "true").parquet(dir).orderBy("n_nationkey")
+      Parquet.read(s, Seq(dir), mergeSchema = true).orderBy("n_nationkey")
     }),
 
     // A7: deterministic single-file parquet sink (the Verify path
     // itself): sorted coalesce(1) write preserves global order because
     // coalesce merges range partitions in partition-index order.
     "sink_parquet" -> ((s, d) => {
-      val dir = tmpDir("graft_sink")
+      val dir = graft.Derived.scratch("graft_sink")
       load(s, d, "orders").orderBy("o_orderkey")
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      s.read.parquet(dir).orderBy("o_orderkey")
+      Parquet.read(s, dir).orderBy("o_orderkey")
     }),
   )
 

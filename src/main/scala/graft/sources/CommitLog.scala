@@ -114,10 +114,9 @@ object CommitLog {
         .map(u => java.nio.file.Paths.get(table, u).toString)
         .filterNot(prevUnits)
       if (added.nonEmpty) {
-        val prev = spark.read.option("mergeSchema", "true")
-          .parquet(this.units(table, vs.last): _*).schema
-        val next = spark.read.option("mergeSchema", "true")
-          .parquet(added: _*).schema
+        val prev = Parquet.read(spark, this.units(table, vs.last),
+          mergeSchema = true).schema
+        val next = Parquet.read(spark, added, mergeSchema = true).schema
         prev.fields.foreach { f =>
           next.fields.find(_.name == f.name).foreach { g =>
             require(g.dataType == f.dataType,
@@ -200,10 +199,13 @@ object CommitLog {
       .map(u => java.nio.file.Paths.get(table, u).toString)
 
   /** Read the table AS OF `version` — an ordinary multi-path parquet
-    * scan over that snapshot's units.
+    * scan over that snapshot's units. The read goes through
+    * [[Parquet.read]]: the first snapshot of a version infers its schema
+    * (one Spark job over the footers), a later one of the same unchanged
+    * units reuses it and starts no job.
     */
   def snapshot(spark: SparkSession, table: String, version: Long): DataFrame =
-    spark.read.parquet(units(table, version): _*)
+    Parquet.read(spark, units(table, version))
 
   /** Read AS OF `version` like [[snapshot]], with the optimizer fed
     * CatalogStatistics FOLDED FROM THAT VERSION'S CSTATS SIDECAR
@@ -293,11 +295,13 @@ object CommitLog {
   /** Read AS OF `version` with SCHEMA-ON-READ evolution: units written
     * before a column existed surface it as null (parquet mergeSchema —
     * the additive-column path of the lakehouse formats; renames/drops
-    * need a mapping the manifest doesn't carry). Costs a footer read
-    * per unit at planning; pushdown/pruning on shared columns intact.
+    * need a mapping the manifest doesn't carry). The first read of a
+    * version costs a footer read per unit at planning; [[Parquet.read]]
+    * remembers the merged schema, so a later read of the same unchanged
+    * units plans without one. Pushdown/pruning on shared columns intact.
     */
   def snapshotEvolved(spark: SparkSession, table: String, version: Long): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(units(table, version): _*)
+    Parquet.read(spark, units(table, version), mergeSchema = true)
 
   /** Atomic, immutable sidecar publish: same hard-link protocol as
     * manifests (rename would silently REPLACE a concurrent writer's
@@ -641,7 +645,7 @@ object CommitLog {
         }
       }.map(s => java.nio.file.Paths.get(table, s.unit).toString)
     if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (spark.read.parquet(picked: _*), picked.size)
+    else (Parquet.read(spark, picked), picked.size)
   }
 
   /** Conjunctive stats-pruned read: a unit survives only if EVERY
@@ -671,7 +675,7 @@ object CommitLog {
     val picked = surviving.toSeq.sorted
       .map(u => java.nio.file.Paths.get(table, u).toString)
     if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (spark.read.parquet(picked: _*), picked.size)
+    else (Parquet.read(spark, picked), picked.size)
   }
 
   /** Stats-pruned read: scan ONLY the units whose [min,max] range
@@ -692,7 +696,7 @@ object CommitLog {
     // reads footers only, zero data files — throwing here forced
     // callers to special-case the best case)
     if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (spark.read.parquet(picked: _*), picked.size)
+    else (Parquet.read(spark, picked), picked.size)
   }
 
   /** The units `version` ADDED relative to its predecessor (all of
@@ -757,7 +761,7 @@ object CommitLog {
     // a manifest-identical version (e.g. dv-free metadata republish)
     // contributes an EMPTY micro-batch, not a crash
     if (added.isEmpty) snapshot(spark, table, version).limit(0)
-    else spark.read.parquet(added: _*)
+    else Parquet.read(spark, added)
   }
 
   /** MERGE (upsert by key) as a unit-granular copy-on-write commit —
@@ -860,7 +864,7 @@ object CommitLog {
         if (touchedIds(i)) {
           val upd = tagged.filter(col("__uid") === i)
             .drop("__uid", "__mn", "__mx")
-          val unitDf = spark.read.parquet(
+          val unitDf = Parquet.read(spark,
             java.nio.file.Paths.get(table, u).toString)
           writeUnit(
             unitDf.join(upd.select(col(keyCol)), Seq(keyCol), "left_anti")
@@ -973,7 +977,7 @@ object CommitLog {
       val (small, big) = sized.partition(_._2 < minUnitBytes)
       if (small.size < 2) return None
       val rel = f"data/compact_v${v + 1}%05d_$attempts"
-      spark.read.parquet(small.map(_._1): _*)
+      Parquet.read(spark, small.map(_._1))
         .write.parquet(java.nio.file.Paths.get(table, rel).toString)
       // carry big units by their original manifest-relative names
       val root = java.nio.file.Paths.get(table)
@@ -994,7 +998,7 @@ object CommitLog {
           val smallRel = manifestLines(table, v).filter(line =>
             smallSet(java.nio.file.Paths.get(table, line).toString))
           carryBloomAcrossPack(spark, table, v, v + 1, rel, smallRel.toSet,
-            r => spark.read.parquet(
+            r => Parquet.read(spark,
               java.nio.file.Paths.get(table, r).toString).count(),
             0.03)
         }
@@ -1380,7 +1384,7 @@ object CommitLog {
       else None
     }
     if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (spark.read.parquet(picked: _*), picked.size)
+    else (Parquet.read(spark, picked), picked.size)
   }
 
   /** The manifest-relative unit names of `version`. */
@@ -1459,7 +1463,7 @@ object CommitLog {
     val base = snapshot(spark, table, version)
     val tu = deletes(table, version)
     if (tu.isEmpty) base
-    else base.join(spark.read.parquet(tu: _*).select(keyCol).distinct(),
+    else base.join(Parquet.read(spark, tu).select(keyCol).distinct(),
       Seq(keyCol), "left_anti")
   }
 
@@ -1519,10 +1523,10 @@ object CommitLog {
       val (post, pre) = unitsRel(table, version).partition(exempt)
       def abs(rel: Seq[String]) =
         rel.map(u => java.nio.file.Paths.get(table, u).toString)
-      val keys = spark.read.parquet(tu: _*)
+      val keys = Parquet.read(spark, tu)
         .select(keyCol).distinct()
-      spark.read.parquet(abs(pre): _*).join(keys, Seq(keyCol), "left_anti")
-        .unionByName(spark.read.parquet(abs(post): _*))
+      Parquet.read(spark, abs(pre)).join(keys, Seq(keyCol), "left_anti")
+        .unionByName(Parquet.read(spark, abs(post)))
     }
   }
 
@@ -1641,7 +1645,7 @@ object CommitLog {
       // its seq sidecar) carry; everything else is an apply candidate
       val exempt: Set[String] = seqLines(table, v).toSet
       val eligible = unitsRel(table, v).filterNot(exempt)
-      val keys = spark.read.parquet(tu: _*).select(col(keyCol)).distinct()
+      val keys = Parquet.read(spark, tu).select(col(keyCol)).distinct()
       // no stats sidecar → no routing: every eligible unit rewrites
       // (correct, just unrouted — the same degradation mergeCow refuses
       // but a maintenance pass can afford)
@@ -1670,14 +1674,14 @@ object CommitLog {
       val newUnits = Seq.newBuilder[String]
       val newStats = Seq.newBuilder[(String, Long, Long, Long)]
       def writeClean(srcAbs: Seq[String], rel: String): Unit = {
-        spark.read.parquet(srcAbs: _*)
+        Parquet.read(spark, srcAbs)
           .join(keys, Seq(keyCol), "left_anti")
           .write.parquet(java.nio.file.Paths.get(table, rel).toString)
         // measure BEFORE commit (read-back of the just-written small
         // unit) — count first: a rewrite the tombstones fully emptied
         // has null min/max, no stats to publish and no reason to live
         // in the manifest at all
-        val r = spark.read.parquet(
+        val r = Parquet.read(spark,
             java.nio.file.Paths.get(table, rel).toString)
           .agg(min(col(keyCol).cast("long")),
             max(col(keyCol).cast("long")), count(lit(1))).head()
@@ -1770,12 +1774,11 @@ object CommitLog {
     // one through the full-snapshot path, 1.0× through this one)
     val schemaSrc =
       if (added.nonEmpty || removed.nonEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(added ++ removed: _*).limit(0)
+        Parquet.read(spark, added ++ removed, mergeSchema = true).limit(0)
       else snapshotEvolved(spark, table, version).limit(0)
     def read(us: Seq[String]): DataFrame =
       if (us.isEmpty) schemaSrc
-      else spark.read.option("mergeSchema", "true").parquet(us: _*)
+      else Parquet.read(spark, us, mergeSchema = true)
     def align(df: DataFrame): DataFrame =
       df.select(schemaSrc.schema.map { f =>
         if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
@@ -1817,8 +1820,8 @@ object CommitLog {
       else {
         val exempt = seqLines(table, version).toSet
         val preRel = unitsRel(table, version).filterNot(exempt)
-        val keys = spark.read.parquet(
-          newDv.map(u => java.nio.file.Paths.get(table, u).toString): _*)
+        val keys = Parquet.read(spark,
+          newDv.map(u => java.nio.file.Paths.get(table, u).toString))
           .distinct()
         // STATS-ROUTED pre-image read (the applyDeletes discipline):
         // when the version carries a stats sidecar covering every
@@ -1869,8 +1872,8 @@ object CommitLog {
       dvLines(table, vs(vs.indexOf(version) - 1)).nonEmpty
     if (!prevDvApplied) withRetract
     else {
-      val tombKeys = spark.read.parquet(
-        deletes(table, vs(vs.indexOf(version) - 1)): _*).distinct()
+      val tombKeys = Parquet.read(spark,
+        deletes(table, vs(vs.indexOf(version) - 1))).distinct()
       withRetract.filter(col("_change_type") === "insert").unionByName(
         withRetract.filter(col("_change_type") === "delete")
           .join(tombKeys, tombKeys.columns.toSeq, "left_anti"))
@@ -1915,7 +1918,7 @@ object CommitLog {
     val tmp = dir.resolve(s".v$version.${java.util.UUID.randomUUID}.tmp")
     (prev match {
       case None => ins
-      case Some(p) => spark.read.parquet(p).exceptAll(del).unionAll(ins)
+      case Some(p) => Parquet.read(spark, p).exceptAll(del).unionAll(ins)
     }).write.parquet(tmp.toString)
     try java.nio.file.Files.move(tmp, out,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -2179,7 +2182,7 @@ object CommitLog {
     // rel -> None (fully purged) | Some((twin, survivorRowCount))
     val rewritten: Seq[(String, Option[(String, Long)])] = dirty.map { rel =>
       val abs = java.nio.file.Paths.get(table, rel).toString
-      val survivors = spark.read.parquet(abs)
+      val survivors = Parquet.read(spark, abs)
         .join(broadcast(kd), col(keyCol) === col("__pk"), "left_anti")
       if (survivors.isEmpty) rel -> None
       else {
@@ -2190,7 +2193,7 @@ object CommitLog {
         survivors.write.mode("overwrite").parquet(twinAbs)
         // footer-metadata count of the fresh twin (no data pages) —
         // sizes the bloom rebuild honestly
-        rel -> Some((twin, spark.read.parquet(twinAbs).count()))
+        rel -> Some((twin, Parquet.read(spark, twinAbs).count()))
       }
     }
     val byRel = rewritten.toMap
@@ -2809,8 +2812,8 @@ object CommitLog {
     */
   def snapshotBranch(spark: SparkSession, table: String,
       branch: String): DataFrame =
-    spark.read.parquet(stagedUnits(table, branch)
-      .map(u => java.nio.file.Paths.get(table, u).toString): _*)
+    Parquet.read(spark, stagedUnits(table, branch)
+      .map(u => java.nio.file.Paths.get(table, u).toString))
 
   /** PUBLISH a staged branch: commit its units as the next main
     * version and drop the branch marker. Races with concurrent main
@@ -2963,8 +2966,8 @@ object CommitLog {
     import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit}
     val cs = constraintsOf(table)
     if (cs.isEmpty || newUnits.isEmpty) return Seq.empty
-    val fresh = spark.read.parquet(
-      newUnits.map(u => java.nio.file.Paths.get(table, u).toString): _*)
+    val fresh = Parquet.read(spark,
+      newUnits.map(u => java.nio.file.Paths.get(table, u).toString))
     val out = scala.collection.mutable.ListBuffer[String]()
     cs.foreach {
       case NotNullConstraint(c) =>
@@ -3014,7 +3017,7 @@ object CommitLog {
                 // MoR-aware: a tombstoned parent must NOT satisfy the
                 // reference — validate against the LIVE rows
                 val tombCols =
-                  spark.read.parquet(tomb.head).schema.fieldNames
+                  Parquet.read(spark, tomb.head).schema.fieldNames
                 if (tombCols.length == 1)
                   snapshotMoRSeq(spark, refTable, rv, tombCols.head)
                 else {
@@ -3102,7 +3105,7 @@ object CommitLog {
                 // other reader does. Pruning is skipped here —
                 // correctness over speed until compaction clears the
                 // sidecar and the fast path returns.
-                val tombCols = spark.read.parquet(tomb.head).schema.fieldNames
+                val tombCols = Parquet.read(spark, tomb.head).schema.fieldNames
                 if (tombCols.length == 1)
                   snapshotMoRSeq(spark, table, v, tombCols.head)
                 else snapshot(spark, table, v) // unknown key: raw, conservative

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.{DecimalType, StructType}
 import graft.Tables.{dec, load}
+import graft.sources.Parquet
 
 /** Family I — Structured Streaming over the events table
   * (SURVEY.md §2.I).
@@ -42,17 +43,9 @@ object StreamQueries {
 
   private val sinkId = new AtomicInteger(0)
 
-  // Checkpoint/replay scratch on tmpfs when available: streaming bench
-  // time is dominated by checkpoint fsync I/O, which /dev/shm makes
-  // free. Production deployments pass a durable checkpointLocation.
-  private val tmpRoot: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
-    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-  }
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(tmpRoot, prefix).toString
+  // Checkpoint/replay scratch on tmpfs when available, deleted at JVM
+  // exit. Production deployments pass a durable checkpointLocation.
+  private def tmp(prefix: String): String = graft.Derived.scratch(prefix, tmpfs = true)
 
   /** Build the stream_agg_view lifecycle (round 15 — VERDICT r14 #5):
     * a fresh commit-log table walked by a streaming foreachBatch
@@ -144,7 +137,7 @@ object StreamQueries {
           delta.select(col("g"), col("dn").as("n"), col("dnn").as("nn"),
             coalesce(col("dp"), zero).cast(DecimalType(38, 2)).as("total"))
         case Some(pv) =>
-          s.read.parquet(s"$stateDir/v$pv")
+          Parquet.read(s, s"$stateDir/v$pv")
             .join(delta, Seq("g"), "full_outer")
             .select(col("g"),
               (coalesce(col("n"), lit(0L)) +
@@ -476,7 +469,7 @@ object StreamQueries {
       // compare: a timestamp column here would need CAST(ts AS
       // TIMESTAMP) in the twin, which resolves NTZ→LTZ under the
       // spark.sql dialect (the subq_recursive dialect split)
-      s.read.parquet(outDir)
+      Parquet.read(s, outDir)
         .select(col("event_id"), col("user_id"), col("value"))
         .orderBy("event_id")
     }),
@@ -502,7 +495,7 @@ object StreamQueries {
         .option("checkpointLocation", tmp("graft_cms_ckpt"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      s.read.parquet(outDir).groupBy("r", "c")
+      Parquet.read(s, outDir).groupBy("r", "c")
         .agg(sum(col("n")).cast("bigint").as("n"))
         .createOrReplaceTempView("cms_cells")
       load(s, d, "events").select(col("user_id").cast("string").as("k"))
@@ -522,7 +515,7 @@ object StreamQueries {
         .option("checkpointLocation", tmp("graft_ckpt"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      s.read.parquet(outDir).orderBy("event_id")
+      Parquet.read(s, outDir).orderBy("event_id")
     }),
 
     // I8 (round 5): checkpoint resume — the exactly-once story across
@@ -720,7 +713,7 @@ object StreamQueries {
           .unionAll(base.filter(col("k") % 3 === 1)), "k")
       CommitLog.applyDeletes(s, root, "k")
       drain()
-      val rep = s.read.parquet(
+      val rep = Parquet.read(s,
         s"$stateDir/v${CommitLog.replayStates(stateDir).last}")
         .agg(count(lit(1)).as("replica_rows"),
           sum(col("p")).cast(DecimalType(38, 2)).as("replica_total"))
@@ -824,7 +817,7 @@ object StreamQueries {
         Seq(fact -> Seq("s0", "s1"), agg -> Seq("a1")))
       drain()
       TxnLog.txns(root)
-        .map(id => s.read.parquet(f"$outDir/t$id%05d"))
+        .map(id => Parquet.read(s, f"$outDir/t$id%05d"))
         .reduce(_ unionAll _).orderBy("txn")
     }),
 

@@ -226,11 +226,19 @@ class Round8OpsSpec extends GraftSpec {
     val out = new String(proc.getInputStream.readAllBytes())
     assert(proc.waitFor() == 0, out)
     assert(out.contains("built " + tmpdir), out)
+    assert(out.contains("scratch " + tmpdir), out)
     val left = {
       val st = java.nio.file.Files.list(tmpdir)
       try st.toArray.toSeq finally st.close()
     }
     assert(left.isEmpty, s"the store root outlived its JVM: $left")
+    // the tmpfs scratch dir and its per-JVM root are gone too
+    val tmpfs = out.linesIterator.collectFirst {
+      case l if l.startsWith("tmpfs ") => java.nio.file.Paths.get(l.stripPrefix("tmpfs "))
+    }
+    assert(tmpfs.isDefined, out)
+    assert(!java.nio.file.Files.exists(tmpfs.get.getParent),
+      s"the tmpfs scratch root outlived its JVM: ${tmpfs.get.getParent}")
   }
 
   test("text_decontaminate_bloom is bit-identical to the un-prescreened operator") {
@@ -279,7 +287,8 @@ class Round8OpsSpec extends GraftSpec {
 }
 
 /** Forked by Round8OpsSpec: builds one derived directory under the
-  * JVM's own `java.io.tmpdir`, prints where, and exits.
+  * JVM's own `java.io.tmpdir`, asks for one scratch directory in each
+  * scratch location, prints where, and exits.
   */
 object DerivedExitProbe {
   def main(args: Array[String]): Unit = {
@@ -287,5 +296,11 @@ object DerivedExitProbe {
       java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "part-0.parquet"))
     }
     println("built " + p)
+    val s = Derived.scratch("graft_exit_scratch")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s, "part-0.parquet"))
+    println("scratch " + s)
+    val t = Derived.scratch("graft_exit_tmpfs", tmpfs = true)
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(t, "part-0.parquet"))
+    println("tmpfs " + t)
   }
 }
