@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Full local gate in one command: compile + unit tests + the benchmark's
 # own tests (WorkloadsSpec's entry-coverage check) +
-# correctness (Verify dump → dtype-faithful DuckDB compare) + bench.
+# correctness (Verify dump → dtype-faithful DuckDB compare, with Verify's
+# WARN lines counted per logger) + bench.
 #   dev/ci.sh [sf_dir]      (default /root/testdata/sf0.01)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -19,8 +20,13 @@ echo "== graft.Verify $SF =="
 VTMP="$(mktemp -d)"
 list_shm() { ls -d /dev/shm/graft_* 2>/dev/null | sort || true; }
 SHM_BEFORE="$(list_shm)"
+mkdir -p "$OUT"
 SPARK_GRAFT_CPUS="$CPUS" JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:-} -Djava.io.tmpdir=$VTMP" \
-  dev/run.sh graft.Verify "$SF" "$OUT" 2>/dev/null
+  dev/run.sh graft.Verify "$SF" "$OUT" 2>"$OUT/verify.stderr"
+# Verify's log stays in $OUT/verify.stderr; report its warnings per logger
+echo "WARN lines per logger in $OUT/verify.stderr:"
+{ grep -oE ' WARN [^ :]+:' "$OUT/verify.stderr" || true; } \
+  | sed 's/^ WARN //; s/:$//' | sort | uniq -c | sort -rn
 LEFT="$(ls -d "$VTMP"/graft_* 2>/dev/null || true)
 $(comm -13 <(echo "$SHM_BEFORE") <(list_shm))"
 rm -rf "$VTMP"

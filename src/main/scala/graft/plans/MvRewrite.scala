@@ -170,6 +170,11 @@ object MvCatalog {
 
 object MvRewrite extends Rule[LogicalPlan] {
 
+  /** Add this rule to `s`'s extra optimizations unless it is already there. */
+  def install(s: org.apache.spark.sql.SparkSession): Unit =
+    if (!s.experimental.extraOptimizations.contains(this))
+      s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ this
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val defs = MvCatalog.all()
     val joinDefs = MvCatalog.allJoins()

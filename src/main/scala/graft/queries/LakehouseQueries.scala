@@ -2036,9 +2036,7 @@ object LakehouseQueries {
         CommitLog.units(root, vLast).map(u =>
           java.nio.file.Paths.get(u).toAbsolutePath.normalize.toString).toSet,
         "k % 10", "p", last))
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewrite
+    graft.plans.MvRewrite.install(s)
     (root, vLast)
   }
 
@@ -2084,9 +2082,7 @@ object LakehouseQueries {
         CommitLog.units(root, 0L).map(u => java.nio.file.Paths.get(u)
           .toAbsolutePath.normalize.toString).toSet,
         "k % 10", "p", s"$stDir/v0"))
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewrite
+    graft.plans.MvRewrite.install(s)
     (root, 0L)
   }
 
@@ -2201,9 +2197,7 @@ object LakehouseQueries {
         factStateVersion = 2L, dimStateVersion = 0L,
         tail = Seq((true, 3L, 0L)),
         "k", "k", "g", "p", s"$root/s2"))
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewrite
+    graft.plans.MvRewrite.install(s)
     (fact, dim, root)
   }
 
@@ -2329,9 +2323,7 @@ object LakehouseQueries {
     val state = appendStaleState(s, d)
     graft.plans.MvCatalog.registerStale("orders_append_stale_k7",
       graft.plans.MvCatalog.MvStaleDef(root, 0L, "k % 7", "p", state))
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewrite
+    graft.plans.MvRewrite.install(s)
     (root, state)
   }
 
@@ -2349,9 +2341,7 @@ object LakehouseQueries {
         CommitLog.units(root, vLast).map(u =>
           java.nio.file.Paths.get(u).toAbsolutePath.normalize.toString).toSet,
         "k % 10", "p", state))
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewrite
+    graft.plans.MvRewrite.install(s)
     (root, vLast)
   }
 
@@ -2375,9 +2365,7 @@ object LakehouseQueries {
     graft.plans.MvCatalog.registerJoin("orders_join_dim",
       graft.plans.MvCatalog.MvJoinDef(norm(fact, vf), norm(dim, vd),
         "k", "k", "g", "p", state))
-    if (!s.experimental.extraOptimizations.contains(graft.plans.MvRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.MvRewrite
+    graft.plans.MvRewrite.install(s)
     (fact, dim, vf, vd)
   }
 

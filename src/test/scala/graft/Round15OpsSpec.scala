@@ -441,7 +441,14 @@ class Round15OpsSpec extends GraftSpec {
     import graft.sources.CommitLog
     import org.apache.spark.sql.types.DecimalType
     val df = SparkEntry.queries("stream_agg_view")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    // a scan's Location is cut to spark.sql.maxMetadataStringLength
+    // (100 chars by default), shorter than a derived-store path with the
+    // fixture's subdirectory: print the whole path
+    val maxMeta = "spark.sql.maxMetadataStringLength"
+    val prevMeta = spark.conf.get(maxMeta)
+    spark.conf.set(maxMeta, "1000")
+    val plan = try df.queryExecution.executedPlan.toString
+      finally spark.conf.set(maxMeta, prevMeta)
     assert(plan.contains("graft_sgv_state"),
       "rewrite did not fire against the stream-maintained state:\n" +
         plan.take(3000))

@@ -133,4 +133,51 @@ class StreamingSpec extends GraftSpec {
     assert(r.getDecimal(1) == r.getDecimal(3),
       s"replica total ${r.getDecimal(1)} != snapshot total ${r.getDecimal(3)}")
   }
+
+  test("a failed drain rethrows and leaves the caller's shuffle-partition count") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val src = Derived.scratch("graft_failed_drain")
+    spark.range(3).toDF("id").write.mode("overwrite").parquet(src)
+    val w = spark.readStream.schema("id LONG").parquet(src).writeStream
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException("batch failed on purpose")
+      }
+    val e = intercept[Exception](streaming.StreamQueries.drain(spark, w))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "batch failed on purpose"),
+      s"the batch's own failure is not in the cause chain of $e")
+    assert(spark.conf.get(key) == before)
+  }
+
+  test("memory-sink drains leave no graft_sink_* view in the caller's session") {
+    // the returned frames still read the sink's rows after the drop
+    assert(q("stream_tumbling").count() > 0L)
+    assert(q("stream_resume").count() > 0L)
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_sink_"))
+    assert(left.isEmpty, s"sink views left behind: ${left.mkString(", ")}")
+  }
+
+  test("the replayed events source and the agg-view fixture are derived-store entries") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def listing(dir: String): Seq[(String, Long)] = {
+      val st = Files.walk(Paths.get(dir))
+      try st.iterator().asScala
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis)
+        .toVector.sorted
+      finally st.close()
+    }
+    q("stream_tumbling").count()
+    val dir = Derived.path("stream", sf)
+    val before = listing(dir)
+    q("stream_sliding").count()
+    assert(Derived.path("stream", sf) == dir, "the second entry rebuilt the events source")
+    assert(listing(dir) == before, "the second entry rewrote the events source")
+    val (root, stateDir, _) = streaming.StreamQueries.streamAggViewFixture(spark, sf)
+    val sgv = Paths.get(Derived.path("sgv", sf))
+    assert(Paths.get(root).startsWith(sgv), s"$root is not under $sgv")
+    assert(Paths.get(stateDir).startsWith(sgv), s"$stateDir is not under $sgv")
+  }
 }
