@@ -274,9 +274,9 @@ object GraftOps {
   def minHashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxJaccardDist: Double = 0.5, shingleSize: Int = 3,
       numHashTables: Int = 5, seed: Long = 42L): DataFrame = {
-    val feat = minHashSignatures(df, idCol, textCol, shingleSize,
+    val feat = materializeOnce(minHashSignatures(df, idCol, textCol, shingleSize,
       numHashTables, seed).select(col(idCol), col("__features"),
-        col("__hashes")).cache()
+        col("__hashes")))
     minHashNearDupPairsFromSignatures(feat, idCol, maxJaccardDist,
       numHashTables, seed)
   }

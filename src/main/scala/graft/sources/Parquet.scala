@@ -1,30 +1,60 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.GraftSqlInternals
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The engine's one parquet read path. Spark infers a parquet schema by
   * running a job over the input's footers (one job per read, even for a
-  * single file); the engine reads the same unchanged inputs on every
-  * query, so [[read]] infers each input's schema once and hands the
-  * remembered `StructType` to later reads of that input. Listing,
-  * partition discovery, pruning and pushdown stay Spark's: only the
-  * inference job is skipped.
+  * single file). [[read]] starts no such job: it reads the footers that
+  * inference would read on the driver, and it remembers each input's
+  * schema, so a later read of the unchanged input reads no footer at
+  * all. Listing, partition discovery (partition columns are still
+  * inferred from directory names), pruning and pushdown stay Spark's.
+  *
+  * The footer read (a memo miss) reproduces Spark's inference exactly:
+  *  - the file list is Spark's own file index for the paths, so hidden
+  *    files, partition directories and a file sink's `_spark_metadata`
+  *    log follow Spark's rules;
+  *  - without schema merging it reads `_common_metadata`, else
+  *    `_metadata`, else the first data file in path order; with
+  *    merging, every data file, then `_metadata`, then
+  *    `_common_metadata` (data files are skipped under
+  *    `spark.sql.parquet.respectSummaryFiles`), folded left to right
+  *    with `StructType.merge` under the session's case sensitivity;
+  *  - each footer is converted by `ParquetFileFormat.readSchemaFromFooter`
+  *    with the converter settings inference uses.
+  * It leaves the read to Spark's inference, unchanged, when the index
+  * lists no file, when merging would touch more footers than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (the
+  * distributed job stays the path for wide inputs), when a data column
+  * shares its name with a partition column (Spark orders such columns
+  * differently for a given schema), and on any exception — so Spark
+  * reports its errors as before.
   *
   * A memo entry is keyed on the paths (in order), the merge flag and the
   * session confs that shape parquet inference, and is valid only while
-  * the input files keep the identity they had when it was inferred:
+  * the input files keep the identity they had when it was read:
   *  - a file: its [[fingerprint]] (size, mtime-ns, head/tail CRC);
   *  - a directory: the sorted (relative path, length, mtime-ns) of its
   *    data files — names not starting with `_` or `.`, as Spark lists
   *    them.
-  * A rewritten input therefore misses and is inferred again. The memo
+  * A rewritten input therefore misses and is read again. The memo
   * holds no session and is a fixed-capacity LRU: per-call scratch
   * inputs never hit again and age out. A path that is not a local file
   * or directory (another filesystem, a glob, a missing path) bypasses
-  * the memo, so Spark resolves it — and reports its errors — as before.
+  * the memo and the footer read, so Spark resolves it — and reports its
+  * errors — as before.
   */
 object Parquet {
 
@@ -68,7 +98,11 @@ object Parquet {
         val hit = memo.synchronized(memo.get(key))
         if (hit != null && hit.identity == id) reader.schema(hit.schema).parquet(paths: _*)
         else {
-          val df = reader.parquet(paths: _*)
+          missCount.incrementAndGet()
+          val df = footerSchema(spark, paths, mergeSchema) match {
+            case Some(schema) => reader.schema(schema).parquet(paths: _*)
+            case None => reader.parquet(paths: _*)
+          }
           memo.synchronized(memo.put(key, Entry(id, df.schema)))
           df
         }
@@ -77,6 +111,61 @@ object Parquet {
 
   /** Entries the memo holds now (at most [[Capacity]]). */
   private[graft] def memoSize: Int = memo.synchronized(memo.size())
+
+  private val missCount = new AtomicLong
+
+  /** Memo misses since the JVM started. */
+  private[graft] def misses: Long = missCount.get
+
+  // Stands in for the data schema while Spark's file index lists the
+  // paths; its name cannot clash with a partition column.
+  private val ListingSchema = StructType(Seq(StructField("__graft_listing", LongType)))
+
+  /** The schema Spark's inference gives `paths`, read from their
+    * footers on the driver; None where the read is left to Spark's
+    * inference (see the class doc).
+    */
+  private def footerSchema(spark: SparkSession, paths: Seq[String],
+      mergeSchema: Boolean): Option[StructType] =
+    scala.util.Try {
+      val conf = spark.sessionState.conf
+      // another relation or file index fails the casts: left to Spark
+      val relation = spark.read.schema(ListingSchema).parquet(paths: _*)
+        .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+        .get.asInstanceOf[HadoopFsRelation]
+      val files = relation.location.asInstanceOf[PartitioningAwareFileIndex]
+        .allFiles().sortBy(_.getPath.toString)
+      def named(name: String) = files.filter(_.getPath.getName == name)
+      val common = named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      val summary = named(ParquetFileWriter.PARQUET_METADATA_FILE)
+      val data = files.filterNot(f => common.contains(f) || summary.contains(f))
+      // ParquetOptions: the read option, else the session conf
+      val touch =
+        if (mergeSchema || conf.isParquetSchemaMergingEnabled)
+          (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++ summary ++ common
+        else common.headOption.orElse(summary.headOption).orElse(data.headOption).toSeq
+      if (touch.isEmpty || touch.size > conf.parallelPartitionDiscoveryThreshold) None
+      else {
+        val hadoopConf = spark.sessionState.newHadoopConf()
+        // the converter ParquetFileFormat.mergeSchemasInParallel builds
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        val caseSensitive = conf.caseSensitiveAnalysis
+        val schema = touch.map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+        }.reduceLeft(GraftSqlInternals.mergeSchemas(_, _, caseSensitive))
+        val name: String => String =
+          if (caseSensitive) n => n else _.toLowerCase(java.util.Locale.ROOT)
+        val partitionCols = relation.partitionSchema.fieldNames.map(name).toSet
+        if (schema.fieldNames.exists(n => partitionCols(name(n)))) None else Some(schema)
+      }
+    }.toOption.flatten
 
   /** Identity of one parquet file: size + mtime (ns where the filesystem
     * provides it) + a CRC32 of the file's first and last 64 KiB. The

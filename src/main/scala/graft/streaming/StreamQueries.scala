@@ -59,25 +59,27 @@ object StreamQueries {
     * Stateful-operator cost at this scale is dominated by per-partition
     * state-store open/commit (one store per shuffle partition per
     * stateful op), so the stream runs with a reduced shuffle-partition
-    * count, and the caller's value comes back even when the stream
-    * fails. Outputs are partition-count-invariant (pinned by the
-    * determinism probe); a real deployment sizes this to state volume.
+    * count. The query copies the session conf in `start()`, so the
+    * caller's session holds that count only while the query starts and
+    * gets its own value back before the stream runs (also when `start()`
+    * fails): foreachBatch bodies that use the outer session run at the
+    * caller's count, and `batch.sparkSession` at the stream's. Outputs
+    * are partition-count-invariant (pinned by the determinism probe); a
+    * real deployment sizes this to state volume.
     */
   private[graft] def drain(s: SparkSession, w: DataStreamWriter[Row],
       ckpt: String = tmp("graft_ckpt"),
       rounds: Option[StreamingQuery => Unit] = None): Unit = {
+    val ready = w.option("checkpointLocation", ckpt)
     val partitions = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(partitions)
     s.conf.set(partitions, "8")
-    try {
-      val ready = w.option("checkpointLocation", ckpt)
-      rounds match {
-        case None => ready.trigger(Trigger.AvailableNow()).start().awaitTermination()
-        case Some(run) =>
-          val q = ready.start()
-          try run(q) finally q.stop()
-      }
-    } finally s.conf.set(partitions, prev)
+    val q = try (if (rounds.isEmpty) ready.trigger(Trigger.AvailableNow()) else ready).start()
+      finally s.conf.set(partitions, prev)
+    rounds match {
+      case None => q.awaitTermination()
+      case Some(run) => try run(q) finally q.stop()
+    }
   }
 
   /** [[drain]] `sdf` into a memory sink in output `mode` and return the

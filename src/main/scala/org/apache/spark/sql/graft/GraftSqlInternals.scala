@@ -47,4 +47,12 @@ object GraftSqlInternals {
   /** The session's name-equality rule (honors spark.sql.caseSensitive). */
   def resolver(spark: SparkSession): org.apache.spark.sql.catalyst.analysis.Resolver =
     spark.asInstanceOf[classic.SparkSession].sessionState.analyzer.resolver
+
+  /** `a` merged with `b` as Spark's parquet schema inference merges two
+    * footers' schemas (`StructType.merge` is `private[sql]`).
+    */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
 }

@@ -31,6 +31,20 @@ class GraftOpsSpec extends GraftSpec {
     assert(!pairs.exists { case (a, b) => a == 4L || b == 4L })
   }
 
+  test("minHashNearDupPairs leaves no cached block after releaseMaterialized") {
+    val sc = spark.sparkContext
+    GraftOps.releaseMaterialized(blocking = true)
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    for (_ <- 1 to 3) {
+      val pairs = GraftOps.minHashNearDupPairs(tiny, "rid", "body")
+        .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs.contains((1L, 2L)))
+      GraftOps.releaseMaterialized(blocking = true)
+    }
+    val left = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+    assert(left.isEmpty, s"cached RDDs left: ${left.map(_.name).mkString(", ")}")
+  }
+
   test("ngramJaccardPairs: hot-block MinHash routing returns the same pairs") {
     // Round-6 skew guard: a block over maxBlock docs routes through
     // banded-MinHash candidates instead of the quadratic self-join.

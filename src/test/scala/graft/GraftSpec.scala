@@ -27,6 +27,19 @@ abstract class GraftSpec extends AnyFunSuite {
   protected def q(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sf)
 
+  /** `df`'s executed plan as text with every scan Location in full.
+    * Spark cuts a Location to `spark.sql.maxMetadataStringLength` (100
+    * characters by default), shorter than a derived-store path, so a
+    * negative path check on the cut text would pass vacuously. The
+    * session's setting is restored afterwards.
+    */
+  protected def planText(df: DataFrame): String = {
+    val key = "spark.sql.maxMetadataStringLength"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, Int.MaxValue.toString)
+    try df.queryExecution.executedPlan.toString finally spark.conf.set(key, prev)
+  }
+
   /** Plan-text subtree scoping: the column where a tree line's node
     * label starts (child lines indent deeper) — shared by the
     * broadcast-subtree assertions so the parsing heuristic lives in

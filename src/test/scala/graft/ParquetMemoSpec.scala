@@ -5,11 +5,15 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import graft.sources.{CommitLog, Parquet}
 
-/** The parquet schema memo behind [[graft.sources.Parquet.read]]: a
-  * repeated read of an unchanged input starts no Spark job, a rewritten
-  * input is inferred again, and the memo stays within its capacity.
+/** The parquet read path [[graft.sources.Parquet.read]]: a first read
+  * takes its schema from the footers on the driver (no Spark job, the
+  * same schema and errors as Spark's inference), a repeated read of an
+  * unchanged input hits the schema memo, a rewritten input is read
+  * again, and the memo stays within its capacity.
   */
 class ParquetMemoSpec extends GraftSpec {
   import spark.implicits._
@@ -47,13 +51,158 @@ class ParquetMemoSpec extends GraftSpec {
     Derived.deleteRecursively(out.toString)
   }
 
+  /** Fresh inputs of every kind the engine reads, none read yet:
+    * (label, paths, mergeSchema). Each kind is built so that a footer
+    * chosen by other rules than Spark's gives another schema.
+    */
+  private def inputKinds(): Seq[(String, Seq[String], Boolean)] = {
+    val root = Files.createTempDirectory("graft_memo_kinds").toString
+    val file = Paths.get(root, "one.parquet")
+    writeFile(Seq((1L, 10.0)).toDF("k", "p"), file)
+    val dir = s"$root/dir"
+    Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p").repartition(2).write.parquet(dir)
+    val parted = s"$root/parted"
+    Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("k", "p", "g")
+      .write.partitionBy("g").parquet(parted)
+    // commit-log style units; the second adds a column
+    val units = Seq(s"$root/u0", s"$root/u1")
+    Seq((1L, 10.0)).toDF("k", "p").write.parquet(units(0))
+    Seq((2L, 20.0, true)).toDF("k", "p", "flag").write.parquet(units(1))
+    // a file sink's output, plus a file its _spark_metadata log does not
+    // list, first in path order
+    val sink = s"$root/sink"
+    spark.readStream.schema("k LONG, p DOUBLE").parquet(units(0)).writeStream
+      .format("parquet").option("checkpointLocation", s"$root/ckpt")
+      .trigger(Trigger.AvailableNow()).start(sink).awaitTermination()
+    writeFile(Seq((9L, 90.0, "x")).toDF("k", "p", "stray"),
+      Paths.get(sink, "a-stray.parquet"))
+    Seq(("file", Seq(file.toString), false), ("dir", Seq(dir), false),
+      ("partitionBy dir", Seq(parted), false), ("unit list", units, false),
+      ("file-sink dir", Seq(sink), false), ("mergeSchema unit list", units, true))
+  }
+
+  /** Spark's own read of `paths`: its schema, or the error it raises. */
+  private def sparkSchema(paths: Seq[String], mergeSchema: Boolean)
+      : Either[(String, String), StructType] = outcome {
+    val r = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
+    r.parquet(paths: _*).schema
+  }
+
+  private def engineSchema(paths: Seq[String], mergeSchema: Boolean)
+      : Either[(String, String), StructType] =
+    outcome(Parquet.read(spark, paths, mergeSchema).schema)
+
+  private def outcome(schema: => StructType): Either[(String, String), StructType] =
+    try Right(schema) catch {
+      case e: Exception => Left((e.getClass.getName, e.getMessage))
+    }
+
+  /** A parquet file without Spark's schema in its footer: a plain
+    * BINARY and an INT96 column, as non-Spark writers produce them.
+    */
+  private def writeForeignFile(target: Path): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 k; required binary b; required int96 t; }")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val w = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(target.toUri), conf))
+      .withType(schema).withConf(conf).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("k", 1L)
+      .append("b", "x").append("t", Binary.fromConstantByteArray(new Array[Byte](12))))
+    finally w.close()
+  }
+
+  test("a first read starts no Spark job for any input kind") {
+    for ((label, paths, merge) <- inputKinds()) {
+      val m0 = Parquet.misses
+      val (df, jobs) = jobsDuring(Parquet.read(spark, paths, merge))
+      assert(Parquet.misses == m0 + 1, s"$label: the read must miss the memo")
+      assert(jobs == 0, s"$label: the first read started $jobs job(s)")
+      assert(df.count() > 0L, s"$label: no rows")
+    }
+  }
+
+  test("a first read's schema equals Spark's inference for every input kind") {
+    for ((label, paths, merge) <- inputKinds()) {
+      val expected = sparkSchema(paths, merge)
+      assert(expected.isRight, s"$label: $expected")
+      assert(engineSchema(paths, merge) == expected, label)
+    }
+  }
+
+  test("a first read's schema equals Spark's: summaries, case, NTZ, footers without Spark's schema") {
+    val root = Files.createTempDirectory("graft_memo_cases").toString
+    // a _common_metadata summary decides the schema when nothing merges
+    val wide = s"$root/wide"
+    Seq((1L, 10.0, "x")).toDF("k", "p", "extra").write
+      .option("parquet.summary.metadata.level", "ALL").parquet(wide)
+    assert(Files.exists(Paths.get(wide, "_common_metadata")))
+    for (merge <- Seq(false, true)) {
+      val narrow = s"$root/narrow_$merge"
+      Seq((1L, 10.0)).toDF("k", "p").write.parquet(narrow)
+      Files.copy(Paths.get(wide, "_common_metadata"), Paths.get(narrow, "_common_metadata"))
+      val expected = sparkSchema(Seq(narrow), merge)
+      assert(expected.map(_.fieldNames.toSeq) == Right(Seq("k", "p", "extra")))
+      assert(engineSchema(Seq(narrow), merge) == expected, s"summary, merge=$merge")
+    }
+    // a merged pair whose column names differ only in case: Spark folds
+    // the footers in path order and keeps the first spelling
+    val cased = Seq(s"$root/upper", s"$root/lower")
+    Seq((1L, 2L)).toDF("K", "a").write.parquet(cased(0))
+    Seq((3L, 4L)).toDF("k", "b").write.parquet(cased(1))
+    val casedExpected = sparkSchema(cased, mergeSchema = true)
+    assert(casedExpected.map(_.fieldNames.toSeq) == Right(Seq("k", "b", "a")))
+    assert(engineSchema(cased, mergeSchema = true) == casedExpected)
+    // TIMESTAMP_NTZ
+    val ntz = s"$root/ntz"
+    Seq((1L, java.time.LocalDateTime.parse("2024-01-02T03:04:05"))).toDF("k", "ts")
+      .write.parquet(ntz)
+    val ntzExpected = sparkSchema(Seq(ntz), mergeSchema = false)
+    assert(ntzExpected.map(_("ts").dataType) ==
+      Right(org.apache.spark.sql.types.TimestampNTZType))
+    assert(engineSchema(Seq(ntz), mergeSchema = false) == ntzExpected)
+    // binaryAsString and int96AsTimestamp shape a footer without Spark's
+    // schema; INT96 not read as a timestamp is Spark's error, unchanged
+    val confs = Seq("spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp")
+    val prev = confs.map(spark.conf.get)
+    try {
+      for (binaryAsString <- Seq(false, true); int96AsTimestamp <- Seq(true, false)) {
+        val foreign = Paths.get(root, s"foreign_${binaryAsString}_$int96AsTimestamp.parquet")
+        writeForeignFile(foreign)
+        spark.conf.set(confs(0), binaryAsString.toString)
+        spark.conf.set(confs(1), int96AsTimestamp.toString)
+        val expected = sparkSchema(Seq(foreign.toString), mergeSchema = false)
+        assert(expected.isRight == int96AsTimestamp, expected)
+        assert(engineSchema(Seq(foreign.toString), mergeSchema = false) == expected,
+          s"binaryAsString=$binaryAsString int96AsTimestamp=$int96AsTimestamp")
+      }
+    } finally confs.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("an empty dir, a glob and a non-local path raise Spark's errors") {
+    val root = Files.createTempDirectory("graft_memo_err")
+    val empty = Files.createDirectory(root.resolve("empty")).toString
+    for (p <- Seq(empty, s"$root/no_such*", "nosuchfs:///graft/x.parquet")) {
+      val expected = sparkSchema(Seq(p), mergeSchema = false)
+      assert(expected.isLeft, s"$p: $expected")
+      assert(engineSchema(Seq(p), mergeSchema = false) == expected, p)
+    }
+  }
+
   test("a second Tables.load of an unchanged table starts no Spark job") {
     val dir = Files.createTempDirectory("graft_memo_sf")
     Files.copy(Paths.get(sf, "documents.parquet"), dir.resolve("documents.parquet"))
-    val (first, jobs1) = jobsDuring(Tables.load(spark, dir.toString, "documents"))
-    assert(jobs1 >= 1, "the first load infers the schema with a job")
+    val m0 = Parquet.misses
+    val first = Tables.load(spark, dir.toString, "documents")
+    assert(Parquet.misses == m0 + 1, "the first load misses the memo")
     val (second, jobs2) = jobsDuring(Tables.load(spark, dir.toString, "documents"))
     assert(jobs2 == 0, s"the second load started $jobs2 job(s)")
+    assert(Parquet.misses == m0 + 1, "the second load hits the memo")
     assert(second.schema == first.schema)
     assert(rows(second) == rows(first))
   }
@@ -63,10 +212,13 @@ class ParquetMemoSpec extends GraftSpec {
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p").write.parquet(s"$t/u0")
     Seq((3L, 30.0)).toDF("k", "p").write.parquet(s"$t/u1")
     CommitLog.commit(t, 0L, Seq("u0", "u1"))
-    val (first, jobs1) = jobsDuring(CommitLog.snapshot(spark, t, 0L))
-    assert(jobs1 >= 1, "the first snapshot infers the schema with a job")
+    val m0 = Parquet.misses
+    val first = CommitLog.snapshot(spark, t, 0L)
+    val m1 = Parquet.misses
+    assert(m1 > m0, "the first snapshot misses the memo")
     val (second, jobs2) = jobsDuring(CommitLog.snapshot(spark, t, 0L))
     assert(jobs2 == 0, s"the second snapshot started $jobs2 job(s)")
+    assert(Parquet.misses == m1, "the second snapshot hits the memo")
     assert(second.schema == first.schema)
     assert(rows(second) == Seq("[1,10.0]", "[2,20.0]", "[3,30.0]"))
   }
@@ -142,10 +294,12 @@ class ParquetMemoSpec extends GraftSpec {
     }
     inputs.foreach(Parquet.read(spark, _))
     assert(Parquet.memoSize <= Parquet.Capacity)
-    val (_, recent) = jobsDuring(Parquet.read(spark, inputs.last))
-    assert(recent == 0, "the most recent input must still hit")
-    val (_, oldest) = jobsDuring(Parquet.read(spark, inputs.head))
-    assert(oldest >= 1, "the least recently used input must have been dropped")
+    val m0 = Parquet.misses
+    Parquet.read(spark, inputs.last)
+    assert(Parquet.misses == m0, "the most recent input must still hit")
+    Parquet.read(spark, inputs.head)
+    assert(Parquet.misses == m0 + 1,
+      "the least recently used input must have been dropped")
     assert(Parquet.memoSize <= Parquet.Capacity)
   }
 }

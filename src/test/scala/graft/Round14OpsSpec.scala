@@ -14,7 +14,7 @@ class Round14OpsSpec extends GraftSpec {
 
   test("MV rollup rewrite: coarser group-by reads the view state, never the fact units") {
     val df = SparkEntry.queries("view_rewrite_rollup")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview"),
       "rollup rewrite did not fire — no view-state scan:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc"),
@@ -31,7 +31,7 @@ class Round14OpsSpec extends GraftSpec {
   test("MV predicate subsumption: a whole-group filter reads the state; a value filter declines") {
     import graft.sources.CommitLog
     val df = SparkEntry.queries("view_rewrite_filtered")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview"),
       "filtered rewrite did not fire:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc"),
@@ -48,14 +48,14 @@ class Round14OpsSpec extends GraftSpec {
       .filter(col("p") > 1000.0)
       .groupBy((col("k") % 10).as("g"))
       .agg(count(lit(1)).as("n"), sum(col("p")).as("sum_p"))
-    val rlPlan = rowLevel.queryExecution.executedPlan.toString
+    val rlPlan = planText(rowLevel)
     assert(!rlPlan.contains("graft_aggview"),
       "row-level predicate wrongly subsumed:\n" + rlPlan.take(3000))
   }
 
   test("MV avg rewrite: rollup avg reads the state and matches the direct quotient") {
     val df = SparkEntry.queries("view_rewrite_avg")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview"),
       "avg rewrite did not fire:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc"),
@@ -84,7 +84,7 @@ class Round14OpsSpec extends GraftSpec {
         .groupBy(((col("k") % 10) % 3).as("g3"))
         .agg(count(lit(1)).as("n"), avg(col("p")).as("avg_p"))
         .orderBy("g3")
-      assert(!off.queryExecution.executedPlan.toString
+      assert(!planText(off)
         .contains("graft_aggview"))
       assert(off.collect().map(_.toSeq).toSeq ==
         df.collect().map(_.toSeq).toSeq,
@@ -94,7 +94,7 @@ class Round14OpsSpec extends GraftSpec {
 
   test("MV multi-key rollup: both key-functional grouping keys read the state") {
     val df = SparkEntry.queries("view_rewrite_multikey")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview"),
       "multi-key rewrite did not fire:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc"),
@@ -114,7 +114,7 @@ class Round14OpsSpec extends GraftSpec {
     val mixed = CommitLog.snapshot(spark, root, vLast)
       .groupBy((col("k") % 10).as("g"), (col("k") % 7).as("g7"))
       .agg(count(lit(1)).as("n"))
-    assert(!mixed.queryExecution.executedPlan.toString
+    assert(!planText(mixed)
       .contains("graft_aggview"),
       "pair with a non-key-functional member wrongly rerouted")
   }
@@ -130,7 +130,7 @@ class Round14OpsSpec extends GraftSpec {
     val mixed = CommitLog.snapshot(spark, root, vLast)
       .groupBy(((col("k") % 10) + col("p").cast("bigint")).as("gx"))
       .agg(count(lit(1)).as("n"))
-    val mixedPlan = mixed.queryExecution.executedPlan.toString
+    val mixedPlan = planText(mixed)
     assert(!mixedPlan.contains("graft_aggview"),
       "non-subsumed rollup rerouted:\n" + mixedPlan.take(3000))
   }
@@ -163,7 +163,7 @@ class Round14OpsSpec extends GraftSpec {
         spark.experimental.extraOptimizations :+ graft.plans.MvRewrite
     try {
       def expect(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] = {
-        val plan = df.queryExecution.executedPlan.toString
+        val plan = planText(df)
         assert(plan.contains("graft_r14_mvnull") && plan.contains("state"),
           "rewrite did not fire:\n" + plan.take(2000))
         assert(!plan.contains("fact"),
@@ -213,7 +213,7 @@ class Round14OpsSpec extends GraftSpec {
     for (q <- Seq("tpch_q3_cbo", "tpch_q5_cbo", "tpch_q7_cbo",
         "tpch_q10_cbo")) {
       val df = SparkEntry.queries(q)(spark, sf)
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = planText(df)
       // plan parity with the hand-tuned entries: every dim broadcasts,
       // no shuffle join anywhere — from statistics alone, no hints
       assert(plan.contains("BroadcastHashJoin") &&
@@ -274,8 +274,7 @@ class Round14OpsSpec extends GraftSpec {
     // structural no-ANALYZE guarantee: the registration path never
     // issues one — the stats above could only have come from the
     // sidecar fold (this assertion documents the contract)
-    val plan = SparkEntry.queries("cbo_sidecar_stats")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val plan = planText(SparkEntry.queries("cbo_sidecar_stats")(spark, sf))
     assert(plan.contains("BroadcastHashJoin"),
       "sidecar-stats'd join did not broadcast:\n" + plan.take(2000))
   }

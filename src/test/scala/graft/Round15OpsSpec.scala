@@ -91,7 +91,7 @@ class Round15OpsSpec extends GraftSpec {
   test("MV join rewrite: fact⋈dim aggregate reads the maintained state, neither table scanned") {
     import graft.sources.CommitLog
     val df = SparkEntry.queries("view_rewrite_join")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_joinview"),
       "join rewrite did not fire — no state scan:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc") && !plan.contains("graft_dim"),
@@ -112,7 +112,7 @@ class Round15OpsSpec extends GraftSpec {
       .filter(col("g") % 2 === 0)
       .groupBy((col("g") % 3).as("g3"))
       .agg(count(lit(1)).as("n"), sum(col("p")).as("sp"))
-    val rollPlan = roll.queryExecution.executedPlan.toString
+    val rollPlan = planText(roll)
     assert(rollPlan.contains("graft_joinview") &&
       !rollPlan.contains("graft_cdc") && !rollPlan.contains("graft_dim"),
       "join rollup+filter did not reroute:\n" + rollPlan.take(3000))
@@ -129,20 +129,20 @@ class Round15OpsSpec extends GraftSpec {
       .join(dimSnap.select((col("k") + 1L).as("k2"), col("g")),
         col("k") === col("k2"))
       .groupBy(col("g")).agg(count(lit(1)).as("n"))
-    assert(!shifted.queryExecution.executedPlan.toString
+    assert(!planText(shifted)
       .contains("graft_joinview"),
       "non-registered join condition wrongly rerouted")
     // NEGATIVE: an outer join declines (the state reflects the inner)
     val lj = factSnap.join(dimSnap, Seq("k"), "left")
       .groupBy(col("g")).agg(count(lit(1)).as("n"))
-    assert(!lj.queryExecution.executedPlan.toString
+    assert(!planText(lj)
       .contains("graft_joinview"),
       "left join wrongly rerouted")
     // NEGATIVE: a row-level predicate (on the fact value) declines
     val rowLevel = factSnap.join(dimSnap, "k")
       .filter(col("p") > 1000.0)
       .groupBy(col("g")).agg(count(lit(1)).as("n"))
-    assert(!rowLevel.queryExecution.executedPlan.toString
+    assert(!planText(rowLevel)
       .contains("graft_joinview"),
       "row-level predicate wrongly subsumed through the join")
   }
@@ -150,7 +150,7 @@ class Round15OpsSpec extends GraftSpec {
   test("MV min/max rewrite: append-only state serves min/max; delete-bearing view declines") {
     import graft.sources.CommitLog
     val df = SparkEntry.queries("view_rewrite_minmax")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_appendview"),
       "min/max rewrite did not fire:\n" + plan.take(3000))
     assert(!plan.contains("graft_appendtab"),
@@ -163,13 +163,13 @@ class Round15OpsSpec extends GraftSpec {
       .agg(min(col("p")).as("mn"), max(col("p")).as("mx"))
       .orderBy("g3")
     val roll = rollQ
-    assert(roll.queryExecution.executedPlan.toString
+    assert(planText(roll)
       .contains("graft_appendview"), "min/max rollup did not reroute")
     val rolled = roll.collect().map(_.toSeq).toSeq
     graft.plans.MvCatalog.drop("orders_append_by_g")
     try {
       val off = rollQ
-      assert(!off.queryExecution.executedPlan.toString
+      assert(!planText(off)
         .contains("graft_appendview"))
       assert(off.collect().map(_.toSeq).toSeq == rolled,
         "rewritten min/max rollup diverges from the direct aggregate")
@@ -182,7 +182,7 @@ class Round15OpsSpec extends GraftSpec {
     val vc = CommitLog.versions(cdcRoot).last
     val m = CommitLog.snapshot(spark, cdcRoot, vc)
       .groupBy((col("k") % 10).as("g")).agg(min(col("p")).as("mn"))
-    assert(!m.queryExecution.executedPlan.toString.contains("graft_aggview"),
+    assert(!planText(m).contains("graft_aggview"),
       "min over a delete-bearing view wrongly rerouted")
     // NEGATIVE: the fold itself REFUSES a retraction-bearing feed
     val e = intercept[IllegalArgumentException] {
@@ -195,7 +195,7 @@ class Round15OpsSpec extends GraftSpec {
   test("MV stale rewrite: state(v0) + tail delta serves a v1 scan without reading the v0 bulk") {
     import graft.sources.CommitLog
     val df = SparkEntry.queries("view_rewrite_stale")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_stalestate"),
       "stale rewrite did not fire — no state scan:\n" + plan.take(3000))
     assert(plan.contains("data/v1"),
@@ -215,7 +215,7 @@ class Round15OpsSpec extends GraftSpec {
           col("sum_p").cast(org.apache.spark.sql.types.DecimalType(38, 2))
             .as("total"))
         .orderBy("g")
-      assert(!off.queryExecution.executedPlan.toString
+      assert(!planText(off)
         .contains("graft_stalestate"))
       assert(off.collect().map(_.toSeq).toSeq == got,
         "compensated rewrite diverges from the direct aggregate")
@@ -225,12 +225,12 @@ class Round15OpsSpec extends GraftSpec {
     val roll = CommitLog.snapshot(spark, root, 1L)
       .groupBy(((col("k") % 7) % 2).as("g2"))
       .agg(count(lit(1)).as("n"))
-    assert(roll.queryExecution.executedPlan.toString
+    assert(planText(roll)
       .contains("graft_stalestate"), "stale rollup did not reroute")
     // NEGATIVE: min/max never compensate (no mn/mx in the folded frame)
     val m = CommitLog.snapshot(spark, root, 1L)
       .groupBy((col("k") % 7).as("g")).agg(min(col("p")).as("mn"))
-    assert(!m.queryExecution.executedPlan.toString
+    assert(!planText(m)
       .contains("graft_stalestate"),
       "min through the stale compensation wrongly rerouted")
     // NEGATIVE: a state NEWER than the scan declines (the rewrite only
@@ -241,7 +241,7 @@ class Round15OpsSpec extends GraftSpec {
     try {
       val back = CommitLog.snapshot(spark, root, 0L)
         .groupBy((col("k") % 7).as("g")).agg(count(lit(1)).as("n"))
-      assert(!back.queryExecution.executedPlan.toString
+      assert(!planText(back)
         .contains("graft_stalestate"),
         "scan OLDER than the state wrongly compensated")
     } finally {
@@ -256,7 +256,7 @@ class Round15OpsSpec extends GraftSpec {
     val (fact, dim, root) =
       graft.queries.LakehouseQueries.registerStaleOrdersJoinView(spark, sf)
     val df = SparkEntry.queries("view_rewrite_join_stale")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains(s"$root/s2"),
       "stale join rewrite did not read the s2 cut state:\n" + plan.take(3000))
     assert(!plan.contains("v1b3"),
@@ -275,7 +275,7 @@ class Round15OpsSpec extends GraftSpec {
     graft.plans.MvCatalog.drop("orders_join_dim_stale")
     try {
       val off = joinQ(0L)
-      assert(!off.queryExecution.executedPlan.toString.contains(s"$root/s2"))
+      assert(!planText(off).contains(s"$root/s2"))
       assert(off.collect().map(_.toSeq).toSeq == got,
         "compensated join rewrite diverges from the direct aggregate")
     } finally
@@ -283,7 +283,7 @@ class Round15OpsSpec extends GraftSpec {
     // NEGATIVE: a version pair the declared tail does not reach —
     // fact@2 ⋈ dim@1 — declines (no view, fresh or stale, covers it)
     val other = joinQ(dimV = 1L, factV = 2L)
-    assert(!other.queryExecution.executedPlan.toString
+    assert(!planText(other)
       .contains("graft_joinview"),
       "uncovered version pair wrongly rerouted")
   }
@@ -334,7 +334,7 @@ class Round15OpsSpec extends GraftSpec {
       // (which matches any path/operator containing it) — the
       // rewrite-fired precondition must be real before the NULL-merge
       // assertion below means anything
-      assert(df.queryExecution.executedPlan.toString.contains(statePath),
+      assert(planText(df).contains(statePath),
         "NULL-g fixture rewrite did not fire")
       val rows = df.collect()
       // review r15: the full_outer-merge formulation emitted TWO
@@ -363,7 +363,7 @@ class Round15OpsSpec extends GraftSpec {
       graft.plans.MvCatalog.MvJoinStaleDef(fact, dim, 1L, 0L,
         tail = Seq((true, 3L, 0L)), "k", "k", "g", "p", s"$root/s2"))
     try {
-      assert(!q3.queryExecution.executedPlan.toString.contains(s"$root/s2"),
+      assert(!planText(q3).contains(s"$root/s2"),
         "version-skipping tail wrongly accepted")
       // the COMPLETE tail from the same cut — including the empty v2
       // step — walks and fires, and the empty delta is a no-op
@@ -373,7 +373,7 @@ class Round15OpsSpec extends GraftSpec {
           tail = Seq((true, 2L, 0L), (true, 3L, 0L)),
           "k", "k", "g", "p", s"$root/s2"))
       val df = q3
-      assert(df.queryExecution.executedPlan.toString.contains(s"$root/s2"),
+      assert(planText(df).contains(s"$root/s2"),
         "complete tail did not fire")
       val got = df.orderBy("g").collect().map(_.toSeq).toSeq
       // ground truth = the UNREWRITTEN aggregate (review r15, second
@@ -381,7 +381,7 @@ class Round15OpsSpec extends GraftSpec {
       // stale def and compared two rewrites against each other)
       graft.plans.MvCatalog.drop("tmp_full_stale")
       val direct = q3
-      assert(!direct.queryExecution.executedPlan.toString
+      assert(!planText(direct)
         .contains(s"$root/s2"))
       assert(got == direct.orderBy("g").collect().map(_.toSeq).toSeq,
         "multi-step compensation diverges from the direct aggregate")
@@ -441,14 +441,7 @@ class Round15OpsSpec extends GraftSpec {
     import graft.sources.CommitLog
     import org.apache.spark.sql.types.DecimalType
     val df = SparkEntry.queries("stream_agg_view")(spark, sf)
-    // a scan's Location is cut to spark.sql.maxMetadataStringLength
-    // (100 chars by default), shorter than a derived-store path with the
-    // fixture's subdirectory: print the whole path
-    val maxMeta = "spark.sql.maxMetadataStringLength"
-    val prevMeta = spark.conf.get(maxMeta)
-    spark.conf.set(maxMeta, "1000")
-    val plan = try df.queryExecution.executedPlan.toString
-      finally spark.conf.set(maxMeta, prevMeta)
+    val plan = planText(df)
     assert(plan.contains("graft_sgv_state"),
       "rewrite did not fire against the stream-maintained state:\n" +
         plan.take(3000))
@@ -498,7 +491,7 @@ class Round15OpsSpec extends GraftSpec {
     val nd = snap.groupBy((col("k") % 10).as("g"),
         (rand(7L) * 4).cast("int").as("r"))
       .agg(count(lit(1)).as("n"))
-    val plan = nd.queryExecution.executedPlan.toString
+    val plan = planText(nd)
     assert(!plan.contains("graft_aggview"),
       "nondeterministic grouping wrongly rerouted to the state:\n" +
         plan.take(3000))
@@ -530,7 +523,7 @@ class Round15OpsSpec extends GraftSpec {
       _._1.name == "o_orderkey")),
       "o_orderkey column stats missing from the snapshot relation")
     // the smaller side (customer) broadcasts; orders stays probe-side
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     val lines = plan.linesIterator.toVector
     lines.zipWithIndex.filter(_._1.contains("BroadcastExchange"))

@@ -152,7 +152,7 @@ class Round16OpsSpec extends GraftSpec {
 
   test("MV union rewrite: archive ∪ current aggregate reads both states, neither table") {
     val df = SparkEntry.queries("view_rewrite_union")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview") && plan.contains("graft_archstate"),
       "union rewrite did not fire on both states:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc") && !plan.contains("graft_archtab"),
@@ -164,7 +164,7 @@ class Round16OpsSpec extends GraftSpec {
     graft.plans.MvCatalog.drop("orders_arch_by_g")
     try {
       val off = unionQuery()
-      val offPlan = off.queryExecution.executedPlan.toString
+      val offPlan = planText(off)
       assert(!offPlan.contains("graft_aggview") &&
         !offPlan.contains("graft_archstate"))
       assert(off.collect().map(_.toSeq).toSeq ==
@@ -177,7 +177,7 @@ class Round16OpsSpec extends GraftSpec {
     SparkEntry.queries("view_rewrite_union")(spark, sf).count()
     graft.plans.MvCatalog.drop("orders_arch_by_g")
     try {
-      val plan = unionQuery().queryExecution.executedPlan.toString
+      val plan = planText(unionQuery())
       // fail-safe: the whole union declines — the archive branch
       // scans its table and the current branch must NOT be served
       // from state either (a half-rewritten union would double-count
@@ -236,7 +236,7 @@ class Round16OpsSpec extends GraftSpec {
         .agg(count(lit(1)).as("n"),
           sum(col("p")).cast(DecimalType(38, 2)).as("total"))
         .orderBy("g")
-      assert(df.queryExecution.executedPlan.toString.contains(statePath),
+      assert(planText(df).contains(statePath),
         "shared-name fixture rewrite did not fire")
       val rows = df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDecimal(2).toPlainString)).toSet
@@ -265,7 +265,7 @@ class Round16OpsSpec extends GraftSpec {
         .cast(org.apache.spark.sql.types.DecimalType(38, 2)).as("total"))
       .orderBy("g")
     val df = filtered()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_stalestate"),
       "stale + predicate did not reroute:\n" + plan.take(3000))
     assert(!plan.contains("data/v0"),
@@ -275,7 +275,7 @@ class Round16OpsSpec extends GraftSpec {
     graft.plans.MvCatalog.drop("orders_append_stale_k7")
     try {
       val off = filtered()
-      assert(!off.queryExecution.executedPlan.toString
+      assert(!planText(off)
         .contains("graft_stalestate"))
       assert(off.collect().map(_.toSeq).toSeq == got,
         "stale + predicate rewrite diverges from the direct aggregate")
@@ -289,7 +289,7 @@ class Round16OpsSpec extends GraftSpec {
       val roll = CommitLog.snapshot(spark, root, 1L)
         .groupBy(((col("k") % 7) % 2).as("g2"))
         .agg(count(lit(1)).as("n")).orderBy("g2")
-      assert(roll.queryExecution.executedPlan.toString
+      assert(planText(roll)
         .contains("graft_stalestate"))
       assert(roll.collect().map(_.toSeq).toSeq == direct,
         "stale rollup diverges from the direct aggregate")
@@ -300,7 +300,7 @@ class Round16OpsSpec extends GraftSpec {
     val row = CommitLog.snapshot(spark, root, 1L)
       .filter(col("p") > 10)
       .groupBy((col("k") % 7).as("g")).agg(count(lit(1)).as("n"))
-    assert(!row.queryExecution.executedPlan.toString
+    assert(!planText(row)
       .contains("graft_stalestate"),
       "row-level predicate wrongly rerouted through compensation")
   }
@@ -316,7 +316,7 @@ class Round16OpsSpec extends GraftSpec {
       .groupBy(((col("k") % 10) % 3).as("g3"))
       .agg(count(lit(1)).as("n"))
       .orderBy("g3")
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview") && plan.contains("graft_archstate"),
       "union rollup did not fire:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc") && !plan.contains("graft_archtab"))

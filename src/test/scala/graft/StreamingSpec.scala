@@ -150,6 +150,24 @@ class StreamingSpec extends GraftSpec {
     assert(spark.conf.get(key) == before)
   }
 
+  test("a drain's batches run at 8 shuffle partitions, the caller's session at its own") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before != "8", "the check needs a caller value other than the stream's")
+    val src = Derived.scratch("graft_drain_conf")
+    spark.range(3).toDF("id").write.mode("overwrite").parquet(src)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val w = spark.readStream.schema("id LONG").parquet(src).writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        seen.add((spark.conf.get(key), batch.sparkSession.conf.get(key)))
+        ()
+      }
+    streaming.StreamQueries.drain(spark, w)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq == Seq((before, "8")))
+    assert(spark.conf.get(key) == before)
+  }
+
   test("memory-sink drains leave no graft_sink_* view in the caller's session") {
     // the returned frames still read the sink's rows after the drop
     assert(q("stream_tumbling").count() > 0L)
