@@ -10,8 +10,12 @@
 # pair i uses seed first-seed+i on both sides, and the side that runs
 # first alternates from pair to pair so a drift of the host does not
 # favour one side. Each run uses BENCHMARK.json's run_seconds. Prints,
-# for every end-to-end metric, the median on each side and the number
-# of pairs the change won (strictly better in the metric's direction).
+# for every end-to-end metric, the median on each side, the parent's
+# quartiles, the number of pairs the change won (strictly better in the
+# metric's direction) and whether a gain claim on that metric holds: at
+# least 10 pairs, the change better in at least 9 of every 10, and the
+# medians apart, in the better direction, by more than the parent's
+# interquartile range.
 # The printed log directory keeps each run's result line and its
 # per-entry warm medians (`<side>-seed<N>.bench.json`, the input of
 # dev/bench_ratio.py). Nothing under perfbench/ is changed; the parent
@@ -55,12 +59,22 @@ def metrics(side, seed):
     with open(f"{log}/{side}-seed{seed}.json") as f:
         return {k: v["value"] for k, v in json.load(f)["metrics"].items()}
 runs = {s: [metrics(s, seed0 + i) for i in range(pairs)] for s in ("parent", "change")}
-print(f"{'metric':<18}{'parent':>12}{'change':>12}{'won':>8}")
+print(f"{'metric':<18}{'parent':>10}{'p.q1':>10}{'p.q3':>10}{'change':>10}"
+      f"{'won':>8}  claim")
 for m in bench["end_to_end"]:
     name, higher = m["name"], m["better"] == "higher"
     p = [r[name] for r in runs["parent"]]
     c = [r[name] for r in runs["change"]]
     won = sum((b > a) if higher else (b < a) for a, b in zip(p, c))
-    print(f"{name:<18}{statistics.median(p):>12.4g}{statistics.median(c):>12.4g}"
-          f"{won:>5}/{pairs}")
+    q1, _, q3 = statistics.quantiles(p, n=4) if pairs > 1 else (p[0], p[0], p[0])
+    pm, cm = statistics.median(p), statistics.median(c)
+    gain = (cm - pm) if higher else (pm - cm)
+    if pairs < 10:
+        claim = "too few pairs"
+    elif 10 * won >= 9 * pairs and gain > q3 - q1:
+        claim = "met"
+    else:
+        claim = "not met"
+    print(f"{name:<18}{pm:>10.4g}{q1:>10.4g}{q3:>10.4g}{cm:>10.4g}"
+          f"{won:>5}/{pairs}  {claim}")
 EOF

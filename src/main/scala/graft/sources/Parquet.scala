@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
@@ -25,7 +25,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * The footer read (a memo miss) reproduces Spark's inference exactly:
   *  - the file list is Spark's own file index for the paths, so hidden
   *    files, partition directories and a file sink's `_spark_metadata`
-  *    log follow Spark's rules;
+  *    log follow Spark's rules; the returned frame is the relation
+  *    Spark's read builds over that same index, with the footers'
+  *    schema as its data schema, so a miss lists the paths once and a
+  *    data column named like a partition column keeps Spark's place;
   *  - without schema merging it reads `_common_metadata`, else
   *    `_metadata`, else the first data file in path order; with
   *    merging, every data file, then `_metadata`, then
@@ -34,13 +37,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    with `StructType.merge` under the session's case sensitivity;
   *  - each footer is converted by `ParquetFileFormat.readSchemaFromFooter`
   *    with the converter settings inference uses.
+  * The footers are read one after another on the driver, however many
+  * there are; only a merged read touches more than one.
   * It leaves the read to Spark's inference, unchanged, when the index
-  * lists no file, when merging would touch more footers than
-  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (the
-  * distributed job stays the path for wide inputs), when a data column
-  * shares its name with a partition column (Spark orders such columns
-  * differently for a given schema), and on any exception — so Spark
-  * reports its errors as before.
+  * lists no file and on any exception — so Spark reports its errors as
+  * before.
   *
   * A memo entry is keyed on the paths (in order), the merge flag and the
   * session confs that shape parquet inference, and is valid only while
@@ -49,7 +50,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *  - a directory: the sorted (relative path, length, mtime-ns) of its
   *    data files — names not starting with `_` or `.`, as Spark lists
   *    them.
-  * A rewritten input therefore misses and is read again. The memo
+  * A rewritten input therefore misses and is read again. An input with
+  * a data column named like a partition column is not remembered (see
+  * [[overlapsPartition]]). The memo
   * holds no session and is a fixed-capacity LRU: per-call scratch
   * inputs never hit again and age out. A path that is not a local file
   * or directory (another filesystem, a glob, a missing path) bypasses
@@ -66,10 +69,12 @@ object Parquet {
 
   private val inferenceConfs = Seq(
     "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
     "spark.sql.caseSensitive")
 
   private final case class Key(paths: Seq[String], mergeSchema: Boolean,
@@ -89,7 +94,8 @@ object Parquet {
     */
   def read(spark: SparkSession, paths: Seq[String],
       mergeSchema: Boolean = false): DataFrame = {
-    val reader =
+    // a DataFrameReader keeps the schema it is given: one per read
+    def reader: DataFrameReader =
       if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
     identity(paths) match {
       case None => reader.parquet(paths: _*)
@@ -99,15 +105,25 @@ object Parquet {
         if (hit != null && hit.identity == id) reader.schema(hit.schema).parquet(paths: _*)
         else {
           missCount.incrementAndGet()
-          val df = footerSchema(spark, paths, mergeSchema) match {
-            case Some(schema) => reader.schema(schema).parquet(paths: _*)
-            case None => reader.parquet(paths: _*)
-          }
-          memo.synchronized(memo.put(key, Entry(id, df.schema)))
+          val df = footerRead(spark, reader, paths, mergeSchema)
+            .getOrElse(reader.parquet(paths: _*))
+          if (!overlapsPartition(df)) memo.synchronized(memo.put(key, Entry(id, df.schema)))
           df
         }
     }
   }
+
+  /** Whether a data column of `df`'s scan is named like one of its
+    * partition columns. Spark's read keeps such a column where the data
+    * has it; a read given the schema moves it to the end, so a memo hit
+    * would reorder it. Such an input is not remembered.
+    */
+  private def overlapsPartition(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .exists {
+        case r: HadoopFsRelation => r.overlappedPartCols.nonEmpty
+        case _ => false
+      }
 
   /** Entries the memo holds now (at most [[Capacity]]). */
   private[graft] def memoSize: Int = memo.synchronized(memo.size())
@@ -121,16 +137,16 @@ object Parquet {
   // paths; its name cannot clash with a partition column.
   private val ListingSchema = StructType(Seq(StructField("__graft_listing", LongType)))
 
-  /** The schema Spark's inference gives `paths`, read from their
-    * footers on the driver; None where the read is left to Spark's
-    * inference (see the class doc).
+  /** `reader`'s read of `paths` with the schema Spark's inference would
+    * give, read from their footers on the driver; None where the read is
+    * left to Spark's inference (see the class doc).
     */
-  private def footerSchema(spark: SparkSession, paths: Seq[String],
-      mergeSchema: Boolean): Option[StructType] =
+  private def footerRead(spark: SparkSession, reader: DataFrameReader,
+      paths: Seq[String], mergeSchema: Boolean): Option[DataFrame] =
     scala.util.Try {
       val conf = spark.sessionState.conf
       // another relation or file index fails the casts: left to Spark
-      val relation = spark.read.schema(ListingSchema).parquet(paths: _*)
+      val relation = reader.schema(ListingSchema).parquet(paths: _*)
         .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
         .get.asInstanceOf[HadoopFsRelation]
       val files = relation.location.asInstanceOf[PartitioningAwareFileIndex]
@@ -144,7 +160,7 @@ object Parquet {
         if (mergeSchema || conf.isParquetSchemaMergingEnabled)
           (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++ summary ++ common
         else common.headOption.orElse(summary.headOption).orElse(data.headOption).toSeq
-      if (touch.isEmpty || touch.size > conf.parallelPartitionDiscoveryThreshold) None
+      if (touch.isEmpty) None
       else {
         val hadoopConf = spark.sessionState.newHadoopConf()
         // the converter ParquetFileFormat.mergeSchemasInParallel builds
@@ -160,10 +176,7 @@ object Parquet {
             HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
           ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
         }.reduceLeft(GraftSqlInternals.mergeSchemas(_, _, caseSensitive))
-        val name: String => String =
-          if (caseSensitive) n => n else _.toLowerCase(java.util.Locale.ROOT)
-        val partitionCols = relation.partitionSchema.fieldNames.map(name).toSet
-        if (schema.fieldNames.exists(n => partitionCols(name(n)))) None else Some(schema)
+        Some(GraftSqlInternals.withDataSchema(spark, relation, schema))
       }
     }.toOption.flatten
 

@@ -55,4 +55,26 @@ object GraftSqlInternals {
       b: org.apache.spark.sql.types.StructType,
       caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
     a.merge(b, caseSensitive)
+
+  /** The frame Spark's read of `relation`'s paths gives when its schema
+    * inference finds `schema`, built over `relation`'s already listed
+    * file index, so the paths are not listed again. As in
+    * `DataSource.resolveRelation`, the data schema is made nullable
+    * except over a file sink's log, and is checked the same way, so a
+    * schema Spark would refuse throws here too.
+    */
+  def withDataSchema(spark: SparkSession,
+      relation: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val dataSchema = relation.location match {
+      case _: org.apache.spark.sql.execution.streaming.runtime.MetadataLogFileIndex => schema
+      case _ => schema.asNullable
+    }
+    val r = relation.copy(dataSchema = dataSchema)(relation.sparkSession)
+    org.apache.spark.sql.util.SchemaUtils.checkSchemaColumnNameDuplication(
+      r.dataSchema, spark.sessionState.conf.resolver)
+    org.apache.spark.sql.execution.datasources.DataSourceUtils.verifySchema(
+      r.fileFormat, r.dataSchema, readOnly = true)
+    spark.baseRelationToDataFrame(r)
+  }
 }

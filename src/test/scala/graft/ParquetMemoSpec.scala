@@ -68,10 +68,12 @@ class ParquetMemoSpec extends GraftSpec {
     val units = Seq(s"$root/u0", s"$root/u1")
     Seq((1L, 10.0)).toDF("k", "p").write.parquet(units(0))
     Seq((2L, 20.0, true)).toDF("k", "p", "flag").write.parquet(units(1))
-    // a file sink's output, plus a file its _spark_metadata log does not
-    // list, first in path order
+    // a file sink's output (with a non-nullable column, which Spark keeps
+    // non-nullable over a sink's log), plus a file its _spark_metadata log
+    // does not list, first in path order
     val sink = s"$root/sink"
-    spark.readStream.schema("k LONG, p DOUBLE").parquet(units(0)).writeStream
+    spark.readStream.schema("k LONG, p DOUBLE").parquet(units(0))
+      .withColumn("one", org.apache.spark.sql.functions.lit(1)).writeStream
       .format("parquet").option("checkpointLocation", s"$root/ckpt")
       .trigger(Trigger.AvailableNow()).start(sink).awaitTermination()
     writeFile(Seq((9L, 90.0, "x")).toDF("k", "p", "stray"),
@@ -131,6 +133,7 @@ class ParquetMemoSpec extends GraftSpec {
     for ((label, paths, merge) <- inputKinds()) {
       val expected = sparkSchema(paths, merge)
       assert(expected.isRight, s"$label: $expected")
+      if (label == "file-sink dir") assert(expected.exists(!_("one").nullable))
       assert(engineSchema(paths, merge) == expected, label)
     }
   }
@@ -184,10 +187,62 @@ class ParquetMemoSpec extends GraftSpec {
     } finally confs.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("an empty dir, a glob and a non-local path raise Spark's errors") {
+  test("a data column named like a partition column keeps Spark's place on every read and starts no job") {
+    val t = Files.createTempDirectory("graft_memo_clash").resolve("t").toString
+    // the data files carry g too; Spark keeps g where the data has it,
+    // where a read given the same schema would move it to the end
+    Seq(("a", 1L)).toDF("g", "k").write.parquet(s"$t/g=a")
+    val expected = sparkSchema(Seq(t), mergeSchema = false)
+    assert(expected.map(_.fieldNames.toSeq) == Right(Seq("g", "k")))
+    assert(spark.read.schema(expected.toOption.get).parquet(t).columns.toSeq == Seq("k", "g"))
+    val m0 = Parquet.misses
+    val (df, jobs) = jobsDuring(Parquet.read(spark, t))
+    assert(Parquet.misses == m0 + 1)
+    assert(jobs == 0, s"the first read started $jobs job(s)")
+    assert(Right(df.schema) == expected)
+    assert(rows(df) == rows(spark.read.parquet(t)))
+    // a read given the schema would move g to the end, so the input is
+    // not remembered: a second read is a footer read again
+    val again = Parquet.read(spark, t)
+    assert(Parquet.misses == m0 + 2)
+    assert(Right(again.schema) == expected)
+  }
+
+  test("a merged read of more units than the parallel-listing threshold lists once and reads every footer") {
+    val root = Files.createTempDirectory("graft_memo_wide")
+    val n = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt + 1
+    val shapes = Seq(Seq((1L, 10.0)).toDF("k", "p"),
+      Seq((2L, 20.0, true)).toDF("k", "p", "flag"))
+    val templates = shapes.indices.map { i =>
+      val f = root.resolve(s"shape_$i.parquet"); writeFile(shapes(i), f); f
+    }
+    // two equal sets of n units, so neither read sees the other's listing
+    def unitSet(side: String): Seq[String] = (0 until n).map { i =>
+      val u = Files.createDirectories(root.resolve(s"$side/u$i"))
+      Files.copy(templates(i % 2), u.resolve("part-0.parquet"))
+      u.toString
+    }
+    val (expected, sparkJobs) = jobsDuring(sparkSchema(unitSet("spark"), mergeSchema = true))
+    assert(expected.map(_.fieldNames.toSeq) == Right(Seq("k", "p", "flag")))
+    val (df, jobs) = jobsDuring(Parquet.read(spark, unitSet("engine"), mergeSchema = true))
+    assert(Right(df.schema) == expected)
+    // Spark's read: a listing job and an inference job; the engine's:
+    // the same listing job only
+    assert(sparkJobs == 2, s"Spark's read started $sparkJobs job(s)")
+    assert(jobs == 1, s"the engine's first read started $jobs job(s)")
+    assert(df.count() == n.toLong)
+  }
+
+  test("an empty dir, a glob, a non-local path and duplicate columns raise Spark's errors") {
     val root = Files.createTempDirectory("graft_memo_err")
     val empty = Files.createDirectory(root.resolve("empty")).toString
-    for (p <- Seq(empty, s"$root/no_such*", "nosuchfs:///graft/x.parquet")) {
+    // columns that differ only in case, written case-sensitively: a
+    // duplicate under the default session
+    val dup = root.resolve("dup").toString
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try Seq((1L, 2L)).toDF("a", "A").write.parquet(dup)
+    finally spark.conf.set("spark.sql.caseSensitive", "false")
+    for (p <- Seq(empty, s"$root/no_such*", "nosuchfs:///graft/x.parquet", dup)) {
       val expected = sparkSchema(Seq(p), mergeSchema = false)
       assert(expected.isLeft, s"$p: $expected")
       assert(engineSchema(Seq(p), mergeSchema = false) == expected, p)
