@@ -16,6 +16,9 @@
 # least 10 pairs, the change better in at least 9 of every 10, and the
 # medians apart, in the better direction, by more than the parent's
 # interquartile range.
+# Then, for every measured entry, the median over the runs of its warm
+# median on each side, the change/parent ratio of those medians and the
+# number of pairs in which the change's warm median was lower.
 # The printed log directory keeps each run's result line and its
 # per-entry warm medians (`<side>-seed<N>.bench.json`, the input of
 # dev/bench_ratio.py). Nothing under perfbench/ is changed; the parent
@@ -77,4 +80,17 @@ for m in bench["end_to_end"]:
         claim = "not met"
     print(f"{name:<18}{pm:>10.4g}{q1:>10.4g}{q3:>10.4g}{cm:>10.4g}"
           f"{won:>5}/{pairs}  {claim}")
+def entries(side, seed):
+    with open(f"{log}/{side}-seed{seed}.bench.json") as f:
+        return json.load(f)["queries"]
+warm = {s: [entries(s, seed0 + i) for i in range(pairs)] for s in ("parent", "change")}
+names = sorted(set.intersection(*(set(q) for s in warm.values() for q in s)))
+print(f"\n{'entry (warm median, s)':<28}{'parent':>10}{'change':>10}{'ratio':>8}{'won':>8}")
+for e in names:
+    p = [q[e] for q in warm["parent"]]
+    c = [q[e] for q in warm["change"]]
+    pm, cm = statistics.median(p), statistics.median(c)
+    won = sum(b < a for a, b in zip(p, c))
+    ratio = f"{cm / pm:.3f}" if pm > 0 else "-"
+    print(f"{e:<28}{pm:>10.4g}{cm:>10.4g}{ratio:>8}{won:>5}/{pairs}")
 EOF

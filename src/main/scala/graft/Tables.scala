@@ -31,14 +31,47 @@ object Tables {
     * that makes every derived-artifact cache (minhash / IVF indexes,
     * sink exports, stream replay source) regen-safe: the driver
     * rewriting testdata mid-JVM changes the fingerprint and forces a
-    * rebuild instead of a stale read. The recipe (size, mtime-ns and a
-    * head/tail CRC, so a same-size rewrite within one mtime granule
-    * still changes it) is [[graft.sources.Parquet.fingerprint]], the
-    * one the parquet schema memo keys single files on.
+    * rebuild instead of a stale read.
+    *
+    * Components: size + mtime (ns where the filesystem provides it) +
+    * a CRC32 of the file's first and last 64 KiB. The checksum closes
+    * the same-size rewrite within one mtime granule that size and mtime
+    * alone miss; parquet's footer (metadata, row-group offsets) lives in
+    * the tail bytes, so any content change the size doesn't catch the
+    * CRC does. Cost: ≤128 KiB of I/O per probe, page-cache-resident
+    * after the first read. A directory gets size + mtime of the path
+    * itself and CRC 0.
     */
-  def fingerprint(sfDir: String, name: String): String =
-    graft.sources.Parquet.fingerprint(
-      java.nio.file.Paths.get(sfDir, s"$name.parquet"))
+  def fingerprint(sfDir: String, name: String): String = {
+    val src = java.nio.file.Paths.get(sfDir, s"$name.parquet")
+    val size = java.nio.file.Files.size(src)
+    val mtimeNs = java.nio.file.Files.getLastModifiedTime(src)
+      .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+    val crc =
+      if (java.nio.file.Files.isRegularFile(src)) {
+        val c = new java.util.zip.CRC32()
+        val ch = java.nio.file.Files.newByteChannel(src)
+        try {
+          val span = 64 * 1024
+          // loop to full-or-EOF: a single read() may return short, and a
+          // short head/tail yields a DIFFERENT CRC for the same file — a
+          // flapping fingerprint spuriously invalidates every
+          // graft.Derived entry keyed on it
+          def readFully(buf: java.nio.ByteBuffer): Unit = {
+            var n = 0
+            while (buf.hasRemaining && n >= 0) n = ch.read(buf)
+          }
+          val buf = java.nio.ByteBuffer.allocate(span)
+          readFully(buf); buf.flip(); c.update(buf)
+          if (size > span) {
+            buf.clear(); ch.position(math.max(0L, size - span))
+            readFully(buf); buf.flip(); c.update(buf)
+          }
+        } finally ch.close()
+        c.getValue
+      } else 0L
+    s"${size}_${mtimeNs}_$crc"
+  }
 
   /** Session confs every entry point needs. Idempotent, safe to call
     * per-query: these are runtime SQL confs, not static ones.
@@ -55,9 +88,8 @@ object Tables {
   /** Load one of the ten driver tables. `events` gets its `ts` column
     * normalized to microsecond TIMESTAMP_NTZ regardless of how the
     * driver generated it (see class doc). The read goes through
-    * [[graft.sources.Parquet.read]], which infers the table's schema on
-    * the first load and reuses it while the file's fingerprint is
-    * unchanged, so a repeated load starts no Spark job.
+    * [[graft.sources.Parquet.read]], which takes the table's schema from
+    * its footer on the driver, so no load starts a Spark job.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     tune(spark)

@@ -200,9 +200,8 @@ object CommitLog {
 
   /** Read the table AS OF `version` — an ordinary multi-path parquet
     * scan over that snapshot's units. The read goes through
-    * [[Parquet.read]]: the first snapshot of a version infers its schema
-    * (one Spark job over the footers), a later one of the same unchanged
-    * units reuses it and starts no job.
+    * [[Parquet.read]], which takes the schema from the units' footers on
+    * the driver, so no snapshot starts a Spark job.
     */
   def snapshot(spark: SparkSession, table: String, version: Long): DataFrame =
     Parquet.read(spark, units(table, version))
@@ -295,10 +294,10 @@ object CommitLog {
   /** Read AS OF `version` with SCHEMA-ON-READ evolution: units written
     * before a column existed surface it as null (parquet mergeSchema —
     * the additive-column path of the lakehouse formats; renames/drops
-    * need a mapping the manifest doesn't carry). The first read of a
-    * version costs a footer read per unit at planning; [[Parquet.read]]
-    * remembers the merged schema, so a later read of the same unchanged
-    * units plans without one. Pushdown/pruning on shared columns intact.
+    * need a mapping the manifest doesn't carry). Every read costs a
+    * footer read per data file on the driver at planning
+    * ([[Parquet.read]]) and starts no Spark job. Pushdown/pruning on
+    * shared columns intact.
     */
   def snapshotEvolved(spark: SparkSession, table: String, version: Long): DataFrame =
     Parquet.read(spark, units(table, version), mergeSchema = true)
@@ -1301,8 +1300,8 @@ object CommitLog {
     if (rels.isEmpty) return Seq.empty
     val bloomAgg = udaf(new graft.functions.Aggregators.BloomAgg(
       expectedPerUnit, fpp))
-    val perFile = spark.read
-      .parquet(rels.map(u => java.nio.file.Paths.get(table, u).toString): _*)
+    val perFile = Parquet.read(spark,
+        rels.map(u => java.nio.file.Paths.get(table, u).toString))
       .select(input_file_name().as("__f"), col(colName).cast("string").as("__v"))
       .groupBy("__f").agg(bloomAgg(col("__v")).as("__bf"))
       .collect() // metadata-sized: one serialized filter per data file

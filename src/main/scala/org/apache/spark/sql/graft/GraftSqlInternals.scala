@@ -56,6 +56,22 @@ object GraftSqlInternals {
       caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
     a.merge(b, caseSensitive)
 
+  /** The relation `spark.read.options(options).schema(schema)
+    * .parquet(paths: _*)` analyzes to, resolved without building that
+    * frame. One path is passed as the `path` option, as Spark's
+    * `ResolveDataSource` rule passes it.
+    */
+  def parquetRelation(spark: SparkSession, paths: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      options: Map[String, String]): org.apache.spark.sql.sources.BaseRelation = {
+    val (ps, opts) =
+      if (!spark.sessionState.conf.legacyPathOptionBehavior && paths.size == 1)
+        (Nil, options + ("path" -> paths.head))
+      else (paths, options)
+    org.apache.spark.sql.execution.datasources.DataSource(spark, "parquet", ps,
+      Some(schema), options = opts).resolveRelation(readOnly = true)
+  }
+
   /** The frame Spark's read of `relation`'s paths gives when its schema
     * inference finds `schema`, built over `relation`'s already listed
     * file index, so the paths are not listed again. As in

@@ -9,13 +9,13 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.sources.{CommitLog, Parquet}
 
-/** The parquet read path [[graft.sources.Parquet.read]]: a first read
+/** The parquet read path [[graft.sources.Parquet.read]]: every read
   * takes its schema from the footers on the driver (no Spark job, the
-  * same schema and errors as Spark's inference), a repeated read of an
-  * unchanged input hits the schema memo, a rewritten input is read
-  * again, and the memo stays within its capacity.
+  * same schema and errors as Spark's inference), sees a rewritten input
+  * and a changed session conf as they are then, and engine code reads
+  * parquet through it only.
   */
-class ParquetMemoSpec extends GraftSpec {
+class ParquetReadSpec extends GraftSpec {
   import spark.implicits._
 
   /** The body's result and the number of Spark jobs it started. */
@@ -39,7 +39,7 @@ class ParquetMemoSpec extends GraftSpec {
 
   /** Write `df` as the single parquet file `target`. */
   private def writeFile(df: DataFrame, target: Path): Unit = {
-    val out = Files.createTempDirectory("graft_memo_w")
+    val out = Files.createTempDirectory("graft_read_w")
     df.coalesce(1).write.mode("overwrite").parquet(out.toString)
     val part = {
       val st = Files.list(out)
@@ -56,7 +56,7 @@ class ParquetMemoSpec extends GraftSpec {
     * chosen by other rules than Spark's gives another schema.
     */
   private def inputKinds(): Seq[(String, Seq[String], Boolean)] = {
-    val root = Files.createTempDirectory("graft_memo_kinds").toString
+    val root = Files.createTempDirectory("graft_read_kinds").toString
     val file = Paths.get(root, "one.parquet")
     writeFile(Seq((1L, 10.0)).toDF("k", "p"), file)
     val dir = s"$root/dir"
@@ -121,9 +121,7 @@ class ParquetMemoSpec extends GraftSpec {
 
   test("a first read starts no Spark job for any input kind") {
     for ((label, paths, merge) <- inputKinds()) {
-      val m0 = Parquet.misses
       val (df, jobs) = jobsDuring(Parquet.read(spark, paths, merge))
-      assert(Parquet.misses == m0 + 1, s"$label: the read must miss the memo")
       assert(jobs == 0, s"$label: the first read started $jobs job(s)")
       assert(df.count() > 0L, s"$label: no rows")
     }
@@ -139,7 +137,7 @@ class ParquetMemoSpec extends GraftSpec {
   }
 
   test("a first read's schema equals Spark's: summaries, case, NTZ, footers without Spark's schema") {
-    val root = Files.createTempDirectory("graft_memo_cases").toString
+    val root = Files.createTempDirectory("graft_read_cases").toString
     // a _common_metadata summary decides the schema when nothing merges
     val wide = s"$root/wide"
     Seq((1L, 10.0, "x")).toDF("k", "p", "extra").write
@@ -170,13 +168,15 @@ class ParquetMemoSpec extends GraftSpec {
       Right(org.apache.spark.sql.types.TimestampNTZType))
     assert(engineSchema(Seq(ntz), mergeSchema = false) == ntzExpected)
     // binaryAsString and int96AsTimestamp shape a footer without Spark's
-    // schema; INT96 not read as a timestamp is Spark's error, unchanged
+    // schema; INT96 not read as a timestamp is Spark's error, unchanged.
+    // One file read under every setting: a schema kept from an earlier
+    // read of it would be the wrong one for the next setting
     val confs = Seq("spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp")
     val prev = confs.map(spark.conf.get)
+    val foreign = Paths.get(root, "foreign.parquet")
+    writeForeignFile(foreign)
     try {
       for (binaryAsString <- Seq(false, true); int96AsTimestamp <- Seq(true, false)) {
-        val foreign = Paths.get(root, s"foreign_${binaryAsString}_$int96AsTimestamp.parquet")
-        writeForeignFile(foreign)
         spark.conf.set(confs(0), binaryAsString.toString)
         spark.conf.set(confs(1), int96AsTimestamp.toString)
         val expected = sparkSchema(Seq(foreign.toString), mergeSchema = false)
@@ -188,28 +188,24 @@ class ParquetMemoSpec extends GraftSpec {
   }
 
   test("a data column named like a partition column keeps Spark's place on every read and starts no job") {
-    val t = Files.createTempDirectory("graft_memo_clash").resolve("t").toString
+    val t = Files.createTempDirectory("graft_read_clash").resolve("t").toString
     // the data files carry g too; Spark keeps g where the data has it,
     // where a read given the same schema would move it to the end
     Seq(("a", 1L)).toDF("g", "k").write.parquet(s"$t/g=a")
     val expected = sparkSchema(Seq(t), mergeSchema = false)
     assert(expected.map(_.fieldNames.toSeq) == Right(Seq("g", "k")))
     assert(spark.read.schema(expected.toOption.get).parquet(t).columns.toSeq == Seq("k", "g"))
-    val m0 = Parquet.misses
     val (df, jobs) = jobsDuring(Parquet.read(spark, t))
-    assert(Parquet.misses == m0 + 1)
     assert(jobs == 0, s"the first read started $jobs job(s)")
     assert(Right(df.schema) == expected)
     assert(rows(df) == rows(spark.read.parquet(t)))
-    // a read given the schema would move g to the end, so the input is
-    // not remembered: a second read is a footer read again
-    val again = Parquet.read(spark, t)
-    assert(Parquet.misses == m0 + 2)
+    val (again, jobs2) = jobsDuring(Parquet.read(spark, t))
+    assert(jobs2 == 0, s"the second read started $jobs2 job(s)")
     assert(Right(again.schema) == expected)
   }
 
   test("a merged read of more units than the parallel-listing threshold lists once and reads every footer") {
-    val root = Files.createTempDirectory("graft_memo_wide")
+    val root = Files.createTempDirectory("graft_read_wide")
     val n = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt + 1
     val shapes = Seq(Seq((1L, 10.0)).toDF("k", "p"),
       Seq((2L, 20.0, true)).toDF("k", "p", "flag"))
@@ -234,7 +230,7 @@ class ParquetMemoSpec extends GraftSpec {
   }
 
   test("an empty dir, a glob, a non-local path and duplicate columns raise Spark's errors") {
-    val root = Files.createTempDirectory("graft_memo_err")
+    val root = Files.createTempDirectory("graft_read_err")
     val empty = Files.createDirectory(root.resolve("empty")).toString
     // columns that differ only in case, written case-sensitively: a
     // duplicate under the default session
@@ -250,36 +246,29 @@ class ParquetMemoSpec extends GraftSpec {
   }
 
   test("a second Tables.load of an unchanged table starts no Spark job") {
-    val dir = Files.createTempDirectory("graft_memo_sf")
+    val dir = Files.createTempDirectory("graft_read_sf")
     Files.copy(Paths.get(sf, "documents.parquet"), dir.resolve("documents.parquet"))
-    val m0 = Parquet.misses
     val first = Tables.load(spark, dir.toString, "documents")
-    assert(Parquet.misses == m0 + 1, "the first load misses the memo")
     val (second, jobs2) = jobsDuring(Tables.load(spark, dir.toString, "documents"))
     assert(jobs2 == 0, s"the second load started $jobs2 job(s)")
-    assert(Parquet.misses == m0 + 1, "the second load hits the memo")
     assert(second.schema == first.schema)
     assert(rows(second) == rows(first))
   }
 
   test("a second CommitLog.snapshot of one version starts no Spark job") {
-    val t = Files.createTempDirectory("graft_memo_cl").toString
+    val t = Files.createTempDirectory("graft_read_cl").toString
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p").write.parquet(s"$t/u0")
     Seq((3L, 30.0)).toDF("k", "p").write.parquet(s"$t/u1")
     CommitLog.commit(t, 0L, Seq("u0", "u1"))
-    val m0 = Parquet.misses
     val first = CommitLog.snapshot(spark, t, 0L)
-    val m1 = Parquet.misses
-    assert(m1 > m0, "the first snapshot misses the memo")
     val (second, jobs2) = jobsDuring(CommitLog.snapshot(spark, t, 0L))
     assert(jobs2 == 0, s"the second snapshot started $jobs2 job(s)")
-    assert(Parquet.misses == m1, "the second snapshot hits the memo")
     assert(second.schema == first.schema)
     assert(rows(second) == Seq("[1,10.0]", "[2,20.0]", "[3,30.0]"))
   }
 
   test("a rewritten parquet file is read with its new schema") {
-    val dir = Files.createTempDirectory("graft_memo_file")
+    val dir = Files.createTempDirectory("graft_read_file")
     val f = dir.resolve("documents.parquet")
     writeFile(Seq((1L, "a")).toDF("doc_id", "text"), f)
     assert(Tables.load(spark, dir.toString, "documents").columns.toSeq ==
@@ -302,7 +291,7 @@ class ParquetMemoSpec extends GraftSpec {
   }
 
   test("a rewritten parquet directory is read with its new schema") {
-    val dir = Files.createTempDirectory("graft_memo_dir").resolve("t").toString
+    val dir = Files.createTempDirectory("graft_read_dir").resolve("t").toString
     Seq((1L, 10.0)).toDF("k", "p").write.parquet(dir)
     assert(Parquet.read(spark, dir).columns.toSeq == Seq("k", "p"))
     assert(Parquet.read(spark, dir).columns.toSeq == Seq("k", "p"))
@@ -318,15 +307,15 @@ class ParquetMemoSpec extends GraftSpec {
     assert(rows(merged) == Seq("[1,10.0,x,null]", "[2,20.0,y,true]"))
   }
 
-  test("snapshotEvolved and changes return the same schema and rows on a memo hit") {
-    val t = Files.createTempDirectory("graft_memo_evo").toString
+  test("snapshotEvolved and changes return the same schema and rows on a repeated read") {
+    val t = Files.createTempDirectory("graft_read_evo").toString
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     Seq((3L, 30.0, true)).toDF("k", "p", "flag").write.parquet(s"$t/u1")
     CommitLog.commitChecked(spark, t, 1L, Seq("u0", "u1"))
     val evo1 = CommitLog.snapshotEvolved(spark, t, 1L)
     val (evo2, jobs) = jobsDuring(CommitLog.snapshotEvolved(spark, t, 1L))
-    assert(jobs == 0, s"the memo-hit snapshotEvolved started $jobs job(s)")
+    assert(jobs == 0, s"the second snapshotEvolved started $jobs job(s)")
     assert(evo1.schema.fieldNames.toSeq == Seq("k", "p", "flag"))
     assert(evo2.schema == evo1.schema)
     assert(rows(evo2) == rows(evo1))
@@ -338,23 +327,29 @@ class ParquetMemoSpec extends GraftSpec {
     assert(rows(ch1) == Seq("[3,30.0,true,insert]"))
   }
 
-  test("the memo holds at most its capacity and drops the least recently used input") {
-    val dir = Files.createTempDirectory("graft_memo_cap")
-    val src = dir.resolve("src.parquet")
-    writeFile(Seq((1L, 10.0)).toDF("k", "p"), src)
-    val inputs = (0 to Parquet.Capacity).map { i =>
-      val f = dir.resolve(s"in_$i.parquet")
-      Files.copy(src, f)
-      f.toString
+  test("engine code outside tools/ reads parquet only through Parquet.read") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    // a reader chain, possibly split over lines, that ends in a parquet
+    // read Spark infers a schema for
+    val raw = Seq(
+      """\bread\s*(\.\s*options?\([^)]*\)\s*)*\.\s*parquet\(""".r,
+      """format\(\s*"parquet"\s*\)\s*\.\s*load\b""".r)
+    val files = {
+      val st = Files.walk(root)
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally st.close()
     }
-    inputs.foreach(Parquet.read(spark, _))
-    assert(Parquet.memoSize <= Parquet.Capacity)
-    val m0 = Parquet.misses
-    Parquet.read(spark, inputs.last)
-    assert(Parquet.misses == m0, "the most recent input must still hit")
-    Parquet.read(spark, inputs.head)
-    assert(Parquet.misses == m0 + 1,
-      "the least recently used input must have been dropped")
-    assert(Parquet.memoSize <= Parquet.Capacity)
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val hits = files.filterNot { f =>
+      val rel = root.relativize(f).toString
+      rel.startsWith("tools/") || rel == "sources/Parquet.scala"
+    }.flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      raw.flatMap(_.findAllMatchIn(text)).map { m =>
+        s"${root.relativize(f)}:${text.take(m.start).count(_ == '\n') + 1}"
+      }
+    }
+    assert(hits.isEmpty, s"raw parquet reads: ${hits.mkString(", ")}")
   }
 }
