@@ -19,10 +19,18 @@
 # Then, for every measured entry, the median over the runs of its warm
 # median on each side, the change/parent ratio of those medians and the
 # number of pairs in which the change's warm median was lower.
-# The printed log directory keeps each run's result line and its
-# per-entry warm medians (`<side>-seed<N>.bench.json`, the input of
-# dev/bench_ratio.py). Nothing under perfbench/ is changed; the parent
-# copy is deleted at exit.
+# Last, one line per pair with the host record of each run: the 1-min
+# load average from /proc/loadavg before and after it, and the share of
+# all CPU ticks in /proc/stat that were iowait and steal while it ran,
+# beside the pair's change/parent ratio (geometric mean over the
+# measured entries of the change/parent warm-median ratio). A pair whose
+# ratio moves with the load or the steal share was measured on a busy
+# host, not on a changed engine.
+# The printed log directory keeps each run's result line, its per-entry
+# warm medians (`<side>-seed<N>.bench.json`, the input of
+# dev/bench_ratio.py) and its host record (`<side>-seed<N>.host`).
+# Nothing under perfbench/ is changed; the parent copy is deleted at
+# exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 REF="${1:?usage: dev/perf_ab.sh <parent-ref> <workload> <pairs> [first-seed]}"
@@ -37,10 +45,19 @@ trap 'rm -rf "$PARENT"' EXIT
 git archive "$REF" | tar -x -C "$PARENT"
 echo "== parent $(git rev-parse --short "$REF") in $PARENT; results in $LOG =="
 
+host() { # prints: load1 total_ticks iowait_ticks steal_ticks
+  local load1 _rest
+  read -r load1 _rest < /proc/loadavg
+  awk -v l="$load1" '/^cpu / {t = 0; for (i = 2; i <= 9; i++) t += $i
+    print l, t, $6, $9; exit}' /proc/stat
+}
+
 run() { # <side> <checkout> <seed>
-  local out="$LOG/$1-seed$3.json"
+  local out="$LOG/$1-seed$3.json" before
+  before="$(host)"
   (cd "$2" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$3" \
     --seconds "$SECONDS_PER_RUN" --trace 0) | tail -n 1 > "$out"
+  echo "$before $(host)" > "$LOG/$1-seed$3.host"
   cp "$2/perfbench/out/results/$WORKLOAD-seed$3-trace0.bench.json" "$LOG/$1-seed$3.bench.json"
   echo "$1 seed $3: $(cat "$out")"
 }
@@ -93,4 +110,18 @@ for e in names:
     won = sum(b < a for a, b in zip(p, c))
     ratio = f"{cm / pm:.3f}" if pm > 0 else "-"
     print(f"{e:<28}{pm:>10.4g}{cm:>10.4g}{ratio:>8}{won:>5}/{pairs}")
+def host(side, seed):
+    with open(f"{log}/{side}-seed{seed}.host") as f:
+        l0, t0, w0, s0, l1, t1, w1, s1 = map(float, f.read().split())
+    ticks = max(t1 - t0, 1.0)
+    return f"{l0:>7.2f}{l1:>8.2f}{100 * (w1 - w0) / ticks:>7.1f}{100 * (s1 - s0) / ticks:>7.1f}"
+cols = f"{'ld.pre':>7}{'ld.post':>8}{'iow%':>7}{'steal%':>7}"
+print(f"\n{'':<13}   {'parent':<29}   change")
+print(f"{'seed':<6}{'ratio':>7}   {cols}   {cols}")
+for i in range(pairs):
+    seed = seed0 + i
+    rs = [warm["change"][i][e] / warm["parent"][i][e] for e in names
+          if warm["parent"][i][e] > 0 and warm["change"][i][e] > 0]
+    ratio = statistics.geometric_mean(rs) if rs else float("nan")
+    print(f"{seed:<6}{ratio:>7.3f}   {host('parent', seed)}   {host('change', seed)}")
 EOF

@@ -282,13 +282,15 @@ object GraftOps {
   }
 
   /** The per-document MinHash signature frame (idCol, __features,
-    * __hashes) the LSH tier joins on — exposed so it can be PERSISTED
-    * once per corpus (round 18 — VERDICT r17 #4, the IVF/SimGraph
-    * index precedent applied to signatures): features and hashes are a
-    * pure per-doc function of the text (HashingTF is stateless;
-    * MinHashLSH's coefficients are drawn from `seed` alone, never from
-    * data), so a fingerprint-keyed parquet of this frame feeds
-    * [[minHashNearDupPairsFromSignatures]] bit-identically.
+    * __hashes) the LSH tier joins on. [[minHashNearDupPairs]] builds
+    * it, caches it once, and hands it to
+    * [[minHashNearDupPairsFromSignatures]], so the shingling, TF and
+    * MinHash transform run once ahead of the cache instead of once per
+    * join side. Features and hashes are a pure per-doc function of the
+    * text (HashingTF is stateless; MinHashLSH's coefficients are drawn
+    * from `seed` alone, never from data). Persisting this frame as a
+    * per-corpus parquet table was measured as a net loss and reverted
+    * (the round-18 note in `LlmQueries`; OPTIMIZATION_r18.md §4).
     */
   def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashTables: Int = 5,

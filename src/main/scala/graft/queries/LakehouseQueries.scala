@@ -182,9 +182,7 @@ object LakehouseQueries {
         // same existence rule as the insert units below (ADVICE r9): at
         // a degenerate SF an empty k%4 bucket writes NO directory, and
         // a manifest line for it would poison every snapshot read
-        val v0Units = (0 to 3).map(b => s"data/v0/bucket=$b")
-          .filter(u => java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, u)))
+        val v0Units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
         CommitLog.commit(dir, 0L, v0Units)
         base.filter(col("bucket") === 2)
           .select(col("k"), (col("p") * 2).cast(DecimalType(18, 2)).as("p"))
@@ -195,9 +193,7 @@ object LakehouseQueries {
           .write.partitionBy("bucket").parquet(s"$dir/data/v1ins")
         // an empty insert bucket writes no directory — reference only
         // the units that exist (manifests list real files, not hopes)
-        val insUnits = (0 to 3).map(b => s"data/v1ins/bucket=$b")
-          .filter(u => java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, u)))
+        val insUnits = CommitLog.partitionUnits(dir, "data/v1ins", "bucket")
         CommitLog.commit(dir, 1L,
           v0Units.filterNot(_.endsWith("bucket=2")) :+ "data/v1b2" :++ insUnits)
         CommitLog.commit(dir, 2L,
@@ -238,9 +234,7 @@ object LakehouseQueries {
             (col("o_orderkey") % 16).cast("int").as("b"))
         base.repartition(col("b"))
           .write.partitionBy("b").parquet(s"$dir/data/small")
-        val units0 = (0 to 15).map(b => s"data/small/b=$b")
-          .filter(u => java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, u)))
+        val units0 = CommitLog.partitionUnits(dir, "data/small", "b")
         CommitLog.commit(dir, 0L, units0)
         CommitLog.snapshot(s, dir, 0L).coalesce(1)
           .write.parquet(s"$dir/data/compact")
@@ -307,7 +301,7 @@ object LakehouseQueries {
     // nothing skips); commit publishes a per-unit (min,max,count)
     // sidecar. Three probes — one inside a single unit, one
     // straddling two, one over everything — each read through
-    // CommitLog.snapshotRange, which prunes units at PLANNING time
+    // CommitLog.snapshotRangeCol, which prunes units at PLANNING time
     // from the stats alone. Output: per probe, units actually
     // scanned + the probe's row count and exact total. Fully
     // oracled: DuckDB recomputes the unit ranges (k DIV width) and
@@ -328,8 +322,7 @@ object LakehouseQueries {
           .withColumn("bucket", expr(s"k DIV ${wd}L"))
         withB.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-        val units = withB.select("bucket").distinct().take(16)
-          .map(_.getLong(0)).sorted.map(b => s"data/v0/bucket=$b").toSeq
+        val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
         CommitLog.commit(dir, 0L, units)
         // round 10: stats are LIFTED FROM THE JUST-WRITTEN FOOTERS
         // (footerColStats — metadata-only I/O, the writer already paid
@@ -488,7 +481,7 @@ object LakehouseQueries {
     // maintenance and must read EMPTY — the retractions already
     // surfaced at v1, and re-emitting them would double-delete a
     // folding replica (both zero rows pinned by the oracle). The v0
-    // stats sidecar also makes v1's pre-image read stats-ROUTED: only
+    // cstats on k also make v1's pre-image read stats-ROUTED: only
     // range-intersecting units open (at this layout, all of them —
     // the routing is exercised, the pruning is LogStress's row).
     "dml_cdc_read_mor" -> ((s, d) => {
@@ -499,10 +492,8 @@ object LakehouseQueries {
         base.filter(col("k") % 2 === 0).coalesce(1)
           .write.parquet(s"$dir/u0")
         CommitLog.commit(dir, 0L, Seq("u0"))
-        val r = Parquet.read(s, s"$dir/u0")
-          .agg(min(col("k")), max(col("k")), count(lit(1))).head()
-        CommitLog.writeStats(dir, 0L,
-          Seq(("u0", r.getLong(0), r.getLong(1), r.getLong(2))), Some("k"))
+        CommitLog.writeColStats(dir, 0L,
+          CommitLog.footerColStats(s, dir, Seq("u0"), Seq("k")))
         CommitLog.upsertMoR(s, dir,
           base.filter(col("k") % 6 === 0)
             .select(col("k"), (col("p") * 3).cast(DecimalType(18, 2)).as("p"))
@@ -535,7 +526,8 @@ object LakehouseQueries {
     // makes merge routing selective); the merge re-prices two key
     // slices confined to units 2 and 5 (×3) and upserts a k%13 slice
     // shifted past every unit's range (pure inserts). Routing via the
-    // stats sidecar rewrites EXACTLY units 2+5 — ONE rewrite unit per
+    // k entries of the cstats sidecar (lifted from the v0 footers)
+    // rewrites EXACTLY units 2+5 — ONE rewrite unit per
     // touched unit, so each new range stays a subset of its source's
     // and the layout stays disjoint (non-adjacent touches must not
     // collapse into a span covering carried units, or the next merge's
@@ -557,15 +549,10 @@ object LakehouseQueries {
         val withB = base.withColumn("bucket", expr(s"k DIV ${wd}L"))
         withB.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-        val st = withB.groupBy("bucket")
-          .agg(min(col("k")).as("mn"), max(col("k")).as("mx"),
-            count(lit(1)).as("n"))
-          .take(16)
-          .map(r => (s"data/v0/bucket=${r.getLong(0)}",
-            r.getLong(1), r.getLong(2), r.getLong(3)))
-          .sortBy(_._1)
-        CommitLog.commit(dir, 0L, st.map(_._1).toSeq)
-        CommitLog.writeStats(dir, 0L, st.toSeq)
+        val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
+        CommitLog.commit(dir, 0L, units)
+        CommitLog.writeColStats(dir, 0L,
+          CommitLog.footerColStats(s, dir, units, Seq("k")))
         val updates = base
           .withColumn("bucket", expr(s"k DIV ${wd}L"))
           .filter((col("bucket") === 2 && col("k") % 2 === 0)
@@ -1031,8 +1018,7 @@ object LakehouseQueries {
         base.withColumn("bucket", expr(s"k DIV ${wd}L"))
           .repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-        val units = base.select(expr(s"k DIV ${wd}L").as("b")).distinct()
-          .take(16).map(_.getLong(0)).sorted.map(b => s"data/v0/bucket=$b").toSeq
+        val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
         CommitLog.commit(dir, 0L, units)
         // honest sizing: the real per-unit row count, 1% fpp
         CommitLog.writeBloomStats(s, dir, 0L, "uid", n / units.size + 1, 0.01)
@@ -1097,14 +1083,7 @@ object LakehouseQueries {
           z.withColumn("bucket", bucketOf).repartition(col("bucket"))
             .select("k", "xc", "yd", "bucket")
             .write.partitionBy("bucket").parquet(s"$dir/data/$sub")
-          val units = {
-            import scala.jdk.CollectionConverters._
-            val st = java.nio.file.Files.list(
-              java.nio.file.Paths.get(dir, "data", sub))
-            try st.iterator().asScala.map(p => s"data/$sub/${p.getFileName}")
-              .filter(_.contains("bucket=")).toVector.sorted
-            finally st.close()
-          }
+          val units = CommitLog.partitionUnits(dir, s"data/$sub", "bucket")
           CommitLog.commit(dir, version, units)
           CommitLog.writeColStats(dir, version,
             CommitLog.footerColStats(s, dir, units, Seq("xc", "yd")))
@@ -1162,9 +1141,7 @@ object LakehouseQueries {
             (col("o_orderkey") % 4).cast("int").as("bucket"))
         base.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-        val units = (0 to 3).map(b => s"data/v0/bucket=$b")
-          .filter(u => java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, u)))
+        val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
         CommitLog.commit(dir, 0L, units)
         // the delete: tombstone keys only — no data unit is opened
         base.filter(col("k") % 7 === 0).select(col("k"))
@@ -1211,9 +1188,7 @@ object LakehouseQueries {
             (col("o_orderkey") % 4).cast("int").as("bucket"))
         base.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-        val units = (0 to 3).map(b => s"data/v0/bucket=$b")
-          .filter(u => java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, u)))
+        val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
         CommitLog.commit(dir, 0L, units)
         // the table's logical schema is (k, p): partition-dir units
         // surface no partition column, so the post-image unit must not
@@ -1239,10 +1214,10 @@ object LakehouseQueries {
     // S22 (round 10): APPLY DELETES — the stats-ROUTED maintenance
     // step that turns a merge-on-read version back into a clean one
     // (the compaction writeDeletes' doc promises). The table is
-    // range-clustered (8 disjoint key-range units + stats sidecar);
+    // range-clustered (8 disjoint key-range units + cstats on k);
     // v1 MoR-deletes k%3==0 keys from buckets 2 and 5 only; v2 =
     // CommitLog.applyDeletes routes the tombstone keys through the
-    // stats sidecar and rewrites EXACTLY the two intersecting units —
+    // k ranges and rewrites EXACTLY the two intersecting units —
     // one clean unit per touched unit, each key range a subset of its
     // source's, so the stats layout stays disjoint and mergeable — the
     // other six carry by name, never opened, byte-stable (spec-pinned).
@@ -1261,23 +1236,18 @@ object LakehouseQueries {
         val withB = base.withColumn("bucket", expr(s"k DIV ${wd}L"))
         withB.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-        val st = withB.groupBy("bucket")
-          .agg(min(col("k")).as("mn"), max(col("k")).as("mx"),
-            count(lit(1)).as("n"))
-          .take(16)
-          .map(r => (s"data/v0/bucket=${r.getLong(0)}",
-            r.getLong(1), r.getLong(2), r.getLong(3)))
-          .sortBy(_._1)
-        CommitLog.commit(dir, 0L, st.map(_._1).toSeq)
-        CommitLog.writeStats(dir, 0L, st.toSeq)
+        val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
+        CommitLog.commit(dir, 0L, units)
+        val st = CommitLog.footerColStats(s, dir, units, Seq("k"))
+        CommitLog.writeColStats(dir, 0L, st)
         // the MoR delete: tombstone keys only, confined to two ranges
         withB.filter((col("bucket") === 2 || col("bucket") === 5)
             && col("k") % 3 === 0)
           .select("k").coalesce(1).write.parquet(s"$dir/data/dv1")
-        CommitLog.commit(dir, 1L, st.map(_._1).toSeq)
-        // the stats sidecar rides every version (the mergeCow carry
-        // discipline) — applyDeletes routes off it
-        CommitLog.writeStats(dir, 1L, st.toSeq)
+        CommitLog.commit(dir, 1L, units)
+        // the cstats sidecar rides every version (the mergeCow carry
+        // discipline) — applyDeletes routes off its k entries
+        CommitLog.writeColStats(dir, 1L, st)
         CommitLog.writeDeletes(dir, 1L, Seq("data/dv1"))
         CommitLog.applyDeletes(s, dir, "k")
       }
@@ -1308,9 +1278,7 @@ object LakehouseQueries {
             (col("o_orderkey") % 2).cast("int").as("bucket"))
         base.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-        val units = (0 to 1).map(b => s"data/v0/bucket=$b")
-          .filter(u => java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, u)))
+        val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
         CommitLog.commit(dir, 0L, units)
         CommitLog.commit(dir, 1L, units.filterNot(_.endsWith("bucket=1")))
         // RESTORE TO VERSION 0: republish v0's manifest as v2
@@ -1686,7 +1654,7 @@ object LakehouseQueries {
     // the output walks all three versions MoR-applied AFTER the
     // purge. Clean units are carried byte-verbatim (spec-pinned);
     // dirty ones are rewritten to purged twins exactly once however
-    // many versions reference them; per-version stats sidecars are
+    // many versions reference them; per-version cstats entries are
     // re-derived from the twins' footers; manifests/sidecars swap
     // atomically. Cost: ONE scan of the distinct historical units +
     // O(dirty) rewrites + O(versions) metadata swaps — never
@@ -1873,8 +1841,7 @@ object LakehouseQueries {
           .withColumn("bucket", expr(s"k DIV ${wd2}L"))
         g0.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/g0")
-        val u0 = g0.select("bucket").distinct().take(4)
-          .map(_.getLong(0)).sorted.map(b => s"data/g0/bucket=$b").toSeq
+        val u0 = CommitLog.partitionUnits(dir, "data/g0", "bucket")
         CommitLog.commit(dir, 0L, u0)
         CommitLog.writeColStats(dir, 0L,
           CommitLog.footerColStats(s, dir, u0, Seq("k")))
@@ -1883,8 +1850,7 @@ object LakehouseQueries {
           .withColumn("bucket", expr(s"k DIV ${wd8}L"))
         g1.repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/g1")
-        val u1 = g1.select("bucket").distinct().take(16)
-          .map(_.getLong(0)).sorted.map(b => s"data/g1/bucket=$b").toSeq
+        val u1 = CommitLog.partitionUnits(dir, "data/g1", "bucket")
         CommitLog.commit(dir, 1L, u0 ++ u1)
         // stats carry for the old units, delta-derived for the new —
         // one footer pass over u0 ++ u1 keeps the example simple
@@ -2002,9 +1968,7 @@ object LakehouseQueries {
           (col("o_orderkey") % 4).cast("int").as("bucket"))
       base.repartition(col("bucket"))
         .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-      val v0Units = (0 to 3).map(b => s"data/v0/bucket=$b")
-        .filter(u => java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(dir, u)))
+      val v0Units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
       CommitLog.commit(dir, 0L, v0Units)
       base.filter(col("bucket") === 2)
         .select(col("k"), (col("p") * 2).cast(DecimalType(18, 2)).as("p"))
@@ -2442,9 +2406,7 @@ object LakehouseQueries {
           (col("o_orderkey") % 4).cast("int").as("bucket"))
       base.repartition(col("bucket"))
         .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-      val v0Units = (0 to 3).map(b => s"data/v0/bucket=$b")
-        .filter(u => java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(dir, u)))
+      val v0Units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
       CommitLog.commit(dir, 0L, v0Units)
       base.filter(col("bucket") === 3)
         .select(col("k"), (col("g") + 20).cast("bigint").as("g"))

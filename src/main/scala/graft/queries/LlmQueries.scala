@@ -40,8 +40,13 @@ object LlmQueries {
       cent: org.apache.spark.sql.DataFrame): String = {
     import graft.sources.CommitLog
     graft.Derived.dir("ivflog", d, "embeddings") { dir =>
+      // each bucket unit's cstats entry on bval is its bucket id
+      // (min = max, bucket-homogeneous by layout), read from the footers
+      def bucketStats(sub: String): Seq[CommitLog.ColStat] =
+        CommitLog.footerColStats(s, dir,
+          CommitLog.partitionUnits(dir, sub, "bucket"), Seq("bval"))
       def appendUnits(part: org.apache.spark.sql.DataFrame,
-          sub: String): Seq[(String, Long, Long, Long)] = {
+          sub: String): Seq[CommitLog.ColStat] = {
         GraftOps.ivfAssign(part, "vec_id", "embedding", cent)
           // bval duplicates the partition column INTO the files: a
           // manifest-pruned read lists bucket dirs directly (no
@@ -49,34 +54,21 @@ object LlmQueries {
           // survive inside the data
           .withColumn("bval", col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/data/$sub")
-        import scala.jdk.CollectionConverters._
-        val stream = java.nio.file.Files.list(
-          java.nio.file.Paths.get(dir, "data", sub))
-        val dirs =
-          try stream.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("bucket="))
-            .map(p => s"data/$sub/${p.getFileName}").toVector.sorted
-          finally stream.close()
-        val counts = CommitLog.footerColStats(s, dir, dirs, Seq("c_id"))
-          .map(cs => cs.unit -> cs.count).toMap
-        dirs.map { u =>
-          val b = u.substring(u.indexOf("bucket=") + 7).toLong
-          (u, b, b, counts(u))
-        }
+        bucketStats(s"data/$sub")
       }
       val st0 = appendUnits(emb.filter(col("vec_id") % 10 =!= 0), "base")
-      CommitLog.commit(dir, 0L, st0.map(_._1))
-      CommitLog.writeStats(dir, 0L, st0)
+      CommitLog.commit(dir, 0L, st0.map(_.unit))
+      CommitLog.writeColStats(dir, 0L, st0)
       // the version boundary: ONLY the delta batch is assigned and
       // written — O(delta) index growth
       val st1 = appendUnits(emb.filter(col("vec_id") % 10 === 0), "delta")
-      CommitLog.commit(dir, 1L, st0.map(_._1) ++ st1.map(_._1))
-      CommitLog.writeStats(dir, 1L, st0 ++ st1)
+      CommitLog.commit(dir, 1L, st0.map(_.unit) ++ st1.map(_.unit))
+      CommitLog.writeColStats(dir, 1L, st0 ++ st1)
       // v2: the deletion — one tombstone unit, bucket units untouched
       emb.filter(col("vec_id") % 9 === 0 && col("vec_id") >= 10)
         .select("vec_id").coalesce(1).write.parquet(s"$dir/data/dv")
-      CommitLog.commit(dir, 2L, st0.map(_._1) ++ st1.map(_._1))
-      CommitLog.writeStats(dir, 2L, st0 ++ st1)
+      CommitLog.commit(dir, 2L, st0.map(_.unit) ++ st1.map(_.unit))
+      CommitLog.writeColStats(dir, 2L, st0 ++ st1)
       CommitLog.writeDeletes(dir, 2L, Seq("data/dv"))
       // v3 (round 12): COMPACT — the missing end of the IVF lifecycle
       // (grow -> delete -> compact; VERDICT r11 #3), the vector twin
@@ -93,40 +85,36 @@ object LlmQueries {
       def abs(rel: String) = java.nio.file.Paths.get(dir, rel).toString
       val tomb = Parquet.read(s, abs("data/dv"))
         .select(col("vec_id").as("c_id")).distinct()
-      val dirtyIds = Parquet.read(s, bucketSt.map(u => abs(u._1)))
+      val dirtyIds = Parquet.read(s, bucketSt.map(u => abs(u.unit)))
         .join(broadcast(tomb), "c_id")
         .select(col("bval").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet // metadata-sized: <= nlist dirty bucket ids
-      val (dirtySt, cleanSt) = bucketSt.partition(u => dirtyIds(u._2))
+      val (dirtySt, cleanSt) = bucketSt.partition(u => dirtyIds(u.min.toLong))
       // No dirty bucket (a tombstone set that touched nothing — e.g. a
       // dv of already-absent ids) means there is nothing to rewrite:
       // v3 carries v2's units verbatim with the dv retired (ADVICE
       // r12 — the unguarded zero-path read threw here).
       val cpctSt = if (dirtySt.isEmpty) bucketSt else {
-        Parquet.read(s, dirtySt.map(u => abs(u._1)))
+        Parquet.read(s, dirtySt.map(u => abs(u.unit)))
           .join(broadcast(tomb), Seq("c_id"), "left_anti")
           .withColumn("bucket", col("bval"))
           .write.partitionBy("bucket").parquet(s"$dir/data/cpct")
-        val cpctDirs = {
-          import scala.jdk.CollectionConverters._
-          val stream = java.nio.file.Files.list(
-            java.nio.file.Paths.get(dir, "data", "cpct"))
-          try stream.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("bucket="))
-            .map(p => s"data/cpct/${p.getFileName}").toVector.sorted
-          finally stream.close()
-        }
-        val cpctCounts = CommitLog.footerColStats(s, dir, cpctDirs, Seq("c_id"))
-          .map(cs => cs.unit -> cs.count).toMap
-        cpctDirs.map { u =>
-          val b = u.substring(u.indexOf("bucket=") + 7).toLong
-          (u, b, b, cpctCounts(u))
-        } ++ cleanSt
+        bucketStats("data/cpct") ++ cleanSt
       }
-      CommitLog.commit(dir, 3L, cpctSt.map(_._1))
-      CommitLog.writeStats(dir, 3L, cpctSt)
+      CommitLog.commit(dir, 3L, cpctSt.map(_.unit))
+      CommitLog.writeColStats(dir, 3L, cpctSt)
     }
   }
+
+  /** The absolute paths of the IVF log's bucket units at `version`
+    * whose bucket id (the unit's bval range) is one of `wanted` — the
+    * manifest-level prune, no footer opened.
+    */
+  private def ivfBuckets(root: String, version: Long,
+      wanted: Set[Long]): Seq[String] =
+    graft.sources.CommitLog.keyRanges(root, version, "bval")
+      .filter { case (_, mn, mx, _) => wanted.exists(b => mn <= b && mx >= b) }
+      .map(u => java.nio.file.Paths.get(root, u._1).toString)
 
   /** The persisted IVF index for `sfDir`'s embeddings: built on first
     * use per (sfDir, embeddings fingerprint) in this JVM, every later
@@ -561,8 +549,8 @@ object LlmQueries {
     // FROZEN coarse quantizer (standard IVF practice: centroids move
     // on retrain, not on insert), so the index-build cost of a version
     // tracks the delta, not the corpus (SCALE.md row). The probe prunes
-    // at the MANIFEST layer: each unit's stats entry is its bucket id
-    // (min=max — bucket-homogeneous by layout), so the nprobe wanted
+    // at the MANIFEST layer: each unit's cstats entry on bval is its
+    // bucket id (min=max — bucket-homogeneous by layout), so the nprobe wanted
     // buckets select matching units from BOTH the base and delta
     // generations before any footer is opened; ranking reuses
     // sim_ivf's exact contract (6-dp cosine, id tie-break). Exempt
@@ -573,7 +561,6 @@ object LlmQueries {
     // assignment against frozen centroids is pointwise.
     "sim_ivf_delta" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      import graft.sources.CommitLog
       val emb = load(s, d, "embeddings")
       val cent = centFor(s, d) // persisted quantizer — see centFor (r18)
       val root = ivfLogTable(s, d, emb, cent)
@@ -583,9 +570,7 @@ object LlmQueries {
         .collect().map(_.getLong(0)).toSet // metadata-sized: <= probes x nprobe ids
       // probed at v1, the grown-by-delta generation; v2 (the deletion)
       // is sim_ivf_delete's — index time travel, the postings twin
-      val picked = CommitLog.stats(root, 1L)
-        .filter { case (_, mn, mx, _) => wanted.exists(b => mn <= b && mx >= b) }
-        .map(u => java.nio.file.Paths.get(root, u._1).toString)
+      val picked = ivfBuckets(root, 1L, wanted)
       val bucketed = Parquet.read(s, picked)
         .withColumnRenamed("bval", "bucket")
       GraftOps.ivfRank(probes, bucketed, 5).orderBy("q_id", "rn")
@@ -613,9 +598,7 @@ object LlmQueries {
         "vec_id", "embedding", cent, nprobe = 3)
       val wanted = probes.select(col("bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet // metadata-sized: <= probes x nprobe ids
-      val picked = CommitLog.stats(root, 2L)
-        .filter { case (_, mn, mx, _) => wanted.exists(b => mn <= b && mx >= b) }
-        .map(u => java.nio.file.Paths.get(root, u._1).toString)
+      val picked = ivfBuckets(root, 2L, wanted)
       val dead = Parquet.read(s, CommitLog.deletes(root, 2L))
         .select(col("vec_id").as("c_id")).distinct()
       val bucketed = Parquet.read(s, picked)
@@ -646,9 +629,7 @@ object LlmQueries {
         "vec_id", "embedding", cent, nprobe = 3)
       val wanted = probes.select(col("bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet // metadata-sized: <= probes x nprobe ids
-      val picked = CommitLog.stats(root, 3L)
-        .filter { case (_, mn, mx, _) => wanted.exists(b => mn <= b && mx >= b) }
-        .map(u => java.nio.file.Paths.get(root, u._1).toString)
+      val picked = ivfBuckets(root, 3L, wanted)
       require(CommitLog.deletes(root, 3L).isEmpty,
         "compacted IVF generation must carry no tombstones")
       val bucketed = Parquet.read(s, picked)

@@ -123,8 +123,14 @@ object RetrievalQueries {
     import graft.sources.CommitLog
     locally {
       val docsAll = load(s, d, "documents").filter(col("text").isNotNull)
+      // each bucket unit's cstats entry on bval is its bucket id (the
+      // footers of a bucket-homogeneous unit); meta units carry no
+      // bval and get no entry — that absence is what marks them
+      def bucketStats(sub: String): Seq[CommitLog.ColStat] =
+        CommitLog.footerColStats(s, dir,
+          CommitLog.partitionUnits(dir, sub, "bucket"), Seq("bval"))
       def ingest(part: org.apache.spark.sql.DataFrame,
-          sub: String): Seq[(String, Long, Long, Long)] = {
+          sub: String): Seq[CommitLog.ColStat] = {
         part.select(col("doc_id"),
             expr("CAST(size(split(text, ' ')) AS BIGINT)").as("dl"),
             posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -150,29 +156,18 @@ object RetrievalQueries {
             sum(expr("CAST(size(split(text, ' ')) AS BIGINT)"))
               .cast("bigint").as("sum_dl"))
           .coalesce(1).write.parquet(s"$dir/data/${sub}_meta")
-        import scala.jdk.CollectionConverters._
-        val stream = java.nio.file.Files.list(
-          java.nio.file.Paths.get(dir, "data", sub))
-        val dirs =
-          try stream.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("bucket="))
-            .map(p => s"data/$sub/${p.getFileName}").toVector.sorted
-          finally stream.close()
-        val counts = CommitLog.footerColStats(s, dir, dirs, Seq("doc_id"))
-          .map(cs => cs.unit -> cs.count).toMap
-        dirs.map { u =>
-          val b = u.substring(u.indexOf("bucket=") + 7).toLong
-          (u, b, b, counts(u))
-        } :+ ((s"data/${sub}_meta", -1L, -1L, 1L))
+        bucketStats(s"data/$sub")
       }
       val st0 = ingest(docsAll.filter(col("doc_id") % 10 =!= 0), "base")
-      CommitLog.commit(dir, 0L, st0.map(_._1))
-      CommitLog.writeStats(dir, 0L, st0)
+      val u0 = st0.map(_.unit) :+ "data/base_meta"
+      CommitLog.commit(dir, 0L, u0)
+      CommitLog.writeColStats(dir, 0L, st0)
       // the version boundary: ONLY the delta batch is tokenized and
       // written — O(delta) index growth, v0 units byte-untouched
       val st1 = ingest(docsAll.filter(col("doc_id") % 10 === 0), "delta")
-      CommitLog.commit(dir, 1L, st0.map(_._1) ++ st1.map(_._1))
-      CommitLog.writeStats(dir, 1L, st0 ++ st1)
+      val u1 = u0 ++ st1.map(_.unit) :+ "data/delta_meta"
+      CommitLog.commit(dir, 1L, u1)
+      CommitLog.writeColStats(dir, 1L, st0 ++ st1)
       // v2: DELETE the doc_id%7 slice — a tombstone unit (dv channel)
       // + a signed meta unit; every bucket unit carries by name
       val dead = docsAll.filter(col("doc_id") % 7 === 0)
@@ -181,10 +176,8 @@ object RetrievalQueries {
           (sum(expr("CAST(size(split(text, ' ')) AS BIGINT)")) * lit(-1L))
             .cast("bigint").as("sum_dl"))
         .coalesce(1).write.parquet(s"$dir/data/del1_meta")
-      val metaSt = Seq(("data/del1_meta", -1L, -1L, 1L))
-      CommitLog.commit(dir, 2L,
-        st0.map(_._1) ++ st1.map(_._1) ++ metaSt.map(_._1))
-      CommitLog.writeStats(dir, 2L, st0 ++ st1 ++ metaSt)
+      CommitLog.commit(dir, 2L, u1 :+ "data/del1_meta")
+      CommitLog.writeColStats(dir, 2L, st0 ++ st1)
       CommitLog.writeDeletes(dir, 2L, Seq("data/del1"))
       // v3: COMPACT the index — the maintenance op that folds the
       // tombstones INTO the dirty buckets and collapses the signed
@@ -196,15 +189,15 @@ object RetrievalQueries {
       // one unit — compaction is the generational merge. v3 publishes
       // clean-carried + rewritten buckets + ONE meta unit and NO dv
       // sidecar; probe equality with v2 is the compaction contract.
-      val bucketSt = (st0 ++ st1).filter(_._2 >= 0)
+      val bucketSt = st0 ++ st1
       def abs(rel: String) = java.nio.file.Paths.get(dir, rel).toString
       val tomb = Parquet.read(s, abs("data/del1")).select("doc_id").distinct()
-      val dirtyIds = Parquet.read(s, bucketSt.map(u => abs(u._1)))
+      val dirtyIds = Parquet.read(s, bucketSt.map(u => abs(u.unit)))
         .join(broadcast(tomb), "doc_id")
         .select("bval").distinct()
         .collect().map(_.getLong(0)).toSet // metadata-sized: <= 8 dirty bucket ids
-      val (dirtySt, cleanSt) = bucketSt.partition(u => dirtyIds(u._2))
-      Parquet.read(s, dirtySt.map(u => abs(u._1)))
+      val (dirtySt, cleanSt) = bucketSt.partition(u => dirtyIds(u.min.toLong))
+      Parquet.read(s, dirtySt.map(u => abs(u.unit)))
         .join(broadcast(tomb), Seq("doc_id"), "left_anti")
         .withColumn("bucket", col("bval"))
         .write.partitionBy("bucket").parquet(s"$dir/data/cpct")
@@ -213,24 +206,25 @@ object RetrievalQueries {
         .agg(sum(col("n_docs")).cast("bigint").as("n_docs"),
           sum(col("sum_dl")).cast("bigint").as("sum_dl"))
         .coalesce(1).write.parquet(s"$dir/data/cmeta")
-      val cpctStream = java.nio.file.Files.list(
-        java.nio.file.Paths.get(dir, "data", "cpct"))
-      val cpctDirs =
-        try {
-          import scala.jdk.CollectionConverters._
-          cpctStream.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("bucket="))
-            .map(p => s"data/cpct/${p.getFileName}").toVector.sorted
-        } finally cpctStream.close()
-      val cpctCounts = CommitLog.footerColStats(s, dir, cpctDirs, Seq("doc_id"))
-        .map(cs => cs.unit -> cs.count).toMap
-      val cpctSt = cpctDirs.map { u =>
-        val b = u.substring(u.indexOf("bucket=") + 7).toLong
-        (u, b, b, cpctCounts(u))
-      } ++ cleanSt :+ (("data/cmeta", -1L, -1L, 1L))
-      CommitLog.commit(dir, 3L, cpctSt.map(_._1))
-      CommitLog.writeStats(dir, 3L, cpctSt)
+      val cpctSt = bucketStats("data/cpct") ++ cleanSt
+      CommitLog.commit(dir, 3L, cpctSt.map(_.unit) :+ "data/cmeta")
+      CommitLog.writeColStats(dir, 3L, cpctSt)
     }
+  }
+
+  /** The postings index at `version` as (bucket units whose bucket id
+    * is in `wanted`, meta units), absolute paths in manifest order. A
+    * bucket unit is one with a cstats entry on bval, whose range is its
+    * bucket id; the meta units are the rest.
+    */
+  private def indexUnits(root: String, version: Long,
+      wanted: Set[Long]): (Seq[String], Seq[String]) = {
+    import graft.sources.CommitLog
+    val buckets = CommitLog.keyRanges(root, version, "bval")
+    val bucketUnits = buckets.map(_._1).toSet
+    def abs(u: String) = java.nio.file.Paths.get(root, u).toString
+    (buckets.filter(u => wanted(u._2)).map(u => abs(u._1)),
+      CommitLog.unitNames(root, version).filterNot(bucketUnits).map(abs))
   }
 
   /** Score the fixed query against the index AT `version`: manifest-
@@ -248,12 +242,7 @@ object RetrievalQueries {
       .selectExpr("pmod(xxhash64(value), 8) AS bucket")
       .distinct().collect().map(_.getLong(0)) // metadata-sized: <= 5 query-term bucket ids
       .toSet
-    val st = CommitLog.stats(root, version)
-    val picked = st
-      .filter { case (_, mn, _, _) => mn >= 0 && wanted(mn) }
-      .map(u => java.nio.file.Paths.get(root, u._1).toString)
-    val metas = st.filter(_._2 == -1L)
-      .map(u => java.nio.file.Paths.get(root, u._1).toString)
+    val (picked, metas) = indexUnits(root, version, wanted)
     val corpus = Parquet.read(s, metas)
       .agg(sum(col("n_docs")).cast("bigint").as("n"),
         (sum(col("sum_dl")).cast("double") /
@@ -299,12 +288,7 @@ object RetrievalQueries {
       .selectExpr("pmod(xxhash64(value), 8) AS bucket")
       .distinct().collect().map(_.getLong(0)) // metadata-sized: <= |terms| bucket ids
       .toSet
-    val st = CommitLog.stats(root, version)
-    val picked = st
-      .filter { case (_, mn, _, _) => mn >= 0 && wanted(mn) }
-      .map(u => java.nio.file.Paths.get(root, u._1).toString)
-    val metas = st.filter(_._2 == -1L)
-      .map(u => java.nio.file.Paths.get(root, u._1).toString)
+    val (picked, metas) = indexUnits(root, version, wanted)
     // ADVICE r13: a parquet read of zero paths throws UNABLE_TO_
     // _INFER_SCHEMA — no bucket unit for any query term (or no meta
     // yet) means the phrase answer is simply empty
@@ -478,11 +462,11 @@ object RetrievalQueries {
     // travel for free. Oracle: the shared bm25 SQL body over the
     // corpus minus the deleted slice — the index must score the
     // remaining docs EXACTLY as a from-scratch scan of the remaining
-    // corpus would, idf shift and all. (The stats sidecar of an index
-    // table carries BUCKET ids, not key ranges — row-DML maintenance
-    // ops like applyDeletes don't apply here; reclaiming tombstoned
-    // postings physically is an index rebuild, which the delta-ingest
-    // path makes cheap per generation.)
+    // corpus would, idf shift and all. (The index's cstats describe
+    // bval, its BUCKET ids, not doc_id ranges — applyDeletes would
+    // find no key range to route by and collapse every bucket into
+    // one unit; reclaiming tombstoned postings physically is the v3
+    // bucket-preserving compaction below.)
     "text_bm25_postings_delete" -> ((s, d) =>
       bm25FromIndex(s, postingsIndex(s, d), 2L)),
 
@@ -505,10 +489,11 @@ object RetrievalQueries {
     // physically erased from EVERY version of its own index build:
     // the purge routes the term-hash bucket units (their per-term
     // rows are keyed by doc_id), scrubs the v2 tombstone unit, and —
-    // the index-aware part — CARRIES the stats sidecar's bucket ids
-    // verbatim for rewritten twins (no #key= header means the mn/mx
-    // are NOT key ranges; re-deriving doc_id ranges there would
-    // corrupt probe routing), re-measuring only counts. The keyless
+    // the index-aware part — re-derives each rewritten twin's cstats
+    // entry on bval from its footers: the twin keeps its bucket id
+    // (the unit is bucket-homogeneous) with the count re-measured, and
+    // no doc_id range is ever published there, so nothing routes a
+    // doc key through a bucket id. The keyless
     // 1-row meta units read doc_id as NULL under the purge's
     // BIGINT-requested key-only scan schema, so they are never dirty: N and avgdl still count the
     // erased docs (data-plane erasure does not rewrite historical

@@ -23,6 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    torn-manifest state, and concurrent writers racing for the same
   *    version number are serialized by the filesystem: exactly one
   *    wins, the rest observe the conflict ([[tryCommit]]).
+  *  - Per-unit min/max/count statistics live in ONE sidecar,
+  *    `_log/vNNNNN.cstats.txt`, lifted from the parquet footers
+  *    ([[footerColStats]]). Every entry names its column, so a
+  *    consumer that routes row keys through unit ranges reads the key
+  *    column's entries by name ([[keyRanges]]) and stats kept on any
+  *    other column can never route a key.
   *
   * Scale: the manifest is O(units) text; [[snapshot]] hands Spark the
   * unit paths directly, so the read is an ordinary multi-path parquet
@@ -37,8 +43,51 @@ object CommitLog {
   private def logDir(table: String): java.nio.file.Path =
     java.nio.file.Paths.get(table, "_log")
 
+  /** `version`'s file in `_log` with `suffix`: `txt` is the manifest,
+    * the sidecars are `cstats.txt`, `bloom.txt`, `dv.txt`, `seq.txt`,
+    * `colmap.txt` and `ts.txt` ([[Sidecars]]).
+    */
+  private def logFile(table: String, version: Long,
+      suffix: String): java.nio.file.Path =
+    logDir(table).resolve(f"v$version%05d.$suffix")
+
   private def manifest(table: String, version: Long): java.nio.file.Path =
-    logDir(table).resolve(f"v$version%05d.txt")
+    logFile(table, version, "txt")
+
+  /** Every per-version sidecar suffix — what [[vacuum]] reclaims with
+    * an expired version's manifest.
+    */
+  private val Sidecars =
+    Seq("cstats.txt", "bloom.txt", "dv.txt", "seq.txt", "colmap.txt", "ts.txt")
+
+  /** The non-empty lines of `f`; None when `f` does not exist. */
+  private def lines(f: java.nio.file.Path): Option[Seq[String]] =
+    if (!java.nio.file.Files.isRegularFile(f)) None
+    else Some(java.nio.file.Files.readAllLines(f)
+      .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty))
+
+  /** Atomic create-if-absent: write `content` to a tmp file beside
+    * `target`, then hard-link it into place. link(2) is atomic and
+    * fails with EEXIST when `target` exists — rename(2)/ATOMIC_MOVE
+    * would silently REPLACE it on POSIX, losing the first writer's
+    * file. Readers never observe a torn file; a crashed writer leaves
+    * only a dot-prefixed `.tmp`, which no reader lists. False when
+    * `target` already existed.
+    */
+  private def linkNew(target: java.nio.file.Path, content: String): Boolean = {
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    java.nio.file.Files.writeString(tmp, content)
+    try { java.nio.file.Files.createLink(target, tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally java.nio.file.Files.deleteIfExists(tmp)
+  }
+
+  private def enc(s: String): String =
+    java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
+
+  private def dec(s: String): String =
+    java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
 
   /** Publish `version` as the snapshot made of `units` (paths relative
     * to the table root). Atomic: readers either see the complete
@@ -75,23 +124,8 @@ object CommitLog {
         s"illegal unit name ${u.replace("\n", "\\n").replace("\r", "\\r")} — " +
           "unit paths must be non-empty and free of newlines and '|'")
     }
-    val dir = logDir(table)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolve(f".v$version%05d.txt.${java.util.UUID.randomUUID}.tmp")
-    java.nio.file.Files.writeString(tmp, units.mkString("", "\n", "\n"))
-    try {
-      // hard-link publish: link(2) is atomic and fails with EEXIST if
-      // the manifest already exists — rename(2)/ATOMIC_MOVE would
-      // silently REPLACE it on POSIX, losing the winner's commit. The
-      // link target is the fully-written tmp file, so readers can
-      // never observe a torn manifest.
-      java.nio.file.Files.createLink(manifest(table, version), tmp)
-      java.nio.file.Files.deleteIfExists(tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp); false
-    }
+    java.nio.file.Files.createDirectories(logDir(table))
+    linkNew(manifest(table, version), units.mkString("", "\n", "\n"))
   }
 
   /** SCHEMA-ENFORCED commit: like [[commit]], but the units the new
@@ -145,9 +179,9 @@ object CommitLog {
     if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
     else {
       import scala.jdk.CollectionConverters._
-      // strict vNNNNN.txt match: the stats sidecar (vNNNNN.stats.txt)
+      // strict vNNNNN.txt match: every sidecar (vNNNNN.cstats.txt …)
       // also starts with "v" and ends ".txt" — a loose prefix/suffix
-      // test would throw parsing "00000.stats" as a version number
+      // test would throw parsing "00000.cstats" as a version number
       val m = java.util.regex.Pattern.compile("^v(\\d+)\\.txt$")
       // close the listing stream (ADVICE r9): Files.list holds a
       // directory fd until closed; versions() runs several times per
@@ -229,9 +263,7 @@ object CommitLog {
   def snapshotWithStats(spark: SparkSession, table: String,
       version: Long): DataFrame = {
     val df = snapshot(spark, table, version)
-    if (!java.nio.file.Files.isRegularFile(
-        logDir(table).resolve(f"v$version%05d.cstats.txt"))) return df
-    val cs = colStats(table, version)
+    val cs = colStatsOpt(table, version).getOrElse(Seq.empty)
     if (cs.isEmpty) return df
     // row-count authority = MAX over per-column count sums (ADVICE
     // r15): schema-on-read evolution can add a column mid-history, so
@@ -313,71 +345,14 @@ object CommitLog {
       content: String): Unit = {
     require(java.nio.file.Files.isRegularFile(manifest(table, version)),
       s"cannot publish $suffix stats for unpublished version $version of $table")
-    val dir = logDir(table)
-    val tmp = dir.resolve(
-      f".v$version%05d.$suffix.${java.util.UUID.randomUUID}.tmp")
-    java.nio.file.Files.writeString(tmp, content)
-    try java.nio.file.Files.createLink(
-      dir.resolve(f"v$version%05d.$suffix"), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"$suffix stats for $table v$version already published — " +
-            "sidecars are immutable once linked")
-    }
-    java.nio.file.Files.deleteIfExists(tmp)
+    if (!linkNew(logFile(table, version, suffix), content))
+      throw new IllegalStateException(
+        s"$suffix stats for $table v$version already published — " +
+          "sidecars are immutable once linked")
   }
 
-  /** Publish per-unit statistics of a BIGINT column for `version` —
-    * the manifest-level min/max/count stats the lakehouse formats use
-    * for data skipping. One `unit|min|max|count` line per unit,
-    * sidecar to the manifest (same atomic hard-link publish).
-    * `keyCol`, when given, is recorded as a `#key=` header naming the
-    * COLUMN the ranges describe — the soundness marker for consumers
-    * that route ROW KEYS through these ranges ([[changes]]' routed
-    * pre-image read): an index table whose "ranges" are bucket ids
-    * writes no header and such consumers fall back to the unrouted
-    * (always-sound) path instead of silently mis-pruning.
-    */
-  def writeStats(table: String, version: Long,
-      stats: Seq[(String, Long, Long, Long)],
-      keyCol: Option[String] = None): Unit = {
-    val header = keyCol.map(c => "#key=" + java.net.URLEncoder.encode(
-      c, java.nio.charset.StandardCharsets.UTF_8) + "\n").getOrElse("")
-    publishSidecar(table, version, "stats.txt",
-      header + stats.map { case (u, mn, mx, n) => s"$u|$mn|$mx|$n" }
-        .mkString("", "\n", "\n"))
-  }
-
-  /** The per-unit stats of `version` (unit, min, max, count). */
-  def stats(table: String, version: Long): Seq[(String, Long, Long, Long)] = {
-    val f = logDir(table).resolve(f"v$version%05d.stats.txt")
-    require(java.nio.file.Files.isRegularFile(f),
-      s"$table has no stats for version $version")
-    java.nio.file.Files.readAllLines(f).toArray(Array.empty[String]).toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
-        val Array(u, mn, mx, n) = l.split('|')
-        (u, mn.toLong, mx.toLong, n.toLong)
-      }
-  }
-
-  /** The column `version`'s stats ranges describe, when the writer
-    * recorded it (the `#key=` header) — None on older or index-table
-    * sidecars, which key-routing consumers must treat as "ranges are
-    * NOT key ranges".
-    */
-  def statsKey(table: String, version: Long): Option[String] = {
-    val f = logDir(table).resolve(f"v$version%05d.stats.txt")
-    if (!java.nio.file.Files.isRegularFile(f)) None
-    else java.nio.file.Files.readAllLines(f)
-      .toArray(Array.empty[String]).toSeq
-      .find(_.startsWith("#key=")).map(l => java.net.URLDecoder.decode(
-        l.stripPrefix("#key="), java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  /** CRASH RECOVERY for the stats layer: derive and publish the
-    * `stats.txt` sidecar of an already-published `version` from its
+  /** CRASH RECOVERY for the stats layer: derive and publish the cstats
+    * sidecar of an already-published `version` on `keyCol` from its
     * units' PARQUET FOOTERS — no caller-remembered stats needed, no
     * data pages read. This closes the mergeCow/applyDeletes crash
     * window (tryCommit succeeded, the post-commit sidecar publish did
@@ -390,15 +365,9 @@ object CommitLog {
     * recover).
     */
   def rebuildStats(spark: SparkSession, table: String, version: Long,
-      keyCol: String): Unit = {
-    val cs = footerColStats(spark, table, unitsRel(table, version), Seq(keyCol))
-    cs.foreach(s => require(s.kind == "long",
-      s"stats sidecar requires a BIGINT key column; $keyCol in ${s.unit} " +
-        s"is ${s.kind}"))
-    writeStats(table, version,
-      cs.map(s => (s.unit, s.min.toLong, s.max.toLong, s.count)),
-      Some(keyCol))
-  }
+      keyCol: String): Unit =
+    writeColStats(table, version,
+      footerColStats(spark, table, unitsRel(table, version), Seq(keyCol)))
 
   /** One column's per-unit statistics: `kind` is `long`, `double` or
     * `string`; min/max are string-rendered (lexicographic compare is
@@ -407,6 +376,14 @@ object CommitLog {
     */
   final case class ColStat(unit: String, col: String, kind: String,
       min: String, max: String, count: Long)
+
+  /** `a < b` in a stats `kind`'s order: lexicographic for `string`,
+    * numeric for `long` and `double`.
+    */
+  private def kindLt(kind: String, a: String, b: String): Boolean =
+    if (kind == "string") a < b
+    else if (kind == "long") a.toLong < b.toLong
+    else a.toDouble < b.toDouble
 
   /** Derive per-unit multi-column stats from the units' PARQUET
     * FOOTERS — no data pages are read. This is how a format's commit
@@ -492,12 +469,9 @@ object CommitLog {
                 case None => Some((kind, mn, mx, cc.getValueCount))
                 case Some((k, omn, omx, n)) =>
                   require(k == kind, s"mixed physical types for $name")
-                  def lt(a: String, b: String): Boolean =
-                    if (kind == "string") a < b
-                    else if (kind == "long") a.toLong < b.toLong
-                    else a.toDouble < b.toDouble
-                  Some((k, if (lt(mn, omn)) mn else omn,
-                    if (lt(omx, mx)) mx else omx, n + cc.getValueCount))
+                  Some((k, if (kindLt(kind, mn, omn)) mn else omn,
+                    if (kindLt(kind, omx, mx)) mx else omx,
+                    n + cc.getValueCount))
               }
             }
           }
@@ -560,11 +534,8 @@ object CommitLog {
       throw new IllegalArgumentException(
         s"$table v$version has no commit-ts sidecar"))
 
-  private def commitTsOpt(table: String, version: Long): Option[Long] = {
-    val f = logDir(table).resolve(f"v$version%05d.ts.txt")
-    if (!java.nio.file.Files.isRegularFile(f)) None
-    else Some(java.nio.file.Files.readString(f).trim.toLong)
-  }
+  private def commitTsOpt(table: String, version: Long): Option[Long] =
+    lines(logFile(table, version, "ts.txt")).map(_.mkString.trim.toLong)
 
   /** TIMESTAMP AS OF: the latest stamped version whose commit time is
     * <= `tsMicros` (boundary inclusive — reading AS OF the exact
@@ -597,62 +568,63 @@ object CommitLog {
   /** One cstats sidecar line — shared by the publish path and the
     * purge rebuild so the two can never drift in format.
     */
-  private def colStatLine(s: ColStat): String = {
-    def enc(x: String) =
-      java.net.URLEncoder.encode(x, java.nio.charset.StandardCharsets.UTF_8)
+  private def colStatLine(s: ColStat): String =
     Seq(s.unit, s.col, s.kind, s.min, s.max)
       .map(enc).mkString("|") + s"|${s.count}"
-  }
 
-  /** The multi-column stats of `version`. */
-  def colStats(table: String, version: Long): Seq[ColStat] = {
-    val f = logDir(table).resolve(f"v$version%05d.cstats.txt")
-    require(java.nio.file.Files.isRegularFile(f),
-      s"$table has no column stats for version $version")
-    def dec(s: String) =
-      java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-    java.nio.file.Files.readAllLines(f).toArray(Array.empty[String]).toSeq
-      .filter(_.nonEmpty).map { l =>
-        val Array(u, c, k, mn, mx, n) = l.split('|')
-        ColStat(dec(u), dec(c), dec(k), dec(mn), dec(mx), n.toLong)
-      }
-  }
+  /** The multi-column stats of `version`; loud when it has none. */
+  def colStats(table: String, version: Long): Seq[ColStat] =
+    colStatsOpt(table, version).getOrElse(throw new IllegalArgumentException(
+      s"$table has no column stats for version $version"))
+
+  /** The multi-column stats of `version`, None without a cstats sidecar. */
+  private def colStatsOpt(table: String, version: Long): Option[Seq[ColStat]] =
+    lines(logFile(table, version, "cstats.txt")).map(_.map { l =>
+      val Array(u, c, k, mn, mx, n) = l.split('|')
+      ColStat(dec(u), dec(c), dec(k), dec(mn), dec(mx), n.toLong)
+    })
+
+  /** The per-unit `(unit, min, max, count)` ranges of the column
+    * `col` at `version`: its `long`-kind cstats entries, in sidecar
+    * order. This is what every consumer that routes ROW KEYS through
+    * unit ranges reads ([[mergeCow]], [[applyDeletes]], [[changes]]);
+    * an entry names its column, so a range is a key range exactly when
+    * it was measured on the key column — stats kept only on another
+    * column (an index table's bucket ids) never route a key. Empty
+    * without a cstats sidecar or without `long` entries for `col`.
+    */
+  def keyRanges(table: String, version: Long,
+      col: String): Seq[(String, Long, Long, Long)] =
+    colStatsOpt(table, version).getOrElse(Seq.empty)
+      .filter(s => s.col == col && s.kind == "long")
+      .map(s => (s.unit, s.min.toLong, s.max.toLong, s.count))
 
   /** Stats-pruned read on ANY statted column: scan only the units
-    * whose footer [min,max] for `colName` intersects [lo, hi] —
-    * numeric compare for long/double stats, lexicographic for string
-    * (order-faithful when the column's encoding is, e.g. zero-padded
-    * keys or ISO dates). Returns the surviving-units frame + how many
-    * units the probe scans; a no-match probe is the empty frame. Rows
-    * outside [lo, hi] inside a surviving unit still need the ordinary
-    * pushed filter — stats prune UNITS, not rows. Like [[snapshot]],
-    * all the pruned-read paths serve the RAW pre-image: on a table
-    * with outstanding merge-on-read deletes, anti-join [[deletes]]
-    * yourself or compact first.
+    * whose footer [min,max] for `colName` intersects [lo, hi] — the
+    * one-predicate case of [[snapshotRangeMulti]]. Returns the
+    * surviving-units frame + how many units the probe scans; a
+    * no-match probe is the empty frame. Rows outside [lo, hi] inside
+    * a surviving unit still need the ordinary pushed filter — stats
+    * prune UNITS, not rows. Like [[snapshot]], all the pruned-read
+    * paths serve the RAW pre-image: on a table with outstanding
+    * merge-on-read deletes, anti-join [[deletes]] yourself or compact
+    * first.
     */
   def snapshotRangeCol(spark: SparkSession, table: String, version: Long,
-      colName: String, lo: String, hi: String): (DataFrame, Int) = {
-    val cs = colStats(table, version).filter(_.col == colName)
-    require(cs.nonEmpty,
-      s"$table v$version has no stats for column $colName")
-    val picked = cs.filter { s =>
-        s.kind match {
-          case "long" => s.min.toLong <= hi.toLong && s.max.toLong >= lo.toLong
-          case "double" =>
-            s.min.toDouble <= hi.toDouble && s.max.toDouble >= lo.toDouble
-          case _ => s.min <= hi && s.max >= lo
-        }
-      }.map(s => java.nio.file.Paths.get(table, s.unit).toString)
-    if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (Parquet.read(spark, picked), picked.size)
-  }
+      colName: String, lo: String, hi: String): (DataFrame, Int) =
+    snapshotRangeMulti(spark, table, version, Seq((colName, lo, hi)))
 
   /** Conjunctive stats-pruned read: a unit survives only if EVERY
     * predicate's [lo, hi] intersects that column's footer [min, max] —
     * the multi-column skipping a z-ordered layout exists to serve
     * (each dim's span is bounded per unit, so a small rectangle probe
     * prunes multiplicatively where a linear layout prunes on one dim
-    * at best). Same kind-aware compare as [[snapshotRangeCol]].
+    * at best). The compare follows the entry's kind: numeric for
+    * long/double stats, lexicographic for string (order-faithful when
+    * the column's encoding is, e.g. zero-padded keys or ISO dates).
+    * Surviving units are read in sidecar order. A probe intersecting
+    * no unit is a valid, fully-pruned read: the EMPTY frame with the
+    * snapshot's schema, 0 units scanned.
     */
   def snapshotRangeMulti(spark: SparkSession, table: String, version: Long,
       preds: Seq[(String, String, String)]): (DataFrame, Int) = {
@@ -662,38 +634,11 @@ object CommitLog {
       val forCol = cs.filter(_.col == colName)
       require(forCol.nonEmpty,
         s"$table v$version has no stats for column $colName")
-      forCol.filter { s =>
-        s.kind match {
-          case "long" => s.min.toLong <= hi.toLong && s.max.toLong >= lo.toLong
-          case "double" =>
-            s.min.toDouble <= hi.toDouble && s.max.toDouble >= lo.toDouble
-          case _ => s.min <= hi && s.max >= lo
-        }
-      }.map(_.unit).toSet
+      forCol.filter(s => !kindLt(s.kind, hi, s.min) && !kindLt(s.kind, s.max, lo))
+        .map(_.unit).toSet
     }.reduce(_ intersect _)
-    val picked = surviving.toSeq.sorted
+    val picked = cs.map(_.unit).distinct.filter(surviving)
       .map(u => java.nio.file.Paths.get(table, u).toString)
-    if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (Parquet.read(spark, picked), picked.size)
-  }
-
-  /** Stats-pruned read: scan ONLY the units whose [min,max] range
-    * intersects [lo, hi] — manifest-level data skipping, the planning
-    * step a format's file-stats index performs before the scan ever
-    * opens a footer. Returns the dataframe over the surviving units
-    * plus how many units the probe actually scans (the skipping
-    * metric). Rows outside [lo, hi] inside a surviving unit still
-    * need the ordinary pushed filter — stats prune UNITS, not rows.
-    */
-  def snapshotRange(spark: SparkSession, table: String, version: Long,
-      lo: Long, hi: Long): (DataFrame, Int) = {
-    val picked = stats(table, version)
-      .filter { case (_, mn, mx, _) => mn <= hi && mx >= lo }
-      .map(s => java.nio.file.Paths.get(table, s._1).toString)
-    // a probe intersecting no unit is a valid, fully-pruned read: the
-    // answer is the EMPTY frame with the snapshot's schema (planning
-    // reads footers only, zero data files — throwing here forced
-    // callers to special-case the best case)
     if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
     else (Parquet.read(spark, picked), picked.size)
   }
@@ -770,9 +715,10 @@ object CommitLog {
     * unique keys (the standard MERGE source contract).
     *
     * The write path is what makes this scale:
-    *  1. ROUTE — update keys are ranged against the stats sidecar
-    *     (O(units) metadata, broadcast), so only units whose [min,max]
-    *     key range an update can touch are rewritten. A merge touching
+    *  1. ROUTE — update keys are ranged against the key column's
+    *     cstats entries ([[keyRanges]]; O(units) metadata, broadcast),
+    *     so only units whose [min,max] key range an update can touch
+    *     are rewritten. A merge touching
     *     2 of 10⁵ units reads and writes 2 units of data, never the
     *     table.
     *  2. REWRITE — touched units re-emerge as one new unit: their rows
@@ -782,9 +728,12 @@ object CommitLog {
     *     the new units) races through [[tryCommit]]; a loser re-reads
     *     the winner's snapshot and re-applies the merge on top —
     *     snapshot-isolated optimistic concurrency, no lock service.
-    *     A fresh stats sidecar (untouched entries carried, new units
-    *     measured) is published with the winning version so the NEXT
-    *     merge routes correctly.
+    *     A fresh cstats sidecar (untouched entries carried, new units
+    *     lifted from their footers on every tracked column) is
+    *     published with the winning version so the NEXT merge routes
+    *     correctly. A version without key ranges for EVERY unit is
+    *     refused: routing a key through partial or non-key stats
+    *     would silently skip the unit holding it.
     *
     * Untouched unit files are never opened, so they stay byte-stable
     * across the merge (pinned by Round10OpsSpec). Returns the new
@@ -793,7 +742,7 @@ object CommitLog {
     */
   def mergeCow(spark: SparkSession, table: String, updates: DataFrame,
       keyCol: String, beforeCommit: () => Unit = () => ()): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, min, when}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, when}
     var hook = beforeCommit
     var attempts = 0
     while (true) {
@@ -811,9 +760,9 @@ object CommitLog {
       require(dvLines(table, v).isEmpty,
         s"$table v$v has outstanding merge-on-read deletes — run a " +
           "compaction (snapshotMoR -> new version) before merging")
-      val st = stats(table, v)
+      val st = keyRanges(table, v, keyCol)
       require(st.size == units(table, v).size,
-        s"stats sidecar of $table v$v covers ${st.size} of " +
+        s"$keyCol stats of $table v$v cover ${st.size} of " +
           s"${units(table, v).size} units — merge routing needs every " +
           "unit's key range")
       // disjoint ranges are what make per-key routing single-target: a
@@ -842,13 +791,9 @@ object CommitLog {
         case ((u, _, _, _), i) if touchedIds(i) => u
       }
       val newUnits = Seq.newBuilder[String]
-      val newStats = Seq.newBuilder[(String, Long, Long, Long)]
       def writeUnit(df: DataFrame, rel: String): Unit = {
         df.write.parquet(java.nio.file.Paths.get(table, rel).toString)
-        val r = df.agg(min(col(keyCol).cast("long")),
-          max(col(keyCol).cast("long")), count(lit(1))).head()
         newUnits += rel
-        newStats += ((rel, r.getLong(0), r.getLong(1), r.getLong(2)))
       }
       // ONE REWRITTEN UNIT PER TOUCHED UNIT, never a collapsed span:
       // each rewrite is (that unit's rows minus its replaced keys) ∪
@@ -903,29 +848,21 @@ object CommitLog {
         carried.map(_._1) ++ newUnits.result()
       hook(); hook = () => () // the race window fires once
       if (tryCommit(table, v + 1, manifestUnits)) {
-        writeStats(table, v + 1, carried ++ newStats.result(), Some(keyCol))
-        // a table that also tracks multi-column footer stats keeps
-        // them across the merge: untouched entries carry, new units
-        // get theirs lifted from the just-written footers — without
-        // this the merge would orphan snapshotRangeCol skipping
-        if (java.nio.file.Files.isRegularFile(
-            logDir(table).resolve(f"v$v%05d.cstats.txt"))) {
-          val cs = colStats(table, v)
-          writeColStats(table, v + 1,
-            cs.filterNot(s => touchedRel.contains(s.unit)) ++
-              footerColStats(spark, table, newUnits.result(),
-                cs.map(_.col).distinct))
-        }
+        // untouched entries carry, new units get theirs lifted from
+        // the just-written footers on every tracked column
+        val cs = colStats(table, v)
+        val fresh = footerColStats(spark, table, newUnits.result(),
+          cs.map(_.col).distinct)
+        writeColStats(table, v + 1,
+          cs.filterNot(s => touchedRel.contains(s.unit)) ++ fresh)
         // a bloom-indexed table keeps point-lookup skipping across the
         // merge: carried entries verbatim, rewritten/insert units get
         // filters REBUILT delta-only (their content changed — a
         // carried filter would go stale-positive, a missing one would
         // make snapshotBloom refuse the whole sidecar)
-        locally {
-          val ns = newStats.result().map(s => s._1 -> s._4).toMap
-          carryBloomStats(spark, table, v, v + 1, newUnits.result(),
-            touchedRel.toSet, rel => ns.getOrElse(rel, 1L), 0.03)
-        }
+        val ns = fresh.filter(_.col == keyCol).map(s => s.unit -> s.count).toMap
+        carryBloomStats(spark, table, v, v + 1, newUnits.result(),
+          touchedRel.toSet, rel => ns.getOrElse(rel, 1L), 0.03)
         return v + 1
       }
       // lost the race: reclaim our prepared units immediately (no
@@ -1013,52 +950,36 @@ object CommitLog {
     None // unreachable
   }
 
-  /** Fold a version's stats sidecars across a compaction: the packed
-    * unit's entry is the range-union / count-sum of the packed units'
-    * entries — pure sidecar arithmetic, zero data reads, no knowledge
-    * of any key column needed — and untouched units carry verbatim.
-    * Without this, an OPTIMIZE would orphan the stats layer and break
-    * every downstream consumer of it (mergeCow routing,
-    * snapshotRange skipping) until the next full stats rebuild.
-    * Sidecars the version doesn't have are simply not carried.
+  /** Fold a version's cstats sidecar across a compaction: per column,
+    * the packed unit's entry is the range-union / count-sum of the
+    * packed units' entries — pure sidecar arithmetic, zero data reads,
+    * no knowledge of any key column needed — and untouched units carry
+    * verbatim. Without this, an OPTIMIZE would orphan the stats layer
+    * and break every downstream consumer of it (mergeCow routing,
+    * snapshotRangeCol skipping) until the next full stats rebuild. A
+    * version without a sidecar carries none; a column that does not
+    * cover every packed unit would fold into a LYING range, so then
+    * nothing is published.
     */
   private def carryStats(table: String, from: Long, to: Long,
-      packedAbs: Set[String], packedRel: String): Unit = {
-    def abs(rel: String) = java.nio.file.Paths.get(table, rel).toString
-    if (java.nio.file.Files.isRegularFile(
-        logDir(table).resolve(f"v$from%05d.stats.txt"))) {
-      val st = stats(table, from)
-      val (packed, carried) = st.partition(s => packedAbs(abs(s._1)))
-      // fold only when the sidecar covers every packed unit — a
-      // partial fold would publish a LYING range
-      if (packed.nonEmpty && packedAbs.size == packed.size)
-        writeStats(table, to, carried :+
-          ((packedRel, packed.map(_._2).min, packed.map(_._3).max,
-            packed.map(_._4).sum)), statsKey(table, from))
-    }
-    if (java.nio.file.Files.isRegularFile(
-        logDir(table).resolve(f"v$from%05d.cstats.txt"))) {
-      val cs = colStats(table, from)
-      val (packed, carried) = cs.partition(s => packedAbs(abs(s.unit)))
+      packedAbs: Set[String], packedRel: String): Unit =
+    colStatsOpt(table, from).foreach { cs =>
+      val (packed, carried) = cs.partition(s =>
+        packedAbs(java.nio.file.Paths.get(table, s.unit).toString))
       val byCol = packed.groupBy(_.col)
       val covered = byCol.values.forall(_.size == packedAbs.size)
       if (byCol.nonEmpty && covered) {
         val folded = byCol.toSeq.sortBy(_._1).map { case (c, ss) =>
           val kind = ss.head.kind
           require(ss.forall(_.kind == kind), s"mixed stat kinds for $c")
-          def lt(a: String, b: String): Boolean =
-            if (kind == "string") a < b
-            else if (kind == "long") a.toLong < b.toLong
-            else a.toDouble < b.toDouble
           ColStat(packedRel, c, kind,
-            ss.map(_.min).reduce((a, b) => if (lt(a, b)) a else b),
-            ss.map(_.max).reduce((a, b) => if (lt(a, b)) b else a),
+            ss.map(_.min).reduce((a, b) => if (kindLt(kind, a, b)) a else b),
+            ss.map(_.max).reduce((a, b) => if (kindLt(kind, a, b)) b else a),
             ss.map(_.count).sum)
         }
         writeColStats(table, to, carried ++ folded)
       }
     }
-  }
 
   /** Total bytes and file count of a unit (file or directory). */
   private def unitSize(abs: String): (Long, Long) = {
@@ -1077,13 +998,9 @@ object CommitLog {
   }
 
   /** The manifest's raw relative unit lines for `version`. */
-  private def manifestLines(table: String, version: Long): Seq[String] = {
-    val m = manifest(table, version)
-    require(java.nio.file.Files.isRegularFile(m),
-      s"$table has no version $version (published: ${versions(table).mkString(",")})")
-    java.nio.file.Files.readAllLines(m).toArray(Array.empty[String]).toSeq
-      .filter(_.nonEmpty)
-  }
+  private def manifestLines(table: String, version: Long): Seq[String] =
+    lines(manifest(table, version)).getOrElse(throw new IllegalArgumentException(
+      s"$table has no version $version (published: ${versions(table).mkString(",")})"))
 
   /** DESCRIBE HISTORY: one row per version — commit time, unit count,
     * added/removed unit counts vs the predecessor, outstanding
@@ -1154,8 +1071,7 @@ object CommitLog {
         "backfill with writeBloomStats first")
     carryBloomStats(spark, table, carryFrom, to, newRels, Set.empty,
       _ => expectedPerUnit, fpp)
-    require(java.nio.file.Files.isRegularFile(
-        logDir(table).resolve(f"v$to%05d.bloom.txt")),
+    require(java.nio.file.Files.isRegularFile(logFile(table, to, "bloom.txt")),
       s"delta bloom publish for $table v$to left units uncovered — " +
         s"newRels must name every unit absent from v$carryFrom")
   }
@@ -1168,8 +1084,8 @@ object CommitLog {
     * path). `rewrittenAbsorbed` names the `carryFrom` units whose rows
     * were folded INTO the new units (packed or rewritten) — their old
     * entries are dropped, not carried. Sized by `expectedOf(rel)` so a
-    * maintenance caller can pass honest per-unit row counts from the
-    * stats sidecar it just folded.
+    * maintenance caller can pass honest per-unit row counts of the
+    * units it just wrote.
     */
   private def carryBloomStats(spark: SparkSession, table: String,
       carryFrom: Long, to: Long, newRels: Seq[String],
@@ -1264,26 +1180,17 @@ object CommitLog {
     * URL-encoded (a column name containing '|' must not corrupt the
     * 3-way split at read time — same armor as the cstats sidecar).
     */
-  private def bloomLine(e: (String, String), colName: String): String = {
-    def enc(s: String) =
-      java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
+  private def bloomLine(e: (String, String), colName: String): String =
     s"${enc(e._1)}|${enc(colName)}|${e._2}"
-  }
 
   /** The decoded `(rel, col, base64)` bloom entries of `version` —
     * empty when the version has no bloom sidecar.
     */
   private def bloomLines(table: String,
-      version: Long): Seq[(String, String, String)] = {
-    def dec(s: String) =
-      java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-    val f = logDir(table).resolve(f"v$version%05d.bloom.txt")
-    if (!java.nio.file.Files.isRegularFile(f)) Seq.empty
-    else java.nio.file.Files.readAllLines(f)
-      .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
+      version: Long): Seq[(String, String, String)] =
+    lines(logFile(table, version, "bloom.txt")).getOrElse(Seq.empty)
       .map { l => val Array(rel, c, b64) = l.split('|')
         (dec(rel), dec(c), b64) }
-  }
 
   /** Build `(rel, base64-filter)` bloom entries for `rels` — ONE
     * grouped pass over exactly those units (per-FILE groups, folded
@@ -1351,8 +1258,7 @@ object CommitLog {
     */
   def snapshotBloom(spark: SparkSession, table: String, version: Long,
       colName: String, value: Any): (DataFrame, Int) = {
-    require(java.nio.file.Files.isRegularFile(
-        logDir(table).resolve(f"v$version%05d.bloom.txt")),
+    require(java.nio.file.Files.isRegularFile(logFile(table, version, "bloom.txt")),
       s"$table v$version has no bloom sidecar")
     val entries = bloomLines(table, version).filter(_._2 == colName)
     require(entries.nonEmpty,
@@ -1396,6 +1302,24 @@ object CommitLog {
   def unitNames(table: String, version: Long): Seq[String] =
     unitsRel(table, version)
 
+  /** The units a `partitionBy(col)` write left under `table/sub`: one
+    * manifest-relative `sub/col=value` name per written directory, in
+    * ascending NUMERIC order of the value (`b=10` after `b=9`, where a
+    * lexical sort would put it after `b=1`). A value with no rows
+    * writes no directory and so gets no unit. The values must be
+    * integers.
+    */
+  def partitionUnits(table: String, sub: String, col: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val st = java.nio.file.Files.list(java.nio.file.Paths.get(table, sub))
+    try st.iterator().asScala
+      .filter(java.nio.file.Files.isDirectory(_))
+      .map(_.getFileName.toString).filter(_.startsWith(s"$col="))
+      .toVector.sortBy(_.stripPrefix(s"$col=").toLong)
+      .map(n => s"$sub/$n")
+    finally st.close()
+  }
+
   /** Attach MERGE-ON-READ equality deletes to `version`: the
     * `vNNNNN.dv.txt` sidecar lists tombstone units — parquet files of
     * DELETED KEY VALUES — that [[snapshotMoR]] anti-joins at read
@@ -1438,12 +1362,8 @@ object CommitLog {
       .map(u => java.nio.file.Paths.get(table, u).toString)
 
   /** Raw (table-relative) dv sidecar lines of `version`. */
-  private def dvLines(table: String, version: Long): Seq[String] = {
-    val f = logDir(table).resolve(f"v$version%05d.dv.txt")
-    if (!java.nio.file.Files.isRegularFile(f)) Seq.empty
-    else java.nio.file.Files.readAllLines(f).toArray(Array.empty[String])
-      .toSeq.filter(_.nonEmpty)
-  }
+  private def dvLines(table: String, version: Long): Seq[String] =
+    lines(logFile(table, version, "dv.txt")).getOrElse(Seq.empty)
 
   /** Read `version` with its merge-on-read deletes APPLIED: the
     * snapshot anti-joined against the union of its tombstone units on
@@ -1487,12 +1407,8 @@ object CommitLog {
     * alone, so a heuristic on (new dv + added units) would mis-exempt
     * it and resurrect its deleted rows.
     */
-  private def seqLines(table: String, version: Long): Seq[String] = {
-    val f = logDir(table).resolve(f"v$version%05d.seq.txt")
-    if (!java.nio.file.Files.isRegularFile(f)) Seq.empty
-    else java.nio.file.Files.readAllLines(f).toArray(Array.empty[String])
-      .toSeq.filter(_.nonEmpty)
-  }
+  private def seqLines(table: String, version: Long): Seq[String] =
+    lines(logFile(table, version, "seq.txt")).getOrElse(Seq.empty)
 
   /** SEQUENCE-AWARE merge-on-read read — the read path for
     * [[upsertMoR]] versions, and identical to [[snapshotMoR]] on
@@ -1553,13 +1469,14 @@ object CommitLog {
     * leaves an append-only version whose post-images coexist with
     * their pre-images — detectable (the orphaned `_keys` unit names
     * the expected sidecar) but not atomic, the documented cost of
-    * keeping manifests single-file. Stats sidecars carry forward with
-    * the post-image unit's entry appended, so skipping and merge
-    * routing survive the upsert. Returns the committed version.
+    * keeping manifests single-file. The cstats sidecar carries forward
+    * with the post-image unit's footer entries appended, so skipping
+    * and merge routing survive the upsert. Returns the committed
+    * version.
     */
   def upsertMoR(spark: SparkSession, table: String, updates: DataFrame,
       keyCol: String, beforeCommit: () => Unit = () => ()): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    import org.apache.spark.sql.functions.col
     var hook = beforeCommit
     var attempts = 0
     while (true) {
@@ -1587,20 +1504,8 @@ object CommitLog {
         // globally erase the post-images — silent data loss.
         publishSidecar(table, v + 1, "seq.txt", img + "\n")
         writeDeletes(table, v + 1, Seq(tomb))
-        if (java.nio.file.Files.isRegularFile(
-            logDir(table).resolve(f"v$v%05d.stats.txt"))) {
-          val r = updates.agg(min(col(keyCol).cast("long")),
-            max(col(keyCol).cast("long")), count(lit(1))).head()
-          writeStats(table, v + 1,
-            stats(table, v) :+ ((img, r.getLong(0), r.getLong(1), r.getLong(2))),
-            Some(keyCol))
-        }
-        if (java.nio.file.Files.isRegularFile(
-            logDir(table).resolve(f"v$v%05d.cstats.txt"))) {
-          val cs = colStats(table, v)
-          writeColStats(table, v + 1,
-            cs ++ footerColStats(spark, table, Seq(img), cs.map(_.col).distinct))
-        }
+        colStatsOpt(table, v).foreach(cs => writeColStats(table, v + 1,
+          cs ++ footerColStats(spark, table, Seq(img), cs.map(_.col).distinct)))
         return v + 1
       }
       Seq(img, tomb).foreach(u =>
@@ -1615,23 +1520,24 @@ object CommitLog {
     * tombstones"), and the prerequisite [[mergeCow]]/[[upsertMoR]]
     * point at when they refuse a dv-bearing table.
     *
-    * Stats-ROUTED like mergeCow: with a stats sidecar present, only
-    * units whose [min,max] key range intersects a tombstone key are
-    * rewritten (anti-joined clean); out-of-range units — and, on an
-    * upsert version, the sequence-exempt post-image units — are
-    * carried by name, never opened, byte-stable. Without stats every
-    * eligible unit rewrites (correct, just unrouted). The new version
-    * publishes NO dv sidecar, and its [[changes]] feed is EMPTY —
-    * pure maintenance: the retractions surfaced at the version that
-    * DECLARED the tombstones (the MoR-aware changes() rule), so
-    * re-emitting them here would double-delete a folding replica.
-    * Stats sidecars
-    * fold forward (carried entries verbatim, the rewrite unit
-    * re-measured). Returns the new version.
+    * Stats-ROUTED like mergeCow: when every eligible unit has a
+    * `keyCol` range ([[keyRanges]]), only units whose [min,max]
+    * intersects a tombstone key are rewritten (anti-joined clean);
+    * out-of-range units — and, on an upsert version, the
+    * sequence-exempt post-image units — are carried by name, never
+    * opened, byte-stable. Otherwise every eligible unit rewrites
+    * (correct, just unrouted): stats on any other column never route
+    * a key. The new version publishes NO dv sidecar, and its
+    * [[changes]] feed is EMPTY — pure maintenance: the retractions
+    * surfaced at the version that DECLARED the tombstones (the
+    * MoR-aware changes() rule), so re-emitting them here would
+    * double-delete a folding replica. The cstats sidecar folds forward
+    * (carried entries verbatim, rewrite units lifted from their
+    * footers). Returns the new version.
     */
   def applyDeletes(spark: SparkSession, table: String,
       keyCol: String): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
+    import org.apache.spark.sql.functions.{broadcast, col}
     var attempts = 0
     while (true) {
       attempts += 1
@@ -1645,17 +1551,16 @@ object CommitLog {
       val exempt: Set[String] = seqLines(table, v).toSet
       val eligible = unitsRel(table, v).filterNot(exempt)
       val keys = Parquet.read(spark, tu).select(col(keyCol)).distinct()
-      // no stats sidecar → no routing: every eligible unit rewrites
-      // (correct, just unrouted — the same degradation mergeCow refuses
-      // but a maintenance pass can afford)
-      val st =
-        if (java.nio.file.Files.isRegularFile(
-            logDir(table).resolve(f"v$v%05d.stats.txt")))
-          stats(table, v)
-        else Seq.empty[(String, Long, Long, Long)]
-      val stByUnit = st.map(s => s._1 -> s).toMap
+      // no key range for some eligible unit → no routing: every
+      // eligible unit rewrites (correct, just unrouted — the same
+      // degradation mergeCow refuses but a maintenance pass can afford)
+      val stByUnit = keyRanges(table, v, keyCol).map(s => s._1 -> s).toMap
+      val routed = stByUnit.nonEmpty && eligible.forall(stByUnit.contains)
+      // tombstones for keys no unit can hold (already-gone keys) leave
+      // nothing to rewrite — the clean version is then a pure manifest
+      // republish dropping the sidecar
       val touched: Seq[String] =
-        if (eligible.forall(stByUnit.contains)) {
+        if (routed) {
           import spark.implicits._
           val ranges = eligible.zipWithIndex.map { case (u, i) =>
             val (_, mn, mx, _) = stByUnit(u); (i, mn, mx)
@@ -1666,30 +1571,19 @@ object CommitLog {
             .collect().map(_.getInt(0)).toSet // metadata-sized: O(units) routing state
           eligible.zipWithIndex.collect { case (u, i) if ids(i) => u }
         } else eligible
-      // tombstones for keys no unit can hold (already-gone keys) leave
-      // nothing to rewrite — the clean version is then a pure manifest
-      // republish dropping the sidecar
-      val routed = eligible.forall(stByUnit.contains) && st.nonEmpty
       val newUnits = Seq.newBuilder[String]
-      val newStats = Seq.newBuilder[(String, Long, Long, Long)]
+      val newCounts = Map.newBuilder[String, Long]
       def writeClean(srcAbs: Seq[String], rel: String): Unit = {
+        val abs = java.nio.file.Paths.get(table, rel).toString
         Parquet.read(spark, srcAbs)
           .join(keys, Seq(keyCol), "left_anti")
-          .write.parquet(java.nio.file.Paths.get(table, rel).toString)
-        // measure BEFORE commit (read-back of the just-written small
-        // unit) — count first: a rewrite the tombstones fully emptied
-        // has null min/max, no stats to publish and no reason to live
-        // in the manifest at all
-        val r = Parquet.read(spark,
-            java.nio.file.Paths.get(table, rel).toString)
-          .agg(min(col(keyCol).cast("long")),
-            max(col(keyCol).cast("long")), count(lit(1))).head()
-        if (r.getLong(2) == 0L)
-          Fs.deleteRecursively(java.nio.file.Paths.get(table, rel).toString)
-        else {
-          newUnits += rel
-          newStats += ((rel, r.getLong(0), r.getLong(1), r.getLong(2)))
-        }
+          .write.parquet(abs)
+        // count BEFORE commit (read-back of the just-written small
+        // unit): a rewrite the tombstones fully emptied has no footer
+        // stats to publish and no reason to live in the manifest
+        val n = Parquet.read(spark, abs).count()
+        if (n == 0L) Fs.deleteRecursively(abs)
+        else { newUnits += rel; newCounts += rel -> n }
       }
       if (routed)
         // ONE REWRITE PER TOUCHED UNIT: each clean unit's key range is
@@ -1702,33 +1596,23 @@ object CommitLog {
             f"data/apply_v${v + 1}%05d_rw${i}_$attempts")
         }
       else if (touched.nonEmpty)
-        // unrouted (no stats sidecar): nothing preserves ranges anyway
+        // unrouted (no key ranges): nothing preserves ranges anyway
         // — one collapsed rewrite keeps this degraded path O(1) jobs
         writeClean(touched.map(u => java.nio.file.Paths.get(table, u).toString),
           f"data/apply_v${v + 1}%05d_$attempts")
       val carried = eligible.filterNot(touched.contains)
       if (tryCommit(table, v + 1,
           carried ++ exempt.toSeq.sorted ++ newUnits.result())) {
-        if (st.nonEmpty)
-          writeStats(table, v + 1,
-            st.filterNot(s => touched.contains(s._1)) ++ newStats.result(),
-            Some(keyCol))
-        if (java.nio.file.Files.isRegularFile(
-            logDir(table).resolve(f"v$v%05d.cstats.txt"))) {
-          val cs = colStats(table, v)
-          writeColStats(table, v + 1,
-            cs.filterNot(s => touched.contains(s.unit)) ++
-              footerColStats(spark, table, newUnits.result(),
-                cs.map(_.col).distinct))
-        }
+        colStatsOpt(table, v).foreach(cs => writeColStats(table, v + 1,
+          cs.filterNot(s => touched.contains(s.unit)) ++
+            footerColStats(spark, table, newUnits.result(),
+              cs.map(_.col).distinct)))
         // bloom skipping survives the apply: carried entries verbatim,
         // rewritten units rebuilt delta-only (their content shrank — a
         // carried filter would answer "maybe" for every deleted key)
-        locally {
-          val ns = newStats.result().map(s => s._1 -> s._4).toMap
-          carryBloomStats(spark, table, v, v + 1, newUnits.result(),
-            touched.toSet, r => ns.getOrElse(r, 1L), 0.03)
-        }
+        val ns = newCounts.result()
+        carryBloomStats(spark, table, v, v + 1, newUnits.result(),
+          touched.toSet, r => ns.getOrElse(r, 1L), 0.03)
         return v + 1
       }
       newUnits.result().foreach(u =>
@@ -1823,30 +1707,26 @@ object CommitLog {
           newDv.map(u => java.nio.file.Paths.get(table, u).toString))
           .distinct()
         // STATS-ROUTED pre-image read (the applyDeletes discipline):
-        // when the version carries a stats sidecar covering every
-        // pre-image unit AND its `#key=` header names EXACTLY the
-        // single tombstone column (the soundness marker — an index
-        // table's bucket-id "ranges" carry no header, and routing doc
-        // tombstones through bucket ids would silently drop most
-        // retractions from the feed), only units whose key range holds
-        // at least one tombstone key are opened — a GDPR batch
+        // when the single tombstone column has a key range for every
+        // pre-image unit ([[keyRanges]] — stats on any other column,
+        // such as an index table's bucket ids, never route a key: doc
+        // tombstones routed through bucket ids would silently drop
+        // most retractions from the feed), only units whose key range
+        // holds at least one tombstone key are opened — a GDPR batch
         // confined to 2 of 10⁵ units costs 2 units of pre-image I/O,
         // never a table scan. One extra keyed job over the (small)
         // tombstone set buys the pruning; every other case reads every
         // pre-image unit, the only sound answer without key ranges.
-        val st =
-          if (java.nio.file.Files.isRegularFile(
-              logDir(table).resolve(f"v$version%05d.stats.txt")))
-            stats(table, version)
-          else Seq.empty
-        val stByUnit = st.map(s => s._1 -> s).toMap
         val keyIsIntegral = keys.schema.fields.headOption.exists(f =>
           f.dataType == org.apache.spark.sql.types.LongType ||
             f.dataType == org.apache.spark.sql.types.IntegerType)
+        val stByUnit =
+          if (keys.columns.size == 1 && keyIsIntegral)
+            keyRanges(table, version, keys.columns.head)
+              .map(s => s._1 -> s).toMap
+          else Map.empty[String, (String, Long, Long, Long)]
         val routedRel =
-          if (keys.columns.size == 1 && keyIsIntegral && st.nonEmpty &&
-              statsKey(table, version).contains(keys.columns.head) &&
-              preRel.forall(stByUnit.contains)) {
+          if (stByUnit.nonEmpty && preRel.forall(stByUnit.contains)) {
             import spark.implicits._
             val ranges = preRel.map(stByUnit).zipWithIndex
               .map { case ((u, mn, mx, _), i) => (i, u, mn, mx) }
@@ -2019,23 +1899,10 @@ object CommitLog {
     }
     expired.foreach { v =>
       java.nio.file.Files.delete(manifest(table, v))
-      // reclaim the expired version's stats sidecars too — an orphan
-      // sidecar would let stats()/colStats() answer for a version that
-      // no longer exists
-      java.nio.file.Files.deleteIfExists(
-        logDir(table).resolve(f"v$v%05d.stats.txt"))
-      java.nio.file.Files.deleteIfExists(
-        logDir(table).resolve(f"v$v%05d.cstats.txt"))
-      java.nio.file.Files.deleteIfExists(
-        logDir(table).resolve(f"v$v%05d.dv.txt"))
-      java.nio.file.Files.deleteIfExists(
-        logDir(table).resolve(f"v$v%05d.seq.txt"))
-      java.nio.file.Files.deleteIfExists(
-        logDir(table).resolve(f"v$v%05d.bloom.txt"))
-      java.nio.file.Files.deleteIfExists(
-        logDir(table).resolve(f"v$v%05d.colmap.txt"))
-      java.nio.file.Files.deleteIfExists(
-        logDir(table).resolve(f"v$v%05d.ts.txt"))
+      // reclaim the expired version's sidecars too — an orphan sidecar
+      // would let colStats() answer for a version that no longer exists
+      Sidecars.foreach(sfx =>
+        java.nio.file.Files.deleteIfExists(logFile(table, v, sfx)))
     }
     VacuumReport(unitsDeleted, filesDeleted, failed.result(), external)
   }
@@ -2059,11 +1926,13 @@ object CommitLog {
     * side leaves every other key's MoR semantics untouched) are
     * scanned ONCE to find the dirty subset; each dirty unit is
     * rewritten to a purged twin exactly once no matter how many
-    * versions reference it; then every manifest (and dv/seq/stats
-    * sidecar, and staged-branch marker) is atomically swapped to the
+    * versions reference it; then every manifest (and dv/seq/cstats/
+    * bloom sidecar, and staged-branch marker) is atomically swapped to the
     * twin mapping, and the dirty originals are deleted. Per-version
-    * sidecar stats for rewritten units are re-derived from the twins'
-    * parquet footers; carried units keep their lines verbatim.
+    * cstats entries for rewritten units are re-derived from the twins'
+    * parquet footers on every tracked column (a bucket-homogeneous
+    * index unit re-derives its own bucket id, with the count
+    * re-measured); carried units keep their lines verbatim.
     *
     * Cost: one scan of the distinct historical units + O(dirty)
     * rewrites + O(versions) metadata swaps — never O(versions × data).
@@ -2210,41 +2079,18 @@ object CommitLog {
         s"purge would empty version $v of $table — delete the table " +
           "instead of purging its entire content")
     }
-    def hasSidecar(v: Long, sfx: String): Boolean =
-      java.nio.file.Files.isRegularFile(
-        logDir(table).resolve(f"v$v%05d.$sfx"))
-    // Pre-derive every rewritten unit's replacement sidecar entries
+    // Pre-derive every rewritten unit's replacement cstats entries
     // ONCE (a twin shared by many versions must not be re-measured per
-    // version): the union of columns any version's stats/cstats
-    // sidecar tracked for it, footer-read in one distributed batch per
-    // distinct column set.
-    // A stats sidecar's mn/mx are key RANGES only when its #key=
-    // header says so; a headerless (index-table) sidecar's mn/mx are
-    // caller-defined bucket ids that row removal does not change —
-    // those carry verbatim with only the count re-measured
-    // (re-deriving key ranges there would silently corrupt the
-    // index's bucket routing).
-    val statsKeyNeeded: Map[String, Set[String]] =
-      vs.filter(hasSidecar(_, "stats.txt"))
-        .flatMap { v =>
-          statsKey(table, v) match {
-            case Some(kc) => stats(table, v).map(_._1 -> kc)
-            case None => Nil
-          }
-        }
-        .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
-    val cstatsNeeded: Map[String, Set[String]] =
-      vs.filter(hasSidecar(_, "cstats.txt"))
-        .flatMap(v => colStats(table, v)
+    // version): the union of columns any version's sidecar tracked for
+    // it, footer-read in one distributed batch per distinct column set.
+    val colsFor: Map[String, Set[String]] =
+      vs.flatMap(v => colStatsOpt(table, v).getOrElse(Seq.empty)
           .filter(s => twinOf.get(s.unit).exists(_.isDefined))
           .map(s => s.unit -> s.col))
         .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
-    def colsFor(rel: String): Set[String] =
-      cstatsNeeded.getOrElse(rel, Set.empty) ++
-        statsKeyNeeded.getOrElse(rel, Set.empty)
     val derived: Map[(String, String), ColStat] = rewritten
       .collect { case (rel, Some((t, _))) => rel -> t }
-      .groupBy { case (rel, _) => colsFor(rel) }
+      .groupBy { case (rel, _) => colsFor.getOrElse(rel, Set.empty[String]) }
       .iterator.flatMap {
         case (cols, grp) if cols.nonEmpty =>
           val byTwin = footerColStats(spark, table, grp.map(_._2), cols.toSeq)
@@ -2258,10 +2104,9 @@ object CommitLog {
     // column across all twins needing it (the carryBloomStats batching
     // shape). Sized by the twin's actual row count at fpp 1e-2.
     val bloomNeeded: Seq[(String, String)] =
-      vs.filter(hasSidecar(_, "bloom.txt"))
-        .flatMap(v => bloomLines(table, v).collect {
-          case (rel, c, _) if twinOf.get(rel).exists(_.isDefined) => (rel, c)
-        }).distinct
+      vs.flatMap(v => bloomLines(table, v).collect {
+        case (rel, c, _) if twinOf.get(rel).exists(_.isDefined) => (rel, c)
+      }).distinct
     val bloomRebuilt: Map[(String, String), String] = bloomNeeded
       .groupBy(_._2).iterator.flatMap { case (c, prs) =>
         val rels = prs.map(_._1)
@@ -2289,53 +2134,30 @@ object CommitLog {
       // sidecar is deleted (reads then take the clean path)
       val dv = dvLines(table, v)
       if (dv.nonEmpty && remap(dv) != dv) {
-        val f = logDir(table).resolve(f"v$v%05d.dv.txt")
+        val f = logFile(table, v, "dv.txt")
         val nd = remap(dv)
         if (nd.isEmpty) java.nio.file.Files.delete(f) else swap(f, nd)
       }
       // seq sidecar names post-image units — remap to the twins
       val sq = seqLines(table, v)
       if (sq.nonEmpty && remap(sq) != sq)
-        swap(logDir(table).resolve(f"v$v%05d.seq.txt"), remap(sq))
-      // stats sidecar: carried lines verbatim, rewritten units
-      // re-measured from the twins' footers, dropped units removed
-      val statsFile = logDir(table).resolve(f"v$v%05d.stats.txt")
-      if (touched && java.nio.file.Files.isRegularFile(statsFile)) {
-        val keyed = statsKey(table, v)
-        val header = keyed
-          .map(c => "#key=" + java.net.URLEncoder.encode(
-            c, java.nio.charset.StandardCharsets.UTF_8))
-        val newStats = stats(table, v).flatMap { case (u, mn, mx, n) =>
-          twinOf.get(u) match {
-            case None => Some(s"$u|$mn|$mx|$n")
-            case Some(Some(t)) => keyed match {
-              case Some(kc) => // ranges ARE key ranges: re-measure
-                val cs = derived((u, kc))
-                Some(s"$t|${cs.min.toLong}|${cs.max.toLong}|${cs.count}")
-              case None => // opaque bucket ids: carry, re-count
-                Some(s"$t|$mn|$mx|${byRel(u).get._2}")
-            }
-            case Some(None) => None
-          }
-        }
-        swap(statsFile, header.toSeq ++ newStats)
-      }
-      // cstats sidecar: same carry/re-derive/drop discipline, every
-      // tracked column — the index keeps pruning after the purge
-      val cFile = logDir(table).resolve(f"v$v%05d.cstats.txt")
-      if (touched && java.nio.file.Files.isRegularFile(cFile)) {
-        val newC = colStats(table, v).flatMap { st =>
+        swap(logFile(table, v, "seq.txt"), remap(sq))
+      // cstats sidecar: carried lines verbatim, rewritten units
+      // re-derived from the twins' footers on every tracked column,
+      // dropped units removed — the index keeps pruning and routing
+      // after the purge
+      if (touched) colStatsOpt(table, v).foreach { cs =>
+        swap(logFile(table, v, "cstats.txt"), cs.flatMap { st =>
           twinOf.get(st.unit) match {
             case None => Some(st)
             case Some(Some(_)) => Some(derived((st.unit, st.col)))
             case Some(None) => None
           }
-        }
-        swap(cFile, newC.map(colStatLine))
+        }.map(colStatLine))
       }
       // bloom sidecar: carried filters verbatim, rewritten units'
       // filters swapped for the twin rebuilds, dropped units removed
-      val bFile = logDir(table).resolve(f"v$v%05d.bloom.txt")
+      val bFile = logFile(table, v, "bloom.txt")
       if (touched && java.nio.file.Files.isRegularFile(bFile)) {
         val newB = bloomLines(table, v).flatMap { case (rel, c, b64) =>
           twinOf.get(rel) match {
@@ -2413,10 +2235,8 @@ object CommitLog {
     */
   private def writeColMapping(table: String, version: Long,
       m: ColMapping): Unit = {
-    def enc(s: String) =
-      java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
     val phys = (m.renames.keySet ++ m.dropped ++ m.widened.keySet).toSeq.sorted
-    val lines = phys.map { p =>
+    val entries = phys.map { p =>
       if (m.dropped(p)) s"${enc(p)}|!drop"
       else m.widened.get(p) match {
         case Some(t) =>
@@ -2427,7 +2247,7 @@ object CommitLog {
       s"${enc(n)}|!add|${enc(t)}|${enc(dflt)}"
     }
     publishSidecar(table, version, "colmap.txt",
-      lines.mkString("", "\n", "\n"))
+      entries.mkString("", "\n", "\n"))
   }
 
   /** The full mapping in force AT `version`: the newest colmap sidecar
@@ -2436,16 +2256,12 @@ object CommitLog {
     * identity, the state of every table that never evolved.
     * O(versions) file-existence probes, metadata only.
     */
-  def colMappingAt(table: String, version: Long): ColMapping = {
-    def dec(s: String) =
-      java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-    versions(table).filter(_ <= version).reverse
-      .map(v => logDir(table).resolve(f"v$v%05d.colmap.txt"))
-      .find(java.nio.file.Files.isRegularFile(_))
-      .map { f =>
-        val entries = java.nio.file.Files.readAllLines(f)
-          .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-          .map(_.split('|'))
+  def colMappingAt(table: String, version: Long): ColMapping =
+    versions(table).filter(_ <= version).reverse.iterator
+      .flatMap(v => lines(logFile(table, v, "colmap.txt")))
+      .nextOption()
+      .map { ls =>
+        val entries = ls.map(_.split('|'))
         ColMapping(
           renames = entries.collect {
             case Array(p, l) if l != "!drop" && dec(l) != dec(p) =>
@@ -2461,7 +2277,6 @@ object CommitLog {
             case Array(n, "!add", t, dflt) => dec(n) -> (dec(t), dec(dflt))
           }.toMap)
       }.getOrElse(EmptyMapping)
-  }
 
   /** The physical->logical RENAME map at `version` (drops and widens
     * excluded) — the original round-11 surface, kept for rename-only
@@ -2746,11 +2561,8 @@ object CommitLog {
   // quality-gated ingest of a 100 TB pipeline needs, at metadata cost.
   // ------------------------------------------------------------------
 
-  private def branchFile(table: String, branch: String): java.nio.file.Path = {
-    val enc = java.net.URLEncoder.encode(branch,
-      java.nio.charset.StandardCharsets.UTF_8)
-    logDir(table).resolve(s"branch_$enc.txt")
-  }
+  private def branchFile(table: String, branch: String): java.nio.file.Path =
+    logDir(table).resolve(s"branch_${enc(branch)}.txt")
 
   /** Stage `units` as branch `branch` — atomic create-if-absent (the
     * tryCommit hard-link protocol), so two producers racing for the
@@ -2764,20 +2576,11 @@ object CommitLog {
       require(u.nonEmpty && !u.exists(c => c == '\n' || c == '\r' || c == '|'),
         s"illegal unit name $u in staged branch")
     }
-    val dir = logDir(table)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolve(s".branch.${java.util.UUID.randomUUID}.tmp")
-    java.nio.file.Files.writeString(tmp, units.mkString("", "\n", "\n"))
-    try {
-      java.nio.file.Files.createLink(branchFile(table, branch), tmp)
-      java.nio.file.Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"branch $branch of $table is already staged — audit and " +
-            "publish/abandon it before re-staging")
-    }
+    java.nio.file.Files.createDirectories(logDir(table))
+    if (!linkNew(branchFile(table, branch), units.mkString("", "\n", "\n")))
+      throw new IllegalStateException(
+        s"branch $branch of $table is already staged — audit and " +
+          "publish/abandon it before re-staging")
   }
 
   /** Names of currently staged (unpublished, unabandoned) branches. */
@@ -2789,22 +2592,16 @@ object CommitLog {
       val st = java.nio.file.Files.list(dir)
       try st.iterator().asScala.map(_.getFileName.toString)
         .collect { case n if n.startsWith("branch_") && n.endsWith(".txt") =>
-          java.net.URLDecoder.decode(
-            n.stripPrefix("branch_").stripSuffix(".txt"),
-            java.nio.charset.StandardCharsets.UTF_8)
+          dec(n.stripPrefix("branch_").stripSuffix(".txt"))
         }.toVector.sorted
       finally st.close()
     }
   }
 
   /** The staged branch's unit paths, table-root relative. */
-  def stagedUnits(table: String, branch: String): Seq[String] = {
-    val f = branchFile(table, branch)
-    require(java.nio.file.Files.isRegularFile(f),
-      s"$table has no staged branch $branch")
-    java.nio.file.Files.readAllLines(f).toArray(Array.empty[String])
-      .toSeq.filter(_.nonEmpty)
-  }
+  def stagedUnits(table: String, branch: String): Seq[String] =
+    lines(branchFile(table, branch)).getOrElse(throw new IllegalArgumentException(
+      s"$table has no staged branch $branch"))
 
   /** Read the staged branch — the AUDIT surface: full query shape over
     * the candidate snapshot, invisible to every main-line reader.
@@ -2862,7 +2659,7 @@ object CommitLog {
   // the NEW units — O(delta) data, never table-sized — BEFORE the
   // manifest links, so a poisoned batch burns no version. Uniqueness
   // against the standing snapshot takes the cheap path when sidecars
-  // exist: the stats sidecar prunes probe units by key range first,
+  // exist: the cstats sidecar prunes probe units by key range first,
   // so a delta whose key range is disjoint from most of the table
   // semi-joins only the overlapping units.
   // ------------------------------------------------------------------
@@ -2932,27 +2729,23 @@ object CommitLog {
       s"illegal $what '$v' — must be non-empty and free of newlines and '|'")
 
   /** The declared constraint set (empty when none declared). */
-  def constraintsOf(table: String): Seq[TableConstraint] = {
-    val f = constraintsFile(table)
-    if (!java.nio.file.Files.isRegularFile(f)) Seq.empty
-    else java.nio.file.Files.readAllLines(f).toArray(Array.empty[String])
-      .toIndexedSeq.filter(_.nonEmpty).map { line =>
-        line.split("\\|", 3) match {
-          case Array("notnull", c) => NotNullConstraint(c)
-          case Array("unique", c) => UniqueConstraint(c)
-          case Array("check", n, sql) => CheckConstraint(n, sql)
-          // fk fields are all '|'-free (validated at declare), so the
-          // 2-way tail split is unambiguous
-          case Array("fk", c, rest) => rest.split("\\|", 2) match {
-            case Array(t, rc) => ForeignKeyConstraint(c, t, rc)
-            case _ => throw new IllegalArgumentException(
-              s"corrupt fk constraint line: $line")
-          }
+  def constraintsOf(table: String): Seq[TableConstraint] =
+    lines(constraintsFile(table)).getOrElse(Seq.empty).map { line =>
+      line.split("\\|", 3) match {
+        case Array("notnull", c) => NotNullConstraint(c)
+        case Array("unique", c) => UniqueConstraint(c)
+        case Array("check", n, sql) => CheckConstraint(n, sql)
+        // fk fields are all '|'-free (validated at declare), so the
+        // 2-way tail split is unambiguous
+        case Array("fk", c, rest) => rest.split("\\|", 2) match {
+          case Array(t, rc) => ForeignKeyConstraint(c, t, rc)
           case _ => throw new IllegalArgumentException(
-            s"corrupt constraint line: $line")
+            s"corrupt fk constraint line: $line")
         }
+        case _ => throw new IllegalArgumentException(
+          s"corrupt constraint line: $line")
       }
-  }
+    }
 
   /** Validate `newUnits` against the declared constraints, with
     * `baseVersion` (None = empty table) as the standing snapshot for
@@ -3006,7 +2799,8 @@ object CommitLog {
               case _ => None
             }
             def refKindMatches: Boolean = {
-              val rcs = colStats(refTable, rv).filter(_.col == refCol)
+              val rcs = colStatsOpt(refTable, rv).getOrElse(Seq.empty)
+                .filter(_.col == refCol)
               rcs.nonEmpty && batchKind.exists(k => rcs.forall(_.kind == k))
             }
             val rangeSafe = batchKind.nonEmpty
@@ -3029,9 +2823,7 @@ object CommitLog {
                   null
                 }
               }
-              else if (rangeSafe && java.nio.file.Files.isRegularFile(
-                  logDir(refTable).resolve(f"v$rv%05d.cstats.txt")) &&
-                  refKindMatches)
+              else if (rangeSafe && refKindMatches)
                 // stats-routed: only referenced units whose [min,max]
                 // overlaps the batch's FK range are opened — a batch
                 // entirely out of range proves its orphans from the
@@ -3061,11 +2853,11 @@ object CommitLog {
         if (!dupIn.isEmpty)
           out += s"unique($c): duplicate keys within the new batch"
         else baseVersion.foreach { v =>
-          // keys already committed? Cheap path: stats-sidecar range
-          // pruning picks only units whose [min,max] overlaps the
-          // batch's key range; the exact probe then semi-joins the
-          // pruned scan against the broadcast batch keys. Without a
-          // stats sidecar, the probe falls back to the full snapshot
+          // keys already committed? Cheap path: cstats range pruning
+          // picks only units whose [min,max] overlaps the batch's key
+          // range; the exact probe then semi-joins the pruned scan
+          // against the broadcast batch keys. Without cstats on the
+          // key, the probe falls back to the full snapshot
           // (still one semi-join, never a shuffle of the table).
           val kd = keys.distinct().localCheckpoint()
           val bounds = kd.agg(
@@ -3088,7 +2880,8 @@ object CommitLog {
               case _ => None
             }
             def ownKindMatches: Boolean = {
-              val rcs = colStats(table, v).filter(_.col == c)
+              val rcs = colStatsOpt(table, v).getOrElse(Seq.empty)
+                .filter(_.col == c)
               rcs.nonEmpty && batchKind.exists(k => rcs.forall(_.kind == k))
             }
             val rangeSafe = batchKind.nonEmpty
@@ -3109,9 +2902,7 @@ object CommitLog {
                   snapshotMoRSeq(spark, table, v, tombCols.head)
                 else snapshot(spark, table, v) // unknown key: raw, conservative
               }
-              else if (rangeSafe && java.nio.file.Files.isRegularFile(
-                  logDir(table).resolve(f"v$v%05d.cstats.txt")) &&
-                  ownKindMatches)
+              else if (rangeSafe && ownKindMatches)
                 snapshotRangeCol(spark, table, v, c,
                   bounds.get(0).toString, bounds.get(1).toString)._1
               else snapshot(spark, table, v)

@@ -753,15 +753,16 @@ object StreamQueries {
     // unit (O(batch) work — the corpus is never re-tokenized), then
     // races tryCommit at version = batchId; a replayed batch rewrites
     // the same deterministic units and loses the race to itself, so
-    // the index never double-counts a document. The stats sidecar
-    // (bucket ids + meta markers) publishes per commit by carrying
-    // the previous version's entries verbatim + footer-measuring only
-    // the new units — O(batch) metadata, and every committed
-    // generation is probe-ready FROM BIRTH. Output: the bm25FromIndex
-    // probe at BOTH streamed generations (v0 = the standing corpus,
-    // v1 = + the arriving batch), sharing the versioned from-scratch
-    // oracle — the streamed index must score exactly like a batch
-    // rebuild at every generation, which is the whole contract. At
+    // the index never double-counts a document. The cstats sidecar
+    // (each bucket unit's bval range = its bucket id) publishes per
+    // commit by carrying the previous version's entries verbatim +
+    // footer-measuring only the new units — O(batch) metadata, and
+    // every committed generation is probe-ready FROM BIRTH. Output:
+    // the bm25FromIndex probe at BOTH streamed generations (v0 = the
+    // standing corpus, v1 = + the arriving batch), sharing the
+    // versioned from-scratch oracle — the streamed index must score
+    // exactly like a batch rebuild at every generation, which is the
+    // whole contract. At
     // 100 TB this is continuous search-index ingest: per micro-batch
     // cost = tokenize(batch) + one manifest/sidecar write; probes pay
     // only the query terms' buckets across all generations.
@@ -790,35 +791,18 @@ object StreamQueries {
                 .cast("bigint").as("sum_dl"))
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$root/data/${sub}_meta")
-          val dirs = {
-            import scala.jdk.CollectionConverters._
-            val st = java.nio.file.Files.list(
-              java.nio.file.Paths.get(root, "data", sub))
-            try st.iterator().asScala
-              .filter(_.getFileName.toString.startsWith("bucket="))
-              .map(p => s"data/$sub/${p.getFileName}").toVector.sorted
-            finally st.close()
-          }
-          val counts = CommitLog
-            .footerColStats(s, root, dirs, Seq("doc_id"))
-            .map(cs => cs.unit -> cs.count).toMap
-          val st = dirs.map { u =>
-            val b = u.substring(u.indexOf("bucket=") + 7).toLong
-            (u, b, b, counts(u))
-          } :+ ((s"data/${sub}_meta", -1L, -1L, 1L))
-          val havePrev = CommitLog.versions(root).nonEmpty
-          val prev: Seq[String] =
-            if (havePrev) CommitLog.unitNames(root,
-              CommitLog.latestVersion(root))
-            else Seq.empty
-          val prevSt =
-            if (havePrev) CommitLog.stats(root,
-              CommitLog.latestVersion(root))
-            else Seq.empty
+          // the bucket units' cstats entries on bval are their bucket
+          // ids; the meta unit has no bval and no entry
+          val st = CommitLog.footerColStats(s, root,
+            CommitLog.partitionUnits(root, s"data/$sub", "bucket"), Seq("bval"))
+          val (prev, prevSt) = CommitLog.versions(root).lastOption
+            .map(v => (CommitLog.unitNames(root, v), CommitLog.colStats(root, v)))
+            .getOrElse((Seq.empty, Seq.empty))
           // idempotent: a replayed batch rewrote the same units and
           // loses the commit race here — stats publish only on win
-          if (CommitLog.tryCommit(root, id, prev ++ st.map(_._1)))
-            CommitLog.writeStats(root, id, prevSt ++ st)
+          if (CommitLog.tryCommit(root, id,
+              prev ++ st.map(_.unit) :+ s"data/${sub}_meta"))
+            CommitLog.writeColStats(root, id, prevSt ++ st)
           ()
         }, ckpt)
       docs.filter(col("doc_id") % 10 =!= 0).coalesce(1)

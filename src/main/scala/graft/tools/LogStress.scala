@@ -60,14 +60,7 @@ object LogStress {
     base.withColumn("bucket", expr(s"k DIV ${wd}L"))
       .repartition(col("bucket"))
       .write.partitionBy("bucket").parquet(s"$dir/data/v0")
-    val units = {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.list(
-        java.nio.file.Paths.get(dir, "data", "v0"))
-      try st.iterator().asScala.map(p => s"data/v0/${p.getFileName}")
-        .filter(_.contains("bucket=")).toVector.sorted
-      finally st.close()
-    }
+    val units = CommitLog.partitionUnits(dir, "data/v0", "bucket")
     CommitLog.commit(dir, 0L, units)
     CommitLog.writeColStats(dir, 0L,
       CommitLog.footerColStats(base.sparkSession, dir, units, Seq("k")))
@@ -164,14 +157,7 @@ object LogStress {
     val (tMor, _) = buildRange(base, 32)
     base.filter(col("k") % 100 === 0).select(col("k"))
       .coalesce(1).write.parquet(s"$tMor/dv")
-    CommitLog.commit(tMor, 1L, {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.list(
-        java.nio.file.Paths.get(tMor, "data", "v0"))
-      try st.iterator().asScala.map(p => s"data/v0/${p.getFileName}")
-        .filter(_.contains("bucket=")).toVector.sorted
-      finally st.close()
-    })
+    CommitLog.commit(tMor, 1L, CommitLog.partitionUnits(tMor, "data/v0", "bucket"))
     CommitLog.writeDeletes(tMor, 1L, Seq("dv"))
     def morRead(v: Long): Long = CommitLog.snapshotMoR(spark, tMor, v, "k")
       .agg(count(lit(1))).head().getLong(0)
@@ -237,15 +223,8 @@ object LogStress {
       base.limit(1000).select((col("k") + lit(77000000000L)).as("k"),
           col("p"), md5(col("k").cast("string")).as("uid"))
         .coalesce(1).write.parquet(s"$t/data/app")
-      CommitLog.commit(t, 1L, {
-        import scala.jdk.CollectionConverters._
-        val st = java.nio.file.Files.list(
-          java.nio.file.Paths.get(t, "data", "v0"))
-        val olds = try st.iterator().asScala.map(p => s"data/v0/${p.getFileName}")
-          .filter(_.contains("bucket=")).toVector.sorted
-        finally st.close()
-        olds :+ "data/app"
-      })
+      CommitLog.commit(t, 1L,
+        CommitLog.partitionUnits(t, "data/v0", "bucket") :+ "data/app")
       t
     }
     def bloomTable(): String = {
@@ -296,31 +275,20 @@ object LogStress {
       r10rows, r10per, r100rows, r100per))
 
     // MoR CDC retractions at the DECLARING version: tombstones confined
-    // to 1 of 32 key ranges — with a stats sidecar the pre-image read
-    // routes to the touched unit; without one, the only sound answer
+    // to 1 of 32 key ranges — with cstats on k the pre-image read
+    // routes to the touched unit; without them, the only sound answer
     // reads all 32 (the routed feed must cost the touched units)
     def dvDeclareTable(withStats: Boolean): String = {
       val (t, wdv) = buildRange(base, 32)
-      val units = {
-        import scala.jdk.CollectionConverters._
-        val st = java.nio.file.Files.list(
-          java.nio.file.Paths.get(t, "data", "v0"))
-        try st.iterator().asScala.map(p => s"data/v0/${p.getFileName}")
-          .filter(_.contains("bucket=")).toVector.sorted
-        finally st.close()
-      }
+      val units = CommitLog.partitionUnits(t, "data/v0", "bucket")
       // the DELETE lands at v1 (one tiny appended unit + the dv
       // sidecar), so its feed's diff side costs one tiny unit and the
       // measurement isolates the PRE-IMAGE read the routing prunes
       base.limit(10).select((col("k") + lit(99000000000L)).as("k"), col("p"))
         .coalesce(1).write.parquet(s"$t/data/app")
       CommitLog.commit(t, 1L, units :+ "data/app")
-      if (withStats) {
-        val cs = CommitLog.footerColStats(spark, t, units :+ "data/app", Seq("k"))
-        CommitLog.writeStats(t, 1L,
-          cs.map(s => (s.unit, s.min.toLong, s.max.toLong, s.count)),
-          Some("k"))
-      }
+      if (withStats) CommitLog.writeColStats(t, 1L,
+        CommitLog.footerColStats(spark, t, units :+ "data/app", Seq("k")))
       base.filter(col("k") < lit(wdv) && col("k") % 10 === 0).select("k")
         .coalesce(1).write.parquet(s"$t/dv")
       CommitLog.writeDeletes(t, 1L, Seq("dv"))

@@ -40,6 +40,16 @@ abstract class GraftSpec extends AnyFunSuite {
     try df.queryExecution.executedPlan.toString finally spark.conf.set(key, prev)
   }
 
+  /** Hand-built per-unit `(unit, min, max, count)` ranges of the BIGINT
+    * column `col`, as the cstats entries `CommitLog.writeColStats`
+    * publishes and `CommitLog.keyRanges` reads back.
+    */
+  protected def longStats(col: String, ranges: Seq[(String, Long, Long, Long)])
+      : Seq[graft.sources.CommitLog.ColStat] =
+    ranges.map { case (u, mn, mx, n) =>
+      graft.sources.CommitLog.ColStat(u, col, "long", mn.toString, mx.toString, n)
+    }
+
   /** Plan-text subtree scoping: the column where a tree line's node
     * label starts (child lines indent deeper) — shared by the
     * broadcast-subtree assertions so the parsing heuristic lives in

@@ -21,7 +21,8 @@ class MorUpsertSpec extends GraftSpec {
     Seq((11L, "e"), (12L, "f"), (13L, "g"), (14L, "h")).toDF("k", "s")
       .coalesce(1).write.parquet(s"$dir/u1")
     CommitLog.commit(dir, 0L, Seq("u0", "u1"))
-    CommitLog.writeStats(dir, 0L, Seq(("u0", 1L, 4L, 4L), ("u1", 11L, 14L, 4L)))
+    CommitLog.writeColStats(dir, 0L,
+      longStats("k", Seq(("u0", 1L, 4L, 4L), ("u1", 11L, 14L, 4L))))
   }
 
   test("upsertMoR: post-images visible, pre-images replaced, raw rows grow") {
@@ -78,7 +79,8 @@ class MorUpsertSpec extends GraftSpec {
     Seq(Tuple1(2L), Tuple1(3L)).toDF("k")
       .coalesce(1).write.parquet(s"$dir/dv")
     CommitLog.commit(dir, 1L, Seq("u0", "u1"))
-    CommitLog.writeStats(dir, 1L, Seq(("u0", 1L, 4L, 4L), ("u1", 11L, 14L, 4L)))
+    CommitLog.writeColStats(dir, 1L,
+      longStats("k", Seq(("u0", 1L, 4L, 4L), ("u1", 11L, 14L, 4L))))
     CommitLog.writeDeletes(dir, 1L, Seq("dv"))
     def bytesOf(rel: String): Seq[(String, Long)] = {
       val p = java.nio.file.Paths.get(dir, rel)
@@ -104,7 +106,7 @@ class MorUpsertSpec extends GraftSpec {
       .orderBy("k").collect().toSeq
     assert(CommitLog.snapshot(spark, dir, 2L).orderBy("k").collect().toSeq == want)
     // stats folded: every v2 unit has an entry
-    val st2 = CommitLog.stats(dir, 2L)
+    val st2 = CommitLog.keyRanges(dir, 2L, "k")
     assert(st2.map(_._1).toSet == CommitLog.unitNames(dir, 2L).toSet)
   }
 
@@ -172,6 +174,51 @@ class MorUpsertSpec extends GraftSpec {
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got.contains(3L -> "C") && got.contains(2L -> "B")
       && !got.contains(3L -> "c"))
+  }
+
+  test("key routing reads only the key column's stats: bucket ids on another column never route") {
+    import spark.implicits._
+    val dir = freshTable("graft_up_nonkey")
+    // an index-style table: each unit's ONLY stats are its bucket id
+    // on bval — u0 (k 1..4) is bucket 7, u1 (k 11..14) is bucket 3, so
+    // no tombstone key below falls inside any unit's bval range
+    Seq((1L, 7L), (2L, 7L), (3L, 7L), (4L, 7L)).toDF("k", "bval")
+      .coalesce(1).write.parquet(s"$dir/u0")
+    Seq((11L, 3L), (12L, 3L), (13L, 3L), (14L, 3L)).toDF("k", "bval")
+      .coalesce(1).write.parquet(s"$dir/u1")
+    CommitLog.commit(dir, 0L, Seq("u0", "u1"))
+    CommitLog.writeColStats(dir, 0L,
+      CommitLog.footerColStats(spark, dir, Seq("u0", "u1"), Seq("bval")))
+    assert(CommitLog.keyRanges(dir, 0L, "k").isEmpty)
+    // mergeCow refuses loudly, exactly as on a table with no stats
+    val ex = intercept[IllegalArgumentException](CommitLog.mergeCow(
+      spark, dir, Seq((3L, 9L)).toDF("k", "bval"), "k"))
+    assert(ex.getMessage.contains("cover 0 of 2 units"), ex.getMessage)
+    assert(CommitLog.versions(dir) == Seq(0L), "a refused merge publishes nothing")
+    // MoR delete on k of one row in each unit
+    Seq(Tuple1(2L), Tuple1(12L)).toDF("k").coalesce(1).write.parquet(s"$dir/dv")
+    CommitLog.commit(dir, 1L, Seq("u0", "u1"))
+    CommitLog.writeColStats(dir, 1L, CommitLog.colStats(dir, 0L))
+    CommitLog.writeDeletes(dir, 1L, Seq("dv"))
+    // the declaring version's feed retracts BOTH rows (a feed routed
+    // through the bucket ids would open no unit and retract none)
+    val retracted = CommitLog.changes(spark, dir, 1L)
+      .filter($"_change_type" === "delete").select("k")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(retracted == Seq(2L, 12L), s"retractions: $retracted")
+    // applyDeletes takes the unrouted path: every unit rewrites, and no
+    // tombstoned row is visible in the clean version
+    val v2 = CommitLog.applyDeletes(spark, dir, "k")
+    assert(CommitLog.deletes(dir, v2).isEmpty)
+    assert(!CommitLog.unitNames(dir, v2).exists(Set("u0", "u1")),
+      "both units hold a tombstoned key, so both must be rewritten")
+    val live = CommitLog.snapshot(spark, dir, v2).select("k")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(live == Seq(1L, 3L, 4L, 11L, 13L, 14L), s"live keys: $live")
+    // the clean version's cstats still describe every unit on bval only
+    assert(CommitLog.colStats(dir, v2).map(_.unit).toSet ==
+      CommitLog.unitNames(dir, v2).toSet)
+    assert(CommitLog.keyRanges(dir, v2, "k").isEmpty)
   }
 
 }

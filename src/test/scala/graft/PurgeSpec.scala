@@ -15,9 +15,10 @@ class PurgeSpec extends GraftSpec {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** v0 = two key-range units; v1 = those plus an appended unit. Keys
-    * 0..299, unit u<i> holds [i·100, i·100+99].
+    * 0..299, unit u<i> holds [i·100, i·100+99]. Both versions carry
+    * footer cstats on `statCols`.
     */
-  private def seed(dir: String): Unit = {
+  private def seed(dir: String, statCols: Seq[String] = Seq("k")): Unit = {
     import spark.implicits._
     (0 to 2).foreach { u =>
       (u * 100L until u * 100L + 100L).map(k => (k, k * 10L)).toDF("k", "p")
@@ -25,7 +26,8 @@ class PurgeSpec extends GraftSpec {
     }
     CommitLog.commit(dir, 0L, Seq("u0", "u1"))
     CommitLog.commit(dir, 1L, Seq("u0", "u1", "u2"))
-    (0L to 1L).foreach(v => CommitLog.rebuildStats(spark, dir, v, "k"))
+    (0L to 1L).foreach(v => CommitLog.writeColStats(dir, v, CommitLog
+      .footerColStats(spark, dir, CommitLog.unitNames(dir, v), statCols)))
   }
 
   private def mtimes(dir: String, unit: String): Map[String, Long] = {
@@ -70,12 +72,13 @@ class PurgeSpec extends GraftSpec {
     seed(t)
     CommitLog.purgeKeys(spark, t, "k", Seq(100L, 199L, 250L))
     (0L to 1L).foreach { v =>
-      val st = CommitLog.stats(t, v)
+      val st = CommitLog.keyRanges(t, v, "k")
       // counts in the sidecar must sum to the actual snapshot
       assert(st.map(_._4).sum == CommitLog.snapshot(spark, t, v).count(),
         s"stats sidecar of v$v disagrees with the data")
-      // and the key header survives the swap (routing stays sound)
-      assert(CommitLog.statsKey(t, v).contains("k"))
+      // and every unit keeps its k range across the swap (routing
+      // stays sound)
+      assert(st.map(_._1).toSet == CommitLog.unitNames(t, v).toSet)
       // purged boundary keys shrink the twin's range
       st.foreach { case (u, mn, mx, _) =>
         if (u.startsWith("purged/")) assert(mn > 100L || mx < 199L || mx < 250L)
@@ -154,16 +157,12 @@ class PurgeSpec extends GraftSpec {
 
   test("purge rebuilds cstats and bloom sidecars; pruning survives, no false negatives") {
     val t = fresh("graft_purge_sidecars")
-    seed(t)
     // index BOTH layers on both versions: range stats on k + p, bloom
     // point-lookup on k — the round-11 refusal made these two
     // capabilities mutually exclusive with purge
-    val relUnits = Map(0L -> Seq("u0", "u1"), 1L -> Seq("u0", "u1", "u2"))
-    (0L to 1L).foreach { v =>
-      CommitLog.writeColStats(t, v, CommitLog.footerColStats(
-        spark, t, relUnits(v), Seq("k", "p")))
-      CommitLog.writeBloomStats(spark, t, v, "k", 100L, 0.01)
-    }
+    seed(t, Seq("k", "p"))
+    (0L to 1L).foreach(v =>
+      CommitLog.writeBloomStats(spark, t, v, "k", 100L, 0.01))
     // keys 150..159 dirty u1 only
     val rep = CommitLog.purgeKeys(spark, t, "k", (150L until 160L).toSeq)
     assert(rep.unitsRewritten == 1L, rep.toString)

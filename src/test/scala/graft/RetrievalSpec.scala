@@ -36,29 +36,31 @@ class RetrievalSpec extends GraftSpec {
     import graft.sources.CommitLog
     q("text_bm25_postings") // ensure the cached index exists
     val root = Derived.path("bm25log", sf)
-    val st = CommitLog.stats(root, 1L)
+    // bucket units carry a bval entry (their bucket id); meta units none
+    def buckets(v: Long) = CommitLog.keyRanges(root, v, "bval")
+    def metas(v: Long) =
+      CommitLog.unitNames(root, v).filterNot(buckets(v).map(_._1).toSet)
+    val st = buckets(1L)
     val wanted = spark.createDataset(
       Seq("hash", "join", "merge", "scan", "window"))(
       org.apache.spark.sql.Encoders.STRING)
       .selectExpr("pmod(xxhash64(value), 8) AS bucket")
       .distinct().collect().map(_.getLong(0)).toSet // metadata-sized: query terms
-    val picked = st.filter { case (_, mn, _, _) => mn >= 0 && wanted(mn) }
-    val postingsUnits = st.filter(_._2 >= 0)
+    val picked = st.filter { case (_, mn, _, _) => wanted(mn) }
+    val postingsUnits = st
     // 5 terms hash into at most 5 of the 8 buckets per generation —
     // the probe must open a strict subset of the postings units, and
     // every picked unit must be one of the wanted buckets
     assert(picked.nonEmpty && picked.size < postingsUnits.size,
       s"no pruning: picked ${picked.size} of ${postingsUnits.size}")
     assert(picked.forall(u => wanted(u._2)))
-    // the 2 meta units (one per ingest generation) sit outside the
-    // bucket id space and never join a probe
-    assert(st.count(_._2 == -1L) == 2)
+    // the 2 meta units (one per ingest generation) carry no bucket id
+    // and never join a probe
+    assert(metas(1L).size == 2)
     // the DELETE version adds exactly one signed meta unit and one
     // dv tombstone unit — every bucket unit carries by name
-    val st2 = CommitLog.stats(root, 2L)
-    assert(st2.count(_._2 == -1L) == 3)
-    assert(st2.filter(_._2 >= 0).map(_._1).toSet ==
-      st.filter(_._2 >= 0).map(_._1).toSet,
+    assert(metas(2L).size == 3)
+    assert(buckets(2L).map(_._1).toSet == st.map(_._1).toSet,
       "deletion must not touch any bucket unit")
     assert(CommitLog.deletes(root, 2L).size == 1)
   }
@@ -89,10 +91,11 @@ class RetrievalSpec extends GraftSpec {
     assert(CommitLog.deletes(root, 3L).isEmpty,
       "compaction must retire the tombstone sidecar")
     // the signed meta chain collapsed to ONE unit
-    val st3 = CommitLog.stats(root, 3L)
-    assert(st3.count(_._2 == -1L) == 1, "one folded meta unit at v3")
+    val st3 = CommitLog.keyRanges(root, 3L, "bval")
+    assert(CommitLog.unitNames(root, 3L).count(u => !st3.exists(_._1 == u)) == 1,
+      "one folded meta unit at v3")
     // generational merge: at most one unit per bucket id remains
-    val perBucket = st3.filter(_._2 >= 0).groupBy(_._2).values.map(_.size)
+    val perBucket = st3.groupBy(_._2).values.map(_.size)
     assert(perBucket.forall(_ == 1),
       "each bucket's base+delta generations must merge to one unit")
     // and no tombstoned doc survived physically in any rewritten unit

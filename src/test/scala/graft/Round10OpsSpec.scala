@@ -2,7 +2,7 @@ package graft
 
 /** Round-10 additions: the vacuum ownership rule (a clone's vacuum
   * must never reach into its source table — ADVICE r9), vacuum's
-  * deletion accounting, and the fully-pruned snapshotRange read.
+  * deletion accounting, and the fully-pruned snapshotRangeCol read.
   */
 class Round10OpsSpec extends GraftSpec {
 
@@ -135,7 +135,7 @@ class Round10OpsSpec extends GraftSpec {
     }
     val st = Seq(slice(1, 30, "u_a"), slice(31, 60, "u_b"), slice(61, 100, "u_c"))
     CommitLog.commit(t, 0L, st.map(_._1))
-    CommitLog.writeStats(t, 0L, st)
+    CommitLog.writeColStats(t, 0L, longStats("k", st))
     t
   }
 
@@ -177,9 +177,9 @@ class Round10OpsSpec extends GraftSpec {
     val competitor: () => Unit = () => {
       Seq((1000L, 1.0)).toDF("k", "p").coalesce(1).write.parquet(s"$t/appended")
       CommitLog.commit(t, 1L,
-        CommitLog.stats(t, 0L).map(_._1) :+ "appended")
-      CommitLog.writeStats(t, 1L,
-        CommitLog.stats(t, 0L) :+ (("appended", 1000L, 1000L, 1L)))
+        CommitLog.unitNames(t, 0L) :+ "appended")
+      CommitLog.writeColStats(t, 1L, CommitLog.colStats(t, 0L) ++
+        longStats("k", Seq(("appended", 1000L, 1000L, 1L))))
     }
     val v = CommitLog.mergeCow(spark, t,
       Seq((35L, 999.0)).toDF("k", "p"), "k", beforeCommit = competitor)
@@ -450,13 +450,13 @@ class Round10OpsSpec extends GraftSpec {
   test("stats sidecars fold across compaction; merge routes on the folded stats") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val t = rangeTable() // 3 units, 1-30 / 31-60 / 61-100, long sidecar
+    val t = rangeTable() // 3 units, 1-30 / 31-60 / 61-100, k cstats
     val v = CommitLog.compact(spark, t, minUnitBytes = Long.MaxValue)
     assert(v == Some(1L))
     assert(CommitLog.units(t, 1L).size == 1)
     // the packed entry is the range-union / count-sum of the packed
     // units' entries — derived from sidecar text, no data read
-    assert(CommitLog.stats(t, 1L).map(s => (s._2, s._3, s._4)) ==
+    assert(CommitLog.keyRanges(t, 1L, "k").map(s => (s._2, s._3, s._4)) ==
       Seq((1L, 100L, 100L)))
     // and a MERGE after the OPTIMIZE routes on the folded sidecar
     val v2 = CommitLog.mergeCow(spark, t,
@@ -469,9 +469,7 @@ class Round10OpsSpec extends GraftSpec {
   test("mergeCow carries the cstats sidecar via footer stats on new units") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val t = rangeTable()
-    CommitLog.writeColStats(t, 0L,
-      CommitLog.footerColStats(spark, t, Seq("u_a", "u_b", "u_c"), Seq("k")))
+    val t = rangeTable() // v0 carries k cstats for every unit
     val v = CommitLog.mergeCow(spark, t,
       Seq((35L, 999.0), (500L, 7.0)).toDF("k", "p"), "k")
     val cs = CommitLog.colStats(t, v).filter(_.col == "k")
@@ -611,13 +609,13 @@ class Round10OpsSpec extends GraftSpec {
     assert(r.getDecimal(1) == r.getDecimal(3), "exact totals must match")
   }
 
-  test("snapshotRange with a no-match probe returns the empty frame, 0 scanned") {
+  test("snapshotRangeCol with a no-match probe returns the empty frame, 0 scanned") {
     import spark.implicits._
     val t = java.nio.file.Files.createTempDirectory("graft_srange").toString
     Seq((1L, "a"), (9L, "b")).toDF("k", "s").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
-    CommitLog.writeStats(t, 0L, Seq(("u0", 1L, 9L, 2L)))
-    val (df, scanned) = CommitLog.snapshotRange(spark, t, 0L, 100L, 200L)
+    CommitLog.writeColStats(t, 0L, longStats("k", Seq(("u0", 1L, 9L, 2L))))
+    val (df, scanned) = CommitLog.snapshotRangeCol(spark, t, 0L, "k", "100", "200")
     assert(scanned == 0, "a fully-pruned probe scans zero units")
     assert(df.count() == 0)
     assert(df.columns.toSeq == Seq("k", "s"),

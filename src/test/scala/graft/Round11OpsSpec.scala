@@ -29,8 +29,8 @@ class Round11OpsSpec extends GraftSpec {
       }.toDF("k", "uid").coalesce(1).write.parquet(s"$dir/u$u")
     }
     CommitLog.commit(dir, 0L, (0 until n).map(u => s"u$u"))
-    CommitLog.writeStats(dir, 0L, (0 until n).map(u =>
-      (s"u$u", u.toLong * per, u.toLong * per + per - 1, per.toLong)))
+    CommitLog.writeColStats(dir, 0L, longStats("k", (0 until n).map(u =>
+      (s"u$u", u.toLong * per, u.toLong * per + per - 1, per.toLong))))
   }
 
   private def uidOf(k: Long): String =
@@ -130,8 +130,8 @@ class Round11OpsSpec extends GraftSpec {
         .toDF("k", "s").coalesce(1).write.parquet(s"$t/u$u")
     }
     CommitLog.commit(t, 0L, (0 until 6).map(u => s"u$u"))
-    CommitLog.writeStats(t, 0L, (0 until 6).map(u =>
-      (s"u$u", u.toLong * 10, u.toLong * 10 + 9, 10L)))
+    CommitLog.writeColStats(t, 0L, longStats("k", (0 until 6).map(u =>
+      (s"u$u", u.toLong * 10, u.toLong * 10 + 9, 10L))))
     // touch units 2 and 4 (non-adjacent): the rewrite must emit ONE
     // unit per touched unit, each range a subset of its source's — a
     // collapsed rewrite would span carried u3 and permanently trip the
@@ -158,8 +158,8 @@ class Round11OpsSpec extends GraftSpec {
         .toDF("k", "s").coalesce(1).write.parquet(s"$t/u$u")
     }
     CommitLog.commit(t, 0L, (0 until 4).map(u => s"u$u"))
-    CommitLog.writeStats(t, 0L, (0 until 4).map(u =>
-      (s"u$u", u.toLong * 10, u.toLong * 10 + 9, 10L)))
+    CommitLog.writeColStats(t, 0L, longStats("k", (0 until 4).map(u =>
+      (s"u$u", u.toLong * 10, u.toLong * 10 + 9, 10L))))
     // the merge prepares against v0; in its commit window a COMPACTION
     // wins v1 (packing everything into one unit and FOLDING the stats
     // sidecar). The merge must lose, re-read the packed snapshot, and
@@ -193,13 +193,14 @@ class Round11OpsSpec extends GraftSpec {
     Seq((30L, "b"), (39L, "b")).toDF("k", "s").coalesce(1)
       .write.parquet(s"$t/u1")
     CommitLog.commit(t, 0L, Seq("u0", "u1"))
-    CommitLog.writeStats(t, 0L, Seq(("u0", 0L, 9L, 2L), ("u1", 30L, 39L, 2L)))
+    CommitLog.writeColStats(t, 0L,
+      longStats("k", Seq(("u0", 0L, 9L, 2L), ("u1", 30L, 39L, 2L))))
     // inserts land in the interior gap (15) AND above everything (50):
     // a collapsed insert unit would publish [15,50], spanning carried
     // u1 and permanently tripping the next merge's overlap guard
     val v1 = CommitLog.mergeCow(spark, t,
       Seq((15L, "gap"), (50L, "top")).toDF("k", "s"), "k")
-    val st1 = CommitLog.stats(t, v1).sortBy(_._2)
+    val st1 = CommitLog.keyRanges(t, v1, "k").sortBy(_._2)
     assert(st1.size == 4, s"one insert unit per gap, got $st1")
     st1.sliding(2).foreach { case Seq((_, _, mxa, _), (_, mnb, _, _)) =>
       assert(mxa < mnb, s"ranges must stay disjoint: $st1")
@@ -220,7 +221,8 @@ class Round11OpsSpec extends GraftSpec {
     Seq((11L, "c"), (12L, "d")).toDF("k", "s").coalesce(1)
       .write.parquet(s"$t/u1")
     CommitLog.commit(t, 0L, Seq("u0", "u1"))
-    CommitLog.writeStats(t, 0L, Seq(("u0", 1L, 2L, 2L), ("u1", 11L, 12L, 2L)))
+    CommitLog.writeColStats(t, 0L,
+      longStats("k", Seq(("u0", 1L, 2L, 2L), ("u1", 11L, 12L, 2L))))
     // simulate the mergeCow crash window: v1 wins tryCommit (here: a
     // plain append commit) but its stats sidecar was never published —
     // the next merge refuses to route
@@ -282,19 +284,18 @@ class Round11OpsSpec extends GraftSpec {
         else CommitLog.unitNames(t, CommitLog.latestVersion(t))
       val prevSt =
         if (CommitLog.versions(t).isEmpty) Seq.empty
-        else CommitLog.stats(t, CommitLog.latestVersion(t))
+        else CommitLog.colStats(t, CommitLog.latestVersion(t))
       assert(CommitLog.tryCommit(t, id, prev :+ rel))
-      val cs = CommitLog.footerColStats(spark, t, Seq(rel), Seq("k")).head
-      CommitLog.writeStats(t, id,
-        prevSt :+ ((rel, cs.min.toLong, cs.max.toLong, cs.count)))
+      CommitLog.writeColStats(t, id,
+        prevSt ++ CommitLog.footerColStats(spark, t, Seq(rel), Seq("k")))
     }
     applyBatch((0L until 10L).map(k => (k, "a")), 0L)
     applyBatch((100L until 110L).map(k => (k, "b")), 1L)
     applyBatch((200L until 210L).map(k => (k, "c")), 2L)
-    val (snap, scanned) = CommitLog.snapshotRange(spark, t, 2L, 100L, 105L)
+    val (snap, scanned) = CommitLog.snapshotRangeCol(spark, t, 2L, "k", "100", "105")
     assert(scanned == 1, s"probe must open only its batch's unit, got $scanned")
     assert(snap.filter(col("k").between(100L, 105L)).count() == 6)
-    val (_, none) = CommitLog.snapshotRange(spark, t, 2L, 500L, 600L)
+    val (_, none) = CommitLog.snapshotRangeCol(spark, t, 2L, "k", "500", "600")
     assert(none == 0, "a no-match probe is a fully-pruned read")
   }
 

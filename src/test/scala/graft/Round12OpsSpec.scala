@@ -51,7 +51,7 @@ class Round12OpsSpec extends GraftSpec {
       .select(col("bucket").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet // metadata-sized: <= nlist bucket ids
     assert(dirtyBuckets.nonEmpty)
-    val st3 = CommitLog.stats(root, 3L)
+    val st3 = CommitLog.keyRanges(root, 3L, "bval")
     dirtyBuckets.foreach { b =>
       val units = st3.filter { case (_, mn, mx, _) => mn == b && mx == b }
       assert(units.size == 1,
@@ -66,10 +66,11 @@ class Round12OpsSpec extends GraftSpec {
       .filter(col("c_id") % 9 === 0 && col("c_id") >= 10).count()
     assert(ghosts == 0L, s"$ghosts tombstoned vectors survived compaction")
     // clean buckets carried by NAME: their v2 entries appear verbatim
-    val st2 = CommitLog.stats(root, 2L).toSet
-    st3.filterNot(_._1.startsWith("data/cpct/")).foreach { e =>
-      assert(st2.contains(e), s"clean unit ${e._1} must carry verbatim")
-    }
+    val st2 = CommitLog.colStats(root, 2L).toSet
+    CommitLog.colStats(root, 3L).filterNot(_.unit.startsWith("data/cpct/"))
+      .foreach { e =>
+        assert(st2.contains(e), s"clean unit ${e.unit} must carry verbatim")
+      }
   }
 
   test("commit-ts stamps are monotonic in BOTH directions (ADVICE r11)") {
@@ -194,7 +195,7 @@ class Round12OpsSpec extends GraftSpec {
     }
   }
 
-  test("purge rebuilds ALL THREE sidecar layers in one pass") {
+  test("purge rebuilds both sidecar layers (cstats on k and p, bloom) in one pass") {
     import spark.implicits._
     val t = freshDir("graft_r12_triple")
     (0 to 1).foreach { u =>
@@ -202,16 +203,16 @@ class Round12OpsSpec extends GraftSpec {
         .toDF("k", "p").coalesce(1).write.parquet(s"$t/u$u")
     }
     CommitLog.commit(t, 0L, Seq("u0", "u1"))
-    // keyed range stats + multi-column cstats + bloom, all on v0
-    CommitLog.rebuildStats(spark, t, 0L, "k")
+    // multi-column cstats (k is the key) + bloom, all on v0
     CommitLog.writeColStats(t, 0L,
       CommitLog.footerColStats(spark, t, Seq("u0", "u1"), Seq("k", "p")))
     CommitLog.writeBloomStats(spark, t, 0L, "k", 100L, 0.01)
     val rep = CommitLog.purgeKeys(spark, t, "k", Seq(150L, 151L, 152L))
     assert(rep.rowsPurged == 3L && rep.unitsRewritten == 1L)
-    // stats (keyed header): twin re-measured, count consistent
-    assert(CommitLog.statsKey(t, 0L).contains("k"))
-    assert(CommitLog.stats(t, 0L).map(_._4).sum ==
+    // k ranges: one per unit, twin re-measured, count consistent
+    assert(CommitLog.keyRanges(t, 0L, "k").map(_._1).toSet ==
+      CommitLog.unitNames(t, 0L).toSet)
+    assert(CommitLog.keyRanges(t, 0L, "k").map(_._4).sum ==
       CommitLog.snapshot(spark, t, 0L).count())
     // cstats: BOTH columns covered for the twin
     val twinCs = CommitLog.colStats(t, 0L)

@@ -259,16 +259,16 @@ class Round9OpsSpec extends GraftSpec {
     import spark.implicits._
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
-    CommitLog.writeStats(t, 0L, Seq(("u0", 1L, 1L, 1L)))
-    // a loose vNNNNN.txt match would parse "00000.stats" and throw
+    CommitLog.writeColStats(t, 0L, longStats("id", Seq(("u0", 1L, 1L, 1L))))
+    // a loose vNNNNN.txt match would parse "00000.cstats" and throw
     assert(CommitLog.versions(t) == Seq(0L))
     assert(CommitLog.latestVersion(t) == 0L)
-    assert(CommitLog.stats(t, 0L) == Seq(("u0", 1L, 1L, 1L)))
+    assert(CommitLog.keyRanges(t, 0L, "id") == Seq(("u0", 1L, 1L, 1L)))
     // vacuum reclaims the expired version's sidecar with its manifest
     Seq((2L, "b")).toDF("id", "s").write.parquet(s"$t/u1")
     CommitLog.commit(t, 1L, Seq("u1"))
     CommitLog.vacuum(t, retain = Seq(1L))
-    intercept[IllegalArgumentException](CommitLog.stats(t, 0L))
+    intercept[IllegalArgumentException](CommitLog.colStats(t, 0L))
   }
 
   test("dml_data_skipping prunes units by stats without changing answers") {
