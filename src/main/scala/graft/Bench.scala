@@ -106,7 +106,7 @@ object Bench {
       // entry boundary: drop this entry's materializations so the next
       // entry times against the same (empty) cache state an isolated
       // run would see — the honest-tail contract above
-      graft.api.GraftOps.releaseMaterialized()
+      graft.api.GraftOps.releaseMaterialized(spark)
       // Round 18 (VERDICT r17 #1, second iteration): periodicGC=5min
       // did NOT close the in-run tail gap (r18pre gate: dedup_cluster
       // 258.9 s in-run vs ~40 s isolated, spread 1.05 — all runs

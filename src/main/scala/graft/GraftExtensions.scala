@@ -31,10 +31,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Magnitude predicates (abs(x) <= k) become pushable range
     // predicates — see plans.AbsRangePushdown.
     e.injectOptimizerRule(_ => graft.plans.AbsRangePushdown)
-    // Materialized-view automatic rewrite: aggregates subsumed by a
-    // MvCatalog-registered maintained view read the view state instead
-    // of the fact table — see plans.MvRewrite (no-op, empty catalog).
-    e.injectOptimizerRule(_ => graft.plans.MvRewrite)
     // Whole-operator tier: plans the TopKPerGroup logical node as the
     // heap-based partial+final physical operator — see plans.TopKPerGroup.
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)

@@ -30,7 +30,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally graft.api.GraftOps.releaseMaterialized()
+      finally graft.api.GraftOps.releaseMaterialized(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -180,7 +180,8 @@ object GraftOps {
     * gated tiers over one corpus should compute it ONCE and pass it as
     * `routeHint` to [[collapsedPairs]]/[[collapsedClusters]] — the
     * public [[collapseGate]] exists for exactly that (the query layer
-    * caches it per source fingerprint). Without the hint each tier
+    * keeps it as a derived entry per source fingerprint,
+    * `LlmQueries.collapseRoute`). Without the hint each tier
     * pays this full-corpus digest aggregate at plan-construction time
     * (measured +6.6% on dedup_simhash sf1 isolated, ×3 tiers per
     * surface run, all buying the SAME bit).
@@ -1840,7 +1841,6 @@ object GraftOps {
     * executor-local blocks (`localCheckpoint`) by default — fast, but
     * lost with an executor — or the reliable checkpoint path when a
     * durable `dir` (HDFS/object store on a real cluster) is supplied.
-    * Setting the SparkContext checkpoint dir is idempotent per value.
     */
   private def checkpointer(df: DataFrame, dir: Option[String]): (DataFrame, Boolean) => DataFrame = {
     // StatsReset: checkpoints PRESERVE origin statistics, and iterative
@@ -1854,8 +1854,7 @@ object GraftOps {
     import org.apache.spark.sql.graftshim.StatsReset
     dir match {
       case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(d)) sc.setCheckpointDir(d)
+        useCheckpointDir(df.sparkSession, d)
         (f, eager) => StatsReset(f.checkpoint(eager))
       case None =>
         (f, eager) => StatsReset(f.localCheckpoint(eager))
@@ -1880,8 +1879,9 @@ object GraftOps {
     * must keep checkpointing — this helper is only for bounded-depth
     * fan-out reuse.
     *
-    * Cache lifetime: each lazy persist is recorded in a registry and
-    * pinned until [[releaseMaterialized]] runs — Spark's CacheManager
+    * Cache lifetime: each lazy persist is recorded with its session
+    * ([[graft.PerSession]]) and pinned until that session's
+    * [[releaseMaterialized]] runs — Spark's CacheManager
     * would otherwise hold the blocks for the SparkSession's lifetime,
     * accumulating memory/disk across calls AND letting a later query
     * whose subtree canonically matches a cached plan silently read
@@ -1892,24 +1892,27 @@ object GraftOps {
   private def reuseMaterializer(df: DataFrame, dir: Option[String]): DataFrame => DataFrame =
     dir match {
       case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(d)) sc.setCheckpointDir(d)
+        useCheckpointDir(df.sparkSession, d)
         f => f.checkpoint(true)
       case None =>
         f => {
           val p = f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          materialized.add(p)
+          graft.PerSession(f.sparkSession).pinned.add(p)
           p
         }
     }
 
-  // Registry of frames pinned by [[reuseMaterializer]]'s lazy-cache
-  // path (identity set: the same frame registered twice unpersists
-  // once). ConcurrentHashMap-backed — operators can build plans from
-  // multiple threads.
-  private val materialized: java.util.Set[DataFrame] =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]())
+  /** Point the SparkContext's checkpoint dir under `d` unless it is
+    * already there. Spark stores the dir as `<d>/<uuid>`, a new uuid per
+    * `setCheckpointDir`, so the current dir's PARENT is what names `d`.
+    */
+  private def useCheckpointDir(s: SparkSession, d: String): Unit = {
+    val sc = s.sparkContext
+    val want = new org.apache.hadoop.fs.Path(d)
+    val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+    if (!sc.getCheckpointDir.exists(c => new org.apache.hadoop.fs.Path(c).getParent == qualified))
+      sc.setCheckpointDir(d)
+  }
 
   /** Materialize a frame that a composed pipeline references more than
     * once (round 17 — guide §5: cache only what is reused AND expensive
@@ -1925,24 +1928,22 @@ object GraftOps {
   def materializeOnce(df: DataFrame): DataFrame =
     reuseMaterializer(df, None)(df)
 
-  /** Unpersist every DataFrame the reuse materializer has pinned since
-    * the last release, returning how many were dropped. Call when the
-    * pinned blocks can no longer be trusted or afforded: Verify calls
-    * it per dump (the correctness gate stays self-contained); Bench
-    * calls it after every entry, outside the timed region, so each
-    * entry starts from the empty cache an isolated run sees;
-    * long-lived application drivers call it on their own cadence to
-    * bound storage.
+  /** Unpersist every DataFrame the reuse materializer has pinned in
+    * session `s` (by default the active one) since the last release,
+    * returning how many were dropped; other sessions' frames stay
+    * pinned. Call when the pinned blocks can no longer be trusted or
+    * afforded: Verify calls it per dump (the correctness gate stays
+    * self-contained); Bench calls it after every entry, outside the
+    * timed region, so each entry starts from the empty cache an
+    * isolated run sees; long-lived application drivers call it on
+    * their own cadence to bound storage.
     */
-  def releaseMaterialized(blocking: Boolean = false): Int = {
-    var n = 0
-    val it = materialized.iterator()
-    while (it.hasNext) {
-      it.next().unpersist(blocking)
-      it.remove()
-      n += 1
-    }
-    n
+  def releaseMaterialized(s: SparkSession = SparkSession.active,
+      blocking: Boolean = false): Int = {
+    val pinned = graft.PerSession(s).pinned
+    val frames = pinned.toArray(Array.empty[DataFrame])
+    frames.foreach { f => f.unpersist(blocking); pinned.remove(f) }
+    frames.length
   }
 
   /** Connected components by min-label propagation WITH pointer

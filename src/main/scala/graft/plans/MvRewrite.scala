@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
+import org.apache.spark.sql.SparkSession
 import graft.sources.Parquet
 
 /** MATERIALIZED-VIEW AUTOMATIC REWRITE (round 13 — VERDICT r12 #7;
@@ -61,11 +62,15 @@ import graft.sources.Parquet
   * touching non-key columns, other aggregates, a group key not a
   * function of the view key) leaves the plan untouched — a rewrite that fires wrongly
   * is a correctness bug, one that fails to fire is only a missed
-  * optimization. Registered via [[graft.GraftExtensions]] for cluster
-  * sessions and `experimental.extraOptimizations` locally; with an
-  * empty catalog the rule is a no-op.
+  * optimization. Views are registered per SparkSession:
+  * [[MvCatalog.register]] installs the rule in that session's
+  * `experimental.extraOptimizations`, and the rule reads that session's
+  * views only, so a session that registered nothing has no rule.
   */
 object MvCatalog {
+  /** A maintained view the rewrite rule can serve aggregates from. */
+  sealed trait MvView
+
   /** One maintained view: `factPaths` = the EXACT unit paths of the
     * fact snapshot the state reflects; `groupKeySql`/`valueSql` parse
     * against that scan's columns; `statePath` holds (g, n, nn, total)
@@ -73,7 +78,7 @@ object MvCatalog {
     * signed non-null value count, total the value sum.
     */
   final case class MvDef(factPaths: Set[String], groupKeySql: String,
-      valueSql: String, statePath: String)
+      valueSql: String, statePath: String) extends MvView
 
   /** A maintained JOIN view (round 15 — VERDICT r14 #2): the state
     * reflects `fact ⋈ dim ON factKeySql = dimKeySql` at EXACTLY
@@ -85,7 +90,7 @@ object MvCatalog {
     */
   final case class MvJoinDef(factPaths: Set[String], dimPaths: Set[String],
       factKeySql: String, dimKeySql: String, groupKeySql: String,
-      valueSql: String, statePath: String)
+      valueSql: String, statePath: String) extends MvView
 
   /** A STALE-TOLERANT view (round 15, second wave): the state was
     * folded through `stateVersion` of the commit-log table at
@@ -99,7 +104,7 @@ object MvCatalog {
     * (the compensation plan grows one branch per tail version).
     */
   final case class MvStaleDef(tableRoot: String, stateVersion: Long,
-      groupKeySql: String, valueSql: String, statePath: String)
+      groupKeySql: String, valueSql: String, statePath: String) extends MvView
 
   /** The stale-tolerant JOIN view (round 15, second wave — the fourth
     * cell of the {single,join} × {fresh,stale} rewrite matrix): the
@@ -125,63 +130,44 @@ object MvCatalog {
       factStateVersion: Long, dimStateVersion: Long,
       tail: Seq[(Boolean, Long, Long)],
       factKeySql: String, dimKeySql: String, groupKeySql: String,
-      valueSql: String, statePath: String)
+      valueSql: String, statePath: String) extends MvView
 
-  private val views =
-    new java.util.concurrent.ConcurrentHashMap[String, MvDef]()
-  private val joinViews =
-    new java.util.concurrent.ConcurrentHashMap[String, MvJoinDef]()
-  private val staleViews =
-    new java.util.concurrent.ConcurrentHashMap[String, MvStaleDef]()
-  private val joinStaleViews =
-    new java.util.concurrent.ConcurrentHashMap[String, MvJoinStaleDef]()
+  /** Register `view` under `name` in `s`'s catalog (replacing a view
+    * of that name) and install the rewrite rule in `s`.
+    */
+  def register(s: SparkSession, name: String, view: MvView): Unit = {
+    val st = graft.PerSession(s)
+    st.views.put(name, view)
+    st.synchronized {
+      if (!s.experimental.extraOptimizations.contains(st.mvRule))
+        s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ st.mvRule
+    }
+  }
 
-  def register(name: String, d: MvDef): Unit = views.put(name, d)
-  def registerJoin(name: String, d: MvJoinDef): Unit = joinViews.put(name, d)
-  def registerStale(name: String, d: MvStaleDef): Unit =
-    staleViews.put(name, d)
-  def registerJoinStale(name: String, d: MvJoinStaleDef): Unit =
-    joinStaleViews.put(name, d)
-  def drop(name: String): Unit = {
-    views.remove(name); joinViews.remove(name); staleViews.remove(name)
-    joinStaleViews.remove(name)
-  }
-  def clear(): Unit = {
-    views.clear(); joinViews.clear(); staleViews.clear()
-    joinStaleViews.clear()
-  }
-  def all(): Seq[MvDef] = {
-    import scala.jdk.CollectionConverters._
-    views.values.asScala.toSeq
-  }
-  def allJoins(): Seq[MvJoinDef] = {
-    import scala.jdk.CollectionConverters._
-    joinViews.values.asScala.toSeq
-  }
-  def allStale(): Seq[MvStaleDef] = {
-    import scala.jdk.CollectionConverters._
-    staleViews.values.asScala.toSeq
-  }
-  def allJoinStale(): Seq[MvJoinStaleDef] = {
-    import scala.jdk.CollectionConverters._
-    joinStaleViews.values.asScala.toSeq
-  }
+  def drop(s: SparkSession, name: String): Unit = graft.PerSession(s).views.remove(name)
+
+  /** The unit paths of commit-log `table` at `version`, absolute and
+    * normalized: the set a fresh view's `factPaths` must equal.
+    */
+  def snapshotPaths(table: String, version: Long): Set[String] =
+    graft.sources.CommitLog.units(table, version)
+      .map(u => java.nio.file.Paths.get(u).toAbsolutePath.normalize.toString).toSet
 }
 
-object MvRewrite extends Rule[LogicalPlan] {
-
-  /** Add this rule to `s`'s extra optimizations unless it is already there. */
-  def install(s: org.apache.spark.sql.SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(this))
-      s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ this
+/** The rewrite rule over one session's registered views;
+  * [[MvCatalog.register]] installs it.
+  */
+final class MvRewrite private[graft] (registered: java.util.Map[String, MvCatalog.MvView])
+    extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val defs = MvCatalog.all()
-    val joinDefs = MvCatalog.allJoins()
-    val staleDefs = MvCatalog.allStale()
-    val joinStaleDefs = MvCatalog.allJoinStale()
-    if (defs.isEmpty && joinDefs.isEmpty && staleDefs.isEmpty &&
-      joinStaleDefs.isEmpty) plan
+    import scala.jdk.CollectionConverters._
+    val views = registered.values.asScala.toSeq
+    val defs = views.collect { case d: MvCatalog.MvDef => d }
+    val joinDefs = views.collect { case d: MvCatalog.MvJoinDef => d }
+    val staleDefs = views.collect { case d: MvCatalog.MvStaleDef => d }
+    val joinStaleDefs = views.collect { case d: MvCatalog.MvJoinStaleDef => d }
+    if (views.isEmpty) plan
     else plan.transformUp {
       case agg: Aggregate =>
         // fresh exact-snapshot views first (cheapest plan), then the
@@ -799,11 +785,8 @@ object MvRewrite extends Rule[LogicalPlan] {
         .toAbsolutePath.normalize.toString
       if (scanPaths.isEmpty ||
         !scanPaths.forall(_.startsWith(rootAbs + "/"))) None
-      else graft.sources.CommitLog.versions(root).find { v =>
-        graft.sources.CommitLog.units(root, v).map(u => java.nio.file
-          .Paths.get(u).toAbsolutePath.normalize.toString)
-          .toSet == scanPaths
-      }
+      else graft.sources.CommitLog.versions(root)
+        .find(MvCatalog.snapshotPaths(root, _) == scanPaths)
     } catch { case _: Exception => None }
 
   /** The registered state unioned with the tail versions' signed

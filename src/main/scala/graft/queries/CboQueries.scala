@@ -26,49 +26,52 @@ object CboQueries {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem")
 
-  // The g_cbo_* catalog tables are SESSION-GLOBAL — only ONE data dir
-  // can be registered at a time. The cache therefore tracks the single
-  // currently-registered (appId, dir, fingerprint) triple (ADVICE r13:
-  // a per-(app,dir) map would stay 'ready' for dir A after dir B
-  // repointed the tables, silently querying B's data with B's stats
-  // under A's name). Any change of app, dir, or data fingerprint
-  // re-registers; synchronized because registration must be atomic
-  // with the cache write.
-  private val catalogState =
-    new java.util.concurrent.atomic.AtomicReference[(String, String, String)]()
-
-  /** Register the external catalog tables + statistics (idempotent
-    * while the SAME dir+fingerprint stays current) and enable CBO. The
-    * confs stay set: they only change plans for catalog tables
-    * carrying stats, which are exactly the g_cbo_* tables.
-    */
-  private[graft] def ensureCatalog(s: SparkSession, d: String): Unit = {
-    val fp = cboTables.map(t => graft.Tables.fingerprint(d, t)).mkString(";")
-    val want = (s.sparkContext.applicationId, d, fp)
-    catalogState.synchronized {
-      if (catalogState.get != want) {
-        s.conf.set("spark.sql.cbo.enabled", "true")
-        s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        cboTables.foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS g_cbo_$t")
-          s.sql(s"CREATE TABLE g_cbo_$t USING parquet LOCATION '$d/$t.parquet'")
-          // TIMESTAMP_NTZ columns are EXCLUDED from column statistics:
-          // Spark 4.1's FilterEstimation.evaluateBinary MatchErrors on
-          // TimestampNTZType when a range predicate meets column stats
-          // (upstream gap — the type postdates the estimator). Without
-          // stats the predicate estimates at default selectivity; join
-          // reorder still sees every row count and join-key NDV, which
-          // is what drives the plan.
-          val cols = s.table(s"g_cbo_$t").schema.fields
-            .filterNot(_.dataType ==
-              org.apache.spark.sql.types.TimestampNTZType)
-            .map(_.name).mkString(", ")
-          s.sql(s"ANALYZE TABLE g_cbo_$t COMPUTE STATISTICS FOR COLUMNS $cols")
-        }
-        catalogState.set(want)
-      }
+  // The g_cbo_* and g_sc_* tables live in the catalog that every session
+  // of the application shares, so one source at a time holds a name. A
+  // table records its source (path and fingerprint) in its `graft.source`
+  // property, set last, and is registered again whenever that differs or
+  // is missing (ADVICE r13: a cache that stayed 'ready' for dir A after B
+  // repointed the tables served B's data under A's name). The CBO confs
+  // are per session, so every call sets them.
+  private def register(s: SparkSession, table: String, location: String,
+      source: String)(stats: => Unit): Unit = synchronized {
+    s.conf.set("spark.sql.cbo.enabled", "true")
+    s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
+    val catalog = s.sessionState.catalog
+    if (!(catalog.tableExists(id) &&
+        catalog.getTableMetadata(id).properties.get("graft.source").contains(source))) {
+      s.sql(s"DROP TABLE IF EXISTS $table")
+      s.sql(s"CREATE TABLE $table USING parquet LOCATION '$location'")
+      stats
+      s.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('graft.source' = '$source')")
     }
   }
+
+  /** Register the external catalog tables + statistics (unless the
+    * catalog already holds them for the current dir and fingerprint)
+    * and enable CBO in `s`. The confs stay set: they only change plans
+    * for catalog tables carrying stats, which are exactly the g_cbo_*
+    * tables.
+    */
+  private[graft] def ensureCatalog(s: SparkSession, d: String): Unit =
+    cboTables.foreach { t =>
+      register(s, s"g_cbo_$t", s"$d/$t.parquet",
+          s"$d/$t.parquet@${graft.Tables.fingerprint(d, t)}") {
+        // TIMESTAMP_NTZ columns are EXCLUDED from column statistics:
+        // Spark 4.1's FilterEstimation.evaluateBinary MatchErrors on
+        // TimestampNTZType when a range predicate meets column stats
+        // (upstream gap — the type postdates the estimator). Without
+        // stats the predicate estimates at default selectivity; join
+        // reorder still sees every row count and join-key NDV, which
+        // is what drives the plan.
+        val cols = s.table(s"g_cbo_$t").schema.fields
+          .filterNot(_.dataType ==
+            org.apache.spark.sql.types.TimestampNTZType)
+          .map(_.name).mkString(", ")
+        s.sql(s"ANALYZE TABLE g_cbo_$t COMPUTE STATISTICS FOR COLUMNS $cols")
+      }
+    }
 
   /** The q8-shape market-share query, HINT-FREE, deliberately written
     * fact-first in a naive join order — the optimizer must find the
@@ -176,9 +179,6 @@ object CboQueries {
   // ANALYZE in the path).
   // ------------------------------------------------------------------
 
-  private val sidecarState =
-    new java.util.concurrent.atomic.AtomicReference[(String, String)]()
-
   /** A commit-log table of orders + customer built ONCE per (sfDir,
     * fingerprint): each table's units are single parquet FILES under
     * `<root>/<name>/data`, committed with a footer-derived cstats
@@ -242,44 +242,36 @@ object CboQueries {
     */
   private[graft] def ensureSidecarCatalog(s: SparkSession, d: String): Unit = {
     val root = sidecarTables(s, d)
-    val want = (s.sparkContext.applicationId, root)
-    sidecarState.synchronized {
-      if (sidecarState.get != want) {
-        s.conf.set("spark.sql.cbo.enabled", "true")
-        s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        Seq("orders", "customer").foreach { name =>
-          import graft.sources.CommitLog
-          val t = s"$root/$name"
-          s.sql(s"DROP TABLE IF EXISTS g_sc_$name")
-          s.sql(s"CREATE TABLE g_sc_$name USING parquet LOCATION '$t/data'")
-          val cs = CommitLog.colStats(t, 0L)
-          val lead = cs.map(_.col).head
-          val rowCount = cs.filter(_.col == lead).map(_.count).sum
-          val sizeInBytes = {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.list(java.nio.file.Paths.get(t, "data"))
-              .iterator().asScala.map(java.nio.file.Files.size).sum
-          }
-          // fold per-unit [min,max] by footer kind; only long columns
-          // are published (their footer rendering IS the catalog's
-          // external string form — the unique-probe lesson)
-          val colStats = cs.groupBy(_.col).collect {
-            case (c, units) if units.forall(_.kind == "long") =>
-              c -> org.apache.spark.sql.catalyst.catalog.CatalogColumnStat(
-                distinctCount = None,
-                min = Some(units.map(_.min.toLong).min.toString),
-                max = Some(units.map(_.max.toLong).max.toString),
-                nullCount = Some(BigInt(0)))
-          }
-          s.sessionState.catalog.alterTableStats(
-            org.apache.spark.sql.catalyst.TableIdentifier(s"g_sc_$name"),
-            Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
-              sizeInBytes = BigInt(sizeInBytes),
-              rowCount = Some(BigInt(rowCount)),
-              colStats = colStats)))
-          s.catalog.refreshTable(s"g_sc_$name")
+    Seq("orders", "customer").foreach { name =>
+      import graft.sources.CommitLog
+      val t = s"$root/$name"
+      register(s, s"g_sc_$name", s"$t/data", t) {
+        val cs = CommitLog.colStats(t, 0L)
+        val lead = cs.map(_.col).head
+        val rowCount = cs.filter(_.col == lead).map(_.count).sum
+        val sizeInBytes = {
+          import scala.jdk.CollectionConverters._
+          java.nio.file.Files.list(java.nio.file.Paths.get(t, "data"))
+            .iterator().asScala.map(java.nio.file.Files.size).sum
         }
-        sidecarState.set(want)
+        // fold per-unit [min,max] by footer kind; only long columns
+        // are published (their footer rendering IS the catalog's
+        // external string form — the unique-probe lesson)
+        val colStats = cs.groupBy(_.col).collect {
+          case (c, units) if units.forall(_.kind == "long") =>
+            c -> org.apache.spark.sql.catalyst.catalog.CatalogColumnStat(
+              distinctCount = None,
+              min = Some(units.map(_.min.toLong).min.toString),
+              max = Some(units.map(_.max.toLong).max.toString),
+              nullCount = Some(BigInt(0)))
+        }
+        s.sessionState.catalog.alterTableStats(
+          org.apache.spark.sql.catalyst.TableIdentifier(s"g_sc_$name"),
+          Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
+            sizeInBytes = BigInt(sizeInBytes),
+            rowCount = Some(BigInt(rowCount)),
+            colStats = colStats)))
+        s.catalog.refreshTable(s"g_sc_$name")
       }
     }
   }

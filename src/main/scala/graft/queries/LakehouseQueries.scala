@@ -1995,12 +1995,9 @@ object LakehouseQueries {
     val root = cdcTable(s, d)
     val last = aggViewLastState(s, d)
     val vLast = CommitLog.versions(root).last
-    graft.plans.MvCatalog.register("orders_by_g",
-      graft.plans.MvCatalog.MvDef(
-        CommitLog.units(root, vLast).map(u =>
-          java.nio.file.Paths.get(u).toAbsolutePath.normalize.toString).toSet,
+    graft.plans.MvCatalog.register(s, "orders_by_g",
+      graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, vLast),
         "k % 10", "p", last))
-    graft.plans.MvRewrite.install(s)
     (root, vLast)
   }
 
@@ -2041,12 +2038,9 @@ object LakehouseQueries {
             .cast(DecimalType(38, 2)).as("total"))
         .write.parquet(s"$dir/v0")
     }
-    graft.plans.MvCatalog.register("orders_arch_by_g",
-      graft.plans.MvCatalog.MvDef(
-        CommitLog.units(root, 0L).map(u => java.nio.file.Paths.get(u)
-          .toAbsolutePath.normalize.toString).toSet,
+    graft.plans.MvCatalog.register(s, "orders_arch_by_g",
+      graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, 0L),
         "k % 10", "p", s"$stDir/v0"))
-    graft.plans.MvRewrite.install(s)
     (root, 0L)
   }
 
@@ -2156,12 +2150,11 @@ object LakehouseQueries {
     val fact = cdcTable(s, d)
     val dim = dimTable(s, d)
     val root = joinViewStateRoot(s, d)
-    graft.plans.MvCatalog.registerJoinStale("orders_join_dim_stale",
+    graft.plans.MvCatalog.register(s, "orders_join_dim_stale",
       graft.plans.MvCatalog.MvJoinStaleDef(fact, dim,
         factStateVersion = 2L, dimStateVersion = 0L,
         tail = Seq((true, 3L, 0L)),
         "k", "k", "g", "p", s"$root/s2"))
-    graft.plans.MvRewrite.install(s)
     (fact, dim, root)
   }
 
@@ -2285,9 +2278,8 @@ object LakehouseQueries {
       s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
     val root = appendTable(s, d)
     val state = appendStaleState(s, d)
-    graft.plans.MvCatalog.registerStale("orders_append_stale_k7",
+    graft.plans.MvCatalog.register(s, "orders_append_stale_k7",
       graft.plans.MvCatalog.MvStaleDef(root, 0L, "k % 7", "p", state))
-    graft.plans.MvRewrite.install(s)
     (root, state)
   }
 
@@ -2300,12 +2292,9 @@ object LakehouseQueries {
     val root = appendTable(s, d)
     val state = appendAggViewState(s, d)
     val vLast = CommitLog.versions(root).last
-    graft.plans.MvCatalog.register("orders_append_by_g",
-      graft.plans.MvCatalog.MvDef(
-        CommitLog.units(root, vLast).map(u =>
-          java.nio.file.Paths.get(u).toAbsolutePath.normalize.toString).toSet,
+    graft.plans.MvCatalog.register(s, "orders_append_by_g",
+      graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, vLast),
         "k % 10", "p", state))
-    graft.plans.MvRewrite.install(s)
     (root, vLast)
   }
 
@@ -2323,13 +2312,10 @@ object LakehouseQueries {
     val state = joinViewFinalState(s, d)
     val vf = CommitLog.versions(fact).last
     val vd = CommitLog.versions(dim).last
-    def norm(t: String, v: Long): Set[String] =
-      CommitLog.units(t, v).map(u =>
-        java.nio.file.Paths.get(u).toAbsolutePath.normalize.toString).toSet
-    graft.plans.MvCatalog.registerJoin("orders_join_dim",
-      graft.plans.MvCatalog.MvJoinDef(norm(fact, vf), norm(dim, vd),
+    import graft.plans.MvCatalog.snapshotPaths
+    graft.plans.MvCatalog.register(s, "orders_join_dim",
+      graft.plans.MvCatalog.MvJoinDef(snapshotPaths(fact, vf), snapshotPaths(dim, vd),
         "k", "k", "g", "p", state))
-    graft.plans.MvRewrite.install(s)
     (fact, dim, vf, vd)
   }
 

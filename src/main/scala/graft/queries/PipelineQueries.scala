@@ -261,10 +261,8 @@ object PipelineQueries {
       // carry distinct prefix tokens by design — factor ~1.0) the
       // operator short-circuits to the direct formulation after one
       // cheap count, so stray duplicates cost nothing.
-      // Round 17: routing decision shared via CollapseGate (one
-      // fingerprint-cached aggregate for all three gated tiers).
       GraftOps.collapsedClusters(docs, "doc_id", "text",
-          routeHint = Some(CollapseGate.route(s, d)))(
+          routeHint = Some(LlmQueries.collapseRoute(s, d)))(
           GraftOps.ngramJaccardPairs(_, "doc_id", "text", minJaccard = 0.8))
         .orderBy("doc_id")
     }),

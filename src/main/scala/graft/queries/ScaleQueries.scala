@@ -173,12 +173,13 @@ object ScaleQueries {
 
   private val bucketSetupLock = new Object
 
-  /** Write the bucketed join tables once per session+sfDir; names carry
+  /** Write the bucketed join tables once per catalog+sfDir; names carry
     * an sfDir hash so different scale factors in one JVM never collide.
-    * The "already built" check is the session catalog itself (not a
-    * JVM-wide name cache): a second SparkSession in the same JVM has a
-    * fresh in-memory catalog that doesn't know a previous session's
-    * tables, so it must rebuild them (ADVICE r3). A plain lock (not
+    * The "already built" check is the catalog itself (not a JVM-wide
+    * name cache): every session of one SparkContext (`newSession()`
+    * too) shares the catalog and finds the tables, while a new
+    * SparkContext starts with a fresh in-memory catalog that doesn't
+    * know them, so it rebuilds them (ADVICE r3). A plain lock (not
     * ConcurrentHashMap.computeIfAbsent) so the multi-second Spark
     * writes never run while holding a CHM bin lock.
     */

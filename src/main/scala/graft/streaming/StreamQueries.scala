@@ -130,12 +130,9 @@ object StreamQueries {
     val (root, stateDir) = (s"$dir/graft_sgv_tab", s"$dir/graft_sgv_state")
     val vLast = CommitLog.versions(root).last
     val lastState = s"$stateDir/v${CommitLog.replayStates(stateDir).last}"
-    graft.plans.MvCatalog.register("orders_stream_by_g",
-      graft.plans.MvCatalog.MvDef(
-        CommitLog.units(root, vLast).map(u => java.nio.file.Paths.get(u)
-          .toAbsolutePath.normalize.toString).toSet,
+    graft.plans.MvCatalog.register(s, "orders_stream_by_g",
+      graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, vLast),
         "k % 10", "p", lastState))
-    graft.plans.MvRewrite.install(s)
     (root, stateDir, vLast)
   }
 

@@ -93,7 +93,7 @@ object AnnStress {
       copies.unionByName(mutants)
     }
 
-    val scratch = java.nio.file.Files.createTempDirectory("graft_ann").toString
+    val scratch = graft.Derived.scratch("graft_ann")
     def materialize(df: DataFrame, name: String): DataFrame = {
       val p = s"$scratch/$name"
       df.write.mode("overwrite").parquet(p)

@@ -50,7 +50,7 @@ object LogStress {
   }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_logstress").toString
+    graft.Derived.scratch("graft_logstress")
 
   /** Key-range-clustered table with `nUnits` units over orders. */
   private def buildRange(base: DataFrame, nUnits: Int): (String, Long) = {

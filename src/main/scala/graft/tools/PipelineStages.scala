@@ -34,7 +34,7 @@ object PipelineStages {
       def once(): (Long, Double) = {
         val t0 = System.nanoTime()
         val n = PipelineQueries.endToEnd(load(spark, sfDir, "documents"), st).count()
-        graft.api.GraftOps.releaseMaterialized()
+        graft.api.GraftOps.releaseMaterialized(spark)
         (n, (System.nanoTime() - t0) / 1e9)
       }
       once() // warm JIT/codegen

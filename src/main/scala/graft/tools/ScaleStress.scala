@@ -80,7 +80,7 @@ object ScaleStress {
     // grows the plan string past 2 GB and OOMs the driver building the
     // SQL-listener explain string. A scan plan keeps rounds O(1)-sized,
     // which is also how a production pipeline would run it.
-    val scratch = java.nio.file.Files.createTempDirectory("graft_stress").toString
+    val scratch = graft.Derived.scratch("graft_stress")
     def materialize(df: DataFrame, name: String): DataFrame = {
       val p = s"$scratch/$name"
       df.write.mode("overwrite").parquet(p)

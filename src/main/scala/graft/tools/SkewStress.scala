@@ -54,7 +54,7 @@ object SkewStress {
       val n = build().count()
       (n, (System.nanoTime() - t0) / 1e9)
     }
-    val scratch = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val scratch = graft.Derived.scratch("graft_skew")
     def materialize(df: DataFrame, name: String): DataFrame = {
       val p = s"$scratch/$name"
       df.write.mode("overwrite").parquet(p)

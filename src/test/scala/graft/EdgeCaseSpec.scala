@@ -46,7 +46,7 @@ class EdgeCaseSpec extends GraftSpec {
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "the quick brown fox jumps over the lazy dog tonight")
     ).toDF("rid", "body")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhidx_edge").toString + "/idx"
+    val dir = scratch("graft_mhidx_edge") + "/idx"
     GraftOps.minhashIndexBuild(corpus, "rid", "body", dir)
     assert(GraftOps.minhashIndexProbe(spark, dir,
       Seq.empty[(Long, String)].toDF("rid", "body"), "rid", "body").count() === 0L)

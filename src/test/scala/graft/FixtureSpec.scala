@@ -123,7 +123,7 @@ class FixtureSpec extends GraftSpec {
     // load it through the real path.
     import spark.implicits._
     import org.apache.spark.sql.types.TimestampNTZType
-    val dir = java.nio.file.Files.createTempDirectory("graft_nsera").toString
+    val dir = scratch("graft_nsera")
     val ns = 1700000000L * 1000000000L + 123456789L // ...123456.789µs
     Seq((1L, ns), (2L, ns + 210L)) // .789µs + 210ns = .999µs: SAME µs
       .toDF("event_id", "ts")

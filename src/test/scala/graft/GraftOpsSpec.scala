@@ -33,13 +33,13 @@ class GraftOpsSpec extends GraftSpec {
 
   test("minHashNearDupPairs leaves no cached block after releaseMaterialized") {
     val sc = spark.sparkContext
-    GraftOps.releaseMaterialized(blocking = true)
+    GraftOps.releaseMaterialized(spark, blocking = true)
     val before = sc.getRDDStorageInfo.map(_.id).toSet
     for (_ <- 1 to 3) {
       val pairs = GraftOps.minHashNearDupPairs(tiny, "rid", "body")
         .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairs.contains((1L, 2L)))
-      GraftOps.releaseMaterialized(blocking = true)
+      GraftOps.releaseMaterialized(spark, blocking = true)
     }
     val left = sc.getRDDStorageInfo.filterNot(i => before(i.id))
     assert(left.isEmpty, s"cached RDDs left: ${left.map(_.name).mkString(", ")}")
@@ -104,7 +104,7 @@ class GraftOpsSpec extends GraftSpec {
     val isDelta = (id: Long) => id >= 5L
     val corpus = docs.filter(!col("doc_id").geq(5L))
     val delta = docs.filter(col("doc_id").geq(5L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhidx").toString + "/idx"
+    val dir = scratch("graft_mhidx") + "/idx"
     GraftOps.minhashIndexBuild(corpus, "doc_id", "text", dir)
     val probed = GraftOps.minhashIndexProbe(spark, dir, delta, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -305,7 +305,7 @@ class GraftOpsSpec extends GraftSpec {
     // loops snapshot rounds through the reliable checkpoint path
     // (recoverable after executor loss) instead of executor-local
     // blocks. Results must be identical either way.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = scratch("graft_ckpt")
     val vs = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("node")
     val es = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("u", "v")
     val reliable = GraftOps.connectedComponents(vs, "node", es, "u", "v",
@@ -323,11 +323,27 @@ class GraftOpsSpec extends GraftSpec {
     assert(written > 0, s"no reliable checkpoint files under $dir")
   }
 
+  test("reliable checkpointDir: repeated calls with one dir keep one checkpoint subdirectory") {
+    // Spark stores the checkpoint dir as <dir>/<uuid>; re-pointing it on
+    // every call would leave one uuid subdirectory per call
+    val dir = scratch("graft_ckpt_once")
+    val vs = Seq(1L, 2L, 3L).toDF("node")
+    val es = Seq((1L, 2L)).toDF("u", "v")
+    for (_ <- 1 to 2)
+      GraftOps.connectedComponents(vs, "node", es, "u", "v",
+        checkpointDir = Some(dir)).collect()
+    val subdirs = {
+      val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      try st.toArray.toSeq finally st.close()
+    }
+    assert(subdirs.size == 1, s"checkpoint subdirectories under $dir: $subdirs")
+  }
+
   test("LSH tiers: reliable checkpointDir path matches the local default") {
     // The signature/shingle materialization (round-6 materialize-once
     // fix) honors the same durable-checkpoint contract as the
     // iterative graph ops.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_lsh").toString
+    val dir = scratch("graft_ckpt_lsh")
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "the quick brown fox jumps over the lazy dog tonight"),

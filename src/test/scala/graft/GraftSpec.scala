@@ -27,17 +27,24 @@ abstract class GraftSpec extends AnyFunSuite {
   protected def q(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sf)
 
+  /** A fresh, empty directory named `<prefix><n>` for one test's files,
+    * under the derived store's per-JVM root ([[Derived.scratch]]), so
+    * it is deleted when the test JVM exits.
+    */
+  protected def scratch(prefix: String): String = Derived.scratch(prefix)
+
   /** `df`'s executed plan as text with every scan Location in full.
     * Spark cuts a Location to `spark.sql.maxMetadataStringLength` (100
     * characters by default), shorter than a derived-store path, so a
     * negative path check on the cut text would pass vacuously. The
-    * session's setting is restored afterwards.
+    * setting of `df`'s session is restored afterwards.
     */
   protected def planText(df: DataFrame): String = {
     val key = "spark.sql.maxMetadataStringLength"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, Int.MaxValue.toString)
-    try df.queryExecution.executedPlan.toString finally spark.conf.set(key, prev)
+    val conf = df.sparkSession.conf
+    val prev = conf.get(key)
+    conf.set(key, Int.MaxValue.toString)
+    try df.queryExecution.executedPlan.toString finally conf.set(key, prev)
   }
 
   /** Hand-built per-unit `(unit, min, max, count)` ranges of the BIGINT

@@ -10,9 +10,6 @@ class MorUpsertSpec extends GraftSpec {
 
   import graft.sources.CommitLog
 
-  private def freshTable(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** v0 = two range units (k 1..4 and k 11..14) with stats. */
   private def seed(dir: String): Unit = {
     import spark.implicits._
@@ -27,7 +24,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("upsertMoR: post-images visible, pre-images replaced, raw rows grow") {
     import spark.implicits._
-    val dir = freshTable("graft_up1")
+    val dir = scratch("graft_up1")
     seed(dir)
     val v1 = CommitLog.upsertMoR(spark,
       dir, Seq((2L, "B"), (20L, "new")).toDF("k", "s"), "k")
@@ -44,7 +41,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("the sequence rule is what saves the post-images from their own tombstones") {
     import spark.implicits._
-    val dir = freshTable("graft_up2")
+    val dir = scratch("graft_up2")
     seed(dir)
     CommitLog.upsertMoR(spark, dir, Seq((2L, "B")).toDF("k", "s"), "k")
     // a GLOBAL apply (snapshotMoR) deletes the replacement row too —
@@ -58,7 +55,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("upsertMoR and compact refuse an un-applied MoR generation") {
     import spark.implicits._
-    val dir = freshTable("graft_up3")
+    val dir = scratch("graft_up3")
     seed(dir)
     CommitLog.upsertMoR(spark, dir, Seq((2L, "B")).toDF("k", "s"), "k")
     val e1 = intercept[IllegalArgumentException] {
@@ -73,7 +70,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("applyDeletes: routes via stats, carries untouched units byte-stable, drops the sidecar") {
     import spark.implicits._
-    val dir = freshTable("graft_up4")
+    val dir = scratch("graft_up4")
     seed(dir)
     // MoR delete confined to u0's range
     Seq(Tuple1(2L), Tuple1(3L)).toDF("k")
@@ -112,7 +109,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("changes() surfaces a MoR delete at DECLARATION; the apply version's feed is empty") {
     import spark.implicits._
-    val dir = freshTable("graft_up5")
+    val dir = scratch("graft_up5")
     seed(dir)
     Seq(Tuple1(2L)).toDF("k").coalesce(1).write.parquet(s"$dir/dv")
     CommitLog.commit(dir, 1L, Seq("u0", "u1"))
@@ -133,7 +130,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("changes() at an upsert version is the pre/post-image pair in one feed") {
     import spark.implicits._
-    val dir = freshTable("graft_up7")
+    val dir = scratch("graft_up7")
     seed(dir)
     CommitLog.upsertMoR(spark, dir,
       Seq((2L, "B"), (100L, "NEW")).toDF("k", "s"), "k")
@@ -156,7 +153,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("upsert after applyDeletes completes the cycle; a lost race retries on top") {
     import spark.implicits._
-    val dir = freshTable("graft_up6")
+    val dir = scratch("graft_up6")
     seed(dir)
     CommitLog.upsertMoR(spark, dir, Seq((2L, "B")).toDF("k", "s"), "k")
     CommitLog.applyDeletes(spark, dir, "k")
@@ -178,7 +175,7 @@ class MorUpsertSpec extends GraftSpec {
 
   test("key routing reads only the key column's stats: bucket ids on another column never route") {
     import spark.implicits._
-    val dir = freshTable("graft_up_nonkey")
+    val dir = scratch("graft_up_nonkey")
     // an index-style table: each unit's ONLY stats are its bucket id
     // on bval — u0 (k 1..4) is bucket 7, u1 (k 11..14) is bucket 3, so
     // no tombstone key below falls inside any unit's bval range

@@ -39,7 +39,7 @@ class ParquetReadSpec extends GraftSpec {
 
   /** Write `df` as the single parquet file `target`. */
   private def writeFile(df: DataFrame, target: Path): Unit = {
-    val out = Files.createTempDirectory("graft_read_w")
+    val out = Paths.get(scratch("graft_read_w"))
     df.coalesce(1).write.mode("overwrite").parquet(out.toString)
     val part = {
       val st = Files.list(out)
@@ -56,7 +56,7 @@ class ParquetReadSpec extends GraftSpec {
     * chosen by other rules than Spark's gives another schema.
     */
   private def inputKinds(): Seq[(String, Seq[String], Boolean)] = {
-    val root = Files.createTempDirectory("graft_read_kinds").toString
+    val root = scratch("graft_read_kinds")
     val file = Paths.get(root, "one.parquet")
     writeFile(Seq((1L, 10.0)).toDF("k", "p"), file)
     val dir = s"$root/dir"
@@ -137,7 +137,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("a first read's schema equals Spark's: summaries, case, NTZ, footers without Spark's schema") {
-    val root = Files.createTempDirectory("graft_read_cases").toString
+    val root = scratch("graft_read_cases")
     // a _common_metadata summary decides the schema when nothing merges
     val wide = s"$root/wide"
     Seq((1L, 10.0, "x")).toDF("k", "p", "extra").write
@@ -188,7 +188,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("a data column named like a partition column keeps Spark's place on every read and starts no job") {
-    val t = Files.createTempDirectory("graft_read_clash").resolve("t").toString
+    val t = Paths.get(scratch("graft_read_clash")).resolve("t").toString
     // the data files carry g too; Spark keeps g where the data has it,
     // where a read given the same schema would move it to the end
     Seq(("a", 1L)).toDF("g", "k").write.parquet(s"$t/g=a")
@@ -205,7 +205,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("a merged read of more units than the parallel-listing threshold lists once and reads every footer") {
-    val root = Files.createTempDirectory("graft_read_wide")
+    val root = Paths.get(scratch("graft_read_wide"))
     val n = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt + 1
     val shapes = Seq(Seq((1L, 10.0)).toDF("k", "p"),
       Seq((2L, 20.0, true)).toDF("k", "p", "flag"))
@@ -230,7 +230,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("an empty dir, a glob, a non-local path and duplicate columns raise Spark's errors") {
-    val root = Files.createTempDirectory("graft_read_err")
+    val root = Paths.get(scratch("graft_read_err"))
     val empty = Files.createDirectory(root.resolve("empty")).toString
     // columns that differ only in case, written case-sensitively: a
     // duplicate under the default session
@@ -246,7 +246,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("a second Tables.load of an unchanged table starts no Spark job") {
-    val dir = Files.createTempDirectory("graft_read_sf")
+    val dir = Paths.get(scratch("graft_read_sf"))
     Files.copy(Paths.get(sf, "documents.parquet"), dir.resolve("documents.parquet"))
     val first = Tables.load(spark, dir.toString, "documents")
     val (second, jobs2) = jobsDuring(Tables.load(spark, dir.toString, "documents"))
@@ -256,7 +256,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("a second CommitLog.snapshot of one version starts no Spark job") {
-    val t = Files.createTempDirectory("graft_read_cl").toString
+    val t = scratch("graft_read_cl")
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p").write.parquet(s"$t/u0")
     Seq((3L, 30.0)).toDF("k", "p").write.parquet(s"$t/u1")
     CommitLog.commit(t, 0L, Seq("u0", "u1"))
@@ -268,7 +268,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("a rewritten parquet file is read with its new schema") {
-    val dir = Files.createTempDirectory("graft_read_file")
+    val dir = Paths.get(scratch("graft_read_file"))
     val f = dir.resolve("documents.parquet")
     writeFile(Seq((1L, "a")).toDF("doc_id", "text"), f)
     assert(Tables.load(spark, dir.toString, "documents").columns.toSeq ==
@@ -291,7 +291,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("a rewritten parquet directory is read with its new schema") {
-    val dir = Files.createTempDirectory("graft_read_dir").resolve("t").toString
+    val dir = Paths.get(scratch("graft_read_dir")).resolve("t").toString
     Seq((1L, 10.0)).toDF("k", "p").write.parquet(dir)
     assert(Parquet.read(spark, dir).columns.toSeq == Seq("k", "p"))
     assert(Parquet.read(spark, dir).columns.toSeq == Seq("k", "p"))
@@ -308,7 +308,7 @@ class ParquetReadSpec extends GraftSpec {
   }
 
   test("snapshotEvolved and changes return the same schema and rows on a repeated read") {
-    val t = Files.createTempDirectory("graft_read_evo").toString
+    val t = scratch("graft_read_evo")
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     Seq((3L, 30.0, true)).toDF("k", "p", "flag").write.parquet(s"$t/u1")

@@ -11,9 +11,6 @@ class PurgeSpec extends GraftSpec {
 
   import graft.sources.CommitLog
 
-  private def fresh(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** v0 = two key-range units; v1 = those plus an appended unit. Keys
     * 0..299, unit u<i> holds [i·100, i·100+99]. Both versions carry
     * footer cstats on `statCols`.
@@ -41,7 +38,7 @@ class PurgeSpec extends GraftSpec {
   }
 
   test("purge erases the keys from every version; clean units stay byte-stable") {
-    val t = fresh("graft_purge_basic")
+    val t = scratch("graft_purge_basic")
     seed(t)
     val u0Before = mtimes(t, "u0")
     // keys 150..159 live only in u1
@@ -68,7 +65,7 @@ class PurgeSpec extends GraftSpec {
   }
 
   test("purge rewrites the stats sidecar consistently (twins re-measured)") {
-    val t = fresh("graft_purge_stats")
+    val t = scratch("graft_purge_stats")
     seed(t)
     CommitLog.purgeKeys(spark, t, "k", Seq(100L, 199L, 250L))
     (0L to 1L).foreach { v =>
@@ -87,7 +84,7 @@ class PurgeSpec extends GraftSpec {
   }
 
   test("a fully-purged unit is dropped from every manifest") {
-    val t = fresh("graft_purge_drop")
+    val t = scratch("graft_purge_drop")
     seed(t)
     val rep = CommitLog.purgeKeys(spark, t, "k", (200L until 300L).toSeq)
     assert(rep.unitsDropped == 1L && rep.unitsRewritten == 0L)
@@ -98,7 +95,7 @@ class PurgeSpec extends GraftSpec {
 
   test("purge scrubs MoR tombstone units; an emptied dv sidecar is deleted") {
     import spark.implicits._
-    val t = fresh("graft_purge_dv")
+    val t = scratch("graft_purge_dv")
     seed(t)
     // v2 declares a MoR delete of keys 10..19
     (10L until 20L).map(k => Tuple1(k)).toDF("k")
@@ -121,7 +118,7 @@ class PurgeSpec extends GraftSpec {
 
   test("partial tombstone purge keeps the surviving delete semantics") {
     import spark.implicits._
-    val t = fresh("graft_purge_dv2")
+    val t = scratch("graft_purge_dv2")
     seed(t)
     (10L until 20L).map(k => Tuple1(k)).toDF("k")
       .coalesce(1).write.parquet(s"$t/t0")
@@ -137,7 +134,7 @@ class PurgeSpec extends GraftSpec {
   }
 
   test("purge refuses all-emptying purges; reruns are no-ops") {
-    val t = fresh("graft_purge_refuse")
+    val t = scratch("graft_purge_refuse")
     seed(t)
     val e = intercept[IllegalArgumentException] {
       CommitLog.purgeKeys(spark, t, "k", (0L until 200L).toSeq)
@@ -147,7 +144,7 @@ class PurgeSpec extends GraftSpec {
     assert(CommitLog.snapshot(spark, t, 0L).count() == 200L)
     assert(CommitLog.units(t, 0L).forall(u => !u.contains("purged")))
     // a clean table: purging absent keys reports all-zero
-    val t2 = fresh("graft_purge_noop")
+    val t2 = scratch("graft_purge_noop")
     seed(t2)
     CommitLog.purgeKeys(spark, t2, "k", Seq(77L))
     val again = CommitLog.purgeKeys(spark, t2, "k", Seq(77L))
@@ -156,7 +153,7 @@ class PurgeSpec extends GraftSpec {
   }
 
   test("purge rebuilds cstats and bloom sidecars; pruning survives, no false negatives") {
-    val t = fresh("graft_purge_sidecars")
+    val t = scratch("graft_purge_sidecars")
     // index BOTH layers on both versions: range stats on k + p, bloom
     // point-lookup on k — the round-11 refusal made these two
     // capabilities mutually exclusive with purge
@@ -198,8 +195,8 @@ class PurgeSpec extends GraftSpec {
   }
 
   test("twin names are deterministic per (unit, request) — rerun-idempotent naming") {
-    val ta = fresh("graft_purge_name_a")
-    val tb = fresh("graft_purge_name_b")
+    val ta = scratch("graft_purge_name_a")
+    val tb = scratch("graft_purge_name_b")
     seed(ta); seed(tb)
     CommitLog.purgeKeys(spark, ta, "k", Seq(150L, 151L))
     CommitLog.purgeKeys(spark, tb, "k", Seq(151L, 150L)) // order must not matter
@@ -211,7 +208,7 @@ class PurgeSpec extends GraftSpec {
     assert(twinA.nonEmpty && twinA == twinB,
       s"same (unit, key set) must yield the same twin name: $twinA vs $twinB")
     // a DIFFERENT request maps the same unit to a DIFFERENT twin
-    val tc = fresh("graft_purge_name_c")
+    val tc = scratch("graft_purge_name_c")
     seed(tc)
     CommitLog.purgeKeys(spark, tc, "k", Seq(150L, 152L))
     val twinC = twins(tc)
@@ -221,7 +218,7 @@ class PurgeSpec extends GraftSpec {
 
   test("frame purge plans the key set as a broadcast anti-join, not an In list") {
     import spark.implicits._
-    val t = fresh("graft_purge_plan")
+    val t = scratch("graft_purge_plan")
     seed(t)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {

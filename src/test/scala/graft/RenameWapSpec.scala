@@ -11,9 +11,6 @@ class RenameWapSpec extends GraftSpec {
 
   import graft.sources.CommitLog
 
-  private def fresh(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** v0 = (k, p) over two units. */
   private def seed(dir: String): Unit = {
     import spark.implicits._
@@ -37,7 +34,7 @@ class RenameWapSpec extends GraftSpec {
   }
 
   test("renameColumn is metadata-only: zero data files touched") {
-    val t = fresh("graft_ren_meta")
+    val t = scratch("graft_ren_meta")
     seed(t)
     val before = dataFiles(t)
     val v = CommitLog.renameColumn(spark, t, "p", "price")
@@ -49,7 +46,7 @@ class RenameWapSpec extends GraftSpec {
   }
 
   test("time travel is name-faithful: v0 reads p, v1 reads price, values equal") {
-    val t = fresh("graft_ren_tt")
+    val t = scratch("graft_ren_tt")
     seed(t)
     CommitLog.renameColumn(spark, t, "p", "price")
     val v0 = CommitLog.snapshotMapped(spark, t, 0L)
@@ -61,7 +58,7 @@ class RenameWapSpec extends GraftSpec {
   }
 
   test("renames chain through one physical entry; renaming back drops the map") {
-    val t = fresh("graft_ren_chain")
+    val t = scratch("graft_ren_chain")
     seed(t)
     CommitLog.renameColumn(spark, t, "p", "price")
     CommitLog.renameColumn(spark, t, "price", "unit_price")
@@ -76,7 +73,7 @@ class RenameWapSpec extends GraftSpec {
   }
 
   test("rename validates against the LOGICAL schema") {
-    val t = fresh("graft_ren_val")
+    val t = scratch("graft_ren_val")
     seed(t)
     CommitLog.renameColumn(spark, t, "p", "price")
     // the old name is gone at the logical layer
@@ -93,7 +90,7 @@ class RenameWapSpec extends GraftSpec {
 
   test("toPhysical lets post-rename appends keep the frozen physical schema") {
     import spark.implicits._
-    val t = fresh("graft_ren_append")
+    val t = scratch("graft_ren_append")
     seed(t)
     CommitLog.renameColumn(spark, t, "p", "price")
     val delta = (100L until 120L).map(k => (k, k * 10L)).toDF("k", "price")
@@ -110,7 +107,7 @@ class RenameWapSpec extends GraftSpec {
 
   test("staged branch is invisible to main; publish promotes it atomically") {
     import spark.implicits._
-    val t = fresh("graft_wap_pub")
+    val t = scratch("graft_wap_pub")
     seed(t)
     (100L until 150L).map(k => (k, k * 10L)).toDF("k", "p")
       .coalesce(1).write.parquet(s"$t/delta")
@@ -128,7 +125,7 @@ class RenameWapSpec extends GraftSpec {
 
   test("abandon reclaims the branch's exclusive units, keeps shared ones") {
     import spark.implicits._
-    val t = fresh("graft_wap_abandon")
+    val t = scratch("graft_wap_abandon")
     seed(t)
     (100L until 150L).map(k => (k, k * 10L)).toDF("k", "p")
       .coalesce(1).write.parquet(s"$t/bad")
@@ -144,7 +141,7 @@ class RenameWapSpec extends GraftSpec {
   }
 
   test("double-staging the same branch fails loudly") {
-    val t = fresh("graft_wap_double")
+    val t = scratch("graft_wap_double")
     seed(t)
     CommitLog.stageBranch(t, "b", Seq("u0"))
     val e = intercept[IllegalStateException] {
@@ -154,7 +151,7 @@ class RenameWapSpec extends GraftSpec {
   }
 
   test("publishBranch survives a concurrent main commit: retries to the next version") {
-    val t = fresh("graft_wap_race")
+    val t = scratch("graft_wap_race")
     seed(t)
     CommitLog.stageBranch(t, "b", Seq("u0", "u1"))
     // a concurrent writer takes v1 while the audit runs
@@ -165,7 +162,7 @@ class RenameWapSpec extends GraftSpec {
   }
 
   test("vacuum keeps a staged branch's units even when only expired versions reference them") {
-    val t = fresh("graft_wap_vac")
+    val t = scratch("graft_wap_vac")
     seed(t)
     // v1 drops u1; a branch re-stages it (e.g. a restore-under-audit)
     CommitLog.commit(t, 1L, Seq("u0"))

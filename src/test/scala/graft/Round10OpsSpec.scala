@@ -10,8 +10,8 @@ class Round10OpsSpec extends GraftSpec {
 
   test("vacuum on a shallow clone never deletes the source's units") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft_vsrc").toString
-    val clone = java.nio.file.Files.createTempDirectory("graft_vcl").toString
+    val src = scratch("graft_vsrc")
+    val clone = scratch("graft_vcl")
     Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$src/u0")
     CommitLog.commit(src, 0L, Seq("u0"))
     // shallow clone: v0 borrows the source unit by ../-relative path,
@@ -38,7 +38,7 @@ class Round10OpsSpec extends GraftSpec {
 
   test("commitChecked enforces writer schema: types pinned, evolution opt-in") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_enf").toString
+    val t = scratch("graft_enf")
     Seq((1L, "a")).toDF("k", "s").write.parquet(s"$t/u0")
     CommitLog.commitChecked(spark, t, 0L, Seq("u0"))
     // type flip on an existing column: rejected at the WRITE, not at
@@ -57,7 +57,7 @@ class Round10OpsSpec extends GraftSpec {
   }
 
   test("commit rejects unit names that would corrupt the log encoding") {
-    val t = java.nio.file.Files.createTempDirectory("graft_badname").toString
+    val t = scratch("graft_badname")
     intercept[IllegalArgumentException](
       CommitLog.tryCommit(t, 0L, Seq("a\nphantom")))
     intercept[IllegalArgumentException](
@@ -69,7 +69,7 @@ class Round10OpsSpec extends GraftSpec {
   }
 
   test("ownsUnit resolves .. segments against the table root") {
-    val t = java.nio.file.Files.createTempDirectory("graft_own").toString
+    val t = scratch("graft_own")
     assert(CommitLog.ownsUnit(t, "data/u0"))
     assert(!CommitLog.ownsUnit(t, "../elsewhere/u0"))
     assert(!CommitLog.ownsUnit(t, "data/../../elsewhere"))
@@ -78,7 +78,7 @@ class Round10OpsSpec extends GraftSpec {
 
   test("vacuum counts real file deletions and surfaces failures") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_vcount").toString
+    val t = scratch("graft_vcount")
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$t/keep")
     Seq((2L, "b")).toDF("id", "s").write.parquet(s"$t/dead")
     CommitLog.commit(t, 0L, Seq("keep", "dead"))
@@ -127,7 +127,7 @@ class Round10OpsSpec extends GraftSpec {
   /** 3 range-clustered units (k 1-30, 31-60, 61-100) with stats. */
   private def rangeTable(): String = {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_mrg").toString
+    val t = scratch("graft_mrg")
     def slice(lo: Long, hi: Long, u: String): (String, Long, Long, Long) = {
       (lo to hi).map(k => (k, k * 2.0)).toDF("k", "p")
         .coalesce(1).write.parquet(s"$t/$u")
@@ -194,7 +194,7 @@ class Round10OpsSpec extends GraftSpec {
   test("changes(): appends are all-insert, OPTIMIZE is empty, updates pair up") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val t = java.nio.file.Files.createTempDirectory("graft_cdc_t").toString
+    val t = scratch("graft_cdc_t")
     Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "p")
       .write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -228,7 +228,7 @@ class Round10OpsSpec extends GraftSpec {
 
   test("changes() across additive schema evolution null-fills the old side") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_cdc_se").toString
+    val t = scratch("graft_cdc_se")
     Seq((1L, 10.0)).toDF("k", "p").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     // v1 rewrites u0 WITH a new column: the removed side lacks `flag`,
@@ -244,7 +244,7 @@ class Round10OpsSpec extends GraftSpec {
   test("footerColStats agrees with a recomputing scan, long and string") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val t = java.nio.file.Files.createTempDirectory("graft_fstat").toString
+    val t = scratch("graft_fstat")
     val df = (1L to 500L).map(k => (k, f"id$k%06d")).toDF("k", "s")
     df.repartition(3).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -288,9 +288,9 @@ class Round10OpsSpec extends GraftSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft_slogt").toString
+    val root = scratch("graft_slogt")
     val dataDir = s"$root/data"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_slogt_ck").toString
+    val ckpt = scratch("graft_slogt_ck")
     def unitFiles(): Seq[String] = {
       import scala.jdk.CollectionConverters._
       val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dataDir))
@@ -385,7 +385,7 @@ class Round10OpsSpec extends GraftSpec {
   test("merge-on-read deletes never touch data files; compaction applies them") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val t = java.nio.file.Files.createTempDirectory("graft_mor_t").toString
+    val t = scratch("graft_mor_t")
     Seq((1L, "a"), (2L, "b"), (3L, "c"), (7L, "d")).toDF("k", "s")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -413,7 +413,7 @@ class Round10OpsSpec extends GraftSpec {
     assert(CommitLog.snapshotMoR(spark, t, 2L, "k").count() == 2)
     // and a RETAINED version's tombstones survive a vacuum (deleting
     // them would resurrect its deleted rows)
-    val t2 = java.nio.file.Files.createTempDirectory("graft_mor_t2").toString
+    val t2 = scratch("graft_mor_t2")
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(s"$t2/u0")
     CommitLog.commit(t2, 0L, Seq("u0"))
     Seq(Tuple1(2L)).toDF("k").write.parquet(s"$t2/dv")
@@ -427,7 +427,7 @@ class Round10OpsSpec extends GraftSpec {
 
   test("compact() bin-packs only the small-file backlog") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_cpt").toString
+    val t = scratch("graft_cpt")
     (1L to 20000L).map(k => (k, s"row$k")).toDF("k", "s")
       .coalesce(1).write.parquet(s"$t/big")
     (1 to 3).foreach { i =>
@@ -508,7 +508,7 @@ class Round10OpsSpec extends GraftSpec {
       "the compaction carried the sidecar (n_dv_units=1); it removed " +
         "units, so it is rightly not an append either")
     // incremental() refuses the version that declared the deletes
-    val t2 = java.nio.file.Files.createTempDirectory("graft_dvinc").toString
+    val t2 = scratch("graft_dvinc")
     Seq((1L, "a")).toDF("k", "s").write.parquet(s"$t2/u0")
     CommitLog.commit(t2, 0L, Seq("u0"))
     Seq((2L, "b")).toDF("k", "s").write.parquet(s"$t2/u1")
@@ -523,7 +523,7 @@ class Round10OpsSpec extends GraftSpec {
   test("bloom sidecar prunes point lookups where range stats cannot") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val t = java.nio.file.Files.createTempDirectory("graft_bloomt").toString
+    val t = scratch("graft_bloomt")
     // 4 units clustered on k; uid is scattered (hash-shaped), so every
     // unit's uid min/max spans the domain — range stats prune nothing
     (0 until 4).foreach { u =>
@@ -552,7 +552,7 @@ class Round10OpsSpec extends GraftSpec {
 
   test("versionAsOf resolves what a reader at that instant saw") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val t = scratch("graft_asof")
     Seq((1L, "a")).toDF("k", "s").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     val between = java.time.Instant.now()
@@ -582,7 +582,7 @@ class Round10OpsSpec extends GraftSpec {
 
   test("changes() and snapshotMoR compile to the plans their cost model claims") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_plan_t").toString
+    val t = scratch("graft_plan_t")
     (1L to 500L).map(k => (k, k * 2.0)).toDF("k", "p").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     (1L to 400L).map(k => (k, k * 2.0)).toDF("k", "p").write.parquet(s"$t/u1")
@@ -611,7 +611,7 @@ class Round10OpsSpec extends GraftSpec {
 
   test("snapshotRangeCol with a no-match probe returns the empty frame, 0 scanned") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft_srange").toString
+    val t = scratch("graft_srange")
     Seq((1L, "a"), (9L, "b")).toDF("k", "s").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     CommitLog.writeColStats(t, 0L, longStats("k", Seq(("u0", 1L, 9L, 2L))))

@@ -12,9 +12,6 @@ class Round11OpsSpec extends GraftSpec {
 
   import graft.sources.CommitLog
 
-  private def fresh(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** `n` units clustered on k (disjoint ranges of `per` keys) with a
     * scattered `uid` string column, committed as v0 WITH range stats —
     * the bloom fixture: uid min/max spans the domain in every unit, so
@@ -37,7 +34,7 @@ class Round11OpsSpec extends GraftSpec {
     f"uid_${(k * 2654435761L) % 100000}%05d"
 
   test("bloom sidecar survives compaction as pure sidecar arithmetic") {
-    val t = fresh("graft_r11_bpack")
+    val t = scratch("graft_r11_bpack")
     seedBloom(t, 4, 250)
     CommitLog.writeBloomStats(spark, t, 0L, "uid", 250L, 0.01)
     // pack everything: the packed unit's filter must be the merged
@@ -56,7 +53,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("bloom sidecar survives mergeCow: carried verbatim + rebuilt delta-only") {
     import spark.implicits._
-    val t = fresh("graft_r11_bmerge")
+    val t = scratch("graft_r11_bmerge")
     seedBloom(t, 4, 250)
     CommitLog.writeBloomStats(spark, t, 0L, "uid", 250L, 0.01)
     // update one key inside u1: only u1's filter is rebuilt
@@ -80,7 +77,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("bloom sidecar survives applyDeletes; emptied units leave the manifest") {
     import spark.implicits._
-    val t = fresh("graft_r11_bapply")
+    val t = scratch("graft_r11_bapply")
     seedBloom(t, 4, 250)
     CommitLog.writeBloomStats(spark, t, 0L, "uid", 250L, 0.01)
     // tombstone ALL of u0 plus one row of u2: u0 must vanish (no
@@ -109,7 +106,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("numeric probes hash like the build: no guaranteed false negatives") {
     import spark.implicits._
-    val t = fresh("graft_r11_bnum")
+    val t = scratch("graft_r11_bnum")
     (0 until 100).map(i => Tuple1(i.toLong * 7)).toDF("k")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -124,7 +121,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("mergeCow on non-adjacent units keeps ranges disjoint and the table mergeable") {
     import spark.implicits._
-    val t = fresh("graft_r11_nonadj")
+    val t = scratch("graft_r11_nonadj")
     (0 until 6).foreach { u =>
       (0 until 10).map(i => ((u * 10 + i).toLong, s"s$u"))
         .toDF("k", "s").coalesce(1).write.parquet(s"$t/u$u")
@@ -152,7 +149,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("cross-op OCC: a merge losing to a concurrent compaction retries on the packed snapshot") {
     import spark.implicits._
-    val t = fresh("graft_r11_xrace")
+    val t = scratch("graft_r11_xrace")
     (0 until 4).foreach { u =>
       (0 until 10).map(i => ((u * 10 + i).toLong, s"s$u"))
         .toDF("k", "s").coalesce(1).write.parquet(s"$t/u$u")
@@ -185,7 +182,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("mergeCow inserts split per gap: an interior-gap layout stays mergeable") {
     import spark.implicits._
-    val t = fresh("graft_r11_gaps")
+    val t = scratch("graft_r11_gaps")
     // layout with an INTERIOR RANGE GAP (natural after applyDeletes
     // empties a unit): [0..9] and [30..39]
     Seq((0L, "a"), (9L, "a")).toDF("k", "s").coalesce(1)
@@ -215,7 +212,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("rebuildStats recovers the published-but-statless crash window") {
     import spark.implicits._
-    val t = fresh("graft_r11_rebuild")
+    val t = scratch("graft_r11_rebuild")
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").coalesce(1)
       .write.parquet(s"$t/u0")
     Seq((11L, "c"), (12L, "d")).toDF("k", "s").coalesce(1)
@@ -270,7 +267,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("a streamed table gets range skipping for free via per-batch delta stats") {
     import spark.implicits._
-    val t = fresh("graft_r11_sinkstats")
+    val t = scratch("graft_r11_sinkstats")
     // the stream_commit_sink foreachBatch body EXTENDED by the
     // delta-sized stats publish: carry the previous entries verbatim,
     // footer-measure ONLY the new unit — O(batch) metadata per commit,
@@ -301,7 +298,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("changes() through additive schema evolution aligns pre-images with null") {
     import spark.implicits._
-    val t = fresh("graft_r11_cdcevo")
+    val t = scratch("graft_r11_cdcevo")
     Seq((1L, "a")).toDF("k", "s").coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     // v1 COW-rewrites u0 into an evolved unit that ADDS a column: the
@@ -324,7 +321,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("footerColStats recurses into nested unit layouts") {
     import spark.implicits._
-    val t = fresh("graft_r11_nested")
+    val t = scratch("graft_r11_nested")
     // one UNIT whose files live in subdirectories — a top-level-only
     // listing would publish an understated entry that mis-prunes
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").coalesce(1)
@@ -340,7 +337,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("bloom sidecar lines armor the column name") {
     import spark.implicits._
-    val t = fresh("graft_r11_armor")
+    val t = scratch("graft_r11_armor")
     Seq((1L, "x"), (2L, "y")).toDF("k", "weird|col").coalesce(1)
       .write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -355,7 +352,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("writeBloomStatsDelta: append publish at delta cost, loud when uncovered") {
     import spark.implicits._
-    val t = fresh("graft_r11_bdelta")
+    val t = scratch("graft_r11_bdelta")
     seedBloom(t, 2, 250)
     CommitLog.writeBloomStats(spark, t, 0L, "uid", 250L, 0.01)
     (500 until 750).map(i => (i.toLong, uidOf(i.toLong))).toDF("k", "uid")
@@ -378,7 +375,7 @@ class Round11OpsSpec extends GraftSpec {
     intercept[IllegalArgumentException](CommitLog.writeBloomStatsDelta(
       spark, t, 1L, 2L, Seq.empty, 250L, 0.01))
     // and carrying from a bloom-less version is refused up front
-    val t2 = fresh("graft_r11_bdelta2")
+    val t2 = scratch("graft_r11_bdelta2")
     seedBloom(t2, 1, 10)
     intercept[IllegalArgumentException](CommitLog.writeBloomStatsDelta(
       spark, t2, 0L, 0L, Seq.empty, 10L, 0.01))
@@ -386,7 +383,7 @@ class Round11OpsSpec extends GraftSpec {
 
   test("TIMESTAMP AS OF: boundary inclusive, pre-history loud, monotone stamps") {
     import spark.implicits._
-    val t = fresh("graft_r11_asof")
+    val t = scratch("graft_r11_asof")
     Seq((1L, "a")).toDF("k", "s").coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     // AS OF before any stamp exists is refused, not defaulted

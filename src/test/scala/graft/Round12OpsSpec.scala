@@ -75,8 +75,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("commit-ts stamps are monotonic in BOTH directions (ADVICE r11)") {
     import spark.implicits._
-    val t = java.nio.file.Files
-      .createTempDirectory("graft_r12_tsmono").toString
+    val t = scratch("graft_r12_tsmono")
     (0L to 2L).foreach { v =>
       Seq((v, "x")).toDF("k", "s").coalesce(1).write.parquet(s"$t/u$v")
       CommitLog.commit(t, v, (0L to v).map(u => s"u$u"))
@@ -197,7 +196,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("purge rebuilds both sidecar layers (cstats on k and p, bloom) in one pass") {
     import spark.implicits._
-    val t = freshDir("graft_r12_triple")
+    val t = scratch("graft_r12_triple")
     (0 to 1).foreach { u =>
       (u * 100L until u * 100L + 100L).map(k => (k, k * 10L))
         .toDF("k", "p").coalesce(1).write.parquet(s"$t/u$u")
@@ -228,7 +227,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("purge composes with an ADDED column: defaults survive the rewrite") {
     import spark.implicits._
-    val t = freshDir("graft_r12_purgeadd")
+    val t = scratch("graft_r12_purgeadd")
     (0L until 50L).map(k => (k, k * 10L)).toDF("k", "p")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -251,7 +250,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("purge composes with a WIDENED key: mixed int/long generations scan clean") {
     import spark.implicits._
-    val t = freshDir("graft_r12_purgewiden")
+    val t = scratch("graft_r12_purgewiden")
     // old generation: INT key+value files
     Seq((1, 100), (2, 200), (4, 400)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$t/u0")
@@ -279,7 +278,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("purge composes with column mapping: renamed table purges cleanly") {
     import spark.implicits._
-    val t = freshDir("graft_r12_purgemap")
+    val t = scratch("graft_r12_purgemap")
     (0L until 100L).map(k => (k, k * 10L)).toDF("k", "p")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -299,7 +298,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("widened columns keep range skipping: cstats probe after widen") {
     import spark.implicits._
-    val t = freshDir("graft_r12_widenstats")
+    val t = scratch("graft_r12_widenstats")
     // two INT-typed k-range units with a cstats sidecar
     Seq(0, 1).foreach { u =>
       (u * 100 until u * 100 + 100).map(k => (k, k * 2))
@@ -319,12 +318,9 @@ class Round12OpsSpec extends GraftSpec {
     assert(df.filter(col("k").between(0, 99)).count() == 100L)
   }
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("dropColumn: metadata-only, time-travel-faithful, never re-requested") {
     import spark.implicits._
-    val t = freshDir("graft_r12_drop")
+    val t = scratch("graft_r12_drop")
     Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "s", "p")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -359,7 +355,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("widenColumn: old narrow files read under the wider requested schema") {
     import spark.implicits._
-    val t = freshDir("graft_r12_widen")
+    val t = scratch("graft_r12_widen")
     // physical INT generation
     Seq((1, 100), (2, 200)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$t/u0")
@@ -390,7 +386,7 @@ class Round12OpsSpec extends GraftSpec {
       CommitLog.widenColumn(spark, t, "k", "string"))
     // widenings CHAIN: int -> bigint already in force, bigint -> int
     // refused above; decimal growth on a fresh table
-    val t2 = freshDir("graft_r12_widen2")
+    val t2 = scratch("graft_r12_widen2")
     Seq((1, "1.50")).toDF("k", "d")
       .select(col("k"), col("d").cast("decimal(10,2)").as("d"))
       .coalesce(1).write.parquet(s"$t2/u0")
@@ -402,7 +398,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("addColumn: default backfills pre-add files; appends carry it physically") {
     import spark.implicits._
-    val t = freshDir("graft_r12_add")
+    val t = scratch("graft_r12_add")
     Seq((1L, 10L), (2L, 20L)).toDF("k", "p")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -443,7 +439,7 @@ class Round12OpsSpec extends GraftSpec {
 
   test("rename, widen and drop COMPOSE through one mapping") {
     import spark.implicits._
-    val t = freshDir("graft_r12_compose")
+    val t = scratch("graft_r12_compose")
     Seq((1, 10, "x"), (2, 20, "y")).toDF("k", "p", "s")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))

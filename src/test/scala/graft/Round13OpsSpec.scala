@@ -9,12 +9,9 @@ class Round13OpsSpec extends GraftSpec {
 
   import graft.sources.CommitLog
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("addColumn cannot shadow a dropped physical column (no tombstone resurrection)") {
     import spark.implicits._
-    val t = freshDir("graft_r13_addback")
+    val t = scratch("graft_r13_addback")
     Seq((1L, "secret-a"), (2L, "secret-b")).toDF("k", "pii")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -36,7 +33,7 @@ class Round13OpsSpec extends GraftSpec {
 
   test("addColumn cannot shadow a renamed-away physical name") {
     import spark.implicits._
-    val t = freshDir("graft_r13_addrenamed")
+    val t = scratch("graft_r13_addrenamed")
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p").coalesce(1)
       .write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -54,7 +51,7 @@ class Round13OpsSpec extends GraftSpec {
 
   test("addColumn refuses non-constant defaults (reads must never drift)") {
     import spark.implicits._
-    val t = freshDir("graft_r13_addnondet")
+    val t = scratch("graft_r13_addnondet")
     Seq((1L, 1.0)).toDF("k", "v").coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     // ADVICE r12: snapshotMapped re-evaluates the default on EVERY
@@ -79,7 +76,7 @@ class Round13OpsSpec extends GraftSpec {
     val emb = Tables.load(spark, sf, "embeddings")
     val cent = GraftOps.centroids(emb, "label", "embedding")
     val nlist = cent.count().toInt
-    val idxDir = freshDir("graft_r13_ivf_filter")
+    val idxDir = scratch("graft_r13_ivf_filter")
     GraftOps.ivfIndexBuild(emb, "vec_id", "embedding", cent,
       s"$idxDir/idx", payload = Seq("label"))
     // nprobe = nlist: every bucket scanned, so the ONLY difference
@@ -121,7 +118,7 @@ class Round13OpsSpec extends GraftSpec {
     // string pin (AQE hides scan nodes from pre-execution collect):
     // the plan must scan the view state (the aggview fold dir) and the
     // fact table's units (graft_cdc.../data/...) must not appear
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview"),
       "rewrite did not fire — no view-state scan:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc"),
@@ -143,14 +140,14 @@ class Round13OpsSpec extends GraftSpec {
     val other = CommitLog.snapshot(spark, root, vLast)
       .groupBy((col("k") % 7).as("g7"))
       .agg(count(lit(1)).as("n"))
-    val otherPlan = other.queryExecution.executedPlan.toString
+    val otherPlan = planText(other)
     assert(!otherPlan.contains("graft_aggview"),
       "non-subsumed aggregate rerouted:\n" + otherPlan.take(3000))
     // and an OLDER version's snapshot never matches (freshness guard)
     val stale = CommitLog.snapshot(spark, root, 0L)
       .groupBy((col("k") % 10).as("g"))
       .agg(count(lit(1)).as("n"), sum(col("p")).as("sum_p"))
-    val stalePlan = stale.queryExecution.executedPlan.toString
+    val stalePlan = planText(stale)
     assert(!stalePlan.contains("graft_aggview"),
       "stale snapshot rerouted to fresher state:\n" + stalePlan.take(3000))
   }
@@ -230,7 +227,7 @@ class Round13OpsSpec extends GraftSpec {
 
   test("purge receipt counts data rows once when a key also sits in a dv sidecar") {
     import spark.implicits._
-    val t = freshDir("graft_r13_purgecount")
+    val t = scratch("graft_r13_purgecount")
     (0L until 50L).map(k => (k, k * 10L)).toDF("k", "p")
       .coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))

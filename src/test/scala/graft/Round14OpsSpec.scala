@@ -9,9 +9,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 class Round14OpsSpec extends GraftSpec {
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("MV rollup rewrite: coarser group-by reads the view state, never the fact units") {
     val df = SparkEntry.queries("view_rewrite_rollup")(spark, sf)
     val plan = planText(df)
@@ -78,7 +75,7 @@ class Round14OpsSpec extends GraftSpec {
     import graft.sources.CommitLog
     val root = graft.queries.LakehouseQueries.cdcTable(spark, sf)
     val vLast = CommitLog.versions(root).last
-    graft.plans.MvCatalog.drop("orders_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_by_g")
     try {
       val off = CommitLog.snapshot(spark, root, vLast)
         .groupBy(((col("k") % 10) % 3).as("g3"))
@@ -137,7 +134,7 @@ class Round14OpsSpec extends GraftSpec {
 
   test("MV rewrite emits NULL (not 0) for a group whose values are all NULL") {
     import spark.implicits._
-    val dir = freshDir("graft_r14_mvnull")
+    val dir = scratch("graft_r14_mvnull")
     // fact: k % 4 groups 1 and 3 carry only NULL values
     val fact = Seq[(Long, Option[java.math.BigDecimal])](
       (0L, Some(new java.math.BigDecimal("10.00"))),
@@ -156,11 +153,8 @@ class Round14OpsSpec extends GraftSpec {
       .write.parquet(s"$dir/state")
     val factPath = java.nio.file.Paths.get(s"$dir/fact")
       .toAbsolutePath.normalize.toString
-    graft.plans.MvCatalog.register("r14_nulls",
+    graft.plans.MvCatalog.register(spark, "r14_nulls",
       graft.plans.MvCatalog.MvDef(Set(factPath), "k % 4", "p", s"$dir/state"))
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.MvRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.MvRewrite
     try {
       def expect(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] = {
         val plan = planText(df)
@@ -189,7 +183,7 @@ class Round14OpsSpec extends GraftSpec {
       assert(rolled.map(r => (r(0), r(1))) == Seq((0L, 4L), (1L, 4L)))
       assert(rolled(1)(2) == null, s"merged all-NULL rollup must be NULL: $rolled")
       assert(rolled(0)(2).toString == "100.00", s"rollup sum wrong: $rolled")
-    } finally graft.plans.MvCatalog.drop("r14_nulls")
+    } finally graft.plans.MvCatalog.drop(spark, "r14_nulls")
   }
 
   test("ts_decompose: integer chain matches a reference decimal computation (no double ever cast)") {
@@ -290,7 +284,7 @@ class Round14OpsSpec extends GraftSpec {
     assert(out.length == 2 && out(1).getLong(1) > out(0).getLong(1))
     // edge 1: an fk against a referenced table with NO committed
     // version rejects any non-null reference
-    val t = freshDir("graft_r14_fkedge")
+    val t = scratch("graft_r14_fkedge")
     val emptyRef = s"$t/emptyref"
     val fact = s"$t/fact"
     CommitLog.declareConstraints(fact,
@@ -313,7 +307,7 @@ class Round14OpsSpec extends GraftSpec {
   test("unique constraint: decimal keys take the full-snapshot path (no footer reparse crash)") {
     import graft.sources.CommitLog
     import spark.implicits._
-    val t = freshDir("graft_r14_uqdec")
+    val t = scratch("graft_r14_uqdec")
     CommitLog.declareConstraints(t, Seq(CommitLog.UniqueConstraint("dk")))
     Seq("1.10", "2.20").map(new java.math.BigDecimal(_)).toDF("dk")
       .select(col("dk").cast(DecimalType(18, 2)).as("dk"))
@@ -342,7 +336,7 @@ class Round14OpsSpec extends GraftSpec {
   test("unique constraint: a key whose only copy was MoR-deleted accepts a re-insert") {
     import graft.sources.CommitLog
     import spark.implicits._
-    val t = freshDir("graft_r14_uqmor")
+    val t = scratch("graft_r14_uqmor")
     CommitLog.declareConstraints(t, Seq(CommitLog.UniqueConstraint("k")))
     Seq(1L, 2L, 3L).toDF("k").coalesce(1).write.parquet(s"$t/u0")
     CommitLog.commitConstrained(spark, t, 0L, Seq("u0"))

@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   */
 class Round15OpsSpec extends GraftSpec {
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("dedup_fuzzy flood guard: hot blocks route through banding; exact verify unchanged") {
     import spark.implicits._
     // one HOT block (40 docs share the 2-word prefix "alpha beta"; the
@@ -166,7 +163,7 @@ class Round15OpsSpec extends GraftSpec {
     assert(planText(roll)
       .contains("graft_appendview"), "min/max rollup did not reroute")
     val rolled = roll.collect().map(_.toSeq).toSeq
-    graft.plans.MvCatalog.drop("orders_append_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_append_by_g")
     try {
       val off = rollQ
       assert(!planText(off)
@@ -187,7 +184,7 @@ class Round15OpsSpec extends GraftSpec {
     // NEGATIVE: the fold itself REFUSES a retraction-bearing feed
     val e = intercept[IllegalArgumentException] {
       graft.queries.LakehouseQueries.foldAppendMinMaxState(spark, cdcRoot,
-        freshDir("graft_r15_mmrefuse"))
+        scratch("graft_r15_mmrefuse"))
     }
     assert(e.getMessage.contains("retraction"), e.getMessage)
   }
@@ -206,7 +203,7 @@ class Round15OpsSpec extends GraftSpec {
     val (root, state) =
       graft.queries.LakehouseQueries.registerStaleOrdersView(spark, sf)
     val got = df.collect().map(_.toSeq).toSeq
-    graft.plans.MvCatalog.drop("orders_append_stale_k7")
+    graft.plans.MvCatalog.drop(spark, "orders_append_stale_k7")
     try {
       val off = CommitLog.snapshot(spark, root, 1L)
         .groupBy((col("k") % 7).as("g"))
@@ -235,8 +232,8 @@ class Round15OpsSpec extends GraftSpec {
       "min through the stale compensation wrongly rerouted")
     // NEGATIVE: a state NEWER than the scan declines (the rewrite only
     // compensates forward, never un-applies versions)
-    graft.plans.MvCatalog.drop("orders_append_stale_k7")
-    graft.plans.MvCatalog.registerStale("tmp_stale_newer",
+    graft.plans.MvCatalog.drop(spark, "orders_append_stale_k7")
+    graft.plans.MvCatalog.register(spark, "tmp_stale_newer",
       graft.plans.MvCatalog.MvStaleDef(root, 1L, "k % 7", "p", state))
     try {
       val back = CommitLog.snapshot(spark, root, 0L)
@@ -245,7 +242,7 @@ class Round15OpsSpec extends GraftSpec {
         .contains("graft_stalestate"),
         "scan OLDER than the state wrongly compensated")
     } finally {
-      graft.plans.MvCatalog.drop("tmp_stale_newer")
+      graft.plans.MvCatalog.drop(spark, "tmp_stale_newer")
       graft.queries.LakehouseQueries.registerStaleOrdersView(spark, sf)
     }
   }
@@ -272,7 +269,7 @@ class Round15OpsSpec extends GraftSpec {
         .orderBy("g")
     // values equal the direct join+aggregate with the def dropped
     val got = df.collect().map(_.toSeq).toSeq
-    graft.plans.MvCatalog.drop("orders_join_dim_stale")
+    graft.plans.MvCatalog.drop(spark, "orders_join_dim_stale")
     try {
       val off = joinQ(0L)
       assert(!planText(off).contains(s"$root/s2"))
@@ -292,7 +289,7 @@ class Round15OpsSpec extends GraftSpec {
     import spark.implicits._
     import graft.sources.CommitLog
     import org.apache.spark.sql.types.DecimalType
-    val t = freshDir("graft_r15_nullg")
+    val t = scratch("graft_r15_nullg")
     val fact = s"$t/fact"
     val dim = s"$t/dim"
     // fact v0: (1,10),(2,20); v1 appends (3,30)
@@ -319,7 +316,7 @@ class Round15OpsSpec extends GraftSpec {
         sum(col("p").cast(DecimalType(38, 2)))
           .cast(DecimalType(38, 2)).as("total"))
       .write.parquet(statePath)
-    graft.plans.MvCatalog.registerJoinStale("tmp_nullg_stale",
+    graft.plans.MvCatalog.register(spark, "tmp_nullg_stale",
       graft.plans.MvCatalog.MvJoinStaleDef(fact, dim, 0L, 0L,
         tail = Seq((true, 1L, 0L)), "k", "k", "g", "p", statePath))
     try {
@@ -345,7 +342,7 @@ class Round15OpsSpec extends GraftSpec {
       assert(nullRow.getLong(1) == 2L &&
         nullRow.getDecimal(2).compareTo(new java.math.BigDecimal("40.00")) == 0,
         s"NULL group mis-merged: $nullRow")
-    } finally graft.plans.MvCatalog.drop("tmp_nullg_stale")
+    } finally graft.plans.MvCatalog.drop(spark, "tmp_nullg_stale")
   }
 
   test("MV stale join rewrite: a declared tail that skips a log version declines") {
@@ -356,10 +353,10 @@ class Round15OpsSpec extends GraftSpec {
       .join(CommitLog.snapshot(spark, dim, 0L).select(col("k"), col("g")),
         "k")
       .groupBy(col("g")).agg(count(lit(1)).as("n"))
-    graft.plans.MvCatalog.drop("orders_join_dim_stale")
+    graft.plans.MvCatalog.drop(spark, "orders_join_dim_stale")
     // a tail jumping fact 1 → 3 silently omits v2's feed (empty here,
     // but the rule cannot know that) — the successor check declines
-    graft.plans.MvCatalog.registerJoinStale("tmp_skip_stale",
+    graft.plans.MvCatalog.register(spark, "tmp_skip_stale",
       graft.plans.MvCatalog.MvJoinStaleDef(fact, dim, 1L, 0L,
         tail = Seq((true, 3L, 0L)), "k", "k", "g", "p", s"$root/s2"))
     try {
@@ -367,8 +364,8 @@ class Round15OpsSpec extends GraftSpec {
         "version-skipping tail wrongly accepted")
       // the COMPLETE tail from the same cut — including the empty v2
       // step — walks and fires, and the empty delta is a no-op
-      graft.plans.MvCatalog.drop("tmp_skip_stale")
-      graft.plans.MvCatalog.registerJoinStale("tmp_full_stale",
+      graft.plans.MvCatalog.drop(spark, "tmp_skip_stale")
+      graft.plans.MvCatalog.register(spark, "tmp_full_stale",
         graft.plans.MvCatalog.MvJoinStaleDef(fact, dim, 1L, 0L,
           tail = Seq((true, 2L, 0L), (true, 3L, 0L)),
           "k", "k", "g", "p", s"$root/s2"))
@@ -379,15 +376,15 @@ class Round15OpsSpec extends GraftSpec {
       // ground truth = the UNREWRITTEN aggregate (review r15, second
       // pass: the previous baseline re-registered the entry's own
       // stale def and compared two rewrites against each other)
-      graft.plans.MvCatalog.drop("tmp_full_stale")
+      graft.plans.MvCatalog.drop(spark, "tmp_full_stale")
       val direct = q3
       assert(!planText(direct)
         .contains(s"$root/s2"))
       assert(got == direct.orderBy("g").collect().map(_.toSeq).toSeq,
         "multi-step compensation diverges from the direct aggregate")
     } finally {
-      graft.plans.MvCatalog.drop("tmp_skip_stale")
-      graft.plans.MvCatalog.drop("tmp_full_stale")
+      graft.plans.MvCatalog.drop(spark, "tmp_skip_stale")
+      graft.plans.MvCatalog.drop(spark, "tmp_full_stale")
       graft.queries.LakehouseQueries.registerStaleOrdersJoinView(spark, sf)
     }
   }
@@ -395,7 +392,7 @@ class Round15OpsSpec extends GraftSpec {
   test("snapshotWithStats: directory units size correctly; non-integral long-footer columns stay out") {
     import spark.implicits._
     import graft.sources.CommitLog
-    val t = freshDir("graft_r15_swstats")
+    val t = scratch("graft_r15_swstats")
     // ONE directory unit written by df.write.parquet (the routine unit
     // shape), with a long column and a TIMESTAMP column — whose footer
     // kind is also "long" but whose CatalogColumnStat external form is
@@ -550,7 +547,7 @@ class Round15OpsSpec extends GraftSpec {
     // lexically against the string footer, sees max "02" < lo "2",
     // prunes the only unit, and falsely rejects a VALID commit. The
     // kind gate must fall back to the full-snapshot probe and accept.
-    val t = freshDir("graft_r15_fkkind")
+    val t = scratch("graft_r15_fkkind")
     val ref = s"$t/ref"
     Seq("02", "03").toDF("ck").coalesce(1).write.parquet(s"$ref/u0")
     CommitLog.commit(ref, 0L, Seq("u0"))
@@ -593,7 +590,7 @@ class Round15OpsSpec extends GraftSpec {
   test("unique stats routing: a type-evolved key (long batch vs string footer) still probes correctly") {
     import graft.sources.CommitLog
     import spark.implicits._
-    val t = freshDir("graft_r15_uqkind")
+    val t = scratch("graft_r15_uqkind")
     CommitLog.declareConstraints(t, Seq(CommitLog.UniqueConstraint("k")))
     // v0 committed the key as STRINGS ("02" — coercion-equal to long 2
     // but lexically below the rendered bound "2") with lexical footer

@@ -160,8 +160,8 @@ class Round16OpsSpec extends GraftSpec {
     // values equal the real direct union aggregate with both views
     // dropped (the entry would re-register, so the unrewritten twin is
     // built by hand on the same snapshots)
-    graft.plans.MvCatalog.drop("orders_by_g")
-    graft.plans.MvCatalog.drop("orders_arch_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_arch_by_g")
     try {
       val off = unionQuery()
       val offPlan = planText(off)
@@ -175,7 +175,7 @@ class Round16OpsSpec extends GraftSpec {
 
   test("MV union rewrite declines when one branch is unregistered") {
     SparkEntry.queries("view_rewrite_union")(spark, sf).count()
-    graft.plans.MvCatalog.drop("orders_arch_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_arch_by_g")
     try {
       val plan = planText(unionQuery())
       // fail-safe: the whole union declines — the archive branch
@@ -199,8 +199,7 @@ class Round16OpsSpec extends GraftSpec {
     import spark.implicits._
     import graft.sources.CommitLog
     import org.apache.spark.sql.types.DecimalType
-    val t = java.nio.file.Files
-      .createTempDirectory("graft_r16_shared").toString
+    val t = scratch("graft_r16_shared")
     val fact = s"$t/fact"
     val dim = s"$t/dim"
     // BOTH tables carry a column named "note" (non-key, non-value)
@@ -225,7 +224,7 @@ class Round16OpsSpec extends GraftSpec {
         sum(col("p").cast(DecimalType(38, 2)))
           .cast(DecimalType(38, 2)).as("total"))
       .write.parquet(statePath)
-    graft.plans.MvCatalog.registerJoinStale("tmp_shared_stale",
+    graft.plans.MvCatalog.register(spark, "tmp_shared_stale",
       graft.plans.MvCatalog.MvJoinStaleDef(fact, dim, 0L, 0L,
         tail = Seq((true, 1L, 0L)), "k", "k", "g", "p", statePath))
     try {
@@ -243,7 +242,7 @@ class Round16OpsSpec extends GraftSpec {
       // g=7 merges state (k=1: 10.00) + compensated v1 append (k=3:
       // 30.00); g=5 untouched from state
       assert(rows == Set((5L, 1L, "20.00"), (7L, 2L, "40.00")), rows.toString)
-    } finally graft.plans.MvCatalog.drop("tmp_shared_stale")
+    } finally graft.plans.MvCatalog.drop(spark, "tmp_shared_stale")
   }
 
   // VERDICT r15 #5: the stale path feeds the shared buildFromStateDf,
@@ -272,7 +271,7 @@ class Round16OpsSpec extends GraftSpec {
       "stale + predicate still reads the v0 bulk:\n" + plan.take(3000))
     val got = df.collect().map(_.toSeq).toSeq
     // values equal the direct filtered aggregate with the view dropped
-    graft.plans.MvCatalog.drop("orders_append_stale_k7")
+    graft.plans.MvCatalog.drop(spark, "orders_append_stale_k7")
     try {
       val off = filtered()
       assert(!planText(off)
@@ -321,8 +320,8 @@ class Round16OpsSpec extends GraftSpec {
       "union rollup did not fire:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc") && !plan.contains("graft_archtab"))
     // n per g3 bucket = direct count over the union
-    graft.plans.MvCatalog.drop("orders_by_g")
-    graft.plans.MvCatalog.drop("orders_arch_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_arch_by_g")
     try {
       val direct = unionQuery()
         .groupBy((col("g") % 3).as("g3"))

@@ -126,7 +126,7 @@ class Round17OpsSpec extends GraftSpec {
 
   test("union + whole-group filter rewrites to the filtered refold; row-level filter declines") {
     val df = SparkEntry.queries("view_rewrite_union_filtered")(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df)
     assert(plan.contains("graft_aggview") && plan.contains("graft_archstate"),
       "filtered union did not reroute to both states:\n" + plan.take(3000))
     assert(!plan.contains("graft_cdc") && !plan.contains("graft_archtab"),
@@ -134,12 +134,11 @@ class Round17OpsSpec extends GraftSpec {
     val got = df.collect().map(_.toSeq).toSeq
     assert(got.nonEmpty)
     // values equal the direct filtered union with both views dropped
-    graft.plans.MvCatalog.drop("orders_by_g")
-    graft.plans.MvCatalog.drop("orders_arch_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_by_g")
+    graft.plans.MvCatalog.drop(spark, "orders_arch_by_g")
     try {
       val off = filteredUnionQuery()
-      assert(!off.queryExecution.executedPlan.toString
-        .contains("graft_aggview"))
+      assert(!planText(off).contains("graft_aggview"))
       assert(off.collect().map(_.toSeq).toSeq == got,
         "filtered union rewrite diverges from the direct aggregate")
     } finally
@@ -155,7 +154,7 @@ class Round17OpsSpec extends GraftSpec {
       .unionAll(CommitLog.snapshot(spark, arch, 0L).select(col("k"), col("p")))
       .filter(col("p") > 10)
       .groupBy((col("k") % 10).as("g")).agg(count(lit(1)).as("n"))
-    val rowPlan = row.queryExecution.executedPlan.toString
+    val rowPlan = planText(row)
     assert(!rowPlan.contains("graft_aggview") &&
       !rowPlan.contains("graft_archstate"),
       "row-level predicate wrongly rerouted through the refold:\n" +
@@ -171,19 +170,17 @@ class Round17OpsSpec extends GraftSpec {
     SparkEntry.queries("view_rewrite_union")(spark, sf).count() // register
     val root = graft.queries.LakehouseQueries.cdcTable(spark, sf)
     val vLast = CommitLog.versions(root).last
-    graft.plans.MvCatalog.register("tmp_decoy_k20",
-      graft.plans.MvCatalog.MvDef(
-        CommitLog.units(root, vLast).map(u => java.nio.file.Paths.get(u)
-          .toAbsolutePath.normalize.toString).toSet,
+    graft.plans.MvCatalog.register(spark, "tmp_decoy_k20",
+      graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, vLast),
         "k % 20", "p", "/nonexistent_decoy_state"))
     try {
       val df = SparkEntry.queries("view_rewrite_union")(spark, sf)
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = planText(df)
       assert(plan.contains("graft_aggview") && plan.contains("graft_archstate"),
         "union rewrite lost the consistent assignment to a decoy def:\n" +
           plan.take(3000))
       assert(!plan.contains("nonexistent_decoy_state"))
-    } finally graft.plans.MvCatalog.drop("tmp_decoy_k20")
+    } finally graft.plans.MvCatalog.drop(spark, "tmp_decoy_k20")
   }
 
   // ---- stale-join tail inference (VERDICT r16 #5) --------------------
@@ -197,8 +194,7 @@ class Round17OpsSpec extends GraftSpec {
     import spark.implicits._
     import graft.sources.CommitLog
     import org.apache.spark.sql.types.DecimalType
-    val t = java.nio.file.Files
-      .createTempDirectory("graft_r17_infer").toString
+    val t = scratch("graft_r17_infer")
     val fact = s"$t/fact"
     val dim = s"$t/dim"
     def factRows(rows: Seq[(Long, String)], unit: String): Unit =
@@ -243,22 +239,21 @@ class Round17OpsSpec extends GraftSpec {
     val (fact, dim, statePath) = staleJoinFixture(0L, 0L)
     // tail = Nil, but the query scans (fact@2, dim@1) — two fact
     // steps + one dim step ahead of the cut
-    graft.plans.MvCatalog.registerJoinStale("tmp_infer_stale",
+    graft.plans.MvCatalog.register(spark, "tmp_infer_stale",
       graft.plans.MvCatalog.MvJoinStaleDef(fact, dim, 0L, 0L,
         tail = Nil, "k", "k", "g", "p", statePath))
     try {
       val df = staleJoinQuery(fact, dim, 2L, 1L)
-      assert(df.queryExecution.executedPlan.toString.contains(statePath),
-        "inferred-tail rewrite did not fire:\n" +
-          df.queryExecution.executedPlan.toString.take(3000))
+      assert(planText(df).contains(statePath),
+        "inferred-tail rewrite did not fire:\n" + planText(df).take(3000))
       val rows = df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDecimal(2).toPlainString)).toSet
       // direct: k=1,3 → g7 (10+30); k=2,4 → g5 (20+40)
       assert(rows == Set((5L, 2L, "60.00"), (7L, 2L, "40.00")), rows.toString)
       // the fresh cut still rewrites with zero deltas
       val fresh = staleJoinQuery(fact, dim, 0L, 0L)
-      assert(fresh.queryExecution.executedPlan.toString.contains(statePath))
-    } finally graft.plans.MvCatalog.drop("tmp_infer_stale")
+      assert(planText(fresh).contains(statePath))
+    } finally graft.plans.MvCatalog.drop(spark, "tmp_infer_stale")
   }
 
   test("inference declines when the state cut's manifest was vacuumed (continuity unprovable)") {
@@ -267,22 +262,24 @@ class Round17OpsSpec extends GraftSpec {
     // against v0 and double-apply v1's delta the state already folded
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(fact, "_log", "v00001.txt"))
-    graft.plans.MvCatalog.registerJoinStale("tmp_infer_vacuumed",
+    graft.plans.MvCatalog.register(spark, "tmp_infer_vacuumed",
       graft.plans.MvCatalog.MvJoinStaleDef(fact, dim, 1L, 0L,
         tail = Nil, "k", "k", "g", "p", statePath))
     try {
       val df = staleJoinQuery(fact, dim, 2L, 0L)
-      assert(!df.queryExecution.executedPlan.toString.contains(statePath),
+      assert(!planText(df).contains(statePath),
         "inference compensated across a vacuumed cut")
-    } finally graft.plans.MvCatalog.drop("tmp_infer_vacuumed")
+    } finally graft.plans.MvCatalog.drop(spark, "tmp_infer_vacuumed")
   }
 
-  test("CollapseGate.route agrees with the direct gate decision") {
+  test("collapseRoute agrees with the direct gate decision") {
     val direct = graft.api.GraftOps.collapseGate(
       Tables.load(spark, sf, "documents"), "doc_id", "text")
-    assert(graft.queries.CollapseGate.route(spark, sf) == direct)
-    // cached: a second call returns the same decision (and, per
-    // fingerprint keying, without re-aggregating — not asserted here)
-    assert(graft.queries.CollapseGate.route(spark, sf) == direct)
+    assert(graft.queries.LlmQueries.collapseRoute(spark, sf) == direct)
+    // stored: a second call returns the same decision from the same
+    // derived entry, without re-aggregating
+    val entry = Derived.path("collapse_route", sf)
+    assert(graft.queries.LlmQueries.collapseRoute(spark, sf) == direct)
+    assert(Derived.path("collapse_route", sf) == entry)
   }
 }

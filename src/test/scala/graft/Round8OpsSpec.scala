@@ -137,7 +137,7 @@ class Round8OpsSpec extends GraftSpec {
 
   /** A private sf dir holding only a copy of documents.parquet. */
   private def docsCopy(prefix: String): String = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    val tmp = scratch(prefix)
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sf, "documents.parquet"),
       java.nio.file.Paths.get(tmp, "documents.parquet"))
@@ -216,7 +216,7 @@ class Round8OpsSpec extends GraftSpec {
   }
 
   test("the derived store's root is deleted when its JVM exits") {
-    val tmpdir = java.nio.file.Files.createTempDirectory("graft_exit_tmp")
+    val tmpdir = java.nio.file.Paths.get(scratch("graft_exit_tmp"))
     val sfCopy = docsCopy("graft_exit_sf")
     val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val proc = new ProcessBuilder(javaBin, s"-Djava.io.tmpdir=$tmpdir",

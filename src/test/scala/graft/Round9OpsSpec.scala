@@ -72,7 +72,7 @@ class Round9OpsSpec extends GraftSpec {
       out.map(_.toString).toSeq)
     // direct protocol checks on a scratch table: version list,
     // snapshot stability AFTER later commits, crash-leftover hygiene
-    val t = java.nio.file.Files.createTempDirectory("graft_cl").toString
+    val t = scratch("graft_cl")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -106,7 +106,7 @@ class Round9OpsSpec extends GraftSpec {
       "optimize changes layout, never content")
     // vacuum protocol on a scratch table: expired units deleted,
     // shared units retained, expired versions unreadable
-    val t = java.nio.file.Files.createTempDirectory("graft_vac").toString
+    val t = scratch("graft_vac")
     import spark.implicits._
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$t/shared")
     Seq((2L, "b")).toDF("id", "s").write.parquet(s"$t/old_only")
@@ -140,7 +140,7 @@ class Round9OpsSpec extends GraftSpec {
 
   test("commit-log snapshot reads keep pushdown, pruning, and evolution nulls") {
     import graft.sources.CommitLog
-    val t = java.nio.file.Files.createTempDirectory("graft_push").toString
+    val t = scratch("graft_push")
     import spark.implicits._
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "s", "v").write.parquet(s"$t/u0")
@@ -205,7 +205,7 @@ class Round9OpsSpec extends GraftSpec {
         s"v${r.getLong(0)}: delta sums must reconstruct the snapshot row count")
     }
     // non-append versions must be rejected, not silently mis-consumed
-    val t = java.nio.file.Files.createTempDirectory("graft_cdc").toString
+    val t = scratch("graft_cdc")
     import spark.implicits._
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$t/u0")
     Seq((2L, "b")).toDF("id", "s").write.parquet(s"$t/u1")
@@ -233,7 +233,7 @@ class Round9OpsSpec extends GraftSpec {
 
   test("tryCommit: exactly one writer wins a version, loser retries on top") {
     import graft.sources.CommitLog
-    val t = java.nio.file.Files.createTempDirectory("graft_occ").toString
+    val t = scratch("graft_occ")
     import spark.implicits._
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$t/u0")
     Seq((2L, "b")).toDF("id", "s").write.parquet(s"$t/u1")
@@ -255,7 +255,7 @@ class Round9OpsSpec extends GraftSpec {
 
   test("stats sidecars never masquerade as versions") {
     import graft.sources.CommitLog
-    val t = java.nio.file.Files.createTempDirectory("graft_sv").toString
+    val t = scratch("graft_sv")
     import spark.implicits._
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
@@ -298,7 +298,7 @@ class Round9OpsSpec extends GraftSpec {
   }
 
   test("fingerprint catches a same-size same-mtime content rewrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp")
+    val dir = java.nio.file.Paths.get(scratch("graft_fp"))
     val f = dir.resolve("documents.parquet")
     java.nio.file.Files.write(f, Array.fill[Byte](4096)(1))
     val mtime = java.nio.file.Files.getLastModifiedTime(f)

@@ -65,7 +65,7 @@ class StreamingSpec extends GraftSpec {
     import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.load(spark, sf, "events")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"), col("event_type"))
-    val root = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val root = scratch("graft_restart")
     val src = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     ev.filter(col("event_id") <= 500).write.mode("overwrite").parquet(src)
     def drain(): Unit = {
@@ -91,7 +91,7 @@ class StreamingSpec extends GraftSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.sources.CommitLog
-    val root = java.nio.file.Files.createTempDirectory("graft_sink_rp").toString
+    val root = scratch("graft_sink_rp")
     // the foreachBatch body the sink runs, extracted: write the
     // batch's deterministic unit, then race version = batchId
     def applyBatch(batch: org.apache.spark.sql.DataFrame, id: Long): Boolean = {

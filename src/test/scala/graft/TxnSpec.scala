@@ -12,7 +12,7 @@ class TxnSpec extends GraftSpec {
   import graft.sources.{CommitLog, TxnLog}
 
   private def fresh(): (String, String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_txns").toString
+    val root = scratch("graft_txns")
     (root, s"$root/a", s"$root/b")
   }
 
