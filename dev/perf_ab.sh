@@ -18,7 +18,9 @@
 # interquartile range.
 # Then, for every measured entry, the median over the runs of its warm
 # median on each side, the change/parent ratio of those medians and the
-# number of pairs in which the change's warm median was lower.
+# number of pairs in which the change's warm median was lower; beside
+# it the same for the entry's cold time (its pass-0 attempt, the part
+# of cold_pass_s it accounts for).
 # Last, one line per pair with the host record of each run: the 1-min
 # load average from /proc/loadavg before and after it, and the share of
 # all CPU ticks in /proc/stat that were iowait and steal while it ran,
@@ -26,7 +28,8 @@
 # measured entries of the change/parent warm-median ratio). A pair whose
 # ratio moves with the load or the steal share was measured on a busy
 # host, not on a changed engine.
-# The printed log directory keeps each run's result line, its per-entry
+# The printed log directory keeps each run's result line, its full
+# record (`<side>-seed<N>.record.json`, every attempt), its per-entry
 # warm medians (`<side>-seed<N>.bench.json`, the input of
 # dev/bench_ratio.py) and its host record (`<side>-seed<N>.host`).
 # Nothing under perfbench/ is changed; the parent copy is deleted at
@@ -59,6 +62,7 @@ run() { # <side> <checkout> <seed>
     --seconds "$SECONDS_PER_RUN" --trace 0) | tail -n 1 > "$out"
   echo "$before $(host)" > "$LOG/$1-seed$3.host"
   cp "$2/perfbench/out/results/$WORKLOAD-seed$3-trace0.bench.json" "$LOG/$1-seed$3.bench.json"
+  cp "$2/perfbench/out/results/$WORKLOAD-seed$3-trace0.json" "$LOG/$1-seed$3.record.json"
   echo "$1 seed $3: $(cat "$out")"
 }
 
@@ -100,16 +104,31 @@ for m in bench["end_to_end"]:
 def entries(side, seed):
     with open(f"{log}/{side}-seed{seed}.bench.json") as f:
         return json.load(f)["queries"]
+def cold_entries(side, seed):
+    with open(f"{log}/{side}-seed{seed}.record.json") as f:
+        attempts = json.load(f)["attempts"]
+    cold = {}
+    for a in attempts:
+        if a["pass"] == 0:
+            cold[a["entry"]] = cold.get(a["entry"], 0.0) + a["s"]
+    return cold
 warm = {s: [entries(s, seed0 + i) for i in range(pairs)] for s in ("parent", "change")}
+cold = {s: [cold_entries(s, seed0 + i) for i in range(pairs)] for s in ("parent", "change")}
 names = sorted(set.intersection(*(set(q) for s in warm.values() for q in s)))
-print(f"\n{'entry (warm median, s)':<28}{'parent':>10}{'change':>10}{'ratio':>8}{'won':>8}")
-for e in names:
-    p = [q[e] for q in warm["parent"]]
-    c = [q[e] for q in warm["change"]]
+def compare(runs, e):
+    p = [q[e] for q in runs["parent"]]
+    c = [q[e] for q in runs["change"]]
     pm, cm = statistics.median(p), statistics.median(c)
     won = sum(b < a for a, b in zip(p, c))
     ratio = f"{cm / pm:.3f}" if pm > 0 else "-"
-    print(f"{e:<28}{pm:>10.4g}{cm:>10.4g}{ratio:>8}{won:>5}/{pairs}")
+    return f"{pm:>10.4g}{cm:>10.4g}{ratio:>8}{won:>5}/{pairs}"
+print(f"\n{'entry (median, s)':<28}{'warm':>10}{'':>10}{'':>8}{'':>8}   cold")
+print(f"{'':<28}{'parent':>10}{'change':>10}{'ratio':>8}{'won':>8}   "
+      f"{'parent':>10}{'change':>10}{'ratio':>8}{'won':>8}")
+for e in names:
+    cold_cols = (compare(cold, e) if all(e in q for s in cold.values() for q in s)
+                 else f"{'-':>10}{'-':>10}{'-':>8}{'-':>8}")
+    print(f"{e:<28}{compare(warm, e)}   {cold_cols}")
 def host(side, seed):
     with open(f"{log}/{side}-seed{seed}.host") as f:
         l0, t0, w0, s0, l1, t1, w1, s1 = map(float, f.read().split())

@@ -154,11 +154,114 @@ object MvCatalog {
       .map(u => java.nio.file.Paths.get(u).toAbsolutePath.normalize.toString).toSet
 }
 
+/** The signed-delta algebra of a maintained (g, n, nn, total) view
+  * state — one copy shared by the rewrite's compensations and the
+  * fixture folds that build the states (LakehouseQueries,
+  * StreamQueries), so nn/decimal/NULL handling cannot drift between
+  * them. A state is additive: the state after versions 0..v is the
+  * [[deltaAgg]] of the UNION of those versions' signed feeds, and a
+  * state plus later deltas is their [[refold]] — a union and one
+  * groupBy, where an empty feed is a free empty union branch.
+  */
+private[graft] object MvFold {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.{functions => F}
+
+  private val dec382 = org.apache.spark.sql.types.DecimalType(38, 2)
+
+  /** The version's change feed with the signed multiplicity column. */
+  def signedChanges(spark: SparkSession, root: String, v: Long): DataFrame =
+    graft.sources.CommitLog.changes(spark, root, v)
+      .withColumn("__sgn",
+        F.when(F.col("_change_type") === "insert", F.lit(1L))
+          .otherwise(F.lit(-1L)))
+      .drop("_change_type")
+
+  /** A signed frame projected to (__g, __val, __sgn) — the input of
+    * [[deltaAgg]]; project each feed before a union, so feeds whose
+    * other columns differ still union by position.
+    */
+  def signedProj(df: DataFrame, groupKeySql: String, valueSql: String)
+      : DataFrame =
+    df.select(F.expr(groupKeySql).as("__g"), F.expr(valueSql).as("__val"),
+      F.col("__sgn"))
+
+  /** One additive (g, n, nn, total) delta from a (__g, __val, __sgn)
+    * frame; `minMax` adds (mn, mx), exact only over an insert-only
+    * frame.
+    */
+  def deltaAgg(df: DataFrame, minMax: Boolean = false): DataFrame = {
+    val zero = F.lit(java.math.BigDecimal.ZERO).cast(dec382)
+    val sums = Seq(F.sum(F.col("__sgn")).as("n"),
+      F.sum(F.when(F.col("__val").isNotNull, F.col("__sgn"))
+        .otherwise(F.lit(0L))).as("nn"),
+      F.coalesce(F.sum((F.col("__val") * F.col("__sgn")).cast(dec382)),
+        zero).cast(dec382).as("total"))
+    val extremes =
+      if (minMax) Seq(F.min(F.col("__val")).as("mn"), F.max(F.col("__val")).as("mx"))
+      else Nil
+    val aggs = sums ++ extremes
+    df.groupBy(F.col("__g").as("g")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The persisted state normalized to the fold schema. */
+  def stateSelect(spark: SparkSession, statePath: String): DataFrame =
+    Parquet.read(spark, statePath).select(F.col("g"), F.col("n"),
+      F.col("nn"), F.col("total").cast(dec382).as("total"))
+
+  /** States ⊎ additive deltas → one union + one groupBy re-fold — NOT
+    * a chain of full_outer merges, which (a) never match NULL group
+    * keys (a NULL-g state row and a NULL-g delta would emerge as two
+    * output rows where the direct aggregate has one — groupBy treats
+    * NULL as an ordinary group) and (b) would need a per-step
+    * emptiness probe; an empty delta is a free empty union branch
+    * here, no extra Spark job.
+    */
+  def refold(frames: Seq[DataFrame]): DataFrame =
+    frames.reduce(_ unionAll _).groupBy("g").agg(
+      F.sum(F.col("n")).as("n"),
+      F.sum(F.col("nn")).as("nn"),
+      F.sum(F.col("total")).cast(dec382).as("total"))
+
+  /** The signed (g, n, nn, total) delta of one join-view maintenance
+    * step (isFactStep, changedVersion, otherSideVersion): the changed
+    * side's feed joined to the other side's snapshot at its version.
+    * Each side's registered expressions are evaluated BEFORE the join
+    * and everything else projected away: the group key is a dim-side
+    * expression and the value a fact-side one, so a column name shared
+    * by fact and dim never reaches the join. No broadcast hint: the
+    * rewrite runs after EliminateResolvedHint, and the delta side is
+    * O(changes), so size-based join selection broadcasts it unhinted.
+    */
+  def joinDelta(spark: SparkSession, d: MvCatalog.MvJoinStaleDef,
+      step: (Boolean, Long, Long)): DataFrame = {
+    val (isFact, chV, otherV) = step
+    val (chRoot, otherRoot, chKey, otherKey) =
+      if (isFact) (d.factRoot, d.dimRoot, d.factKeySql, d.dimKeySql)
+      else (d.dimRoot, d.factRoot, d.dimKeySql, d.factKeySql)
+    val ch = signedChanges(spark, chRoot, chV)
+    val other = graft.sources.CommitLog.snapshot(spark, otherRoot, otherV)
+    val (chProj, otherProj) =
+      if (isFact)
+        (ch.select(F.expr(chKey).as("__ck"),
+          F.expr(d.valueSql).as("__val"), F.col("__sgn")),
+          other.select(F.expr(otherKey).as("__ok"),
+            F.expr(d.groupKeySql).as("__g")))
+      else
+        (ch.select(F.expr(chKey).as("__ck"),
+          F.expr(d.groupKeySql).as("__g"), F.col("__sgn")),
+          other.select(F.expr(otherKey).as("__ok"),
+            F.expr(d.valueSql).as("__val")))
+    deltaAgg(otherProj.join(chProj, F.col("__ok") === F.col("__ck")))
+  }
+}
+
 /** The rewrite rule over one session's registered views;
   * [[MvCatalog.register]] installs it.
   */
 final class MvRewrite private[graft] (registered: java.util.Map[String, MvCatalog.MvView])
     extends Rule[LogicalPlan] {
+  import MvFold._
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     import scala.jdk.CollectionConverters._
@@ -625,74 +728,6 @@ final class MvRewrite private[graft] (registered: java.util.Map[String, MvCatalo
     } yield rewritten
   }
 
-  // ---- shared compensation algebra (review r15, second pass: one
-  // copy for the single-table and join paths, so nn/decimal/NULL
-  // handling cannot drift between them) --------------------------------
-
-  private val dec382 = org.apache.spark.sql.types.DecimalType(38, 2)
-
-  /** The version's change feed with the signed multiplicity column. */
-  private def signedChanges(spark: org.apache.spark.sql.SparkSession,
-      root: String, v: Long): org.apache.spark.sql.DataFrame = {
-    val F = org.apache.spark.sql.functions
-    graft.sources.CommitLog.changes(spark, root, v)
-      .withColumn("__sgn",
-        F.when(F.col("_change_type") === "insert", F.lit(1L))
-          .otherwise(F.lit(-1L)))
-      .drop("_change_type")
-  }
-
-  /** One additive (g, n, nn, total) delta from a signed frame. */
-  private def deltaAgg(df: org.apache.spark.sql.DataFrame,
-      groupKeySql: String, valueSql: String)
-      : org.apache.spark.sql.DataFrame = {
-    val F = org.apache.spark.sql.functions
-    deltaAggCols(df.select(F.expr(groupKeySql).as("__g"),
-      F.expr(valueSql).as("__val"), F.col("__sgn")))
-  }
-
-  /** [[deltaAgg]] over a pre-projected (__g, __val, __sgn) frame —
-    * the shared fold for callers that must evaluate the key/value
-    * expressions per SIDE before a join (the stale-join compensation)
-    * rather than over one flat frame.
-    */
-  private def deltaAggCols(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val F = org.apache.spark.sql.functions
-    val zero = F.lit(java.math.BigDecimal.ZERO).cast(dec382)
-    df.groupBy(F.col("__g").as("g"))
-      .agg(F.sum(F.col("__sgn")).as("n"),
-        F.sum(F.when(F.col("__val").isNotNull, F.col("__sgn"))
-          .otherwise(F.lit(0L))).as("nn"),
-        F.coalesce(F.sum((F.col("__val") * F.col("__sgn")).cast(dec382)),
-          zero).cast(dec382).as("total"))
-  }
-
-  /** The persisted state normalized to the fold schema. */
-  private def stateSelect(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): org.apache.spark.sql.DataFrame = {
-    val F = org.apache.spark.sql.functions
-    Parquet.read(spark, statePath).select(F.col("g"), F.col("n"),
-      F.col("nn"), F.col("total").cast(dec382).as("total"))
-  }
-
-  /** State ⊎ additive deltas → one union + one groupBy re-fold — NOT
-    * a chain of full_outer merges, which (a) never match NULL group
-    * keys (review r15: a NULL-g state row and a NULL-g delta would
-    * emerge as two output rows where the direct aggregate has one —
-    * groupBy treats NULL as an ordinary group) and (b) would need a
-    * per-step emptiness probe; an empty delta is a free empty union
-    * branch here, no optimizer-time Spark job.
-    */
-  private def refold(frames: Seq[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame = {
-    val F = org.apache.spark.sql.functions
-    frames.reduce(_ unionAll _).groupBy("g").agg(
-      F.sum(F.col("n")).as("n"),
-      F.sum(F.col("nn")).as("nn"),
-      F.sum(F.col("total")).cast(dec382).as("total"))
-  }
-
   /** The registered join-view state folded forward through the
     * declared tail steps — the dml_cdc_join_view algebra (signed
     * delta against the other side's snapshot at its declared
@@ -701,41 +736,9 @@ final class MvRewrite private[graft] (registered: java.util.Map[String, MvCatalo
   private def compensatedJoinState(spark: org.apache.spark.sql.SparkSession,
       d: MvCatalog.MvJoinStaleDef)
       : Option[org.apache.spark.sql.DataFrame] =
-    try {
-      val F = org.apache.spark.sql.functions
-      val deltas = d.tail.map { case (isFact, chV, otherV) =>
-        val (chRoot, otherRoot, chKey, otherKey) =
-          if (isFact) (d.factRoot, d.dimRoot, d.factKeySql, d.dimKeySql)
-          else (d.dimRoot, d.factRoot, d.dimKeySql, d.factKeySql)
-        // Evaluate each side's registered expressions BEFORE the join
-        // and project everything else away (round 16 — VERDICT r15
-        // #3): the group key is a dim-side expression and the value a
-        // fact-side expression, so each is computable on its own side
-        // — joining the two pre-projected three-column frames removes
-        // the old disjoint-non-key-names contract (a column name
-        // shared by fact and dim can no longer be ambiguous; it never
-        // reaches the join). Still no SubqueryAlias / broadcast()
-        // hint: this rule runs after EliminateSubqueryAliases /
-        // EliminateResolvedHint and the planner has no strategy for
-        // either — the delta side is O(changes), so size-based join
-        // selection / AQE broadcasts it unhinted.
-        val ch = signedChanges(spark, chRoot, chV)
-        val other = graft.sources.CommitLog.snapshot(spark, otherRoot, otherV)
-        val (chProj, otherProj) =
-          if (isFact)
-            (ch.select(F.expr(chKey).as("__ck"),
-              F.expr(d.valueSql).as("__val"), F.col("__sgn")),
-              other.select(F.expr(otherKey).as("__ok"),
-                F.expr(d.groupKeySql).as("__g")))
-          else
-            (ch.select(F.expr(chKey).as("__ck"),
-              F.expr(d.groupKeySql).as("__g"), F.col("__sgn")),
-              other.select(F.expr(otherKey).as("__ok"),
-                F.expr(d.valueSql).as("__val")))
-        deltaAggCols(otherProj.join(chProj, F.col("__ok") === F.col("__ck")))
-      }
-      Some(refold(stateSelect(spark, d.statePath) +: deltas))
-    } catch { case _: Exception => None }
+    try Some(refold(stateSelect(spark, d.statePath) +:
+      d.tail.map(joinDelta(spark, d, _))))
+    catch { case _: Exception => None }
 
   /** STALE-STATE + TAIL COMPENSATION (round 15, second wave): the
     * scan's snapshot may be NEWER than the registered state — resolve
@@ -809,8 +812,8 @@ final class MvRewrite private[graft] (registered: java.util.Map[String, MvCatalo
       else if (!vs.filter(_ < tail.head).lastOption.contains(d.stateVersion))
         None
       else Some(refold(st +: tail.map(v =>
-        deltaAgg(signedChanges(spark, d.tableRoot, v),
-          d.groupKeySql, d.valueSql))))
+        deltaAgg(signedProj(signedChanges(spark, d.tableRoot, v),
+          d.groupKeySql, d.valueSql)))))
     } catch { case _: Exception => None }
 
   /** Build the state-backed replacement plan, or None if the shape is

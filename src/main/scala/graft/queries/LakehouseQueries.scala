@@ -620,19 +620,22 @@ object LakehouseQueries {
 
     // S25 (round 11): INCREMENTAL AGGREGATE VIEW — the cheaper (and
     // more common) downstream of a CDC feed than the raw replica:
-    // a grouped (count, sum) view maintained by folding each
-    // version's feed as SIGNED deltas (insert = +1/+p, delete =
-    // −1/−p), so the per-version cost is O(changes) + O(groups) —
-    // the replica fold's O(state) exceptAll never appears, and the
-    // materialized state is O(groups) rows (10 here) at ANY table
-    // size. Walks the S12 lifecycle: the COW update's pre/post pair
-    // cancels to the price delta, the OPTIMIZE version's empty feed
-    // carries the state file untouched, the delete version subtracts
-    // its groups. The oracle pins the folded view equal to a group-by
-    // over the final snapshot — the self-maintainable-view contract
-    // (sum/count are the distributive aggregates that make it exact).
-    // At 100 TB this is the materialized-dashboard loop: each version
-    // costs the feed plus a 10-row join, never a table re-read.
+    // a grouped (count, sum) view maintained from the versions' feeds
+    // as SIGNED deltas (insert = +1/+p, delete = −1/−p), so its cost
+    // is O(changes) + O(groups) — the replica fold's O(state)
+    // exceptAll never appears, and the materialized state is
+    // O(groups) rows (10 here) at ANY table size. Walks the S12
+    // lifecycle: the COW update's pre/post pair cancels to the price
+    // delta, the OPTIMIZE version's empty feed adds nothing, the
+    // delete version subtracts its groups. The signed sums are
+    // additive, so the state is ONE aggregate over the union of all
+    // the feeds, written once (foldAggViewState); a state plus later
+    // feeds is the same union re-folded (MvFold.refold). The oracle
+    // pins the folded view equal to a group-by over the final
+    // snapshot — the self-maintainable-view contract (sum/count are
+    // the distributive aggregates that make it exact). At 100 TB this
+    // is the materialized-dashboard loop: each refresh costs the new
+    // feeds plus the O(groups) state, never a table re-read.
     "dml_cdc_agg_view" -> ((s, d) => {
       val last = aggViewLastState(s, d)
       Parquet.read(s, last).filter(col("n") =!= 0L)
@@ -791,14 +794,15 @@ object LakehouseQueries {
     // the aggregates that are NOT self-maintainable under deletes
     // (retracting the max needs a rescan), decided and shipped as:
     // maintainable on APPEND-ONLY feeds only. The state fold refuses
-    // any feed carrying a retraction (appendAggViewState's require);
+    // any feed carrying a retraction (foldAggViewState's require);
     // a state without mn/mx declines min/max queries (fail-safe —
     // Round15OpsSpec pins the decline over the delete-bearing S12
     // view). Here the 2-version append-only table's state carries
     // mn/mx, and a plain group-by with count/min/max/sum reroutes to
     // the O(groups) state — the fact units never appear in the
-    // executed plan. least/greatest fold the per-version extremes;
-    // min/max ignore nulls natively so no nn guard is needed.
+    // executed plan. min/max over the union of the insert-only feeds
+    // are the extremes; they ignore nulls natively, so no nn guard is
+    // needed.
     "view_rewrite_minmax" -> ((s, d) => {
       val (root, vLast) = registerAppendOrdersView(s, d)
       graft.sources.CommitLog.snapshot(s, root, vLast)
@@ -1765,15 +1769,15 @@ object LakehouseQueries {
     // in k%4 bucket units then COW-promotes bucket 3 to g+20. The fold
     // applies the classic signed delta algebra, one CHANGED table per
     // step: a fact step joins changes(fact) ⋈ dim@current, a dim step
-    // joins fact@current ⋈ changes(dim) — the delta side is BROADCAST,
-    // so the snapshot side is one pruned scan driven by the (small)
-    // changed-key set, never a table×table join; at 100 TB the
-    // snapshot read routes via the stats/bloom layer on k. Each step's
-    // grouped signed delta folds into an O(groups) materialized state
-    // exactly like the aggregate view (full_outer + coalesce), so
-    // per-step cost is O(changes ⋈ other) + O(groups) and plan depth
-    // stays O(1) at any history length. The OPTIMIZE version's empty
-    // feed is a carried no-op. Oracle: the folded view equals the
+    // joins fact@current ⋈ changes(dim) — the delta side is O(changes),
+    // so size-based join selection broadcasts it and the snapshot side
+    // is one scan driven by the changed-key set; at 100 TB the
+    // snapshot read routes via the stats/bloom layer on k. The steps'
+    // grouped signed deltas fold into an O(groups) materialized state
+    // exactly like the aggregate view — one union + groupBy refold
+    // (MvFold.refold) per written state, so the cost is O(changes ⋈
+    // other) + O(groups) per step. The OPTIMIZE version's empty feed
+    // is an empty union branch. Oracle: the folded view equals the
     // join+group-by over both tables' FINAL snapshots — the
     // self-maintainable-join-view contract.
     "dml_cdc_join_view" -> ((s, d) =>
@@ -1997,7 +2001,7 @@ object LakehouseQueries {
     val vLast = CommitLog.versions(root).last
     graft.plans.MvCatalog.register(s, "orders_by_g",
       graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, vLast),
-        "k % 10", "p", last))
+        ordersKeySql, ordersValueSql, last))
     (root, vLast)
   }
 
@@ -2020,27 +2024,19 @@ object LakehouseQueries {
 
   /** Register the archive-by-(k%10) view for the S63 union rewrite.
     * The archive is born complete (one insert version), so its state
-    * is the direct (g, n, nn, total) fold of the v0 snapshot — how a
-    * state was produced is irrelevant to the rewrite; its CONTENT is
-    * the contract. Returns (table root, version 0).
+    * is the (g, n, nn, total) fold of the v0 feed alone. Returns
+    * (table root, version 0).
     */
   private def registerArchView(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Long) = {
     import graft.sources.CommitLog
     val root = archTable(s, d)
     val stDir = graft.Derived.dir("archstate", d, "orders") { dir =>
-      val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
-      CommitLog.snapshot(s, root, 0L)
-        .groupBy((col("k") % 10).as("g"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("p").isNotNull, lit(1L)).otherwise(lit(0L))).as("nn"),
-          coalesce(sum(col("p").cast(DecimalType(38, 2))), zero)
-            .cast(DecimalType(38, 2)).as("total"))
-        .write.parquet(s"$dir/v0")
+      foldAggViewState(s, root, dir)
     }
     graft.plans.MvCatalog.register(s, "orders_arch_by_g",
       graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, 0L),
-        "k % 10", "p", s"$stDir/v0"))
+        ordersKeySql, ordersValueSql, s"$stDir/v0"))
     (root, 0L)
   }
 
@@ -2049,93 +2045,40 @@ object LakehouseQueries {
     * signed-delta fold, extracted (round 15) so view_rewrite_join can
     * register the same state for automatic rewrite. Returns the FINAL
     * state's parquet path. The fold applies one CHANGED table per
-    * step with the delta side broadcast (see the S32 entry's scaladoc
-    * for the full cost story); nn carries the signed non-null-value
-    * count so the rewrite keeps sum's NULL semantics.
+    * step (see the S32 entry's comment for the cost story); nn carries
+    * the signed non-null-value count so the rewrite keeps sum's NULL
+    * semantics.
     */
   private[graft] def joinViewFinalState(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     s"${joinViewStateRoot(s, d)}/final"
 
-  /** The join-view state DIRECTORY (per-step files s1, s2, s4, s5 +
-    * final — step 0 joins an unborn fact and step 3's OPTIMIZE feed is
-    * empty, so neither materializes). s2 is the (fact v2, dim v0) cut
-    * the stale-join rewrite registers as its deliberately-behind
-    * state.
+  /** The join-view state DIRECTORY: `s2`, the (fact v2, dim v0) cut
+    * the stale-join rewrite registers as its deliberately-behind state,
+    * and `final`, both built with [[graft.plans.MvFold]]'s refold. The
+    * steps name (isFactStep, changed version, the other side's version)
+    * in the global order interleaving both histories. Step 0 (dim v0
+    * before the fact's birth) joins nothing and is left out; s2 folds
+    * fact v0 and v1 against dim@0, and final folds s2 with fact v2
+    * (OPTIMIZE: an empty feed), dim v1 against fact@2 and fact v3
+    * against dim@1 — two writes, one aggregate each.
     */
   private[graft] def joinViewStateRoot(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    import graft.sources.CommitLog
+    import graft.plans.MvFold
     val fact = cdcTable(s, d)
     val dim = dimTable(s, d)
-    val stDir = graft.Derived.dir("joinview", d, "orders") { dir =>
-      val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
-      // the global step order interleaving both tables' histories;
-      // each step names (table-with-changes, its version, the OTHER
-      // side's table and current version)
-      val steps: Seq[(String, Long, String, Option[Long])] = Seq(
-        (dim, 0L, fact, None),      // dim arrives first: fact empty
-        (fact, 0L, dim, Some(0L)),
-        (fact, 1L, dim, Some(0L)),
-        (fact, 2L, dim, Some(0L)),  // OPTIMIZE: empty feed, no-op
-        (dim, 1L, fact, Some(2L)),
-        (fact, 3L, dim, Some(1L)))
-      steps.zipWithIndex.foldLeft(Option.empty[String]) {
-        case (acc, ((chTab, chV, otherTab, otherV), i)) =>
-          val ch = CommitLog.changes(s, chTab, chV)
-            .withColumn("sgn",
-              when(col("_change_type") === "insert", lit(1L))
-                .otherwise(lit(-1L)))
-            .drop("_change_type")
-          val joined = otherV match {
-            case None => None // other side not born yet: delta ⋈ ∅
-            case Some(ov) =>
-              // broadcast the DELTA; the snapshot side is scanned
-              // once, driven by the broadcast hash of changed keys
-              Some(CommitLog.snapshot(s, otherTab, ov)
-                .join(broadcast(ch), "k"))
-          }
-          // nn = the signed count of joined pairs with NON-NULL p —
-          // round 15: carried so the state serves plans.MvRewrite's
-          // join rewrite with the same NULL-correct sum/avg the
-          // single-table state has (nn = 0 → sum is NULL)
-          val delta = joined.map(
-            _.groupBy(col("g"))
-              .agg(sum(col("sgn")).as("dn"),
-                sum(when(col("p").isNotNull, col("sgn")).otherwise(lit(0L)))
-                  .as("dnn"),
-                sum((col("p") * col("sgn")).cast(DecimalType(38, 2)))
-                  .cast(DecimalType(38, 2)).as("dp")))
-          val out = s"$dir/s$i"
-          (acc, delta) match {
-            case (None, None) =>
-              None // nothing joined, nothing to materialize yet
-            case (None, Some(dl)) =>
-              dl.select(col("g"), col("dn").as("n"), col("dnn").as("nn"),
-                coalesce(col("dp"), zero).cast(DecimalType(38, 2))
-                  .as("total"))
-                .write.parquet(out)
-              Some(out)
-            case (Some(prev), None) => Some(prev)
-            case (Some(prev), Some(dl)) if ch.isEmpty => Some(prev)
-            case (Some(prev), Some(dl)) =>
-              Parquet.read(s, prev).join(dl, Seq("g"), "full_outer")
-                .select(col("g"),
-                  (coalesce(col("n"), lit(0L)) +
-                    coalesce(col("dn"), lit(0L))).as("n"),
-                  (coalesce(col("nn"), lit(0L)) +
-                    coalesce(col("dnn"), lit(0L))).as("nn"),
-                  (coalesce(col("total"), zero) +
-                    coalesce(col("dp"), zero))
-                    .cast(DecimalType(38, 2)).as("total"))
-                .write.parquet(out)
-              Some(out)
-          }
-      }.foreach { last =>
-        Parquet.read(s, last).write.parquet(s"$dir/final")
-      }
+    graft.Derived.dir("joinview", d, "orders") { dir =>
+      val view = graft.plans.MvCatalog.MvJoinStaleDef(fact, dim,
+        factStateVersion = 2L, dimStateVersion = 0L, tail = Nil,
+        "k", "k", "g", "p", s"$dir/s2")
+      def steps(st: (Boolean, Long, Long)*) = st.map(MvFold.joinDelta(s, view, _))
+      MvFold.refold(steps((true, 0L, 0L), (true, 1L, 0L)))
+        .write.parquet(view.statePath)
+      MvFold.refold(MvFold.stateSelect(s, view.statePath) +:
+        steps((true, 2L, 0L), (false, 1L, 2L), (true, 3L, 1L)))
+        .write.parquet(s"$dir/final")
     }
-    stDir
   }
 
   /** Register the STALE join view (round 15, second wave): state at
@@ -2176,15 +2119,11 @@ object LakehouseQueries {
       CommitLog.commit(dir, 1L, Seq("data/v0", "data/v1"))
     }
 
-  /** The (g, n, nn, total, mn, mx) state of an append-only table's
-    * CDC feed — the aggAViewLastState fold EXTENDED with min/max,
-    * which are exact under inserts (monotone: least/greatest fold)
-    * and IMPOSSIBLE under retraction (removing the max needs a
-    * rescan), so the fold REFUSES any feed carrying a non-insert row
-    * rather than maintain a silently wrong extreme. The refusal is the
-    * documented contract: delete-bearing lifecycles keep the
-    * (n, nn, total) state and min/max queries over them decline the
-    * rewrite (Round15OpsSpec pins both sides).
+  /** The (g, n, nn, total, mn, mx) state of the append-only table —
+    * [[foldAggViewState]] with min/max (see there for the retraction
+    * refusal). Delete-bearing lifecycles keep the (n, nn, total) state,
+    * and min/max queries over them decline the rewrite (Round15OpsSpec
+    * pins both sides).
     */
   private[graft] def appendAggViewState(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
@@ -2196,57 +2135,13 @@ object LakehouseQueries {
     s"$stDir/v${CommitLog.replayStates(stDir).last}"
   }
 
-  /** The min/max-bearing fold itself, separated so the retraction
-    * refusal is directly spec-testable against any commit-log table.
+  /** The min/max-bearing fold, separated so the retraction refusal is
+    * directly spec-testable against any commit-log table.
     */
   private[graft] def foldAppendMinMaxState(
       s: org.apache.spark.sql.SparkSession, root: String,
-      dir: String): Unit = {
-    import graft.sources.CommitLog
-    val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
-    CommitLog.versions(root).foldLeft(Option.empty[String]) { (acc, v) =>
-      val ch = CommitLog.changes(s, root, v)
-      require(ch.filter(col("_change_type") =!= "insert").isEmpty,
-        s"append-only min/max view: version $v of $root carries a " +
-          "retraction — min/max are not self-maintainable under " +
-          "deletes; rebuild the state or drop the mn/mx columns")
-      val delta = ch
-        .groupBy((col("k") % 10).as("g"))
-        .agg(count(lit(1)).as("dn"),
-          sum(when(col("p").isNotNull, lit(1L)).otherwise(lit(0L)))
-            .as("dnn"),
-          sum(col("p").cast(DecimalType(38, 2)))
-            .cast(DecimalType(38, 2)).as("dp"),
-          min(col("p")).as("dmn"), max(col("p")).as("dmx"))
-      acc match {
-        case None =>
-          val out = s"$dir/v$v"
-          delta.select(col("g"), col("dn").as("n"), col("dnn").as("nn"),
-            coalesce(col("dp"), zero).cast(DecimalType(38, 2)).as("total"),
-            col("dmn").as("mn"), col("dmx").as("mx"))
-            .write.parquet(out)
-          Some(out)
-        case Some(prev) if ch.isEmpty => Some(prev)
-        case Some(prev) =>
-          val out = s"$dir/v$v"
-          // least/greatest skip nulls, so an absent side (group new
-          // this version, or untouched) folds through correctly
-          Parquet.read(s, prev).join(delta, Seq("g"), "full_outer")
-            .select(col("g"),
-              (coalesce(col("n"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n"),
-              (coalesce(col("nn"), lit(0L)) +
-                coalesce(col("dnn"), lit(0L))).as("nn"),
-              (coalesce(col("total"), zero) + coalesce(col("dp"), zero))
-                .cast(DecimalType(38, 2)).as("total"),
-              least(col("mn"), col("dmn")).as("mn"),
-              greatest(col("mx"), col("dmx")).as("mx"))
-            .write.parquet(out)
-          Some(out)
-      }
-    }
-    ()
-  }
+      dir: String): String =
+    foldAggViewState(s, root, dir, minMax = true)
 
   /** A deliberately STALE view state: the k%7 grouped (g, n, nn,
     * total) fold of the append table's v0 feed ONLY — v1 exists but
@@ -2294,7 +2189,7 @@ object LakehouseQueries {
     val vLast = CommitLog.versions(root).last
     graft.plans.MvCatalog.register(s, "orders_append_by_g",
       graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, vLast),
-        "k % 10", "p", state))
+        ordersKeySql, ordersValueSql, state))
     (root, vLast)
   }
 
@@ -2319,61 +2214,67 @@ object LakehouseQueries {
     (fact, dim, vf, vd)
   }
 
-  /** The incrementally-maintained per-group (n, nn, total) view state
-    * of the S12 CDC fact lifecycle — the dml_cdc_agg_view fold, shared
-    * with view_rewrite_agg (which registers it for automatic rewrite).
-    * Like dml_cdc_replay: deterministic derived data, cached per
-    * (sfDir, fingerprint) — no per-invocation state-tree leak, and
-    * repeated runs reuse the fold. Returns the LATEST version's state
-    * parquet path.
+  /** The key and value SQL of the orders-by-(k%10) views: every state
+    * built by [[foldAggViewState]] groups by the one and sums the other,
+    * and every registration of such a state names the same pair.
+    */
+  private[graft] val ordersKeySql = "k % 10"
+  private[graft] val ordersValueSql = "p"
+
+  /** The per-group (n, nn, total) view state of the S12 CDC fact
+    * lifecycle — the dml_cdc_agg_view state, shared with
+    * view_rewrite_agg (which registers it for automatic rewrite).
+    * Deterministic derived data, cached per (sfDir, fingerprint).
+    * Returns the LATEST version's state parquet path.
     */
   private def aggViewLastState(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.sources.CommitLog
     val root = cdcTable(s, d)
     val stDir = graft.Derived.dir("aggview", d, "orders") { dir =>
-      val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
-      // State carries nn = the signed count of NON-NULL values
-      // alongside (n, total) — ADVICE r13: without it a group whose
-      // values are entirely NULL folds total to 0 where a direct
-      // aggregate returns NULL; the rewrite (plans/MvRewrite) emits
-      // NULL when nn = 0, restoring sum's NULL semantics exactly.
-      CommitLog.versions(root).foldLeft(Option.empty[String]) { (acc, v) =>
-        val ch = CommitLog.changes(s, root, v)
-        val delta = ch
-          .withColumn("sgn",
-            when(col("_change_type") === "insert", lit(1L))
-              .otherwise(lit(-1L)))
-          .groupBy((col("k") % 10).as("g"))
-          .agg(sum(col("sgn")).as("dn"),
-            sum(when(col("p").isNotNull, col("sgn")).otherwise(lit(0L)))
-              .as("dnn"),
-            sum((col("p") * col("sgn")).cast(DecimalType(38, 2)))
-              .cast(DecimalType(38, 2)).as("dp"))
-        acc match {
-          case None =>
-            val out = s"$dir/v$v"
-            delta.select(col("g"), col("dn").as("n"), col("dnn").as("nn"),
-              coalesce(col("dp"), zero).cast(DecimalType(38, 2)).as("total"))
-              .write.parquet(out)
-            Some(out)
-          case Some(prev) if ch.isEmpty => Some(prev) // maintenance: no-op
-          case Some(prev) =>
-            val out = s"$dir/v$v"
-            Parquet.read(s, prev).join(delta, Seq("g"), "full_outer")
-              .select(col("g"),
-                (coalesce(col("n"), lit(0L)) +
-                  coalesce(col("dn"), lit(0L))).as("n"),
-                (coalesce(col("nn"), lit(0L)) +
-                  coalesce(col("dnn"), lit(0L))).as("nn"),
-                (coalesce(col("total"), zero) + coalesce(col("dp"), zero))
-                  .cast(DecimalType(38, 2)).as("total"))
-              .write.parquet(out)
-            Some(out)
-        }
-      }
+      foldAggViewState(s, root, dir)
     }
     s"$stDir/v${CommitLog.replayStates(stDir).last}"
+  }
+
+  /** The (g, n, nn, total) state of commit-log table `root` after its
+    * last version, keyed by [[ordersKeySql]] over [[ordersValueSql]]:
+    * ONE signed aggregate ([[graft.plans.MvFold.deltaAgg]]) over the
+    * union of every version's signed change feed, written once to
+    * `dir/v<last>`. The sums are additive, so aggregating the union
+    * equals folding the versions' deltas one after another; an empty
+    * feed (OPTIMIZE) is an empty union branch, and a NULL key is one
+    * group, as in a groupBy over the final snapshot. nn is the signed
+    * count of NON-NULL values: without it a group whose values are all
+    * NULL would fold total to 0 where a direct aggregate returns NULL;
+    * the rewrite (plans/MvRewrite) emits NULL when nn = 0.
+    *
+    * `minMax` adds (mn, mx), exact under inserts and IMPOSSIBLE under
+    * retraction (removing the max needs a rescan): that fold first
+    * REFUSES a history whose feeds carry any non-insert row, naming
+    * the first such version, rather than maintain a silently wrong
+    * extreme. Returns the state's path.
+    */
+  private[graft] def foldAggViewState(s: org.apache.spark.sql.SparkSession,
+      root: String, dir: String, minMax: Boolean = false): String = {
+    import graft.plans.MvFold
+    import graft.sources.CommitLog
+    val vs = CommitLog.versions(root)
+    val feeds = vs.map(v => MvFold.signedChanges(s, root, v))
+    if (minMax) {
+      val firstRetraction = vs.zip(feeds)
+        .map { case (v, f) => f.filter(col("__sgn") =!= 1L).select(lit(v).as("v")) }
+        .reduce(_ unionAll _).agg(min(col("v"))).head()
+      require(firstRetraction.isNullAt(0),
+        s"append-only min/max view: version ${firstRetraction.getLong(0)} " +
+          s"of $root carries a retraction — min/max are not " +
+          "self-maintainable under deletes; rebuild the state or drop " +
+          "the mn/mx columns")
+    }
+    val out = s"$dir/v${vs.last}"
+    MvFold.deltaAgg(feeds.map(MvFold.signedProj(_, ordersKeySql, ordersValueSql))
+      .reduce(_ unionAll _), minMax).write.parquet(out)
+    out
   }
 
   /** The 2-version DIMENSION table S32 (dml_cdc_join_view) joins the

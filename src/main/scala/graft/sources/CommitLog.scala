@@ -1642,7 +1642,8 @@ object CommitLog {
     * units are not read, and the signed-weight formulation reads each
     * touched side ONCE through a single partial-agg exchange (the
     * naive a.exceptAll(r) ∪ r.exceptAll(a) plan scans and shuffles
-    * every touched unit twice). Schema evolution: both sides are read
+    * every touched unit twice); a version touching one side only needs
+    * no exchange at all. Schema evolution: both sides are read
     * mergeSchema and aligned to the version's evolved column set, so a
     * column born in this version reads as null on the removed side.
     */
@@ -1671,16 +1672,22 @@ object CommitLog {
     val a = align(read(added))
     val r = align(read(removed))
     val cols = schemaSrc.columns.toSeq
-    val diff = a.withColumn("__w", lit(1L))
-      .unionAll(r.withColumn("__w", lit(-1L)))
-      .groupBy(cols.map(col): _*).agg(sum(col("__w")).as("__n"))
-      .filter(col("__n") =!= 0)
-      .withColumn("_change_type",
-        when(col("__n") > 0, "insert").otherwise("delete"))
-      // net multiset count > 1 means the version added (or removed)
-      // genuine duplicate rows — replicate them out like exceptAll
-      .withColumn("__i", explode(expr("sequence(1L, abs(__n))")))
-      .select(cols.map(col) :+ col("_change_type"): _*)
+    // a version that removes no unit (an append, an upsert's data
+    // side) or adds none (a pure unit removal) has one side only: the
+    // diff IS that side, duplicates included, with no keyed exchange
+    val diff =
+      if (removed.isEmpty) a.withColumn("_change_type", lit("insert"))
+      else if (added.isEmpty) r.withColumn("_change_type", lit("delete"))
+      else a.withColumn("__w", lit(1L))
+        .unionAll(r.withColumn("__w", lit(-1L)))
+        .groupBy(cols.map(col): _*).agg(sum(col("__w")).as("__n"))
+        .filter(col("__n") =!= 0)
+        .withColumn("_change_type",
+          when(col("__n") > 0, "insert").otherwise("delete"))
+        // net multiset count > 1 means the version added (or removed)
+        // genuine duplicate rows — replicate them out like exceptAll
+        .withColumn("__i", explode(expr("sequence(1L, abs(__n))")))
+        .select(cols.map(col) :+ col("_change_type"): _*)
     // MERGE-ON-READ AWARENESS — the feed surfaces a MoR delete at the
     // version that DECLARES it, not at the compaction that later
     // applies it (the consumer caveat the r10 dv.txt doc carried, now

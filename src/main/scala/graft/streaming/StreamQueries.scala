@@ -132,7 +132,8 @@ object StreamQueries {
     val lastState = s"$stateDir/v${CommitLog.replayStates(stateDir).last}"
     graft.plans.MvCatalog.register(s, "orders_stream_by_g",
       graft.plans.MvCatalog.MvDef(graft.plans.MvCatalog.snapshotPaths(root, vLast),
-        "k % 10", "p", lastState))
+        graft.queries.LakehouseQueries.ordersKeySql,
+        graft.queries.LakehouseQueries.ordersValueSql, lastState))
     (root, stateDir, vLast)
   }
 
@@ -148,36 +149,19 @@ object StreamQueries {
     val root = s"$dir/graft_sgv_tab"
     val stateDir = s"$dir/graft_sgv_state"
     val ckpt = tmp("graft_sgv_ckpt")
-    val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 2))
     def foldInto(v: Long): Unit = {
+      import graft.plans.MvFold
+      import graft.queries.LakehouseQueries.{ordersKeySql, ordersValueSql}
       val out = java.nio.file.Paths.get(stateDir, s"v$v")
       if (java.nio.file.Files.exists(out)) return // replay: published
-      val ch = CommitLog.changes(s, root, v)
-        .withColumn("sgn",
-          when(col("_change_type") === "insert", lit(1L))
-            .otherwise(lit(-1L)))
+      val ch = MvFold.signedChanges(s, root, v)
       if (ch.isEmpty) return // maintenance version: empty feed, no-op
-      val delta = ch.groupBy((col("k") % 10).as("g"))
-        .agg(sum(col("sgn")).as("dn"),
-          sum(when(col("p").isNotNull, col("sgn")).otherwise(lit(0L)))
-            .as("dnn"),
-          sum((col("p") * col("sgn")).cast(DecimalType(38, 2)))
-            .cast(DecimalType(38, 2)).as("dp"))
+      val delta = MvFold.deltaAgg(MvFold.signedProj(ch, ordersKeySql, ordersValueSql))
       val next = CommitLog.replayStates(stateDir).filter(_ < v)
         .lastOption match {
-        case None =>
-          delta.select(col("g"), col("dn").as("n"), col("dnn").as("nn"),
-            coalesce(col("dp"), zero).cast(DecimalType(38, 2)).as("total"))
+        case None => delta
         case Some(pv) =>
-          Parquet.read(s, s"$stateDir/v$pv")
-            .join(delta, Seq("g"), "full_outer")
-            .select(col("g"),
-              (coalesce(col("n"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n"),
-              (coalesce(col("nn"), lit(0L)) +
-                coalesce(col("dnn"), lit(0L))).as("nn"),
-              (coalesce(col("total"), zero) + coalesce(col("dp"), zero))
-                .cast(DecimalType(38, 2)).as("total"))
+          MvFold.refold(Seq(MvFold.stateSelect(s, s"$stateDir/v$pv"), delta))
       }
       // exactly-once per version: exists-skip above + atomic-move
       // publish below (the replayInto pattern) — a replayed batch or
