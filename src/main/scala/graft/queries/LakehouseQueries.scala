@@ -300,14 +300,15 @@ object LakehouseQueries {
     // a hash layout's per-unit ranges all span the key space and
     // nothing skips); commit publishes a per-unit (min,max,count)
     // sidecar. Three probes — one inside a single unit, one
-    // straddling two, one over everything — each read through
-    // CommitLog.snapshotRangeCol, which prunes units at PLANNING time
-    // from the stats alone. Output: per probe, units actually
-    // scanned + the probe's row count and exact total. Fully
-    // oracled: DuckDB recomputes the unit ranges (k DIV width) and
-    // applies the same intersects-[lo,hi] rule. At 100 TB the stats
-    // sidecar is O(units) text and the skipping decision touches no
-    // data files — reading 1/8th of the table costs 1/8th.
+    // straddling two, one over everything — each an ordinary
+    // snapshot filter, whose scan prunes units at PLANNING time from
+    // the stats alone (CommitLog.scannedUnits counts them). Output:
+    // per probe, units actually scanned + the probe's row count and
+    // exact total. Fully oracled: DuckDB recomputes the unit ranges
+    // (k DIV width) and applies the same intersects-[lo,hi] rule.
+    // At 100 TB the stats sidecar is O(units) text and the skipping
+    // decision touches no data files — reading 1/8th of the table
+    // costs 1/8th.
     "dml_data_skipping" -> ((s, d) => {
       import graft.sources.CommitLog
       val root = graft.Derived.dir("skip", d, "orders") { dir =>
@@ -335,34 +336,18 @@ object LakehouseQueries {
       val maxK = load(s, d, "orders")
         .agg(max(col("o_orderkey"))).head().getLong(0)
       val wd = maxK / 8L + 1L
-      val numeric = Seq(
-        (0L, 2L * wd, 3L * wd - 1L),          // fully inside unit 2
-        (1L, 5L * wd + wd / 2L, 6L * wd + wd / 2L), // straddles units 5+6
-        (2L, 0L, maxK))                        // everything
       def pad(v: Long) = f"$v%012d"
-      val per = numeric.map { case (id, lo, hi) =>
-        val (snap, scanned) =
-          CommitLog.snapshotRangeCol(s, root, 0L, "k", lo.toString, hi.toString)
-        snap.filter(col("k").between(lo, hi))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("p")).cast(DecimalType(38, 2)).as("total"))
-          .select(lit(id).as("probe"),
-            lit(scanned.toLong).as("n_units_scanned"),
-            col("n_rows"), col("total"))
-      } :+ {
+      val (lo3, hi3) = (6L * wd + wd / 2L, 7L * wd + wd / 2L)
+      Seq(
+        (0L, col("k").between(2L * wd, 3L * wd - 1L)),   // fully inside unit 2
+        (1L, col("k").between(5L * wd + wd / 2L, 6L * wd + wd / 2L)), // units 5+6
+        (2L, col("k").between(0L, maxK)),               // everything
         // probe 3: the STRING column path end-to-end — pruned on the
         // footers' binary min/max, filtered lexicographically
-        val (lo, hi) = (6L * wd + wd / 2L, 7L * wd + wd / 2L)
-        val (snap, scanned) =
-          CommitLog.snapshotRangeCol(s, root, 0L, "ks", pad(lo), pad(hi))
-        snap.filter(col("ks").between(pad(lo), pad(hi)))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("p")).cast(DecimalType(38, 2)).as("total"))
-          .select(lit(3L).as("probe"),
-            lit(scanned.toLong).as("n_units_scanned"),
-            col("n_rows"), col("total"))
-      }
-      per.reduce(_ unionAll _).orderBy("probe")
+        (3L, col("ks").between(pad(lo3), pad(hi3)))
+      ).map { case (id, probe) =>
+        probeRow(id, CommitLog.snapshot(s, root, 0L).filter(probe))
+      }.reduce(_ unionAll _).orderBy("probe")
     }),
 
     // S10 (round 9): INCREMENTAL READ — the table consumed as a
@@ -1036,8 +1021,7 @@ object LakehouseQueries {
         val uid = java.security.MessageDigest.getInstance("MD5")
           .digest(k0.toString.getBytes("UTF-8"))
           .map("%02x".format(_)).mkString
-        val (snap, _) = CommitLog.snapshotBloom(s, root, 0L, "uid", uid)
-        snap.filter(col("uid") === uid)
+        CommitLog.snapshot(s, root, 0L).filter(col("uid") === uid)
           .agg(count(lit(1)).as("n_rows"),
             sum(col("p")).cast(DecimalType(38, 2)).as("total"))
           .select(lit(i.toLong).as("probe"), col("n_rows"), col("total"))
@@ -1057,7 +1041,7 @@ object LakehouseQueries {
     // ~√ locality instead of one dim getting everything). Both
     // versions stay readable (time travel across the re-cluster);
     // pruning runs on FOOTER-derived per-unit xc/yd stats through
-    // snapshotRangeCol. Output: (version, probe, units scanned, rows)
+    // the snapshot scan. Output: (version, probe, units scanned, rows)
     // — n_rows is layout-invariant by construction, the unit counts
     // are the clustering metric. Fully oracled: DuckDB recomputes the
     // z-values (sort_zorder's proven twin), both unit layouts, and
@@ -1112,13 +1096,12 @@ object LakehouseQueries {
         ("both", Seq(("xc", 0L, custHi), ("yd", 0L, dayHi))))
       CommitLog.versions(root).flatMap { v =>
         probes.map { case (tag, preds) =>
-          val (snap, scanned) = CommitLog.snapshotRangeMulti(s, root, v,
-            preds.map { case (c, lo, hi) => (c, lo.toString, hi.toString) })
-          preds.foldLeft(snap) { case (df, (c, lo, hi)) =>
-              df.filter(col(c).between(lo, hi)) }
-            .agg(count(lit(1)).as("n_rows"))
+          val snap = preds.foldLeft(CommitLog.snapshot(s, root, v)) {
+            case (df, (c, lo, hi)) => df.filter(col(c).between(lo, hi)) }
+          snap.agg(count(lit(1)).as("n_rows"))
             .select(lit(v).cast("bigint").as("version"), lit(tag).as("probe"),
-              lit(scanned.toLong).as("n_units_scanned"), col("n_rows"))
+              lit(CommitLog.scannedUnits(snap).toLong).as("n_units_scanned"),
+              col("n_rows"))
         }
       }.reduce(_ unionAll _).orderBy("version", "probe")
     }),
@@ -1175,7 +1158,7 @@ object LakehouseQueries {
     // exactly TWO new objects: one post-image unit (appended to the
     // manifest) and one tombstone unit of the update keys (the dv
     // sidecar) — no existing unit opened, no key routed. Readers use
-    // the SEQUENCE-AWARE snapshotMoRSeq: tombstones erase replaced
+    // the SEQUENCE-AWARE snapshotMoR: tombstones erase replaced
     // pre-images from carried units while the post-image unit, added
     // by the same version, is exempt (Iceberg's sequence-number rule
     // collapsed to one commit step; a global apply would delete the
@@ -1205,7 +1188,7 @@ object LakehouseQueries {
       }
       CommitLog.versions(root).map { v =>
         val raw = CommitLog.snapshot(s, root, v).count()
-        CommitLog.snapshotMoRSeq(s, root, v, "k")
+        CommitLog.snapshotMoR(s, root, v, "k")
           .agg(count(lit(1)).as("n_visible"),
             sum(col("p")).cast(DecimalType(38, 2)).as("total_visible"))
           .select(lit(v).cast("bigint").as("version"),
@@ -1256,7 +1239,7 @@ object LakehouseQueries {
         CommitLog.applyDeletes(s, dir, "k")
       }
       CommitLog.versions(root).map { v =>
-        CommitLog.snapshotMoRSeq(s, root, v, "k")
+        CommitLog.snapshotMoR(s, root, v, "k")
           .agg(count(lit(1)).as("n_visible"),
             sum(col("p")).cast(DecimalType(38, 2)).as("total_visible"))
           .select(lit(v).cast("bigint").as("version"),
@@ -1743,13 +1726,11 @@ object LakehouseQueries {
       val pk = base.filter(col("k") % 50 === 2)
         .agg(min(col("k"))).head().getLong(0)
       CommitLog.versions(root).map { v =>
-        val (_, nScan) = CommitLog.snapshotRangeCol(s, root, v,
-          "k", "0", (w - 1L).toString)
-        val (bhF, _) = CommitLog.snapshotBloom(s, root, v, "k", sk)
-        val bloomHit = bhF.filter(col("k") === sk).count()
-        val (bpF, _) = CommitLog.snapshotBloom(s, root, v, "k", pk)
-        val bloomPurged = bpF.filter(col("k") === pk).count()
-        CommitLog.snapshot(s, root, v)
+        val snap = CommitLog.snapshot(s, root, v)
+        val nScan = CommitLog.scannedUnits(snap.filter(col("k").between(0L, w - 1L)))
+        val bloomHit = snap.filter(col("k") === sk).count()
+        val bloomPurged = snap.filter(col("k") === pk).count()
+        snap
           .agg(count(lit(1)).as("n_rows"),
             sum(col("p")).cast(DecimalType(38, 2)).as("total"))
           .select(lit(v).cast("bigint").as("version"),
@@ -1825,7 +1806,7 @@ object LakehouseQueries {
     // units (evolution is metadata: old data keeps its old layout
     // forever; a rewrite of 50 TB of history is exactly what the
     // feature exists to avoid). The probe path is the ordinary
-    // stats-routed read (snapshotRangeCol): pruning works per UNIT
+    // snapshot filter, whose scan skips units: pruning works per UNIT
     // from footer min/max, so it is layout-agnostic by construction —
     // a narrow range scans 1 coarse + 1-2 fine units out of 10, and
     // the fine generation keeps getting finer pruning as new specs
@@ -1869,14 +1850,7 @@ object LakehouseQueries {
         (1L, 5L * wd8 + wd8 / 2L, 6L * wd8 + wd8 / 2L), // 1 coarse + 2 fine
         (2L, 0L, mk))                                 // everything
       probes.map { case (id, lo, hi) =>
-        val (snap, scanned) =
-          CommitLog.snapshotRangeCol(s, root, 1L, "k", lo.toString, hi.toString)
-        snap.filter(col("k").between(lo, hi))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("p")).cast(DecimalType(38, 2)).as("total"))
-          .select(lit(id).as("probe"),
-            lit(scanned.toLong).as("n_units_scanned"),
-            col("n_rows"), col("total"))
+        probeRow(id, CommitLog.snapshot(s, root, 1L).filter(col("k").between(lo, hi)))
       }.reduce(_ unionAll _).orderBy("probe")
     }),
 
@@ -2276,6 +2250,17 @@ object LakehouseQueries {
       .reduce(_ unionAll _), minMax).write.parquet(out)
     out
   }
+
+  /** One skipping probe's row: `probe` = `id`, the units `snap`'s scan
+    * reads, and its row count and exact total of `p`.
+    */
+  private def probeRow(id: Long,
+      snap: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    snap.agg(count(lit(1)).as("n_rows"),
+        sum(col("p")).cast(DecimalType(38, 2)).as("total"))
+      .select(lit(id).as("probe"),
+        lit(graft.sources.CommitLog.scannedUnits(snap).toLong).as("n_units_scanned"),
+        col("n_rows"), col("total"))
 
   /** The 2-version DIMENSION table S32 (dml_cdc_join_view) joins the
     * S12 fact lifecycle against: v0 inserts k -> k%10 in k%4 bucket

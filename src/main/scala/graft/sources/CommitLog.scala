@@ -29,6 +29,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    consumer that routes row keys through unit ranges reads the key
   *    column's entries by name ([[keyRanges]]) and stats kept on any
   *    other column can never route a key.
+  *  - Unit skipping lives in the scan, not in a read API: every
+  *    snapshot's relation sits over a [[UnitSkippingIndex]], which
+  *    drops the units that the filters Catalyst pushes to the scan
+  *    rule out by the version's cstats ranges and bloom filters. A
+  *    `filter`, a join and an MV compensation plan all skip the same
+  *    way; [[scannedUnits]] reports how many units a frame reads.
   *
   * Scale: the manifest is O(units) text; [[snapshot]] hands Spark the
   * unit paths directly, so the read is an ordinary multi-path parquet
@@ -229,16 +235,61 @@ object CommitLog {
 
   /** The unit paths (absolute) of `version`'s snapshot. */
   def units(table: String, version: Long): Seq[String] =
-    manifestLines(table, version)
+    unitNames(table, version)
       .map(u => java.nio.file.Paths.get(table, u).toString)
 
   /** Read the table AS OF `version` — an ordinary multi-path parquet
     * scan over that snapshot's units. The read goes through
     * [[Parquet.read]], which takes the schema from the units' footers on
-    * the driver, so no snapshot starts a Spark job.
+    * the driver, so no snapshot starts a Spark job. The scan skips the
+    * units its pushed filters rule out by the version's cstats and
+    * bloom sidecars ([[UnitSkippingIndex]]); [[scannedUnits]] counts
+    * the units it reads.
     */
   def snapshot(spark: SparkSession, table: String, version: Long): DataFrame =
-    Parquet.read(spark, units(table, version))
+    read(spark, table, version, unitNames(table, version))
+
+  /** The units `rels` of `version` read as one scan over a
+    * [[UnitSkippingIndex]], which lists a unit only when a scan reads
+    * it. Without schema merging the schema is the first data file's in
+    * path order, which lies in the first unit in that order, so only
+    * that unit is listed here.
+    */
+  private def read(spark: SparkSession, table: String, version: Long,
+      rels: Seq[String], mergeSchema: Boolean = false): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.graft.GraftSqlInternals
+    val paths = rels.map(u => java.nio.file.Paths.get(table, u).toString)
+    val df = Parquet.read(spark, if (mergeSchema) paths else Seq(paths.minBy(_ + "/")),
+      mergeSchema)
+    // qualified as Spark's read qualifies a path
+    val hconf = spark.sessionState.newHadoopConf()
+    val roots = paths.map(new Path(_)).map(p => p.getFileSystem(hconf).makeQualified(p))
+    GraftSqlInternals.ofRows(spark, GraftSqlInternals.analyzed(df).transform {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation =>
+          def listed(ps: Seq[Path]) =
+            if (ps.toSet == fs.location.rootPaths.toSet) fs.location
+            else Parquet.listing(spark, ps.map(_.toString)).location
+          lr.copy(relation = fs.copy(location = UnitSkippingIndex(table, version,
+            rels, roots, fs.partitionSchema)(listed))(fs.sparkSession))
+        case _ => lr
+      }
+    })
+  }
+
+  /** How many commit-log units `df`'s scans read once unit skipping
+    * has ruled its units out, summed over its scans. It plans `df` and
+    * starts no Spark job.
+    */
+  def scannedUnits(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location match {
+        case i: UnitSkippingIndex => i.scannedUnits(s.dataFilters)
+        case _ => 0
+      }
+    }.sum
 
   /** Read AS OF `version` like [[snapshot]], with the optimizer fed
     * CatalogStatistics FOLDED FROM THAT VERSION'S CSTATS SIDECAR
@@ -332,7 +383,7 @@ object CommitLog {
     * shared columns intact.
     */
   def snapshotEvolved(spark: SparkSession, table: String, version: Long): DataFrame =
-    Parquet.read(spark, units(table, version), mergeSchema = true)
+    read(spark, table, version, unitNames(table, version), mergeSchema = true)
 
   /** Atomic, immutable sidecar publish: same hard-link protocol as
     * manifests (rename would silently REPLACE a concurrent writer's
@@ -367,21 +418,23 @@ object CommitLog {
   def rebuildStats(spark: SparkSession, table: String, version: Long,
       keyCol: String): Unit =
     writeColStats(table, version,
-      footerColStats(spark, table, unitsRel(table, version), Seq(keyCol)))
+      footerColStats(spark, table, unitNames(table, version), Seq(keyCol)))
 
   /** One column's per-unit statistics: `kind` is `long`, `double` or
-    * `string`; min/max are string-rendered (lexicographic compare is
-    * order-faithful for `string`, numeric parse for the others);
+    * `string`; min/max are string-rendered (compared in code-point
+    * order for `string`, by numeric parse for the others);
     * `count` is the column's value count including nulls.
     */
   final case class ColStat(unit: String, col: String, kind: String,
       min: String, max: String, count: Long)
 
-  /** `a < b` in a stats `kind`'s order: lexicographic for `string`,
+  /** `a < b` in a stats `kind`'s order: code-point order (unsigned
+    * UTF-8 bytes, Parquet's and Catalyst's string order) for `string`,
     * numeric for `long` and `double`.
     */
   private def kindLt(kind: String, a: String, b: String): Boolean =
-    if (kind == "string") a < b
+    if (kind == "string") org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
     else if (kind == "long") a.toLong < b.toLong
     else a.toDouble < b.toDouble
 
@@ -578,7 +631,7 @@ object CommitLog {
       s"$table has no column stats for version $version"))
 
   /** The multi-column stats of `version`, None without a cstats sidecar. */
-  private def colStatsOpt(table: String, version: Long): Option[Seq[ColStat]] =
+  private[sources] def colStatsOpt(table: String, version: Long): Option[Seq[ColStat]] =
     lines(logFile(table, version, "cstats.txt")).map(_.map { l =>
       val Array(u, c, k, mn, mx, n) = l.split('|')
       ColStat(dec(u), dec(c), dec(k), dec(mn), dec(mx), n.toLong)
@@ -598,50 +651,6 @@ object CommitLog {
     colStatsOpt(table, version).getOrElse(Seq.empty)
       .filter(s => s.col == col && s.kind == "long")
       .map(s => (s.unit, s.min.toLong, s.max.toLong, s.count))
-
-  /** Stats-pruned read on ANY statted column: scan only the units
-    * whose footer [min,max] for `colName` intersects [lo, hi] — the
-    * one-predicate case of [[snapshotRangeMulti]]. Returns the
-    * surviving-units frame + how many units the probe scans; a
-    * no-match probe is the empty frame. Rows outside [lo, hi] inside
-    * a surviving unit still need the ordinary pushed filter — stats
-    * prune UNITS, not rows. Like [[snapshot]], all the pruned-read
-    * paths serve the RAW pre-image: on a table with outstanding
-    * merge-on-read deletes, anti-join [[deletes]] yourself or compact
-    * first.
-    */
-  def snapshotRangeCol(spark: SparkSession, table: String, version: Long,
-      colName: String, lo: String, hi: String): (DataFrame, Int) =
-    snapshotRangeMulti(spark, table, version, Seq((colName, lo, hi)))
-
-  /** Conjunctive stats-pruned read: a unit survives only if EVERY
-    * predicate's [lo, hi] intersects that column's footer [min, max] —
-    * the multi-column skipping a z-ordered layout exists to serve
-    * (each dim's span is bounded per unit, so a small rectangle probe
-    * prunes multiplicatively where a linear layout prunes on one dim
-    * at best). The compare follows the entry's kind: numeric for
-    * long/double stats, lexicographic for string (order-faithful when
-    * the column's encoding is, e.g. zero-padded keys or ISO dates).
-    * Surviving units are read in sidecar order. A probe intersecting
-    * no unit is a valid, fully-pruned read: the EMPTY frame with the
-    * snapshot's schema, 0 units scanned.
-    */
-  def snapshotRangeMulti(spark: SparkSession, table: String, version: Long,
-      preds: Seq[(String, String, String)]): (DataFrame, Int) = {
-    require(preds.nonEmpty, "need at least one (column, lo, hi) predicate")
-    val cs = colStats(table, version)
-    val surviving = preds.map { case (colName, lo, hi) =>
-      val forCol = cs.filter(_.col == colName)
-      require(forCol.nonEmpty,
-        s"$table v$version has no stats for column $colName")
-      forCol.filter(s => !kindLt(s.kind, hi, s.min) && !kindLt(s.kind, s.max, lo))
-        .map(_.unit).toSet
-    }.reduce(_ intersect _)
-    val picked = cs.map(_.unit).distinct.filter(surviving)
-      .map(u => java.nio.file.Paths.get(table, u).toString)
-    if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (Parquet.read(spark, picked), picked.size)
-  }
 
   /** The units `version` ADDED relative to its predecessor (all of
     * them for the first version) — the incremental feed a streaming
@@ -859,7 +868,7 @@ object CommitLog {
         // merge: carried entries verbatim, rewritten/insert units get
         // filters REBUILT delta-only (their content changed — a
         // carried filter would go stale-positive, a missing one would
-        // make snapshotBloom refuse the whole sidecar)
+        // leave that unit unprunable)
         val ns = fresh.filter(_.col == keyCol).map(s => s.unit -> s.count).toMap
         carryBloomStats(spark, table, v, v + 1, newUnits.result(),
           touchedRel.toSet, rel => ns.getOrElse(rel, 1L), 0.03)
@@ -897,7 +906,7 @@ object CommitLog {
         s"compaction on $table lost $attempts commit races — back off")
       val v = latestVersion(table)
       // an un-applied upsert's tombstones do NOT apply to its own
-      // post-image units (the snapshotMoRSeq sequence rule);
+      // post-image units (the snapshotMoR sequence rule);
       // bin-packing would blend pre- and post-images into one unit
       // under a globally-applied carried sidecar — deleting the
       // post-images right back out. Maintenance order is applyDeletes
@@ -919,7 +928,7 @@ object CommitLog {
       val root = java.nio.file.Paths.get(table)
       val carried = {
         val bigSet = big.map(_._1).toSet
-        manifestLines(table, v).filter { line =>
+        unitNames(table, v).filter { line =>
           bigSet(java.nio.file.Paths.get(table, line).toString)
         }
       }
@@ -931,7 +940,7 @@ object CommitLog {
         // changes them), untouched entries carry verbatim
         locally {
           val smallSet = small.map(_._1).toSet
-          val smallRel = manifestLines(table, v).filter(line =>
+          val smallRel = unitNames(table, v).filter(line =>
             smallSet(java.nio.file.Paths.get(table, line).toString))
           carryBloomAcrossPack(spark, table, v, v + 1, rel, smallRel.toSet,
             r => Parquet.read(spark,
@@ -956,7 +965,7 @@ object CommitLog {
     * no knowledge of any key column needed — and untouched units carry
     * verbatim. Without this, an OPTIMIZE would orphan the stats layer
     * and break every downstream consumer of it (mergeCow routing,
-    * snapshotRangeCol skipping) until the next full stats rebuild. A
+    * scan unit skipping) until the next full stats rebuild. A
     * version without a sidecar carries none; a column that does not
     * cover every packed unit would fold into a LYING range, so then
     * nothing is published.
@@ -997,8 +1006,10 @@ object CommitLog {
     }
   }
 
-  /** The manifest's raw relative unit lines for `version`. */
-  private def manifestLines(table: String, version: Long): Seq[String] =
+  /** The manifest-relative unit names of `version` — what sidecar
+    * entries key on (the absolute-path twin is [[units]]).
+    */
+  def unitNames(table: String, version: Long): Seq[String] =
     lines(manifest(table, version)).getOrElse(throw new IllegalArgumentException(
       s"$table has no version $version (published: ${versions(table).mkString(",")})"))
 
@@ -1042,7 +1053,7 @@ object CommitLog {
     */
   def writeBloomStats(spark: SparkSession, table: String, version: Long,
       colName: String, expectedPerUnit: Long, fpp: Double): Unit = {
-    val rels = unitsRel(table, version)
+    val rels = unitNames(table, version)
     val lines = buildBloomLines(spark, table, rels, colName,
       expectedPerUnit, fpp)
     require(lines.size == rels.size,
@@ -1093,7 +1104,7 @@ object CommitLog {
       fpp: Double): Unit = {
     val prev = bloomLines(table, carryFrom)
     if (prev.isEmpty) return
-    val targetRels = unitsRel(table, to).toSet
+    val targetRels = unitNames(table, to).toSet
     val cols = prev.map(_._2).distinct
     val carried = prev.filter { case (rel, _, _) =>
       targetRels(rel) && !rewrittenAbsorbed(rel)
@@ -1110,8 +1121,8 @@ object CommitLog {
     }
     val all = carried ++ built
     // only publish a sidecar that still answers for EVERY unit of the
-    // target snapshot — a partial sidecar would let snapshotBloom skip
-    // an uncovered unit and return a silently wrong answer
+    // target snapshot — a scan never skips a unit without a filter,
+    // so a partial sidecar would quietly stop pruning the uncovered
     if (cols.forall(c => targetRels.forall(r =>
         all.exists(e => e._1 == r && e._2 == c))))
       publishSidecar(table, to, "bloom.txt",
@@ -1167,7 +1178,7 @@ object CommitLog {
       }
     }
     val all = carried ++ packedEntries
-    val targetRels = unitsRel(table, to).toSet
+    val targetRels = unitNames(table, to).toSet
     if (cols.forall(c => targetRels.forall(r =>
         all.exists(e => e._1 == r && e._2 == c))))
       publishSidecar(table, to, "bloom.txt",
@@ -1186,7 +1197,7 @@ object CommitLog {
   /** The decoded `(rel, col, base64)` bloom entries of `version` —
     * empty when the version has no bloom sidecar.
     */
-  private def bloomLines(table: String,
+  private[sources] def bloomLines(table: String,
       version: Long): Seq[(String, String, String)] =
     lines(logFile(table, version, "bloom.txt")).getOrElse(Seq.empty)
       .map { l => val Array(rel, c, b64) = l.split('|')
@@ -1198,7 +1209,7 @@ object CommitLog {
     * where a per-unit df.stat.bloomFilter loop is one driver-serialized
     * job each — the footerColStats lesson applied to the bloom layer.
     * Values hash through cast('string') + putString; probes must use
-    * the same encoding ([[snapshotBloom]]).
+    * the same encoding ([[UnitSkippingIndex]]).
     */
   private def buildBloomLines(spark: SparkSession, table: String,
       rels: Seq[String], colName: String, expectedPerUnit: Long,
@@ -1237,70 +1248,6 @@ object CommitLog {
         (rel, java.util.Base64.getEncoder.encodeToString(bos.toByteArray))
       }
   }
-
-  /** Bloom-pruned point read: scan only the units whose bloom filter
-    * says `value` MIGHT be present — "definitely absent" units are
-    * skipped at planning time, no footer opened. The complement of
-    * range skipping: a point probe on a scattered high-cardinality
-    * column (document ids, content digests) prunes to ~1 unit here
-    * where min/max stats prune nothing. False positives cost an extra
-    * unit scan, never a wrong answer — the probe row filter still
-    * applies inside surviving units.
-    *
-    * Probe-encoding contract: the build hashed each value through
-    * Spark's cast-to-string, so the probe must be A VALUE OF THE
-    * INDEXED COLUMN'S TYPE — Long/Int/String render identically on
-    * both sides, and BigDecimal probes go through toPlainString (the
-    * cast rendering for decimals). Probing a DECIMAL column with a
-    * Double (\"77.5\" vs the stored \"77.50\") is a caller type error
-    * this API cannot detect and WILL false-negative — pass the
-    * column's own type.
-    */
-  def snapshotBloom(spark: SparkSession, table: String, version: Long,
-      colName: String, value: Any): (DataFrame, Int) = {
-    require(java.nio.file.Files.isRegularFile(logFile(table, version, "bloom.txt")),
-      s"$table v$version has no bloom sidecar")
-    val entries = bloomLines(table, version).filter(_._2 == colName)
-    require(entries.nonEmpty,
-      s"$table v$version bloom sidecar has no entries for $colName")
-    // the sidecar must answer for EVERY unit of the snapshot — a unit
-    // without an entry has no filter to say "maybe", and skipping it
-    // would be a silently wrong answer, not a false positive
-    val uncovered = unitsRel(table, version).toSet -- entries.map(_._1).toSet
-    require(uncovered.isEmpty,
-      s"$table v$version bloom sidecar for $colName misses units " +
-        s"${uncovered.toSeq.sorted.mkString(",")} — rebuild it")
-    val picked = entries.flatMap { case (rel, _, b64) =>
-      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(
-          java.util.Base64.getDecoder.decode(b64)))
-      // probe with the SAME encoding the build hashed (cast('string')
-      // + putString): a raw Long probe would dispatch to
-      // mightContainLong and get guaranteed false negatives, and a
-      // BigDecimal must render plain (Spark's decimal cast), never
-      // scientific notation
-      val rendered = value match {
-        case d: java.math.BigDecimal => d.toPlainString
-        case d: scala.math.BigDecimal => d.bigDecimal.toPlainString
-        case other => String.valueOf(other)
-      }
-      if (bf.mightContainString(rendered))
-        Some(java.nio.file.Paths.get(table, rel).toString)
-      else None
-    }
-    if (picked.isEmpty) (snapshot(spark, table, version).limit(0), 0)
-    else (Parquet.read(spark, picked), picked.size)
-  }
-
-  /** The manifest-relative unit names of `version`. */
-  private def unitsRel(table: String, version: Long): Seq[String] =
-    manifestLines(table, version)
-
-  /** Public view of the manifest-relative unit names — what stats
-    * sidecar entries key on (the absolute-path twin is [[units]]).
-    */
-  def unitNames(table: String, version: Long): Seq[String] =
-    unitsRel(table, version)
 
   /** The units a `partitionBy(col)` write left under `table/sub`: one
     * manifest-relative `sub/col=value` name per written directory, in
@@ -1367,23 +1314,27 @@ object CommitLog {
 
   /** Read `version` with its merge-on-read deletes APPLIED: the
     * snapshot anti-joined against the union of its tombstone units on
-    * `keyCol`. With no sidecar this IS [[snapshot]] — zero overhead
-    * on clean versions. The join strategy is deliberately left to the
-    * optimizer: the common tombstone set (a GDPR-style delete on a
-    * 100 TB table) is tiny and broadcasts, but a bulk delete's
-    * key list can be arbitrarily large, and a forced broadcast hint
-    * there is a driver OOM — AQE degrades it to a shuffled anti-join
-    * instead. The anti-join is the read-amplification a compaction
-    * later removes; caller predicates still push down to the data
-    * scan through it (PLANS.md round 10).
+    * `keyCol`; with no sidecar this IS [[snapshot]]. Iceberg's sequence
+    * rule, collapsed to one commit step: a delete applies only to data
+    * written BEFORE it, so the post-image units an [[upsertMoR]]
+    * version added (its seq sidecar) are exempt from its tombstones,
+    * which a global apply would delete right back out. Plain deletes
+    * and compaction-carried sidecars apply to every unit.
+    *
+    * The join strategy is left to the optimizer: a GDPR-style
+    * tombstone set is tiny and broadcasts, but a bulk delete's key
+    * list can be arbitrarily large, where a forced broadcast is a
+    * driver OOM. Caller predicates still push down to the data scans
+    * through the anti-join and skip units there (PLANS.md round 10).
     */
   def snapshotMoR(spark: SparkSession, table: String, version: Long,
       keyCol: String): DataFrame = {
-    val base = snapshot(spark, table, version)
     val tu = deletes(table, version)
-    if (tu.isEmpty) base
-    else base.join(Parquet.read(spark, tu).select(keyCol).distinct(),
-      Seq(keyCol), "left_anti")
+    if (tu.isEmpty) return snapshot(spark, table, version)
+    val keys = Parquet.read(spark, tu).select(keyCol).distinct()
+    val (post, pre) = unitNames(table, version).partition(seqLines(table, version).toSet)
+    val live = read(spark, table, version, pre).join(keys, Seq(keyCol), "left_anti")
+    if (post.isEmpty) live else live.unionByName(read(spark, table, version, post))
   }
 
   /** The tombstone-unit lines `version` declared that its predecessor
@@ -1410,47 +1361,12 @@ object CommitLog {
   private def seqLines(table: String, version: Long): Seq[String] =
     lines(logFile(table, version, "seq.txt")).getOrElse(Seq.empty)
 
-  /** SEQUENCE-AWARE merge-on-read read — the read path for
-    * [[upsertMoR]] versions, and identical to [[snapshotMoR]] on
-    * every version without a seq sidecar.
-    *
-    * Iceberg's rule, collapsed to one commit step: an equality delete
-    * applies only to data written BEFORE it. An upsert version's
-    * tombstones therefore anti-join the CARRIED units only — the
-    * post-image units the same commit added (named by its seq
-    * sidecar) are exempt, where a global apply ([[snapshotMoR]])
-    * would delete the replacements right back out. Compaction-carried
-    * sidecars and plain deletes have no seq sidecar and keep the
-    * global-apply semantics (a packed unit holds pre-images, so its
-    * carried tombstones MUST apply to it).
-    *
-    * Scale shape is [[snapshotMoR]]'s: one anti-join whose build side
-    * is O(deleted keys), caller predicates still push to the data
-    * scans, clean versions read with zero overhead.
-    */
-  def snapshotMoRSeq(spark: SparkSession, table: String, version: Long,
-      keyCol: String): DataFrame = {
-    val tu = deletes(table, version)
-    val exempt = seqLines(table, version).toSet
-    if (tu.isEmpty) snapshot(spark, table, version)
-    else if (exempt.isEmpty) snapshotMoR(spark, table, version, keyCol)
-    else {
-      val (post, pre) = unitsRel(table, version).partition(exempt)
-      def abs(rel: Seq[String]) =
-        rel.map(u => java.nio.file.Paths.get(table, u).toString)
-      val keys = Parquet.read(spark, tu)
-        .select(keyCol).distinct()
-      Parquet.read(spark, abs(pre)).join(keys, Seq(keyCol), "left_anti")
-        .unionByName(Parquet.read(spark, abs(post)))
-    }
-  }
-
   /** MERGE-ON-READ upsert: same-key rows of `updates` replace the
     * snapshot's, new keys append — with ZERO existing data read or
     * written. The commit publishes exactly two new objects: one
     * post-image unit (all of `updates`, appended to the manifest) and
     * one tombstone unit of the update KEYS (outside the manifest,
-    * attached as the dv sidecar). Readers use [[snapshotMoRSeq]]: the
+    * attached as the dv sidecar). Readers use [[snapshotMoR]]: the
     * tombstones erase the replaced pre-images from carried units while
     * the post-image unit — added by this same version — is exempt by
     * the sequence rule. A key with no pre-image tombstones nothing
@@ -1493,7 +1409,7 @@ object CommitLog {
       updates.select(col(keyCol)).distinct()
         .write.parquet(java.nio.file.Paths.get(table, tomb).toString)
       hook(); hook = () => () // the race window fires once
-      if (tryCommit(table, v + 1, unitsRel(table, v) :+ img)) {
+      if (tryCommit(table, v + 1, unitNames(table, v) :+ img)) {
         // record the sequence exemption EXPLICITLY: the post-image
         // unit is immune to this version's own tombstones (see
         // seqLines — inferring this from the manifest would mis-read
@@ -1549,7 +1465,7 @@ object CommitLog {
       // sequence-exempt post-images (an upsert's added units, named by
       // its seq sidecar) carry; everything else is an apply candidate
       val exempt: Set[String] = seqLines(table, v).toSet
-      val eligible = unitsRel(table, v).filterNot(exempt)
+      val eligible = unitNames(table, v).filterNot(exempt)
       val keys = Parquet.read(spark, tu).select(col(keyCol)).distinct()
       // no key range for some eligible unit → no routing: every
       // eligible unit rewrites (correct, just unrouted — the same
@@ -1709,7 +1625,7 @@ object CommitLog {
       if (newDv.isEmpty) diff
       else {
         val exempt = seqLines(table, version).toSet
-        val preRel = unitsRel(table, version).filterNot(exempt)
+        val preRel = unitNames(table, version).filterNot(exempt)
         val keys = Parquet.read(spark,
           newDv.map(u => java.nio.file.Paths.get(table, u).toString))
           .distinct()
@@ -1963,7 +1879,7 @@ object CommitLog {
     * purged keys — bits are shared), sized by the twin's actual row
     * count at fpp 1e-2; sizing differences against the original
     * publish only move the false-positive rate, never correctness.
-    * So [[snapshotBloom]]/[[snapshotRangeCol]] keep pruning — and
+    * So a scan keeps skipping units ([[UnitSkippingIndex]]) — and
     * keep their no-false-negative contract — straight through a GDPR
     * erasure.
     */
@@ -2004,7 +1920,7 @@ object CommitLog {
     require(!fp.isNullAt(0) && fp.getLong(1) > 0L,
       "purge needs at least one non-null key")
     val reqHash = f"${fp.getLong(0)}%016x${fp.getLong(1)}%x"
-    val dataRels = vs.flatMap(v => manifestLines(table, v)).distinct
+    val dataRels = vs.flatMap(v => unitNames(table, v)).distinct
     val dvRels = vs.flatMap(v => dvLines(table, v)).distinct
     val allRels = (dataRels ++ dvRels).distinct
     val byAbs = allRels.map(rel =>
@@ -2082,7 +1998,7 @@ object CommitLog {
       })
     // validate BEFORE mutating anything: no version may end up empty
     vs.foreach { v =>
-      require(remap(manifestLines(table, v)).nonEmpty,
+      require(remap(unitNames(table, v)).nonEmpty,
         s"purge would empty version $v of $table — delete the table " +
           "instead of purging its entire content")
     }
@@ -2133,7 +2049,7 @@ object CommitLog {
     }
     var versionsTouched = 0L
     vs.foreach { v =>
-      val oldLines = manifestLines(table, v)
+      val oldLines = unitNames(table, v)
       val newLines = remap(oldLines)
       val touched = newLines != oldLines
       if (touched) swap(manifest(table, v), newLines)
@@ -2330,7 +2246,7 @@ object CommitLog {
     val next = (cm.renames - phys) ++
       (if (phys == to) Map.empty[String, String] else Map(phys -> to))
     val nv = v + 1
-    commit(table, nv, unitsRel(table, v))
+    commit(table, nv, unitNames(table, v))
     writeColMapping(table, nv, cm.copy(renames = next))
     nv
   }
@@ -2355,7 +2271,7 @@ object CommitLog {
     require(logical.size > 1,
       s"drop: $name is the last visible column of $table")
     val nv = v + 1
-    commit(table, nv, unitsRel(table, v))
+    commit(table, nv, unitNames(table, v))
     if (cm.added.contains(name))
       // dropping an ADDED column is pure mapping arithmetic: remove
       // the entry (post-add files' physical copies become invisible
@@ -2431,7 +2347,7 @@ object CommitLog {
         "— mapped reads re-evaluate it per read, so it must fold to " +
         "the same value forever")
     val nv = v + 1
-    commit(table, nv, unitsRel(table, v))
+    commit(table, nv, unitNames(table, v))
     writeColMapping(table, nv,
       cm.copy(added = cm.added + (name -> (target.sql, defaultSql))))
     nv
@@ -2489,7 +2405,7 @@ object CommitLog {
       s"widen: ${curType.sql} -> ${target.sql} is not a lossless " +
         s"widening for $name")
     val nv = v + 1
-    commit(table, nv, unitsRel(table, v))
+    commit(table, nv, unitNames(table, v))
     writeColMapping(table, nv,
       cm.copy(widened = cm.widened + (phys -> target.sql)))
     nv
@@ -2768,6 +2684,24 @@ object CommitLog {
     val fresh = Parquet.read(spark,
       newUnits.map(u => java.nio.file.Paths.get(table, u).toString))
     val out = scala.collection.mutable.ListBuffer[String]()
+    // `standing` filtered to the batch column `c`'s (min, max) `bounds`
+    // on `refCol`, for its scan to skip units by, when `c` has
+    // `refCol`'s type and that type can skip units
+    def within(standing: DataFrame, refCol: String, c: String,
+        bounds: org.apache.spark.sql.Row): DataFrame = {
+      val t = fresh.schema(c).dataType
+      if (t != standing.schema(refCol).dataType || !UnitSkippingIndex.prunable(t)) standing
+      else standing.filter(col(refCol).between(bounds.get(0), bounds.get(1)))
+    }
+    // the LIVE rows of `t` at `v` (a tombstoned key neither satisfies
+    // a reference nor blocks a re-insert); None when the tombstone
+    // units carry several columns and liveness is unprovable
+    def live(t: String, v: Long): Option[DataFrame] = deletes(t, v) match {
+      case Seq() => Some(snapshot(spark, t, v))
+      case tomb =>
+        val tombCols = Parquet.read(spark, tomb.head).schema.fieldNames
+        if (tombCols.length == 1) Some(snapshotMoR(spark, t, v, tombCols.head)) else None
+    }
     cs.foreach {
       case NotNullConstraint(c) =>
         if (!fresh.filter(col(c).isNull).limit(1).isEmpty)
@@ -2789,68 +2723,26 @@ object CommitLog {
           val bounds = fkeys.agg(
             org.apache.spark.sql.functions.min("__k"),
             org.apache.spark.sql.functions.max("__k")).head()
-          if (!bounds.isNullAt(0)) {
-            // Stats routing is safe only when the BATCH column's type
-            // renders bounds in the same order the REFERENCED column's
-            // footer kind compares them (ADVICE r14): snapshotRangeCol
-            // parses lo/hi by the FOOTER kind, so a string batch column
-            // against a long-kind footer would throw on toLong, and a
-            // long batch column against a string-kind footer would
-            // compare numbers lexically — wrongly pruning units and
-            // spuriously rejecting valid commits. Require kind match
-            // (the unique-constraint lesson); otherwise fall back to
-            // the full-snapshot semi-join.
-            val batchKind = fresh.schema(c).dataType match {
-              case org.apache.spark.sql.types.LongType => Some("long")
-              case org.apache.spark.sql.types.StringType => Some("string")
-              case _ => None
-            }
-            def refKindMatches: Boolean = {
-              val rcs = colStatsOpt(refTable, rv).getOrElse(Seq.empty)
-                .filter(_.col == refCol)
-              rcs.nonEmpty && batchKind.exists(k => rcs.forall(_.kind == k))
-            }
-            val rangeSafe = batchKind.nonEmpty
-            val tomb = deletes(refTable, rv)
-            val standing =
-              if (tomb.nonEmpty) {
-                // MoR-aware: a tombstoned parent must NOT satisfy the
-                // reference — validate against the LIVE rows
-                val tombCols =
-                  Parquet.read(spark, tomb.head).schema.fieldNames
-                if (tombCols.length == 1)
-                  snapshotMoRSeq(spark, refTable, rv, tombCols.head)
-                else {
-                  // an unrecognizable tombstone shape makes liveness
-                  // unprovable — fail-safe is REJECT (the raw
-                  // pre-image would falsely ACCEPT deleted parents)
-                  out += s"foreignkey($c): $refTable carries a " +
-                    "multi-column tombstone sidecar — referential " +
-                    "liveness unprovable, commit refused"
-                  null
-                }
-              }
-              else if (rangeSafe && refKindMatches)
-                // stats-routed: only referenced units whose [min,max]
-                // overlaps the batch's FK range are opened — a batch
-                // entirely out of range proves its orphans from the
-                // manifest alone
-                snapshotRangeCol(spark, refTable, rv, refCol,
-                  bounds.get(0).toString, bounds.get(1).toString)._1
-              else snapshot(spark, refTable, rv)
-            if (standing != null) {
-              // one pass over the (pruned) referenced scan: semi-join
+          if (!bounds.isNullAt(0)) live(refTable, rv) match {
+            // fail-safe is REJECT: the raw pre-image would falsely
+            // ACCEPT deleted parents
+            case None => out += s"foreignkey($c): $refTable carries a " +
+              "multi-column tombstone sidecar — referential liveness " +
+              "unprovable, commit refused"
+            case Some(standing) =>
+              // one pass over the referenced scan, which skips every
+              // unit whose range misses the batch's FK range: semi-join
               // against the broadcast batch keys, then the tiny
               // present-set anti-joins the batch — the referenced
               // table is never shuffled
-              val present = standing.select(col(refCol).as("__k"))
+              val present = within(standing, refCol, c, bounds)
+                .select(col(refCol).as("__k"))
                 .join(broadcast(fkeys), Seq("__k"), "left_semi").distinct()
               val orphan = fkeys
                 .join(broadcast(present), Seq("__k"), "left_anti").limit(1)
               if (!orphan.isEmpty)
                 out += s"foreignkey($c): new batch references $refCol" +
                   s" values absent from $refTable v$rv"
-            }
           }
         }
       case UniqueConstraint(c) =>
@@ -2860,60 +2752,20 @@ object CommitLog {
         if (!dupIn.isEmpty)
           out += s"unique($c): duplicate keys within the new batch"
         else baseVersion.foreach { v =>
-          // keys already committed? Cheap path: cstats range pruning
-          // picks only units whose [min,max] overlaps the batch's key
-          // range; the exact probe then semi-joins the pruned scan
-          // against the broadcast batch keys. Without cstats on the
-          // key, the probe falls back to the full snapshot
-          // (still one semi-join, never a shuffle of the table).
+          // keys already committed? The probe semi-joins the standing
+          // snapshot, filtered to the batch's key range so its scan
+          // skips every unit whose range misses it, against the
+          // broadcast batch keys (never a shuffle of the table).
           val kd = keys.distinct().localCheckpoint()
           val bounds = kd.agg(
             org.apache.spark.sql.functions.min("__k"),
             org.apache.spark.sql.functions.max("__k")).head()
           if (!bounds.isNullAt(0)) {
-            // ADVICE r13: the range-pruned path renders the batch
-            // bounds via toString and snapshotRangeCol reparses by the
-            // footer kind — only BIGINT and STRING keys round-trip
-            // that rendering (a decimal's toString is not its INT64
-            // footer form); any other type takes the always-correct
-            // full-snapshot semi-join.
-            // ADVICE r14 (FK twin): also require the standing
-            // version's footer kind to MATCH the batch type — a type
-            // evolved between versions (long batch vs string footer)
-            // would compare numbers lexically and prune wrongly.
-            val batchKind = fresh.schema(c).dataType match {
-              case org.apache.spark.sql.types.LongType => Some("long")
-              case org.apache.spark.sql.types.StringType => Some("string")
-              case _ => None
-            }
-            def ownKindMatches: Boolean = {
-              val rcs = colStatsOpt(table, v).getOrElse(Seq.empty)
-                .filter(_.col == c)
-              rcs.nonEmpty && batchKind.exists(k => rcs.forall(_.kind == k))
-            }
-            val rangeSafe = batchKind.nonEmpty
-            val tomb = deletes(table, v)
-            val standing =
-              if (tomb.nonEmpty) {
-                // ADVICE r13: with MoR deletes outstanding the probe
-                // must see the LIVE rows, not the raw pre-image — a
-                // key whose only copy was tombstoned must accept a
-                // re-insert. Tombstone units carry the delete-key
-                // column; the sequence-aware read applies them (and
-                // upsert post-image exemptions) exactly as every
-                // other reader does. Pruning is skipped here —
-                // correctness over speed until compaction clears the
-                // sidecar and the fast path returns.
-                val tombCols = Parquet.read(spark, tomb.head).schema.fieldNames
-                if (tombCols.length == 1)
-                  snapshotMoRSeq(spark, table, v, tombCols.head)
-                else snapshot(spark, table, v) // unknown key: raw, conservative
-              }
-              else if (rangeSafe && ownKindMatches)
-                snapshotRangeCol(spark, table, v, c,
-                  bounds.get(0).toString, bounds.get(1).toString)._1
-              else snapshot(spark, table, v)
-            val clash = standing.select(col(c).as("__k"))
+            // an unknown tombstone key reads the raw pre-image:
+            // conservative, it can only over-report a clash
+            val standing = live(table, v).getOrElse(snapshot(spark, table, v))
+            val clash = within(standing, c, c, bounds)
+              .select(col(c).as("__k"))
               .join(broadcast(kd), "__k").limit(1)
             if (!clash.isEmpty)
               out += s"unique($c): new batch re-uses keys already in v$v"
@@ -2935,7 +2787,7 @@ object CommitLog {
       units: Seq[String]): Unit = {
     val vs = versions(table)
     val prev = vs.lastOption
-    val existing = prev.map(unitsRel(table, _).toSet).getOrElse(Set.empty)
+    val existing = prev.map(unitNames(table, _).toSet).getOrElse(Set.empty)
     val fresh = units.filterNot(existing)
     val bad = constraintViolations(spark, table, fresh, prev)
     require(bad.isEmpty,
@@ -2952,7 +2804,7 @@ object CommitLog {
       branch: String): Boolean = {
     val vs = versions(table)
     val prev = vs.lastOption
-    val existing = prev.map(unitsRel(table, _).toSet).getOrElse(Set.empty)
+    val existing = prev.map(unitNames(table, _).toSet).getOrElse(Set.empty)
     val fresh = stagedUnits(table, branch).filterNot(existing)
     constraintViolations(spark, table, fresh, prev).isEmpty
   }

@@ -66,6 +66,14 @@ object Parquet {
   // paths; its name cannot clash with a partition column.
   private val ListingSchema = StructType(Seq(StructField("__graft_listing", LongType)))
 
+  /** Spark's relation over `paths` with a placeholder data schema: the
+    * listing every read of them starts with (its `location`).
+    */
+  def listing(spark: SparkSession, paths: Seq[String],
+      options: Map[String, String] = Map.empty): HadoopFsRelation =
+    GraftSqlInternals.parquetRelation(spark, paths, ListingSchema, options)
+      .asInstanceOf[HadoopFsRelation]
+
   /** The read of `paths` with the schema Spark's inference would give,
     * read from their footers on the driver; None where the read is left
     * to Spark's inference (see the class doc).
@@ -75,8 +83,7 @@ object Parquet {
     scala.util.Try {
       val conf = spark.sessionState.conf
       // another relation or file index fails the casts: left to Spark
-      val relation = GraftSqlInternals.parquetRelation(spark, paths, ListingSchema, options)
-        .asInstanceOf[HadoopFsRelation]
+      val relation = listing(spark, paths, options)
       val files = relation.location.asInstanceOf[PartitioningAwareFileIndex]
         .allFiles().sortBy(_.getPath.toString)
       def named(name: String) = files.filter(_.getPath.getName == name)

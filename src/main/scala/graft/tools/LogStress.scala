@@ -98,9 +98,8 @@ object LogStress {
     // fixed-width probe = 1/32 of the key space: 1 unit at the coarse
     // layout, ~10 at the fine one — SAME rows read either way
     def probe(t: String, lo: Long, hi: Long): Long = {
-      val (df, _) = CommitLog.snapshotRangeCol(spark, t, 0L, "k",
-        lo.toString, hi.toString)
-      df.filter(col("k").between(lo, hi)).agg(count(lit(1))).head().getLong(0)
+      CommitLog.snapshot(spark, t, 0L).filter(col("k").between(lo, hi))
+        .agg(count(lit(1))).head().getLong(0)
     }
     val w32 = maxK / 32 + 1
     val (p1, ps1) = time(probe(t32, 0L, w32 - 1))
@@ -204,12 +203,11 @@ object LogStress {
       baseU.count() / 32 + 1, 0.01)
     val probeUid = java.security.MessageDigest.getInstance("MD5")
       .digest(maxK.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    def pointFull(): Long = CommitLog.snapshot(spark, tBloom, 0L)
+    // the full scan reads the units without the snapshot's skipping index
+    def pointFull(): Long = graft.sources.Parquet.read(spark, CommitLog.units(tBloom, 0L))
       .filter(col("uid") === probeUid).count()
-    def pointBloom(): Long = {
-      val (df, _) = CommitLog.snapshotBloom(spark, tBloom, 0L, "uid", probeUid)
-      df.filter(col("uid") === probeUid).count()
-    }
+    def pointBloom(): Long = CommitLog.snapshot(spark, tBloom, 0L)
+      .filter(col("uid") === probeUid).count()
     val (b1, bs1) = time(pointFull())
     val (b2, bs2) = time(pointBloom())
     rows += (("digest point lookup: full 32-unit scan vs bloom-pruned read",

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-10 merge-on-read upsert layer: the sequence rule
-  * (snapshotMoRSeq), the O(|updates|) write path (upsertMoR), and the
+  * (snapshotMoR), the O(|updates|) write path (upsertMoR), and the
   * stats-routed maintenance rewrite (applyDeletes).
   */
 class MorUpsertSpec extends GraftSpec {
@@ -29,14 +29,14 @@ class MorUpsertSpec extends GraftSpec {
     val v1 = CommitLog.upsertMoR(spark,
       dir, Seq((2L, "B"), (20L, "new")).toDF("k", "s"), "k")
     assert(v1 == 1L)
-    val got = CommitLog.snapshotMoRSeq(spark, dir, 1L, "k")
+    val got = CommitLog.snapshotMoR(spark, dir, 1L, "k")
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got == Seq(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "d",
       11L -> "e", 12L -> "f", 13L -> "g", 14L -> "h", 20L -> "new"))
     // raw pre-images still on disk: 8 + 2 post-image rows
     assert(CommitLog.snapshot(spark, dir, 1L).count() == 10)
     // v0 unaffected
-    assert(CommitLog.snapshotMoRSeq(spark, dir, 0L, "k").count() == 8)
+    assert(CommitLog.snapshotMoR(spark, dir, 0L, "k").count() == 8)
   }
 
   test("the sequence rule is what saves the post-images from their own tombstones") {
@@ -44,11 +44,15 @@ class MorUpsertSpec extends GraftSpec {
     val dir = scratch("graft_up2")
     seed(dir)
     CommitLog.upsertMoR(spark, dir, Seq((2L, "B")).toDF("k", "s"), "k")
-    // a GLOBAL apply (snapshotMoR) deletes the replacement row too —
-    // k=2 vanishes entirely; the seq read keeps exactly one k=2
-    val global = CommitLog.snapshotMoR(spark, dir, 1L, "k")
+    // a GLOBAL apply (every tombstone against every unit) deletes the
+    // replacement row too — k=2 vanishes entirely; the sequence-aware
+    // read keeps exactly one k=2
+    val tombKeys = graft.sources.Parquet.read(spark, CommitLog.deletes(dir, 1L))
+      .select("k").distinct()
+    val global = CommitLog.snapshot(spark, dir, 1L)
+      .join(tombKeys, Seq("k"), "left_anti")
       .filter(col("k") === 2).count()
-    val seq = CommitLog.snapshotMoRSeq(spark, dir, 1L, "k")
+    val seq = CommitLog.snapshotMoR(spark, dir, 1L, "k")
       .filter(col("k") === 2).count()
     assert(global == 0 && seq == 1)
   }
@@ -99,7 +103,7 @@ class MorUpsertSpec extends GraftSpec {
       "the intersecting unit is replaced by the rewrite")
     // clean version: no sidecar, seq read == plain read == pre-apply MoR read
     assert(CommitLog.deletes(dir, 2L).isEmpty)
-    val want = CommitLog.snapshotMoRSeq(spark, dir, 1L, "k")
+    val want = CommitLog.snapshotMoR(spark, dir, 1L, "k")
       .orderBy("k").collect().toSeq
     assert(CommitLog.snapshot(spark, dir, 2L).orderBy("k").collect().toSeq == want)
     // stats folded: every v2 unit has an entry
@@ -146,7 +150,7 @@ class MorUpsertSpec extends GraftSpec {
         .filter($"_change_type" === "delete").drop("_change_type"))
       .unionAll(CommitLog.changes(spark, dir, 1L)
         .filter($"_change_type" === "insert").drop("_change_type"))
-    val want = CommitLog.snapshotMoRSeq(spark, dir, 1L, "k")
+    val want = CommitLog.snapshotMoR(spark, dir, 1L, "k")
     assert(replica.exceptAll(want).isEmpty && want.exceptAll(replica).isEmpty,
       "CDC-folded replica must equal the MoR-resolved snapshot")
   }
@@ -167,7 +171,7 @@ class MorUpsertSpec extends GraftSpec {
         CommitLog.commit(dir, 3L, CommitLog.unitNames(dir, 2L))
       })
     assert(raced && v == 4L, s"loser must land on top of the interloper, got v$v")
-    val got = CommitLog.snapshotMoRSeq(spark, dir, v, "k")
+    val got = CommitLog.snapshotMoR(spark, dir, v, "k")
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got.contains(3L -> "C") && got.contains(2L -> "B")
       && !got.contains(3L -> "c"))

@@ -176,20 +176,18 @@ class PurgeSpec extends GraftSpec {
         twinK.max.toLong == 199L,
         s"twin k-stats re-measured from the purged data: $twinK")
       // range probe on the SECOND indexed column still prunes
-      val (_, scanned) = CommitLog.snapshotRangeCol(spark, t, v,
-        "p", "0", "990")
+      val snap = CommitLog.snapshot(spark, t, v)
+      val scanned = CommitLog.scannedUnits(snap.filter(col("p").between(0L, 990L)))
       assert(scanned == 1, s"v$v p-range probe must prune to u0 alone")
       // bloom: surviving keys MUST still be found (no false negative),
       // and a purged key's probe returns zero rows
-      val (hit, _) = CommitLog.snapshotBloom(spark, t, v, "k", 149L)
-      assert(hit.filter(col("k") === 149L).count() == 1L,
+      assert(snap.filter(col("k") === 149L).count() == 1L,
         s"v$v bloom false-negatived a surviving key")
-      val (gone, _) = CommitLog.snapshotBloom(spark, t, v, "k", 155L)
-      assert(gone.filter(col("k") === 155L).limit(1).isEmpty,
+      assert(snap.filter(col("k") === 155L).limit(1).isEmpty,
         s"v$v still returns a purged key")
       // a never-present key still prunes to zero units (the index is
       // an index, not a pass-through)
-      val (_, n) = CommitLog.snapshotBloom(spark, t, v, "k", 999999L)
+      val n = CommitLog.scannedUnits(snap.filter(col("k") === 999999L))
       assert(n <= 1, s"v$v bloom stopped pruning after the purge ($n units)")
     }
   }

@@ -2,7 +2,7 @@ package graft
 
 /** Round-10 additions: the vacuum ownership rule (a clone's vacuum
   * must never reach into its source table — ADVICE r9), vacuum's
-  * deletion accounting, and the fully-pruned snapshotRangeCol read.
+  * deletion accounting, and the fully-pruned snapshot filter.
   */
 class Round10OpsSpec extends GraftSpec {
 
@@ -476,8 +476,8 @@ class Round10OpsSpec extends GraftSpec {
     assert(cs.size == CommitLog.units(t, v).size,
       "every unit of the merged version keeps a prunable stats entry")
     // skipping still works through the merged version
-    val (df, scanned) = CommitLog.snapshotRangeCol(spark, t, v, "k", "500", "500")
-    assert(scanned == 1 && df.filter(col("k") === 500L).count() == 1)
+    val df = CommitLog.snapshot(spark, t, v).filter(col("k") === 500L)
+    assert(CommitLog.scannedUnits(df) == 1 && df.count() == 1)
   }
 
   test("compaction carries outstanding MoR deletes; merge refuses them") {
@@ -536,18 +536,18 @@ class Round10OpsSpec extends GraftSpec {
     CommitLog.writeBloomStats(spark, t, 0L, "uid", 250L, 0.01)
     val probe = spark.read.parquet(s"$t/u2")
       .select("uid").head().getString(0) // a value known to live in u2
-    val (snap, scanned) = CommitLog.snapshotBloom(spark, t, 0L, "uid", probe)
+    val snap = CommitLog.snapshot(spark, t, 0L).filter(col("uid") === probe)
+    val scanned = CommitLog.scannedUnits(snap)
     assert(scanned >= 1 && scanned <= 2,
       s"bloom must prune to ~1 unit (fp tolerance 1), got $scanned")
-    assert(snap.filter(col("uid") === probe).count() >= 1)
+    assert(snap.count() >= 1)
     // definitely-absent value: everything prunes (<=1 fp), zero rows
-    val (miss, missScanned) =
-      CommitLog.snapshotBloom(spark, t, 0L, "uid", "no_such_uid")
-    assert(missScanned <= 1)
-    assert(miss.filter(col("uid") === "no_such_uid").count() == 0)
+    val miss = CommitLog.snapshot(spark, t, 0L).filter(col("uid") === "no_such_uid")
+    assert(CommitLog.scannedUnits(miss) <= 1)
+    assert(miss.count() == 0)
     // unknown column fails loudly, not as a silent full scan
-    intercept[IllegalArgumentException](
-      CommitLog.snapshotBloom(spark, t, 0L, "nope", "x"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      CommitLog.snapshot(spark, t, 0L).filter(col("nope") === "x"))
   }
 
   test("versionAsOf resolves what a reader at that instant saw") {
@@ -609,14 +609,15 @@ class Round10OpsSpec extends GraftSpec {
     assert(r.getDecimal(1) == r.getDecimal(3), "exact totals must match")
   }
 
-  test("snapshotRangeCol with a no-match probe returns the empty frame, 0 scanned") {
+  test("a no-match snapshot filter scans zero units and returns the empty frame") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.col
     val t = scratch("graft_srange")
     Seq((1L, "a"), (9L, "b")).toDF("k", "s").write.parquet(s"$t/u0")
     CommitLog.commit(t, 0L, Seq("u0"))
     CommitLog.writeColStats(t, 0L, longStats("k", Seq(("u0", 1L, 9L, 2L))))
-    val (df, scanned) = CommitLog.snapshotRangeCol(spark, t, 0L, "k", "100", "200")
-    assert(scanned == 0, "a fully-pruned probe scans zero units")
+    val df = CommitLog.snapshot(spark, t, 0L).filter(col("k").between(100L, 200L))
+    assert(CommitLog.scannedUnits(df) == 0, "a fully-pruned probe scans zero units")
     assert(df.count() == 0)
     assert(df.columns.toSeq == Seq("k", "s"),
       "the empty frame still carries the snapshot schema")

@@ -41,12 +41,13 @@ class Round11OpsSpec extends GraftSpec {
     // union of the four packed filters — no data reads needed
     val v1 = CommitLog.compact(spark, t, Long.MaxValue).get
     assert(CommitLog.unitNames(t, v1).size == 1)
-    val (snap, scanned) = CommitLog.snapshotBloom(spark, t, v1, "uid", uidOf(700L))
+    val snap = CommitLog.snapshot(spark, t, v1).filter(col("uid") === uidOf(700L))
+    val scanned = CommitLog.scannedUnits(snap)
     assert(scanned == 1, s"present probe must scan the packed unit, got $scanned")
-    assert(snap.filter(col("uid") === uidOf(700L)).count() >= 1)
+    assert(snap.count() >= 1)
     // definitely-absent probe: the merged filter still says no
-    val (_, missScanned) =
-      CommitLog.snapshotBloom(spark, t, v1, "uid", "no_such_uid")
+    val missScanned = CommitLog.scannedUnits(
+      CommitLog.snapshot(spark, t, v1).filter(col("uid") === "no_such_uid"))
     assert(missScanned == 0,
       s"absent probe must prune the packed unit, got $missScanned")
   }
@@ -60,19 +61,19 @@ class Round11OpsSpec extends GraftSpec {
     val v1 = CommitLog.mergeCow(spark, t,
       Seq((260L, "uid_fresh")).toDF("k", "uid"), "k")
     // an untouched unit's value still prunes to ~1 unit
-    val (snap, scanned) = CommitLog.snapshotBloom(spark, t, v1, "uid", uidOf(700L))
+    val snap = CommitLog.snapshot(spark, t, v1).filter(col("uid") === uidOf(700L))
+    val scanned = CommitLog.scannedUnits(snap)
     assert(scanned >= 1 && scanned <= 2,
       s"carried filters must keep pruning (fp tolerance 1), got $scanned")
-    assert(snap.filter(col("uid") === uidOf(700L)).count() >= 1)
+    assert(snap.count() >= 1)
     // the post-image value lives in the rebuilt filter
-    val (updSnap, updScanned) =
-      CommitLog.snapshotBloom(spark, t, v1, "uid", "uid_fresh")
-    assert(updScanned >= 1)
-    assert(updSnap.filter(col("uid") === "uid_fresh").count() == 1)
+    val updSnap = CommitLog.snapshot(spark, t, v1).filter(col("uid") === "uid_fresh")
+    assert(CommitLog.scannedUnits(updSnap) >= 1)
+    assert(updSnap.count() == 1)
     // the replaced pre-image value is gone from the data whatever the
     // (rebuilt, hence honest) filter answers
-    val (gone, _) = CommitLog.snapshotBloom(spark, t, v1, "uid", uidOf(260L))
-    assert(gone.filter(col("uid") === uidOf(260L)).count() == 0)
+    assert(CommitLog.snapshot(spark, t, v1)
+      .filter(col("uid") === uidOf(260L)).count() == 0)
   }
 
   test("bloom sidecar survives applyDeletes; emptied units leave the manifest") {
@@ -92,16 +93,17 @@ class Round11OpsSpec extends GraftSpec {
       "the fully-emptied unit must not survive in the manifest")
     // bloom still answers for the whole snapshot, including the
     // rewritten unit, and still prunes
-    val (snap, scanned) = CommitLog.snapshotBloom(spark, t, v1, "uid", uidOf(300L))
+    val snap = CommitLog.snapshot(spark, t, v1).filter(col("uid") === uidOf(300L))
+    val scanned = CommitLog.scannedUnits(snap)
     assert(scanned >= 1 && scanned <= 2)
-    assert(snap.filter(col("uid") === uidOf(300L)).count() >= 1)
-    val (gone, _) = CommitLog.snapshotBloom(spark, t, v1, "uid", uidOf(600L))
-    assert(gone.filter(col("uid") === uidOf(600L)).count() == 0)
+    assert(snap.count() >= 1)
+    assert(CommitLog.snapshot(spark, t, v1)
+      .filter(col("uid") === uidOf(600L)).count() == 0)
     // the folded stats still route: a follow-up merge succeeds
     val v2 = CommitLog.mergeCow(spark, t,
       Seq((700L, "uid_v2")).toDF("k", "uid"), "k")
-    assert(CommitLog.snapshotBloom(spark, t, v2, "uid", "uid_v2")
-      ._1.filter(col("uid") === "uid_v2").count() == 1)
+    assert(CommitLog.snapshot(spark, t, v2)
+      .filter(col("uid") === "uid_v2").count() == 1)
   }
 
   test("numeric probes hash like the build: no guaranteed false negatives") {
@@ -114,9 +116,10 @@ class Round11OpsSpec extends GraftSpec {
     // a Long probe on a BIGINT column: the build hashed
     // cast('string'), so the probe must too — the raw-Long dispatch to
     // mightContainLong answered a guaranteed false negative here
-    val (snap, scanned) = CommitLog.snapshotBloom(spark, t, 0L, "k", 77L)
+    val snap = CommitLog.snapshot(spark, t, 0L).filter(col("k") === 77L)
+    val scanned = CommitLog.scannedUnits(snap)
     assert(scanned == 1, s"numeric probe must hit its own unit, got $scanned")
-    assert(snap.filter(col("k") === 77L).count() == 1)
+    assert(snap.count() == 1)
   }
 
   test("mergeCow on non-adjacent units keeps ranges disjoint and the table mergeable") {
@@ -289,10 +292,12 @@ class Round11OpsSpec extends GraftSpec {
     applyBatch((0L until 10L).map(k => (k, "a")), 0L)
     applyBatch((100L until 110L).map(k => (k, "b")), 1L)
     applyBatch((200L until 210L).map(k => (k, "c")), 2L)
-    val (snap, scanned) = CommitLog.snapshotRangeCol(spark, t, 2L, "k", "100", "105")
+    val snap = CommitLog.snapshot(spark, t, 2L).filter(col("k").between(100L, 105L))
+    val scanned = CommitLog.scannedUnits(snap)
     assert(scanned == 1, s"probe must open only its batch's unit, got $scanned")
-    assert(snap.filter(col("k").between(100L, 105L)).count() == 6)
-    val (_, none) = CommitLog.snapshotRangeCol(spark, t, 2L, "k", "500", "600")
+    assert(snap.count() == 6)
+    val none = CommitLog.scannedUnits(
+      CommitLog.snapshot(spark, t, 2L).filter(col("k").between(500L, 600L)))
     assert(none == 0, "a no-match probe is a fully-pruned read")
   }
 
@@ -344,10 +349,9 @@ class Round11OpsSpec extends GraftSpec {
     // a '|' in the column name must not corrupt the 3-way sidecar
     // split at read time (URL-encoded like the cstats sidecar)
     CommitLog.writeBloomStats(spark, t, 0L, "weird|col", 2L, 0.01)
-    val (snap, scanned) =
-      CommitLog.snapshotBloom(spark, t, 0L, "weird|col", "x")
-    assert(scanned == 1)
-    assert(snap.filter(col("`weird|col`") === "x").count() == 1)
+    val snap = CommitLog.snapshot(spark, t, 0L).filter(col("`weird|col`") === "x")
+    assert(CommitLog.scannedUnits(snap) == 1)
+    assert(snap.count() == 1)
   }
 
   test("writeBloomStatsDelta: append publish at delta cost, loud when uncovered") {
@@ -361,12 +365,14 @@ class Round11OpsSpec extends GraftSpec {
     // naming only the delta builds only the delta; carried entries
     // answer for the old units
     CommitLog.writeBloomStatsDelta(spark, t, 0L, 1L, Seq("u_new"), 250L, 0.01)
-    val (snap, scanned) = CommitLog.snapshotBloom(spark, t, 1L, "uid", uidOf(600L))
+    val snap = CommitLog.snapshot(spark, t, 1L).filter(col("uid") === uidOf(600L))
+    val scanned = CommitLog.scannedUnits(snap)
     assert(scanned >= 1 && scanned <= 2)
-    assert(snap.filter(col("uid") === uidOf(600L)).count() >= 1)
-    val (old, oldScanned) = CommitLog.snapshotBloom(spark, t, 1L, "uid", uidOf(100L))
+    assert(snap.count() >= 1)
+    val old = CommitLog.snapshot(spark, t, 1L).filter(col("uid") === uidOf(100L))
+    val oldScanned = CommitLog.scannedUnits(old)
     assert(oldScanned >= 1 && oldScanned <= 2)
-    assert(old.filter(col("uid") === uidOf(100L)).count() >= 1)
+    assert(old.count() >= 1)
     // a delta publish that misses a new unit must fail loudly, never
     // leave a silently-partial sidecar behind
     Seq((900L, uidOf(900L))).toDF("k", "uid").coalesce(1)

@@ -219,10 +219,8 @@ class Round12OpsSpec extends GraftSpec {
     assert(twinCs.map(_.col).toSet == Set("k", "p"),
       s"twin must keep every tracked column: $twinCs")
     // bloom: surviving boundary keys still found, purged gone
-    val (hit, _) = CommitLog.snapshotBloom(spark, t, 0L, "k", 153L)
-    assert(hit.filter(col("k") === 153L).count() == 1L)
-    val (gone, _) = CommitLog.snapshotBloom(spark, t, 0L, "k", 151L)
-    assert(gone.filter(col("k") === 151L).limit(1).isEmpty)
+    assert(CommitLog.snapshot(spark, t, 0L).filter(col("k") === 153L).count() == 1L)
+    assert(CommitLog.snapshot(spark, t, 0L).filter(col("k") === 151L).limit(1).isEmpty)
   }
 
   test("purge composes with an ADDED column: defaults survive the rewrite") {
@@ -312,10 +310,10 @@ class Round12OpsSpec extends GraftSpec {
       CommitLog.footerColStats(spark, t, Seq("u0", "u1"), Seq("k")))
     // footer stats of an INT32 column read as kind=long, so the range
     // probe is type-stable across the widen
-    val (df, scanned) = CommitLog.snapshotRangeCol(spark, t, 1L,
-      "k", "0", "99")
+    val df = CommitLog.snapshot(spark, t, 1L).filter(col("k").between(0, 99))
+    val scanned = CommitLog.scannedUnits(df)
     assert(scanned == 1, s"widened-key probe must still prune, got $scanned")
-    assert(df.filter(col("k").between(0, 99)).count() == 100L)
+    assert(df.count() == 100L)
   }
 
   test("dropColumn: metadata-only, time-travel-faithful, never re-requested") {
